@@ -1,9 +1,10 @@
 package graft.etl
 
 import graft.functions.Cleaning
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference pipeline (`extract_transform_load` in the reconstructed
   * `challenge.py` — SURVEY.md §3.1, citation caveat §0) re-expressed as a
@@ -52,12 +53,31 @@ object MoviesEtl {
   def readWikiJson(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", true).json(path)
 
-  /** A2/A3 — kaggle metadata / ratings CSVs with schema inference and
-    * pandas-like mixed-type tolerance (PERMISSIVE).
+  /** A2 — the kaggle metadata CSV, with schema inference (its inferred
+    * types flow into the output) and pandas-like mixed-type tolerance
+    * (PERMISSIVE). The A3 ratings CSV is read by [[readRatings]].
     */
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", true).option("inferSchema", true)
       .option("mode", "PERMISSIVE").csv(path)
+
+  /** The fixed MovieLens `ratings.csv` layout. */
+  private val RatingsSchema: StructType = StructType(Seq(
+    StructField("userId", IntegerType),
+    StructField("movieId", IntegerType),
+    StructField("rating", DoubleType),
+    StructField("timestamp", LongType)))
+
+  /** A3 + H8 — MovieLens ratings with their declared layout, plus
+    * `rated_at` from the Unix-seconds `timestamp`. Declaring the layout
+    * skips the inference scan, and keeps `rating` a double even when a
+    * file holds only whole stars (`4`, `3`), so [[ratingCounts]]' buckets
+    * (`"4.0"`) match.
+    */
+  def readRatings(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(RatingsSchema).option("header", true)
+      .option("mode", "PERMISSIVE").csv(path)
+      .withColumn("rated_at", Cleaning.fromUnixSeconds(col("timestamp")))
 
   /** B1 — keep film records: has a director and an imdb link, is not an
     * episodic series. Key-presence in the raw dicts ≡ non-null after the
@@ -92,76 +112,84 @@ object MoviesEtl {
     graft.operators.DedupOps.keepFirstPerKey(withId, Seq("imdb_id"), Seq("url"))
   }
 
-  /** Money/date/runtime parsing stages (H3–H9) on the wiki frame. */
+  /** Money/date/runtime parsing stages (H3–H9) on the wiki frame: each
+    * present raw column is replaced by its parsed column, appended last.
+    */
   def parseWikiColumns(wiki: DataFrame): DataFrame = {
-    def maybe(c: String, out: String, f: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-              df: DataFrame): DataFrame =
-      if (df.columns.contains(c)) df.withColumn(out, f(col(s"`$c`"))).drop(c) else df
-    var d = wiki
-    d = maybe("Box office", "box_office", Cleaning.parseMoneyColumn, d)
-    d = maybe("Budget", "budget_wiki", Cleaning.parseMoneyColumn, d)
-    d = maybe("Release date", "release_date_wiki", Cleaning.parseReleaseDate, d)
-    d = maybe("Running time", "running_time", Cleaning.parseRunningTime, d)
-    d
+    val parsers = Seq[(String, String, Column => Column)](
+      ("Box office", "box_office", Cleaning.parseMoneyColumn),
+      ("Budget", "budget_wiki", Cleaning.parseMoneyColumn),
+      ("Release date", "release_date_wiki", Cleaning.parseReleaseDate),
+      ("Running time", "running_time", Cleaning.parseRunningTime))
+      .filter { case (raw, _, _) => wiki.columns.contains(raw) }
+    val raws = parsers.map(_._1).toSet
+    wiki.select(
+      (wiki.columns.toSeq.filterNot(raws.contains).map(c => col(s"`$c`")) ++
+        parsers.map { case (raw, out, parse) => parse(col(s"`$raw`")).as(out) }): _*)
   }
 
   /** Kaggle cleanup (B6/H10/H11): drop adult rows+column, bool-ify
     * `video`, numeric casts (ANSI cast ≡ errors='raise').
     */
-  def cleanKaggle(kaggle: DataFrame): DataFrame =
+  def cleanKaggle(kaggle: DataFrame): DataFrame = {
+    val retyped = Map(
+      "video" -> (lower(col("video").cast(StringType)) === "true"),
+      "runtime" -> col("runtime").cast(DoubleType),
+      "revenue" -> col("revenue").cast(DoubleType),
+      "popularity" -> col("popularity").cast(DoubleType))
+    val renamed = Seq(
+      col("id").cast(IntegerType).as("kaggle_id"),
+      col("budget").cast(DoubleType).as("budget_kaggle"),
+      col("release_date").cast(DateType).as("release_date_kaggle"))
+    val dropped = Set("adult", "id", "budget", "release_date")
     kaggle
       // reference: kaggle['adult'] == 'False'; inferSchema may have read
       // the flag as BooleanType already, so compare case-insensitively
-      .filter(lower(col("adult").cast(StringType)) === "false").drop("adult")
-      .withColumn("video", lower(col("video").cast(StringType)) === "true")
-      .withColumn("kaggle_id", col("id").cast(IntegerType)).drop("id")
-      .withColumn("budget_kaggle", col("budget").cast(DoubleType)).drop("budget")
-      .withColumn("runtime", col("runtime").cast(DoubleType))
-      .withColumn("revenue", col("revenue").cast(DoubleType))
-      .withColumn("popularity", col("popularity").cast(DoubleType))
-      .withColumn("release_date_kaggle", col("release_date").cast(DateType))
-      .drop("release_date")
+      .filter(lower(col("adult").cast(StringType)) === "false")
+      .select((kaggle.columns.toSeq.filterNot(dropped.contains).map(c =>
+        retyped.get(c).fold(col(s"`$c`"))(_.as(c))) ++ renamed): _*)
+  }
 
-  /** D1+D2+D7 — MovieLens rating counts pivoted wide per movie. */
+  /** D1+D2+D7 — MovieLens rating counts pivoted wide per movie. The
+    * buckets match `rating` cast to string, so `rating` must be a double
+    * (as [[readRatings]] declares it): an integer `4` would print as `"4"`.
+    */
   def ratingCounts(ratings: DataFrame): DataFrame = {
     val values = Seq("0.5", "1.0", "1.5", "2.0", "2.5", "3.0", "3.5", "4.0", "4.5", "5.0")
-    val pivoted = ratings
+    ratings
       .groupBy("movieId")
       .pivot(col("rating").cast(StringType), values)
       .agg(count(lit(1)))
-    val renamed = values.foldLeft(pivoted)((d, v) => d.withColumnRenamed(v, s"rating_$v"))
-    zeroFill(renamed, values.map(v => s"rating_$v"))
+      .select(col("movieId") +: values.map(v => zeroFilled(v, s"rating_$v")): _*)
   }
 
-  /** D7 — `fillna(0)` for the pivot columns. `na.fill` mis-parses the
+  /** D7 — `fillna(0)` for a pivot column. `na.fill` mis-parses the
     * reference-faithful dotted names (`rating_0.5`) as nested fields, so
-    * fill via coalesce with backtick-quoted refs.
+    * fill via coalesce with a backtick-quoted ref.
     */
-  private def zeroFill(df: DataFrame, cols: Seq[String]): DataFrame =
-    cols.filter(df.columns.contains).foldLeft(df)((d, c) =>
-      d.withColumn(c, coalesce(col(s"`$c`"), lit(0L))))
+  private def zeroFilled(c: String, as: String): Column =
+    coalesce(col(s"`$c`"), lit(0L)).as(as)
 
   /** C1 + B7 + H12 + B2/H13 — merge wiki and kaggle frames, drop
     * out-of-range outliers, fill kaggle zeros from wiki, curate columns.
     */
   def mergeMovies(wiki: DataFrame, kaggle: DataFrame): DataFrame = {
-    // pandas merge suffixes=['_wiki','_kaggle'] for colliding names
+    // pandas merge suffixes=['_wiki','_kaggle'] for colliding names; the
+    // kaggle title is the one kept, under its own name
     val common = (wiki.columns.toSet intersect kaggle.columns.toSet) - "imdb_id"
-    val w = common.foldLeft(wiki)((d, c) => d.withColumnRenamed(c, s"${c}_wiki"))
-    val k = common.foldLeft(kaggle)((d, c) => d.withColumnRenamed(c, s"${c}_kaggle"))
-    val joined = w.join(k, Seq("imdb_id"), "inner")
-      .withColumnRenamed("title_kaggle", "title")
+    def suffixed(df: DataFrame, suffix: String, renamed: Set[String]): DataFrame =
+      df.select(df.columns.toSeq.map(c =>
+        if (renamed(c)) col(s"`$c`").as(c + suffix) else col(s"`$c`")): _*)
+    val joined = suffixed(wiki, "_wiki", common)
+      .join(suffixed(kaggle, "_kaggle", common - "title"), Seq("imdb_id"), "inner")
     // B7: drop rows where the two sources wildly disagree on release date
     val outlier = col("release_date_wiki") > lit("1996-01-01").cast(DateType) &&
       col("release_date_kaggle") < lit("1965-01-01").cast(DateType)
-    val kept = joined.filter(!coalesce(outlier, lit(false)))
-      .drop("title_wiki", "Original language(s)", "Production company(s)")
-    val filled = kept
-      .withColumn("runtime", Cleaning.fillZeroSentinel(col("runtime"), col("running_time")))
-      .withColumn("budget", Cleaning.fillZeroSentinel(col("budget_kaggle"), col("budget_wiki")))
-      .withColumn("box_office", col("box_office").cast(DoubleType))
-      .withColumn("revenue", Cleaning.fillZeroSentinel(col("revenue"), col("box_office")))
-      .drop("running_time", "budget_kaggle", "budget_wiki", "box_office")
+    // H12: kaggle zeros filled from the parsed wiki values
+    val filled = Map(
+      "runtime" -> Cleaning.fillZeroSentinel(col("runtime"), col("running_time")),
+      "budget" -> Cleaning.fillZeroSentinel(col("budget_kaggle"), col("budget_wiki")),
+      "revenue" -> Cleaning.fillZeroSentinel(col("revenue"), col("box_office").cast(DoubleType)))
     val ordered = Seq(
       "imdb_id", "kaggle_id", "title", "original_title", "tagline",
       "belongs_to_collection", "url", "imdb_link", "runtime", "budget",
@@ -171,8 +199,6 @@ object MoviesEtl {
       "production_countries", "Distributor", "Producer(s)", "Director",
       "Starring", "Cinematography", "Editor(s)", "Writer(s)",
       "Composer(s)", "Based on")
-    val present = ordered.filter(filled.columns.contains)
-    val curated = filled.select(present.map(c => col(s"`$c`")): _*)
     val finalNames = Map(
       "url" -> "wikipedia_url", "release_date_kaggle" -> "release_date",
       "Country" -> "country", "Distributor" -> "distributor",
@@ -180,21 +206,21 @@ object MoviesEtl {
       "Starring" -> "starring", "Cinematography" -> "cinematography",
       "Editor(s)" -> "editors", "Writer(s)" -> "writers",
       "Composer(s)" -> "composers", "Based on" -> "based_on")
-    finalNames.foldLeft(curated) { case (d, (from, to)) =>
-      if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d
-    }
+    val present = ordered.filter(c => filled.contains(c) || joined.columns.contains(c))
+    joined.filter(!coalesce(outlier, lit(false)))
+      .select(present.map(c =>
+        filled.getOrElse(c, col(s"`$c`")).as(finalNames.getOrElse(c, c))): _*)
   }
 
   /** C2 + D7 — left-merge pivoted rating counts onto movies, zero-fill
     * movies with no ratings.
     */
   def withRatings(movies: DataFrame, ratingCountsDf: DataFrame): DataFrame = {
-    val ratingCols = ratingCountsDf.columns.filter(_.startsWith("rating_"))
-    zeroFill(
-      movies.join(broadcast(ratingCountsDf),
-        movies("kaggle_id") === ratingCountsDf("movieId"), "left")
-        .drop("movieId"),
-      ratingCols.toIndexedSeq)
+    val ratingCols = ratingCountsDf.columns.filter(_.startsWith("rating_")).toSet
+    val joined = movies.join(broadcast(ratingCountsDf),
+      movies("kaggle_id") === ratingCountsDf("movieId"), "left")
+    joined.select(joined.columns.toSeq.filter(_ != "movieId").map(c =>
+      if (ratingCols(c)) zeroFilled(c, c) else col(s"`$c`")): _*)
   }
 
   final case class Result(movies: DataFrame, moviesWithRatings: DataFrame)
@@ -208,9 +234,7 @@ object MoviesEtl {
       filterMovieRecords(readWikiJson(spark, wikiPath)))))
     val kaggle = cleanKaggle(readCsv(spark, kagglePath))
     val movies = mergeMovies(wiki, kaggle)
-    val ratings = readCsv(spark, ratingsPath)
-      .withColumn("rated_at", Cleaning.fromUnixSeconds(col("timestamp")))
-    Result(movies, withRatings(movies, ratingCounts(ratings)))
+    Result(movies, withRatings(movies, ratingCounts(readRatings(spark, ratingsPath))))
   }
 
   /** Outcome of a resilient run: the (possibly partial) result plus the
@@ -254,8 +278,7 @@ object MoviesEtl {
     val movies = stage("kaggle_clean")(cleanKaggle(readCsv(spark, kagglePath)))
       .flatMap(k => stage("merge_movies")(mergeMovies(wiki, k)))
       .getOrElse(wiki)
-    val withR = stage("ratings_read")(readCsv(spark, ratingsPath)
-        .withColumn("rated_at", Cleaning.fromUnixSeconds(col("timestamp"))))
+    val withR = stage("ratings_read")(readRatings(spark, ratingsPath))
       .flatMap(r => stage("ratings_pivot_join")(withRatings(movies, ratingCounts(r))))
       .getOrElse(movies)
     ResilientRun(Result(movies, withR), completed.result(), failed.result())
@@ -266,16 +289,24 @@ object MoviesEtl {
     * Both sinks overwrite for idempotent re-runs; the reference's
     * chunked-append semantics live in
     * [[graft.streaming.StreamingOps.chunkedLoad]].
+    *
+    * `moviesWithRatings` extends `movies`, so `movies` is cached for the
+    * two writes and the second one reads it instead of re-parsing and
+    * re-deduplicating the inputs. A frame the caller cached stays as the
+    * caller left it.
     */
   def load(result: Result, outDir: String,
            jdbcUrl: Option[String] = None,
-           jdbcProps: java.util.Properties = new java.util.Properties): Unit =
-    jdbcUrl match {
+           jdbcProps: java.util.Properties = new java.util.Properties): Unit = {
+    val cacheHere = result.movies.storageLevel == StorageLevel.NONE
+    if (cacheHere) result.movies.persist()
+    try jdbcUrl match {
       case Some(url) =>
         result.movies.write.mode("overwrite").jdbc(url, "movies", jdbcProps)
         result.moviesWithRatings.write.mode("overwrite").jdbc(url, "movies_with_ratings", jdbcProps)
       case None =>
         result.movies.write.mode("overwrite").parquet(s"$outDir/movies")
         result.moviesWithRatings.write.mode("overwrite").parquet(s"$outDir/movies_with_ratings")
-    }
+    } finally if (cacheHere) result.movies.unpersist()
+  }
 }

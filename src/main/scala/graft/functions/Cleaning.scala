@@ -148,29 +148,30 @@ object Cleaning {
   /** H13 — N-to-1 column consolidation (`change_column_name`): each
     * target column is the first non-null among its source spellings
     * (e.g. `Writer(s)` ← Screenplay by / Story by / Written by /
-    * Adaptation by). Sources are dropped, target added.
+    * Adaptation by), followed by the target itself when the frame has
+    * it. One projection: the untouched columns keep their order, sources
+    * and old targets go, and each merged target is appended in `targets`
+    * order.
     */
   def consolidateColumns(df: DataFrame, targets: Seq[(String, Seq[String])]): DataFrame = {
     val present: Set[String] = df.columns.toSet
-    targets.foldLeft(df) { case (d, (target, sources)) =>
+    val merged = targets.flatMap { case (target, sources) =>
       val live = sources.filter(present.contains)
-      if (live.isEmpty) d
-      else {
-        val merged = coalesce(
-          (live.map(s => col(s"`$s`")) ++
-            (if (present.contains(target)) Seq(col(s"`$target`")) else Nil)): _*)
-        d.withColumn("__merged__", merged)
-          .drop(live.filterNot(_ == target): _*)
-          .drop(target)
-          .withColumnRenamed("__merged__", target)
-      }
+      if (live.isEmpty) None
+      else Some(target -> (live ++ Seq(target).filter(present.contains)))
     }
+    val consumed = merged.flatMap(_._2).toSet
+    df.select(
+      (df.columns.toSeq.filterNot(consumed.contains).map(c => col(s"`$c`")) ++
+        merged.map { case (target, inputs) =>
+          coalesce(inputs.map(s => col(s"`$s`")): _*).as(target)
+        }): _*)
   }
 
   /** H14 — assemble the `alt_titles` map from the ~20 alternate-title
     * language columns that exist in the frame, dropping the originals.
     * Null-valued entries are filtered out, mirroring the reference's
-    * `if key in movie` guard.
+    * `if key in movie` guard. The map is appended as the last column.
     */
   def buildAltTitlesMap(df: DataFrame, langKeys: Seq[String], mapCol: String = "alt_titles"): DataFrame = {
     val live = langKeys.filter(df.columns.contains)
@@ -181,7 +182,8 @@ object Cleaning {
           array(live.map(lit): _*),
           array(live.map(k => col(s"`$k`").cast(StringType)): _*)),
         (_, v) => v.isNotNull)
-      df.withColumn(mapCol, m).drop(live: _*)
+      val kept = df.columns.toSeq.filterNot(c => c == mapCol || live.contains(c))
+      df.select(kept.map(c => col(s"`$c`")) :+ m.as(mapCol): _*)
     }
   }
 

@@ -98,23 +98,24 @@ class CleaningSpec extends SparkSpec {
 
   test("consolidateColumns: N-to-1 with first-non-null semantics") {
     val df = Seq(
-      ("m1", Some("W1"), None: Option[String], None: Option[String]),
-      ("m2", None, Some("S2"), Some("T2")),
-      ("m3", None, None, None))
-      .toDF("title", "Written by", "Screenplay by", "Story by")
+      ("m1", Some("W1"), None: Option[String], None: Option[String], 1990),
+      ("m2", None, Some("S2"), Some("T2"), 1991),
+      ("m3", None, None, None, 1992))
+      .toDF("title", "Written by", "Screenplay by", "Story by", "year")
     val out = Cleaning.consolidateColumns(df,
       Seq("Writer(s)" -> Seq("Written by", "Screenplay by", "Story by")))
-    assert(out.columns.toSet == Set("title", "Writer(s)"))
+    // untouched columns keep their order; the merged target comes last
+    assert(out.columns.toSeq == Seq("title", "year", "Writer(s)"))
     val got = out.orderBy("title").select("Writer(s)").collect().toSeq
       .map(r => Option(r.getString(0)))
     assert(got == Seq(Some("W1"), Some("S2"), None))
   }
 
   test("buildAltTitlesMap collects present languages and drops columns") {
-    val df = Seq(("m1", Some("LeFilm"), None: Option[String]))
-      .toDF("title", "French", "Polish")
+    val df = Seq(("m1", Some("LeFilm"), None: Option[String], 1990))
+      .toDF("title", "French", "Polish", "year")
     val out = Cleaning.buildAltTitlesMap(df, Seq("French", "Polish"))
-    assert(out.columns.toSet == Set("title", "alt_titles"))
+    assert(out.columns.toSeq == Seq("title", "year", "alt_titles"))
     val m = out.select("alt_titles").collect()(0).getMap[String, String](0)
     assert(m == Map("French" -> "LeFilm"))
   }

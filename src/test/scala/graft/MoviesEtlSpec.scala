@@ -1,8 +1,9 @@
 package graft
 
 import graft.etl.MoviesEtl
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end golden test of the reference pipeline shape on the
   * FIXTURES.md §A fixtures (wiki JSON + kaggle CSV + ratings CSV).
@@ -16,6 +17,29 @@ class MoviesEtlSpec extends SparkSpec {
 
   private def movieRow(imdbId: String): Row =
     result.movies.filter(col("imdb_id") === imdbId).collect()(0)
+
+  private def schemaOf(df: DataFrame): Seq[(String, String, Boolean)] =
+    df.schema.fields.toSeq.map(f => (f.name, f.dataType.simpleString, f.nullable))
+
+  /** The curated `movies` columns in output order: name, type, nullable. */
+  private val MoviesSchema = Seq(
+    ("imdb_id", "string", true), ("kaggle_id", "int", true),
+    ("title", "string", true), ("original_title", "string", true),
+    ("tagline", "string", true), ("belongs_to_collection", "string", true),
+    ("wikipedia_url", "string", true), ("imdb_link", "string", true),
+    ("runtime", "double", true), ("budget", "double", true),
+    ("revenue", "double", true), ("release_date", "date", true),
+    ("popularity", "double", true), ("vote_average", "double", true),
+    ("vote_count", "int", true), ("genres", "string", true),
+    ("original_language", "string", true), ("overview", "string", true),
+    ("spoken_languages", "string", true), ("country", "string", true),
+    ("production_companies", "string", true),
+    ("production_countries", "string", true),
+    ("distributor", "string", true), ("producers", "string", true),
+    ("director", "string", true), ("starring", "string", false),
+    ("cinematography", "string", true), ("editors", "string", true),
+    ("writers", "string", true), ("composers", "string", true),
+    ("based_on", "string", true))
 
   test("record filter, dedup, inner join and outlier drop land on 8 movies") {
     // 12 wiki records: -1 TV series (No. of episodes), -1 no imdb_link,
@@ -48,10 +72,11 @@ class MoviesEtlSpec extends SparkSpec {
   }
 
   test("curated schema has the reference's final column names") {
-    val cols = result.movies.columns.toSet
-    for (c <- Seq("imdb_id", "kaggle_id", "title", "wikipedia_url", "runtime",
-      "budget", "revenue", "release_date", "director", "writers"))
-      assert(cols.contains(c), s"missing column $c")
+    // pinned exactly: column order, types and nullability
+    assert(schemaOf(result.movies) == MoviesSchema)
+    val buckets = Seq("0.5", "1.0", "1.5", "2.0", "2.5", "3.0", "3.5", "4.0", "4.5", "5.0")
+    assert(schemaOf(result.moviesWithRatings) ==
+      MoviesSchema ++ buckets.map(b => (s"rating_$b", "bigint", false)))
   }
 
   test("writer consolidation merges the four source spellings") {
@@ -84,15 +109,44 @@ class MoviesEtlSpec extends SparkSpec {
     assert(lambda.getAs[Long]("rating_5.0") == 0L)
   }
 
+  test("whole-star ratings (MovieLens-100k style) land in their .0 buckets") {
+    val dir = java.nio.file.Files.createTempDirectory("whole_star")
+    val ratings = dir.resolve("ratings.csv")
+    java.nio.file.Files.write(ratings, java.util.Arrays.asList(
+      "userId,movieId,rating,timestamp",
+      "1,101,4,847117005", "2,101,4,847117006", "3,101,3,847117007",
+      "1,112,5,847117008"))
+    val wr = MoviesEtl.extractTransformLoad(spark, fixture("wiki_movies.json"),
+      fixture("movies_metadata.csv"), ratings.toString).moviesWithRatings
+    val alpha = wr.filter(col("imdb_id") === "tt0000001").collect()(0)
+    assert(alpha.getAs[Long]("rating_4.0") == 2L)
+    assert(alpha.getAs[Long]("rating_3.0") == 1L)
+    assert(alpha.getAs[Long]("rating_0.5") == 0L)
+    val lambda = wr.filter(col("imdb_id") === "tt0000012").collect()(0)
+    assert(lambda.getAs[Long]("rating_5.0") == 1L)
+  }
+
   test("moviesWithRatings preserves movie count (left join)") {
     assert(result.moviesWithRatings.count() == 8)
   }
 
   test("load writes parquet sinks") {
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
     val out = java.nio.file.Files.createTempDirectory("etl_out").toString
     MoviesEtl.load(result, out)
     val back = spark.read.parquet(s"$out/movies")
     assert(back.count() == 8)
+    assert(spark.read.parquet(s"$out/movies_with_ratings").count() == 8)
+    // load's own cache of `movies` is released
+    assert((sc.getPersistentRDDs.keySet -- baseline).isEmpty)
+    // a `movies` frame the caller cached is left cached
+    val callerCached = result.movies.cache()
+    try {
+      MoviesEtl.load(MoviesEtl.Result(callerCached, result.moviesWithRatings),
+        java.nio.file.Files.createTempDirectory("etl_out_cached").toString)
+      assert(callerCached.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally callerCached.unpersist(blocking = true)
   }
 
   test("resilient run with all sources healthy matches the strict façade") {
