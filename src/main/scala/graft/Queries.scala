@@ -5265,15 +5265,11 @@ object Queries {
         SELECT a_id, b_id, n_eq, n_eq * 1000000 // 12 AS est_ppm
         FROM eq ORDER BY a_id, b_id""")),
 
-    // The SAME near-dup clustering relation through the SECOND CC
-    // engine: alternating large-star/small-star contraction
-    // (O(log²) rounds on ANY topology, where min-label propagation is
-    // O(diameter) — the safety net for chain-shaped overlap graphs).
-    // Shares q_neardup_clusters' recursive-reachability oracle
-    // VERBATIM: two independent clustering algorithms, one declarative
-    // formulation — the prefix-sibling pattern applied to graphs.
+    // Declared sibling of q_neardup_clusters, kept so the declared key
+    // set stays stable: the same relation and the same
+    // recursive-reachability oracle VERBATIM.
     Declared("q_neardup_clusters_star",
-      (s, d) => DedupOps.nearDupKeepersStar(
+      (s, d) => DedupOps.nearDupKeepers(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0),
         numHashes = 32, rowsPerBand = 2, minJaccardPct = 80),
       Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),

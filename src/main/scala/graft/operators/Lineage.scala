@@ -47,7 +47,24 @@ object Lineage {
   val ConfKey = "spark.graft.checkpointDir"
 
   def truncate(df: DataFrame,
-               checkpointDir: Option[String] = None): DataFrame = {
+               checkpointDir: Option[String] = None): DataFrame =
+    checkpoint(df, checkpointDir, eager = true)
+
+  /** LAZY [[truncate]] (round 19): same leaf-plan truncation and the
+    * same [[ConfKey]] local-vs-reliable switch, but materialized by the
+    * CALLER'S next full-scan action instead of an extra eager job. Its
+    * one caller is [[Relational.intervalOverlapPairs]], whose
+    * percentile collect is that action. The caller MUST run an action
+    * covering every partition before reusing the frame, or the
+    * truncation silently stays pending (Spark's documented
+    * lazy-checkpoint contract).
+    */
+  def truncateLazy(df: DataFrame,
+                   checkpointDir: Option[String] = None): DataFrame =
+    checkpoint(df, checkpointDir, eager = false)
+
+  private def checkpoint(df: DataFrame, checkpointDir: Option[String],
+                         eager: Boolean): DataFrame = {
     val dir = checkpointDir.orElse(
       df.sparkSession.conf.getOption(ConfKey).filter(_.trim.nonEmpty))
     dir match {
@@ -72,38 +89,8 @@ object Lineage {
           Option(new org.apache.hadoop.fs.Path(cur).getParent)
             .exists(par => qualified(par.toString) == qualified(d)))
         if (!already) sc.setCheckpointDir(d)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-  }
-
-  /** LAZY [[truncate]] (round 19): same leaf-plan truncation and the
-    * same [[ConfKey]] local-vs-reliable switch, but materialized by the
-    * CALLER'S next full-scan action instead of an extra eager job —
-    * for loops that already run one all-partitions action per round
-    * (the CC convergence probe), this halves the round's job count.
-    * The caller MUST run an action covering every partition before
-    * reusing the frame, or the truncation silently stays pending
-    * (Spark's documented lazy-checkpoint contract).
-    */
-  def truncateLazy(df: DataFrame,
-                   checkpointDir: Option[String] = None): DataFrame = {
-    val dir = checkpointDir.orElse(
-      df.sparkSession.conf.getOption(ConfKey).filter(_.trim.nonEmpty))
-    dir match {
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        def qualified(p: String): String = {
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(sc.hadoopConfiguration)
-            .makeQualified(path).toString
-        }
-        val already = sc.getCheckpointDir.exists(cur =>
-          Option(new org.apache.hadoop.fs.Path(cur).getParent)
-            .exists(par => qualified(par.toString) == qualified(d)))
-        if (!already) sc.setCheckpointDir(d)
-        df.checkpoint(eager = false)
-      case None => df.localCheckpoint(eager = false)
+        df.checkpoint(eager)
+      case None => df.localCheckpoint(eager)
     }
   }
 

@@ -1908,8 +1908,8 @@ object TextOps {
     * re-aggregation of the truncated counts (never a second text
     * scan), and the per-doc score folds `cnt·post` over the same
     * frame after the broadcast (parameter — r10 hint discipline)
-    * posterior join. A/B'd at sf0.1 ([[graft.DsirAB]], binding record
-    * in SCALE.md): the fused form beat the two-pass original ~20-30%
+    * posterior join. A/B'd at sf0.1 (binding record in SCALE.md,
+    * "Round-10 additions"): the fused form beat the two-pass original ~20-30%
     * locally across both sessions, and at 100 TB it halves the
     * dominant cost — corpus text scans. Document text shuffles
     * NOWHERE; the only wide state is the 2^k bucket table, constant

@@ -171,34 +171,20 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("local contraction preserves components exactly (random graphs, both engines)") {
     // the per-partition union-find prep must never merge or split a
-    // component under ANY partitioning of the edge list — compare both
-    // CC engines against a driver-side union-find over random graphs,
-    // re-shuffled across partition counts
+    // component under ANY partitioning of the edge list — compare
+    // connectedComponents against a driver-side union-find over random
+    // graphs, re-shuffled across partition counts
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 3) {
       val n = 40 + trial * 10
       val edges = (1 to n * 2).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
-      // driver-side reference union-find
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(id => id -> find(id)).toMap
+      val want = CcFixtures.unionFind(edges)
       for (parts <- Seq(1, 3, 16)) {
         val df = edges.toDF("a_id", "b_id").repartition(parts)
         val gotMin = DedupOps.connectedComponents(df)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
         assert(gotMin == want, s"min-label diverged (trial=$trial parts=$parts)")
-        val gotStar = DedupOps.connectedComponentsStar(df)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(gotStar == want, s"star diverged (trial=$trial parts=$parts)")
       }
     }
   }
@@ -211,8 +197,8 @@ class DedupSimilaritySpec extends SparkSpec {
     // disk) the residual diameter is ~#partitions and the same engine
     // now converges. NOTE the honest boundary: hash/round-robin
     // repartitioning fragments the chain across partitions and defeats
-    // the contraction — adversarial scattered topologies remain
-    // connectedComponentsStar territory, exactly as its scaladoc says.
+    // the contraction — such scattered topologies are what the star
+    // hand-off is for (the id-shuffled 20000-chain test below).
     val path = (0L until 499L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     for (df <- Seq(path.coalesce(1), path.repartitionByRange(4, col("a_id")))) {
       val got = DedupOps.connectedComponents(df)
@@ -225,21 +211,15 @@ class DedupSimilaritySpec extends SparkSpec {
   test("a cap-exceeding graph fails LOUDLY, not with a deep-plan OOM") {
     // residue-scattered chain (edge i → partition i mod 8, so no
     // partition holds adjacent edges and pass-1 contraction cannot
-    // bite): the round-19 two-hop jump doubles label reach per round,
-    // so closing a 20000 diameter needs ~15+ rounds — the 12-round cap
-    // is exceeded and the contract is the actionable
-    // IllegalStateException; the in-loop lineage truncation (every 8th
-    // round, crossed here) is what keeps the plan shallow enough to
-    // reach it instead of OOMing on plan stringification. (Pre-r19 this
-    // pin used a 499-chain, which the one-hop engine couldn't close in
-    // 12 rounds; the jump engine can. The round-19 member-co-located
-    // SECOND contraction pass collapses any forest that AQE coalesces
-    // into one partition, so the fixture additionally pins
-    // coalescing OFF for the duration — the 100 TB regime, where the
-    // forest never fits one partition and the hash-scattered chain
-    // keeps near-full diameter through pass 2 — and grew to 20000 so
-    // the residual diameter still exceeds the cap with margin. The
-    // loud-cap contract itself is unchanged.)
+    // bite), with coalescing OFF for the duration — the 100 TB regime,
+    // where the forest never fits one partition and the chain keeps
+    // near-full diameter through the member-co-located pass 2. Two
+    // min-label rounds cannot close that diameter, so the graph goes to
+    // star contraction, which needs more than the 10 rounds left of the
+    // shared 12-round cap here: the contract is the actionable
+    // IllegalStateException, reached with a shallow plan (at most two
+    // persisted min-label rounds, and every star round truncates
+    // lineage) instead of an OOM on plan stringification.
     val byResidue = (0 until 8).flatMap(p =>
       (0 until 20000).filter(_ % 8 == p).map(i => (i.toLong, i + 1L)))
     val path = spark.sparkContext.parallelize(byResidue, 8)
@@ -253,6 +233,20 @@ class DedupSimilaritySpec extends SparkSpec {
       }
       assert(e.getMessage.contains("did not converge"), e.getMessage)
     } finally spark.conf.set(coalesceKey, before)
+  }
+
+  test("an id-shuffled, residue-scattered 20000-chain converges through " +
+    "the star hand-off") {
+    // the adversarial regime of the loud-cap test above with the ids
+    // shuffled along the chain: min-label propagation would need
+    // ~diameter rounds; star contraction closes it inside the default
+    // cap
+    val edges = CcFixtures.shuffledChain(20000, seed = 19)
+    val got = CcFixtures.withoutCoalescing(spark) {
+      DedupOps.connectedComponents(CcFixtures.scattered(spark, edges))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
+    assert(got == CcFixtures.unionFind(edges))
   }
 
   test("LongUnionFind survives rehash growth: 60k nodes through a 16-slot table") {

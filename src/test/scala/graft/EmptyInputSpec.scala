@@ -49,7 +49,6 @@ class EmptyInputSpec extends SparkSpec {
 
   test("graph operators return empty on an empty edge list") {
     assert(DedupOps.connectedComponents(emptyPairs).isEmpty)
-    assert(DedupOps.connectedComponentsStar(emptyPairs).isEmpty)
     assert(DedupOps.kCoreFixedRounds(emptyPairs, 2, 3).isEmpty)
     assert(DedupOps.triangleCounts(emptyPairs).isEmpty)
     assert(DedupOps.clusteringCoefficients(emptyPairs).isEmpty)

@@ -6,7 +6,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property tests pinning the distributed graph/funnel operators to
   * trivially-correct driver-side reference implementations on random
-  * inputs — the algorithms (min-label propagation, greedy state-machine
+  * inputs — the algorithms (connected components, greedy state-machine
   * fold) must agree with brute force on every generated case.
   */
 class GraphFunnelPropertySpec extends SparkSpec {
@@ -17,20 +17,6 @@ class GraphFunnelPropertySpec extends SparkSpec {
   private def check(p: Prop): Unit = {
     val res = SCTest.check(params, p)
     assert(res.passed, res.status.toString)
-  }
-
-  /** Reference union-find over the pair list. */
-  private def bruteComponents(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    parent.keys.map(k => k -> find(k)).toMap
   }
 
   test("connectedComponents equals union-find on random graphs") {
@@ -45,29 +31,29 @@ class GraphFunnelPropertySpec extends SparkSpec {
       pairs.isEmpty || {
         val got = DedupOps.connectedComponents(pairs.toDF("a_id", "b_id"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        got == bruteComponents(pairs)
+        got == CcFixtures.unionFind(pairs)
       }
     })
   }
 
-  test("connectedComponentsStar equals union-find on random graphs") {
-    // same generator and reference as the propagation test — the two
-    // CC engines must agree with brute force (and hence each other) on
-    // every random topology, duplicates and reversed edges included
+  test("connectedComponents equals union-find on residue-scattered " +
+    "random graphs with coalescing off") {
+    // the layout that defeats both contraction passes, so graphs whose
+    // diameter outlasts the two min-label rounds reach the star
+    // contraction hand-off; duplicates and both orientations occur
     val pairGen = for {
-      n <- Gen.choose(1, 12)
+      n <- Gen.choose(1, 24)
       pairs <- Gen.listOfN(n, for {
-        a <- Gen.choose(0L, 15L)
-        b <- Gen.choose(0L, 15L) if a != b
-      } yield (a, b)) // UNNORMALIZED on purpose: both orientations occur
+        a <- Gen.choose(0L, 30L)
+        b <- Gen.choose(0L, 30L) if a != b
+      } yield (a, b))
     } yield pairs
     check(Prop.forAll(pairGen) { pairs =>
-      pairs.isEmpty || {
-        val got = DedupOps.connectedComponentsStar(pairs.toDF("a_id", "b_id"))
+      pairs.isEmpty || CcFixtures.withoutCoalescing(spark) {
+        val got = DedupOps.connectedComponents(
+            CcFixtures.scattered(spark, pairs))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        got == bruteComponents(pairs.map { case (a, b) =>
-          (math.min(a, b), math.max(a, b))
-        })
+        got == CcFixtures.unionFind(pairs)
       }
     })
   }

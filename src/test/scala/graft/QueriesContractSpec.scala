@@ -14,6 +14,19 @@ class QueriesContractSpec extends SparkSpec {
     assert(Queries.queries.size == Queries.all.size)
   }
 
+  test("README's declared-query figures equal the declared set") {
+    // every "N declared queries" and "All N are benchmarked" in the
+    // README must track the contract, so the prose cannot drift
+    val readme = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("README.md"))
+    val figures = raw"(\d+) declared queries|All (\d+) are benchmarked".r
+      .findAllMatchIn(readme)
+      .map(m => Option(m.group(1)).getOrElse(m.group(2)).toInt).toList
+    assert(figures.size >= 3, s"README figures not found: $figures")
+    assert(figures.forall(_ == SparkEntry.queries.size),
+      s"README says $figures, SparkEntry declares ${SparkEntry.queries.size}")
+  }
+
   test("every oracle key is a declared query") {
     val undeclared = Queries.oracleSql.keySet -- Queries.queries.keySet
     assert(undeclared.isEmpty, s"oracle without query: $undeclared")

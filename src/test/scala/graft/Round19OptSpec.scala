@@ -16,18 +16,14 @@ class Round19OptSpec extends SparkSpec {
     * faces the full diameter-n chain (exactly the stored-kNN-artifact
     * layout that measured 31 one-hop rounds at sf0.1).
     */
-  private def scatteredPath(n: Int, parts: Int): DataFrame = {
-    import spark.implicits._
-    val byResidue = (0 until parts).flatMap(p =>
-      (0 until n).filter(_ % parts == p).map(i => (i.toLong, i + 1L)))
-    spark.sparkContext.parallelize(byResidue, parts).toDF("a_id", "b_id")
-  }
+  private def scatteredPath(n: Int, parts: Int): DataFrame =
+    CcFixtures.scattered(spark, (0L until n.toLong).map(i => (i, i + 1)), parts)
 
   /** Verbatim copy of the pre-round-19 propagation loop (one-hop
-    * min-label, init fold included) — the reference the jump engine is
-    * pinned against, and the proof the chain graph NEEDS the jump:
-    * one-hop propagation on the scattered path provably exceeds a
-    * log-sized round cap.
+    * min-label, init fold included) — the reference connectedComponents
+    * is pinned against, and the proof the chain graph needs more than
+    * propagation: one-hop propagation on the scattered path provably
+    * exceeds a log-sized round cap.
     */
   private def oneHopCC(pairs: DataFrame, maxIter: Int): DataFrame = {
     val forest = pairs // localSpanningForest is private; the scattered
@@ -84,26 +80,30 @@ class Round19OptSpec extends SparkSpec {
     out
   }
 
-  test("two-hop jump converges a scattered 96-chain inside a log-sized " +
-    "cap the one-hop loop provably exceeds") {
+  test("connectedComponents converges a scattered 96-chain inside a " +
+    "log-sized cap the one-hop loop provably exceeds") {
     val path = scatteredPath(96, 8)
     // one-hop reference: label reach grows one hop per round, so a
     // 96-diameter chain cannot fix-point within 12 rounds
     intercept[IllegalStateException] { oneHopCC(path, maxIter = 12).count() }
-    // jump engine: reach doubles per round — well inside the same cap
-    val got = DedupOps.connectedComponents(path, maxIter = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    // with coalescing off pass 2 keeps its partitions and cannot
+    // collapse the chain either; star contraction after the two
+    // min-label rounds closes it well inside the same cap
+    val got = CcFixtures.withoutCoalescing(spark) {
+      DedupOps.connectedComponents(path, maxIter = 12)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
     assert(got.length == 97 && got.forall(_._2 == 0L),
-      "the chain must collapse to cluster 0 within 12 jump rounds")
+      "the chain must collapse to cluster 0 within 12 rounds")
   }
 
   test("member-co-located second contraction pass makes forest quality " +
     "layout-insensitive: the scattered chain converges in ≤3 rounds") {
-    // the same adversarial layout as the jump-round pin above — pass 1
+    // the same adversarial layout as the cap pin above — pass 1
     // contracts nothing by construction. Pass 2 co-locates forest rows
     // by member, and at this size AQE coalesces the exchange to one
     // partition: contraction completes there and propagation fix-points
-    // immediately, instead of walking the chain ~12 jump rounds.
+    // immediately.
     val path = scatteredPath(96, 8)
     val got = DedupOps.connectedComponents(path, maxIter = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -131,7 +131,7 @@ class Round19OptSpec extends SparkSpec {
       iv.limit(0)).isEmpty)
   }
 
-  test("jump engine returns exactly the one-hop labels on a mixed graph") {
+  test("connectedComponents returns exactly the one-hop labels on a mixed graph") {
     import spark.implicits._
     // two cliques bridged by a path plus singleton self-loops — every
     // topology class the engines must agree on
@@ -146,7 +146,7 @@ class Round19OptSpec extends SparkSpec {
     val got = DedupOps.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == ref && got.nonEmpty,
-      "jump and one-hop engines must emit identical cluster labels")
+      "connectedComponents and the one-hop loop must emit identical labels")
     // both cliques and the bridge are ONE component labeled 0;
     // singletons survive as their own clusters
     assert(got.filter(_._1 <= 25L).forall(_._2 == 0L))

@@ -216,46 +216,52 @@ class Round7ExtOpsSpec extends SparkSpec {
       assert(est(k) == 1000000L, s"pair $k: dup must estimate 1e6 ppm")
   }
 
-  // ---------------- connectedComponentsStar ----------------
+  // ------------- connectedComponents: star contraction -------------
 
   test("star contraction equals min-label propagation on mixed topologies") {
-    import org.apache.spark.sql.DataFrame
-    def labelsOf(df: DataFrame): Map[Long, Long] =
+    def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // a short path, two disjoint cliques, and a lollipop (clique +
-    // tail) — kept SMALL on the propagation side, whose round count is
-    // the path's diameter (the long-path case below is star-only)
-    val path = (100L until 112L).sliding(2).map(s => (s(0), s(1))).toSeq
+    // an id-shuffled 60-path, two disjoint cliques, and a lollipop
+    // (clique + tail). One partition lets contraction collapse it and
+    // min-label converge; the residue-scattered layout with coalescing
+    // off leaves the path's diameter to star contraction
+    val path = CcFixtures.shuffledChain(60, seed = 3)
+      .map { case (a, b) => (a + 100L, b + 100L) }
     val cliqueA = for (a <- 0L to 4L; b <- (a + 1) to 4L) yield (a, b)
     val cliqueB = for (a <- 200L to 203L; b <- (a + 1) to 203L) yield (a, b)
     val tail = Seq((203L, 300L), (300L, 301L))
-    val edges = (path ++ cliqueA ++ cliqueB ++ tail).toDF("a_id", "b_id")
-    val star = labelsOf(DedupOps.connectedComponentsStar(edges))
-    val prop = labelsOf(DedupOps.connectedComponents(edges))
-    assert(star == prop)
+    val edges = path ++ cliqueA ++ cliqueB ++ tail
+    val prop = labelsOf(DedupOps.connectedComponents(
+      edges.toDF("a_id", "b_id").coalesce(1)))
+    val star = CcFixtures.withoutCoalescing(spark) {
+      labelsOf(DedupOps.connectedComponents(CcFixtures.scattered(spark, edges)))
+    }
+    assert(star == prop && prop == CcFixtures.unionFind(edges))
     // and the roots really are the component minima
-    assert(star(111L) == 100L && star(4L) == 0L && star(301L) == 200L)
+    assert(star(160L) == 100L && star(4L) == 0L && star(301L) == 200L)
   }
 
   test("star contraction resolves a LONG path in logarithmic rounds") {
-    // the adversarial topology propagation cannot take (O(diameter)
-    // rounds — the driver-side plan alone outgrows the heap before a
-    // 200-hop chain converges): contraction needs ~log² rounds and a
-    // maxIter of 50 is generous headroom
-    val path = (0L until 200L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("a_id", "b_id")
-    val star = DedupOps.connectedComponentsStar(path)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star.size == 200 && star.values.forall(_ == 0L))
+    // the adversarial topology propagation cannot take in the cap
+    // (O(diameter) rounds for an id-shuffled, residue-scattered
+    // 200-path): contraction needs ~log² rounds, so 20 rounds of
+    // shared budget suffice
+    val path = CcFixtures.shuffledChain(200, seed = 5)
+    val star = CcFixtures.withoutCoalescing(spark) {
+      DedupOps.connectedComponents(CcFixtures.scattered(spark, path),
+          maxIter = 20)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(star.size == 201 && star.values.forall(_ == 0L))
   }
 
   test("star contraction handles duplicate/reversed edges and an empty graph") {
     val messy = Seq((2L, 1L), (1L, 2L), (2L, 3L), (3L, 2L)).toDF("a_id", "b_id")
-    val got = DedupOps.connectedComponentsStar(messy)
+    val got = DedupOps.connectedComponents(messy)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
-    assert(DedupOps.connectedComponentsStar(empty).isEmpty)
+    assert(DedupOps.connectedComponents(empty).isEmpty)
   }
 
   // ---------------- histogramQuantiles ----------------

@@ -38,11 +38,19 @@ class Round8OpsSpec extends SparkSpec {
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
     assert(rddFileCount(dir) > 0,
       s"no reliable checkpoint data written under $dir")
-    // the star-contraction engine takes the same option — same clusters
-    val star = DedupOps.connectedComponentsStar(pairs,
-        checkpointDir = Some(dir.toString))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == default, s"star engine diverged: $star")
+    // an input that outlasts the min-label rounds: the star-contraction
+    // rounds take the same option, each writing its own checkpoint
+    // beside the edges and result checkpoints of the converged run
+    val chain = CcFixtures.shuffledChain(200, seed = 8)
+    val starDir = ckDir()
+    val star = CcFixtures.withoutCoalescing(spark) {
+      DedupOps.connectedComponents(CcFixtures.scattered(spark, chain),
+          checkpointDir = Some(starDir.toString))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(star == CcFixtures.unionFind(chain), "star hand-off diverged")
+    assert(rddFileCount(starDir) > 3,
+      s"star rounds wrote no reliable checkpoints under $starDir")
   }
 
   test("pageRankFixedPoint and kCoreFixedRounds accept the reliable path " +

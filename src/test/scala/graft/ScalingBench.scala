@@ -28,7 +28,7 @@ import graft.operators.{CurationPipeline, DedupOps, Lineage, Relational,
   * count in $SPARK_GRAFT_CPUS — run once at 32 and once at 8 and the
   * ratio is the operator's parallel speedup with compute actually on
   * the critical path. Results land in SCALE.md. Measurement tooling
-  * only (the PipelineProfile pattern) — no declared query, no bench
+  * only, a main in the test tree — no declared query, no bench
   * artifact, nothing persisted for reuse by queries.
   */
 object ScalingBench {
