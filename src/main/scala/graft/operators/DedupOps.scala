@@ -1845,22 +1845,20 @@ object DedupOps {
 
   /** Distinct hashed word n-gram shingles per document — the
     * decontamination unit, factored so the in-plan and artifact-serving
-    * paths cannot drift.
+    * paths cannot drift. One fused kernel per row
+    * ([[graft.plans.SortedHashedSet]] at width `n`): the space-joined
+    * n-grams' xxhash64, sorted and distinct; a doc shorter than `n`
+    * words yields an empty set, which `explode` drops. Joining on the
+    * 8-byte hash, not the n-word string, shrinks the broadcast and the
+    * probe-side hashing; a false share needs a cross-side 64-bit
+    * collision (~|corpus shingles| × |bench shingles| / 2⁶⁴ ≈ 1e-9 —
+    * corpus-pinned negligible). PushdownSpec pins one `split` and one
+    * kernel call per side in the executed plan.
     */
   private def deconShingles(df: DataFrame, idAs: String, n: Int): DataFrame =
-    // tokenize-once: split is its own projection; the `size < n` guard
-    // is a null-producing `when` (explode drops nulls), so no Filter
-    // pushes a second `size(split(…))` evaluation into the scan —
-    // PushdownSpec pins one split per side in the executed plan
-    df.select(col("doc_id").as(idAs), split(col("text"), " ").as("__ws"))
-      .select(col(idAs),
-        // join on the shingle's xxhash64, not the n-word string: 8-byte
-        // keys shrink the broadcast and the probe-side hashing; a false
-        // share needs a cross-side 64-bit collision (~|corpus shingles|
-        // × |bench shingles| / 2⁶⁴ ≈ 1e-9 — corpus-pinned negligible)
-        explode(array_distinct(transform(
-          when(size(col("__ws")) >= n, TextOps.wordNgrams(col("__ws"), n)),
-          sh => xxhash64(sh)))).as("sh"))
+    df.select(col("doc_id").as(idAs),
+      explode(graft.plans.SortedHashedSet.sortedHashedSet(
+        split(col("text"), " "), n)).as("sh"))
 
   /** The shared scoring tail: shingle equi-join (benchmark side
     * broadcast — it is the small side by construction), distinct-shared

@@ -50,14 +50,19 @@ object Lineage {
                checkpointDir: Option[String] = None): DataFrame =
     checkpoint(df, checkpointDir, eager = true)
 
-  /** LAZY [[truncate]] (round 19): same leaf-plan truncation and the
-    * same [[ConfKey]] local-vs-reliable switch, but materialized by the
-    * CALLER'S next full-scan action instead of an extra eager job. Its
-    * one caller is [[Relational.intervalOverlapPairs]], whose
-    * percentile collect is that action. The caller MUST run an action
-    * covering every partition before reusing the frame, or the
-    * truncation silently stays pending (Spark's documented
-    * lazy-checkpoint contract).
+  /** LAZY [[truncate]] (round 19) on the local path: same leaf-plan
+    * truncation, materialized by the CALLER'S next full-scan action
+    * instead of an extra eager job. Its one caller is
+    * [[Relational.intervalOverlapPairs]], whose percentile collect is
+    * that action. The caller MUST run an action covering every
+    * partition before reusing the frame, or the truncation silently
+    * stays pending (Spark's documented lazy-checkpoint contract).
+    *
+    * Under [[ConfKey]] (or an explicit dir) it truncates EAGERLY, as
+    * [[truncate]] does: a lazy reliable checkpoint writes its files in
+    * a second job after the caller's action, and that job recomputes
+    * the frame from its source — the saving the lazy form exists for
+    * turns into a duplicate source stage (Round8OpsSpec pins one).
     */
   def truncateLazy(df: DataFrame,
                    checkpointDir: Option[String] = None): DataFrame =
@@ -89,7 +94,7 @@ object Lineage {
           Option(new org.apache.hadoop.fs.Path(cur).getParent)
             .exists(par => qualified(par.toString) == qualified(d)))
         if (!already) sc.setCheckpointDir(d)
-        df.checkpoint(eager)
+        df.checkpoint(eager = true) // lazy would recompute: see truncateLazy
       case None => df.localCheckpoint(eager)
     }
   }

@@ -159,8 +159,11 @@ object TextOps {
   }
 
   /** Word n-gram shingles of a token-array column: the windowed-slice
-    * expression shared by repetition stats, decontamination, and n-gram
-    * Jaccard (one definition — three consumers). Caller guards
+    * expression shared by the operators that need the n-gram STRINGS
+    * (repetition, n-gram Jaccard, novelty and boilerplate statistics).
+    * Decontamination needs only their hashes and takes them from the
+    * fused [[graft.plans.SortedHashedSet]] kernel, which joins the same
+    * windows without materializing them. Caller guards
     * `size(ws) >= n` (Spark `sequence` DESCENDS when the bound is
     * negative).
     */

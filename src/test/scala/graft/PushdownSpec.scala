@@ -195,6 +195,17 @@ class PushdownSpec extends SparkSpec {
     assert(splits == 2, s"expected one split per side, got $splits:\n$plan")
   }
 
+  test("q_decontaminate shingles each side in one fused kernel, no lambdas") {
+    // the n-gram join + hash is SortedHashedSet at width 3 — an
+    // interpreted transform(concat_ws(slice(…))) / xxhash64 lambda chain
+    // would show as transform( / lambdafunction in the executed plan
+    val plan = executedPlan("q_decontaminate")
+    val kernels = "sorted_hashed_set\\(".r.findAllIn(plan).size
+    assert(kernels == 2, s"expected one sorted_hashed_set per side, got $kernels:\n$plan")
+    assert(!plan.contains("transform(") && !plan.contains("lambdafunction"),
+      s"interpreted lambda left in the shingle path:\n$plan")
+  }
+
   test("q_cooccur tokenizes once and takes top-N without a full sort") {
     // pair fan-out must be the array-slice map pass over ONE projected
     // token array — a second split( would mean the fan-out re-tokenizes;

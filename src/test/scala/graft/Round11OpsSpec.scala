@@ -231,6 +231,43 @@ class Round11OpsSpec extends SparkSpec {
       .select(graft.plans.SortedHashedSet.sortedHashedSet(col("ws")).as("s"))
       .collect().map(_.getSeq[Long](0).length).toSeq
     assert(edge == Seq(0, 1), s"edge cardinalities: $edge")
+    // word n-grams: the composed decontamination chain, guarded for
+    // short docs (the kernel's empty set)
+    def composed(ws: org.apache.spark.sql.Column, n: Int) =
+      when(size(ws) >= n, sort_array(array_distinct(transform(
+        graft.operators.TextOps.wordNgrams(ws, n), g => xxhash64(g)))))
+        .otherwise(array().cast("array<bigint>"))
+    for (n <- Seq(2, 3, 5)) {
+      val grams = docs.select(
+        graft.plans.SortedHashedSet.sortedHashedSet(
+          split(col("text"), " "), n).as("nw"),
+        composed(split(col("text"), " "), n).as("od"))
+      val diverged = grams.filter(not(col("nw") <=> col("od"))).count()
+      assert(diverged == 0, s"n=$n: $diverged documents' n-gram sets diverged")
+    }
+    // n-gram edges: shorter than n, empty tokens from double spaces,
+    // multi-byte UTF-8, a null word inside a window (skipped as
+    // concat_ws skips it), an all-null window (no hash; the composed
+    // form would hash "", so it is left out of the comparison)
+    val ngramEdge = Seq(
+      Seq("one", "two"), Seq("a", "", "b", "", "", "c"),
+      Seq("naïve", "café", "東京", "naïve", "café", "東京"),
+      Seq("x", null, "y", "z"), Seq[String](null, null, null))
+      .map(Tuple1(_)).toDF("ws")
+      .select(col("ws"),
+        graft.plans.SortedHashedSet.sortedHashedSet(col("ws"), 3).as("nw"),
+        composed(col("ws"), 3).as("od"))
+      .collect()
+    val sizes = ngramEdge.map(_.getSeq[Long](1).length).toSeq
+    assert(sizes == Seq(0, 4, 3, 2, 0), s"n-gram edge cardinalities: $sizes")
+    ngramEdge.take(4).foreach { r =>
+      assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"n-gram edge ${r.get(0)}")
+    }
+    val bad0 = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(Tuple1(Seq("a"))).toDF("ws")
+        .select(graft.plans.SortedHashedSet.sortedHashedSet(col("ws"), 0))
+    }
+    assert(bad0.getMessage.contains("n >= 1"), bad0.getMessage)
   }
 
   test("left_outer intervalJoin emits unmatched left rows null-padded after window expiry") {

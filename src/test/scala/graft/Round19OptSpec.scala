@@ -131,6 +131,29 @@ class Round19OptSpec extends SparkSpec {
       iv.limit(0)).isEmpty)
   }
 
+  test("adaptive interval cell is bounded by the length tail, not the median alone") {
+    import spark.implicits._
+    // 1,000 zero-length intervals put p50 at 0, so the median-only cell
+    // is 1 µs and each one-hour interval would ask sequence() for 3.6
+    // billion cover cells; the p999 term keeps the cover side bounded
+    val hour = 3600000000L
+    val rnd = new scala.util.Random(19)
+    val points = (0L until 1000L).map { i =>
+      val s = rnd.nextInt(2 * 3600).toLong * 1000000L
+      (i, s, s)
+    }
+    val long = Seq(0L, hour / 2, hour).zipWithIndex.map { case (s, j) =>
+      (1000L + j, s, s + hour)
+    }
+    val iv = (points ++ long).toDF("iv_id", "s_start", "s_end")
+    val auto = graft.operators.Relational.intervalOverlapPairs(iv)
+      .collect().map(_.toSeq).toSet
+    val fixed = graft.operators.Relational.intervalOverlapPairs(iv, hour)
+      .collect().map(_.toSeq).toSet
+    assert(auto == fixed && auto.size > 1000,
+      s"tail-bounded cell must emit the cell-invariant relation (${auto.size} pairs)")
+  }
+
   test("connectedComponents returns exactly the one-hop labels on a mixed graph") {
     import spark.implicits._
     // two cliques bridged by a path plus singleton self-loops — every

@@ -53,6 +53,22 @@ class Round8OpsSpec extends SparkSpec {
       s"star rounds wrote no reliable checkpoints under $starDir")
   }
 
+  test("truncateLazy under a reliable checkpoint dir computes its source once") {
+    // a lazy reliable checkpoint writes its files in a second job after
+    // the caller's first action, recomputing the frame; the reliable
+    // path therefore truncates eagerly (the local path stays lazy)
+    val evals = spark.sparkContext.longAccumulator("truncate_source_evals")
+    val tick = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val src = spark.range(0, 200, 1, 4).select(tick(col("id")).as("id"))
+    val dir = ckDir()
+    val cut = graft.operators.Lineage.truncateLazy(src, Some(dir.toString))
+    assert(cut.count() == 200L)
+    assert(cut.agg(sum("id")).head().getLong(0) == 19900L)
+    assert(evals.value == 200L,
+      s"source evaluated ${evals.value} times for 200 rows")
+    assert(rddFileCount(dir) > 0, s"no reliable checkpoint data under $dir")
+  }
+
   test("pageRankFixedPoint and kCoreFixedRounds accept the reliable path " +
     "with unchanged results") {
     val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))

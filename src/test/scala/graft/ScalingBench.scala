@@ -33,7 +33,26 @@ import graft.operators.{CurationPipeline, DedupOps, Lineage, Relational,
   */
 object ScalingBench {
 
+  /** Marker the last synthesis step writes: its content names the
+    * corpus (`k` and `sfDir`), so a partial or stale corpus is rebuilt
+    * instead of reused.
+    */
+  def synthMarker(outDir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(outDir, "_SYNTH_OK")
+
+  private def synthStamp(sfDir: String, k: Int): String = s"k=$k\nsfDir=$sfDir\n"
+
+  /** True when `outDir` holds a complete corpus synthesized from
+    * `sfDir` at `k` copies.
+    */
+  def synthReusable(sfDir: String, outDir: String, k: Int): Boolean = {
+    val m = synthMarker(outDir)
+    java.nio.file.Files.isRegularFile(m) &&
+      new String(java.nio.file.Files.readAllBytes(m), "UTF-8") == synthStamp(sfDir, k)
+  }
+
   def synth(spark: SparkSession, sfDir: String, outDir: String, k: Int): Unit = {
+    java.nio.file.Files.deleteIfExists(synthMarker(outDir))
     val copies = 0 until k
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     copies.map { c =>
@@ -64,6 +83,7 @@ object ScalingBench {
         rot.as("embedding"), col("label"))
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+    java.nio.file.Files.write(synthMarker(outDir), synthStamp(sfDir, k).getBytes("UTF-8"))
   }
 
   def noop(df: DataFrame): Unit =
@@ -79,8 +99,7 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (!new java.io.File(s"$outDir/embeddings.parquet").exists())
-      synth(spark, sfDir, outDir, 10)
+    if (!synthReusable(sfDir, outDir, 10)) synth(spark, sfDir, outDir, 10)
     Bench.warmupRelational(spark, sfDir)
     Bench.warmupSubsystems(spark, sfDir)
 
