@@ -807,41 +807,41 @@ object Relational {
     */
   /** [[intervalOverlapPairs]] with the grid cell DERIVED from the
     * interval-length distribution (optimization round 19, VERDICT r18
-    * #2): `cellUs = max(1, p50(len) / 2, p999(len) / MaxCoverCells)`.
+    * #2): `cellUs = max(1, p50(len) / 2, max(len) / MaxCoverCells)`.
     * Half the median length keeps the cover explode factor ≈ 3 rows per
     * interval while candidate pairs stay near the true overlap count —
     * the measured sf0.1 knee (cell sweep on the q_interval_join
     * sessions, p50 length 2 h: cell 2 h → 4.37 s noop, 1 h → 3.81,
     * 30 min → 4.72, 15 min → 6.50), and the knee TRACKS the
-    * distribution instead of a literal tuned on one corpus. The tail
-    * term bounds the explode: when most lengths are near zero and a few
-    * are long, the median alone collapses the cell to 1 µs and each
-    * long interval's `sequence()` asks for one element per µs (3.6
-    * billion for an hour); with it, 99.9% of intervals cover at most
-    * `MaxCoverCells + 1` cells. The output is provably cell-invariant
-    * (Round15ePropertySpec), so the derivation is a performance
-    * parameter only — the quantiles are approximate (GK sketch; exact
-    * percentiles would buffer per-group state linear in distinct
-    * lengths at 100 TB) and both ride the SAME job that materializes
-    * the base checkpoint (lazy truncation on the local path), costing
-    * zero extra actions.
+    * distribution instead of a literal tuned on one corpus. The
+    * longest-interval term bounds the explode: when most lengths are
+    * near zero, the median alone collapses the cell to 1 µs and a long
+    * interval's `sequence()` asks for one element per µs (3.6 billion
+    * for an hour), however rare such intervals are; with it, EVERY
+    * interval covers at most `MaxCoverCells + 1` cells. The price of a
+    * single extreme outlier is a coarser cell (more candidate pairs per
+    * cell), never an unbounded explode. The output is provably
+    * cell-invariant (Round15ePropertySpec), so the derivation is a
+    * performance parameter only — the median is approximate (GK sketch;
+    * an exact percentile would buffer per-group state linear in
+    * distinct lengths at 100 TB) and both statistics ride the SAME job
+    * that materializes the base checkpoint (lazy truncation on the
+    * local path), costing zero extra actions.
     */
   def intervalOverlapPairs(iv: DataFrame): DataFrame = {
     val base = Lineage.truncateLazy(projectIntervals(iv), None)
     val q = base.agg(
-      expr("approx_percentile(s_end - s_start, array(0.5, 0.999))").as("q"))
+      expr("approx_percentile(s_end - s_start, 0.5)").as("p50"),
+      max(col("s_end") - col("s_start")).as("longest"))
       .collect()(0)
     val cellUs =
-      if (q.isNullAt(0)) 3600000000L // empty frame: any cell, no pairs
-      else {
-        val Seq(p50, p999) = q.getSeq[Long](0)
-        math.max(1L, math.max(p50 / 2L, p999 / MaxCoverCells))
-      }
+      if (q.isNullAt(1)) 3600000000L // empty frame: any cell, no pairs
+      else math.max(1L, math.max(q.getLong(0) / 2L, q.getLong(1) / MaxCoverCells))
     pairsFromBase(base, cellUs)
   }
 
-  /** Cover cells per interval the derived cell allows at the p999
-    * length: bounds the cover side's explode factor under a long tail.
+  /** Cover cells the derived cell allows the longest interval: bounds
+    * the cover side's explode factor for every interval.
     */
   private val MaxCoverCells = 1024L
 

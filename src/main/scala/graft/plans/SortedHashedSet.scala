@@ -3,11 +3,11 @@ package graft.plans
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 
 /** The sorted distinct xxhash64 set of a word array's n-grams —
@@ -43,67 +43,62 @@ import org.apache.spark.unsafe.Platform
   *    yields null elements — the deviations-only-off-invariant
   *    contract as [[VecDotBase]].
   *
-  * `n` is a literal; `n < 1` fails analysis.
+  * `n` is a foldable INT, default 1 (`sorted_hashed_set(ws)` in SQL);
+  * a non-literal `n` or `n < 1` fails analysis.
   */
-case class SortedHashedSet(child: Expression, n: Int) extends UnaryExpression {
+case class SortedHashedSet(child: Expression, nExpr: Expression) extends BinaryExpression {
+  override def left: Expression = child
+  override def right: Expression = nExpr
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sorted_hashed_set"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _ if n < 1 => TypeCheckResult.TypeCheckFailure(
+  private lazy val n: Int = nExpr.eval().asInstanceOf[Int]
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (!nExpr.foldable || nExpr.dataType != IntegerType || nExpr.eval() == null)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a literal INT n-gram width, got ${nExpr.sql}")
+    else if (n < 1) TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires an n-gram width n >= 1, got $n")
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an ARRAY<STRING> input, got ${t.catalogString}")
-  }
+    else child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an ARRAY<STRING> input, got ${t.catalogString}")
+    }
 
   /** One fused pass; public so the generated code can call it. */
   def compute(words: ArrayData): ArrayData = {
     val len = words.numElements()
     val hashes = new Array[Long](math.max(0, len - n + 1))
     var m = 0
-    if (n == 1) {
-      // single words hash in place — no copy into the buffer
-      var j = 0
-      while (j < len) {
-        if (!words.isNullAt(j)) {
-          val w = words.getUTF8String(j)
-          hashes(m) = XXH64.hashUnsafeBytes(
-            w.getBaseObject, w.getBaseOffset, w.numBytes, 42L)
-          m += 1
-        }
-        j += 1
-      }
-    } else {
-      var buf = SortedHashedSet.scratch.get()
-      var j = 0
-      while (j < hashes.length) {
-        // join window j..j+n-1 as concat_ws(" ", …) does: nulls skipped,
-        // one separator between consecutive non-null words (even empty)
-        var pos = 0
-        var joined = false
-        var k = j
-        while (k < j + n) {
-          if (!words.isNullAt(k)) {
-            val w = words.getUTF8String(k)
-            val need = pos + 1 + w.numBytes
-            if (need > buf.length) {
-              buf = java.util.Arrays.copyOf(buf, math.max(need, 2 * buf.length))
-              SortedHashedSet.scratch.set(buf)
-            }
-            if (joined) { buf(pos) = ' '; pos += 1 }
-            w.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
-            pos += w.numBytes
-            joined = true
+    var buf = SortedHashedSet.scratch.get()
+    var j = 0
+    while (j < hashes.length) {
+      // join window j..j+n-1 as concat_ws(" ", …) does: nulls skipped,
+      // one separator between consecutive non-null words (even empty)
+      var pos = 0
+      var joined = false
+      var k = j
+      while (k < j + n) {
+        if (!words.isNullAt(k)) {
+          val w = words.getUTF8String(k)
+          val need = pos + 1 + w.numBytes
+          if (need > buf.length) {
+            buf = java.util.Arrays.copyOf(buf, math.max(need, 2 * buf.length))
+            SortedHashedSet.scratch.set(buf)
           }
-          k += 1
+          if (joined) { buf(pos) = ' '; pos += 1 }
+          w.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
+          pos += w.numBytes
+          joined = true
         }
-        if (joined) {
-          hashes(m) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, pos, 42L)
-          m += 1
-        }
-        j += 1
+        k += 1
       }
+      if (joined) {
+        hashes(m) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, pos, 42L)
+        m += 1
+      }
+      j += 1
     }
     java.util.Arrays.sort(hashes, 0, m)
     // in-place dedup over the sorted prefix
@@ -119,18 +114,19 @@ case class SortedHashedSet(child: Expression, n: Int) extends UnaryExpression {
     UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hashes, out))
   }
 
-  protected override def nullSafeEval(a: Any): Any =
+  protected override def nullSafeEval(a: Any, unusedN: Any): Any =
     compute(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
+    nullSafeCodeGen(ctx, ev, (a, _) => {
       val ref = ctx.addReferenceObj("sortedHashedSet", this,
         classOf[SortedHashedSet].getName)
       s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($a);"
     })
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(child = newLeft, nExpr = newRight)
 }
 
 object SortedHashedSet {
@@ -143,7 +139,7 @@ object SortedHashedSet {
     (FunctionIdentifier("sorted_hashed_set"),
       new ExpressionInfo(classOf[SortedHashedSet].getName, "sorted_hashed_set"),
       (children: Seq[Expression]) => SortedHashedSet(children(0),
-        children(1).eval().asInstanceOf[Int]))
+        children.lift(1).getOrElse(Literal(1))))
 
   /** Column-API entry; registers idempotently like [[VecDot]]. */
   def sortedHashedSet(words: Column, n: Int = 1): Column = {

@@ -268,6 +268,16 @@ class Round11OpsSpec extends SparkSpec {
         .select(graft.plans.SortedHashedSet.sortedHashedSet(col("ws"), 0))
     }
     assert(bad0.getMessage.contains("n >= 1"), bad0.getMessage)
+    // SQL registry: one argument is the word set (n = 1); a non-literal
+    // n fails analysis, not evaluation
+    val wsDf = Seq(Tuple1(Seq("b", "a", "b"))).toDF("ws")
+    assert(wsDf.selectExpr("sorted_hashed_set(ws)").head().getSeq[Long](0) ==
+      wsDf.select(graft.plans.SortedHashedSet.sortedHashedSet(col("ws")))
+        .head().getSeq[Long](0))
+    val badN = intercept[org.apache.spark.sql.AnalysisException] {
+      wsDf.selectExpr("sorted_hashed_set(ws, size(ws))")
+    }
+    assert(badN.getMessage.contains("literal INT"), badN.getMessage)
   }
 
   test("left_outer intervalJoin emits unmatched left rows null-padded after window expiry") {

@@ -133,25 +133,40 @@ class Round19OptSpec extends SparkSpec {
 
   test("adaptive interval cell is bounded by the length tail, not the median alone") {
     import spark.implicits._
-    // 1,000 zero-length intervals put p50 at 0, so the median-only cell
-    // is 1 µs and each one-hour interval would ask sequence() for 3.6
-    // billion cover cells; the p999 term keeps the cover side bounded
+    // zero-length intervals put p50 at 0, so the median-only cell is
+    // 1 µs and each one-hour interval would ask sequence() for 3.6
+    // billion cover cells; the longest-interval term keeps every
+    // interval's cover bounded, however rare the long ones are
     val hour = 3600000000L
-    val rnd = new scala.util.Random(19)
-    val points = (0L until 1000L).map { i =>
-      val s = rnd.nextInt(2 * 3600).toLong * 1000000L
-      (i, s, s)
+    def points(k: Int, seed: Int) = {
+      val rnd = new scala.util.Random(seed)
+      (0L until k.toLong).map { i =>
+        val s = rnd.nextInt(2 * 3600).toLong * 1000000L
+        (i, s, s)
+      }
     }
+    def pairs(iv: org.apache.spark.sql.DataFrame, cellUs: Option[Long]) =
+      cellUs.fold(graft.operators.Relational.intervalOverlapPairs(iv))(
+        graft.operators.Relational.intervalOverlapPairs(iv, _))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // a few long intervals among 1,000 points (0.3%)
     val long = Seq(0L, hour / 2, hour).zipWithIndex.map { case (s, j) =>
       (1000L + j, s, s + hour)
     }
-    val iv = (points ++ long).toDF("iv_id", "s_start", "s_end")
-    val auto = graft.operators.Relational.intervalOverlapPairs(iv)
-      .collect().map(_.toSeq).toSet
-    val fixed = graft.operators.Relational.intervalOverlapPairs(iv, hour)
-      .collect().map(_.toSeq).toSet
-    assert(auto == fixed && auto.size > 1000,
+    val few = (points(1000, 19) ++ long).toDF("iv_id", "s_start", "s_end")
+    val auto = pairs(few, None)
+    assert(auto == pairs(few, Some(hour)) && auto.size > 1000,
       s"tail-bounded cell must emit the cell-invariant relation (${auto.size} pairs)")
+    // one long interval among 10,000 points (0.01%): every quantile up
+    // to p999 is 0, only the longest length sees it. Compared against a
+    // 1-minute cell — an hour cell would put ~5,000 points in one cell
+    val pts = points(10000, 23)
+    val one = (pts :+ ((10000L, 0L, hour))).toDF("iv_id", "s_start", "s_end")
+    val autoOne = pairs(one, None)
+    assert(autoOne == pairs(one, Some(60000000L)),
+      "longest-bounded cell must emit the cell-invariant relation")
+    assert(autoOne.count(_._2 == 10000L) == pts.count(_._2 <= hour),
+      "the long interval must pair with every point inside it")
   }
 
   test("connectedComponents returns exactly the one-hop labels on a mixed graph") {
