@@ -266,9 +266,7 @@ object Bench {
       // orphaned checkpoint RDDs deterministically — safe here because
       // every declared query builds its frames from scratch, so
       // nothing constructed before this point is ever re-executed.
-      spark.catalog.clearCache()
-      graft.operators.Lineage.releaseAll(spark)
-      System.gc()
+      hygiene(spark)
       // positional control samples (VERDICT r16 #6): after the hygiene
       // block so the controls see the same storage state the NEXT query
       // will — a control inflated here means the position is hot, not
@@ -277,9 +275,7 @@ object Bench {
           ((idx + 1) % controlEvery == 0 || idx == sorted.size - 1)) {
         val ts = ctrlKeys.map(c =>
           bestOf(2)(timeOnce(qmap(c)(spark, sfDir).count())))
-        spark.catalog.clearCache()
-        graft.operators.Lineage.releaseAll(spark)
-        System.gc()
+        hygiene(spark)
         ctrlRows += ((idx, ts))
       }
       name -> t
@@ -365,9 +361,22 @@ object Bench {
     spark.read.parquet("target/warmup_parquet").agg(sum(col("v"))).collect()
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The between-keys storage hygiene of [[runSuite]] (see the comment
+    * at its call site), shared by every timing main: drop the
+    * CacheManager entries, unpersist orphaned checkpoint RDDs, nudge GC.
+    * Session memos ([[graft.sources.SessionMemo]]) are left alone.
+    */
+  def hygiene(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    graft.operators.Lineage.releaseAll(spark)
+    System.gc()
+  }
+
+  /** The local session every main runs on: `local[cpus]`, one shuffle
+    * partition per core, UTC session time zone (as the test session
+    * and perfbench use), no UI.
+    */
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -375,6 +384,7 @@ object Bench {
       // iterative ops (connected components, k-means) cache tiny label
       // frames whose exchanges otherwise fan out to full width
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -383,18 +393,23 @@ object Bench {
     // scan, the cumulative-days retention frame) trip WindowExec's blanket
     // "No Partition Defined" WARN. Those frames are bounded by
     // construction (see each operator's scaladoc), and the driver captures
-    // this process's tail as the binding bench artifact — keep false
-    // alarms out of it without touching the global WARN level.
+    // the mains' output tails — keep false alarms out of them without
+    // touching the global WARN level.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)
-    // The between-queries Lineage.releaseAll deliberately unpersists
-    // localCheckpointed RDDs of frames that are already dead — Spark
-    // WARNs "cannot be recomputed after unpersisting" per RDD, which
-    // is exactly the intended semantics here and would flood the
-    // captured artifact tail across ~200 queries.
+    // [[hygiene]] deliberately unpersists localCheckpointed RDDs of
+    // frames that are already dead — Spark WARNs "cannot be recomputed
+    // after unpersisting" per RDD, which is exactly the intended
+    // semantics and would flood the captured tail across ~200 queries.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val line = runSuite(spark, sfDir, SparkEntry.queries.toSeq)
     spark.stop()
     // printed AFTER spark.stop() so no executor/shutdown log line can

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Isolated min-of-N timing for INDIVIDUAL declared queries — the
   * bench-regression triage tool (VERDICT r5 #4): a fresh JVM, one query
@@ -15,18 +14,10 @@ object IsolatedBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass one or more declared query names")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same warmup as Bench.runSuite so first-sample timings are comparable
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().collect()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    // Bench.runSuite's warmup, so first-sample timings are comparable
+    Bench.warmupRelational(spark, sfDir)
+    Bench.warmupSubsystems(spark, sfDir)
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
@@ -37,9 +28,7 @@ object IsolatedBench {
         s"samples=${samples.map(s => f"$s%.3f").mkString(",")} sf=$sfDir")
       // same inter-query hygiene as Bench.runSuite, so a multi-name
       // invocation measures each query as if it ran alone
-      spark.catalog.clearCache()
-      graft.operators.Lineage.releaseAll(spark)
-      System.gc()
+      Bench.hygiene(spark)
     }
     spark.stop()
   }

@@ -1885,7 +1885,7 @@ object DedupOps {
     */
   def deconWriteIndex(benchmark: DataFrame, srcDir: String, outDir: String,
                       n: Int, benchKey: String): Boolean = {
-    graft.sources.StorageOps.materializeCached(benchmark.sparkSession,
+    graft.sources.SessionMemo.artifact(benchmark.sparkSession,
       s"decon_index:$outDir:n=$n:$benchKey", srcDir, outDir) {
       deconShingles(benchmark, "bench_id", n)
         .repartitionByRange(8, col("sh"))
@@ -1960,7 +1960,7 @@ object DedupOps {
       "deconIndexUpsert: batch bench_ids must be NEW (an id already " +
         "indexed would double-count its shingles — take it down first, " +
         "then append the refreshed benchmark)")
-    graft.sources.StorageOps.materializeCached(spark,
+    graft.sources.SessionMemo.artifact(spark,
       s"decon_upsert:$outDir:n=$n:$batchKey", srcDir, outDir) {
       spark.read.parquet(s"$baseDir/shingles")
         .join(delKeys, Seq("bench_id"), "left_anti")

@@ -146,7 +146,7 @@ object RetrievalOps {
     */
   def bm25WriteIndex(documents: DataFrame, srcDir: String,
                      outDir: String, rangeParts: Int = 32): Boolean = {
-    graft.sources.StorageOps.materializeCached(documents.sparkSession,
+    graft.sources.SessionMemo.artifact(documents.sparkSession,
       s"bm25_index:$outDir:$rangeParts:dl", srcDir, outDir) {
       val (tf, dl) = tfDl(documents)
       val tfT = tf.lineageTruncate() // 2 consumers: postings + df
@@ -357,7 +357,7 @@ object RetrievalOps {
       "bm25CompactWrite: batch doc_ids must be NEW (an id already in " +
         "the base would double-count its term frequencies — take it " +
         "down first, then append the re-crawl)")
-    graft.sources.StorageOps.materializeCached(spark,
+    graft.sources.SessionMemo.artifact(spark,
       s"bm25_compact:$outDir:$batchKey:$rangeParts:dl", srcDir, outDir) {
       val storedP = spark.read.parquet(s"$baseDir/postings")
       val storedDl = spark.read.parquet(s"$baseDir/dl")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import graft.operators.Lineage.LineageOps
+import graft.sources.SessionMemo
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -732,73 +733,22 @@ object SimilarityOps {
     * (k rows — always broadcastable). `release()` drops the cached
     * assignment when the index is retired.
     */
-  final case class IvfIndex(assigned: DataFrame, centroids: DataFrame) {
+  final case class IvfIndex(assigned: DataFrame, centroids: DataFrame)
+      extends SessionMemo.Releasable {
     def release(): Unit = assigned.unpersist()
   }
 
-  /** Per-dataset memo of trained indexes: bench/verify invoke the
-    * declared query repeatedly, and retraining k-means per invocation is
-    * the "index that isn't an index" anti-pattern. Keyed by the caller's
-    * label PLUS the semantic hash of the input frame's analyzed plan, so
-    * two different frames (e.g. a filtered subset) can never silently
-    * share an index; [[clearIvfCache]] releases everything. The memo does
-    * not watch the files under the plan — rebuild (clear) if the data
-    * dir is rewritten mid-session.
+  /** [[ivfIndex]] memoized per session, caller label, data identity and
+    * parameters ([[graft.sources.SessionMemo]]): retraining k-means per
+    * invocation of a declared query is the "index that isn't an index"
+    * anti-pattern.
     */
-  /** Cache-key component comparing the owning session BY IDENTITY —
-    * immune to the 32-bit identityHashCode collision a string key would
-    * have (equals distinguishes colliding sessions), and usable in a
-    * plain ConcurrentHashMap. NB a weak-keyed map cannot work here: the
-    * cached IvfIndex's DataFrames strongly reference their session, so
-    * a WeakHashMap entry's value would pin its own key forever.
-    */
-  private final class SessionRef(val s: org.apache.spark.sql.SparkSession) {
-    override def hashCode(): Int = System.identityHashCode(s)
-    override def equals(o: Any): Boolean = o match {
-      case r: SessionRef => r.s eq s
-      case _ => false
-    }
-  }
-
-  /** The memo identity of an input frame: the semantic hash of its
-    * analyzed plan (WHAT is computed) combined with the staleness
-    * fingerprint of the files under it (WHICH data — VERDICT r13 #4:
-    * the plan hash alone is identical before and after the files at
-    * the same path are rewritten, so a mid-session testdata
-    * regeneration used to be served stale centroids until the session
-    * died). One stat per input file per lookup — listing cost, the
-    * dirFingerprint discipline.
-    */
-  private def memoPlanKey(df: DataFrame): Int =
-    (df.queryExecution.analyzed.semanticHash(),
-      graft.sources.StorageOps.filesFingerprint(df)).hashCode()
-
-  // Strong identity-keyed memo + eager eviction: every lookup first
-  // sweeps entries whose session has been STOPPED (releasing their
-  // cached assignments), so sequential multi-session JVMs hold at most
-  // the live sessions' indexes plus the final stopped one until the
-  // next call. computeIfAbsent keeps trainings for DIFFERENT keys
-  // concurrent (per-bin locking), unlike a global synchronized block.
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    (SessionRef, String, Int, Int, Int, Int), IvfIndex]()
-
   def ivfIndexCached(embeddings: DataFrame, cacheKey: String, k: Int,
-                     iterations: Int, trainSampleMod: Int = 1): IvfIndex = {
-    ivfCache.forEach { (key, idx) =>
-      if (key._1.s.sparkContext.isStopped && ivfCache.remove(key, idx))
-        scala.util.Try(idx.release())  // unpersist on a stopped context may throw
+                     iterations: Int, trainSampleMod: Int = 1): IvfIndex =
+    SessionMemo.value(embeddings.sparkSession, ("ivf", cacheKey,
+        SessionMemo.frameId(embeddings), k, iterations, trainSampleMod)) {
+      ivfIndex(embeddings, k, iterations, trainSampleMod)
     }
-    val planKey = memoPlanKey(embeddings)
-    ivfCache.computeIfAbsent(
-      (new SessionRef(embeddings.sparkSession), cacheKey, planKey, k,
-        iterations, trainSampleMod),
-      _ => ivfIndex(embeddings, k, iterations, trainSampleMod))
-  }
-
-  def clearIvfCache(): Unit = {
-    ivfCache.values.forEach(_.release())
-    ivfCache.clear()
-  }
 
   private def centroidDf(spark: org.apache.spark.sql.SparkSession,
                          centroids: Array[(Int, Seq[Double])]): DataFrame = {
@@ -876,15 +826,6 @@ object SimilarityOps {
       element_at(typedLit(sorted.map(_._1).toSeq), pos + 1))
   }
 
-  /** Per-(session, key) memo of trained INTEGER centroid sets — plain
-    * driver data (k·dim longs, no RDD/cache state), so unlike
-    * [[ivfCache]] there is nothing to release; entries for stopped
-    * sessions are swept on each lookup. Same "an index retrained per
-    * query is no index" rationale as [[ivfIndexCached]].
-    */
-  private val intCentroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (SessionRef, String, Int, Int, Int, Int), Array[(Int, Seq[Long])]]()
-
   /** Integer k-means centroids: deterministic lowest-id seeds, Lloyd
     * updates as `sum(vi) div count` (truncating int64 — exactly what a
     * SQL engine replays), emptied cells carry their previous centroid.
@@ -940,8 +881,8 @@ object SimilarityOps {
                    iterations: Int, trainSampleMod: Int,
                    queryIds: Seq[Long], topK: Int, nProbe: Int): DataFrame = {
     val withInts = withFixedInts(embeddings).lineageTruncate()
-    val cents = cachedIntCentroids(embeddings, withInts, cacheKey, k,
-      iterations, trainSampleMod)
+    val cents = memoCentroids(SessionMemo.frameId(embeddings), withInts,
+      cacheKey, k, iterations, trainSampleMod)
     // empty corpus ⇒ zero seed centroids ⇒ a zero-element literal
     // struct array whose element type is VOID — unanalyzable. The
     // semantically right answer is simply an empty result.
@@ -949,25 +890,18 @@ object SimilarityOps {
     ivfSearchWithCents(withInts, cents, nProbe, queryIds, topK)
   }
 
-  /** Centroid-memo lookup shared by [[ivfTopKExact]] and
-    * [[ivfRetrainRecall]]: sweep stopped sessions, key on (session,
-    * cacheKey, plan+files identity, params). `source` is the frame
-    * whose DATA identity keys the memo; `withInts` the fixed-point
-    * projection actually trained on.
+  /** [[intCentroids]] of `train` memoized per session, `cacheKey`,
+    * data identity `id` and parameters ([[graft.sources.SessionMemo]]);
+    * `id` is the identity of the frame `train` derives from, worked out
+    * once per operator call.
     */
-  private def cachedIntCentroids(source: DataFrame, withInts: DataFrame,
-                                 cacheKey: String, k: Int, iterations: Int,
-                                 trainSampleMod: Int)
-      : Array[(Int, Seq[Long])] = {
-    intCentroidCache.forEach { (key, _) =>
-      if (key._1.s.sparkContext.isStopped) intCentroidCache.remove(key)
+  private def memoCentroids(id: SessionMemo.FrameId, train: DataFrame,
+                            cacheKey: String, k: Int, iterations: Int,
+                            trainSampleMod: Int): Array[(Int, Seq[Long])] =
+    SessionMemo.value(train.sparkSession, ("centroids", cacheKey, id, k,
+        iterations, trainSampleMod)) {
+      intCentroids(train, k, iterations, trainSampleMod)
     }
-    val planKey = memoPlanKey(source)
-    intCentroidCache.computeIfAbsent(
-      (new SessionRef(source.sparkSession), cacheKey, planKey, k,
-        iterations, trainSampleMod),
-      _ => intCentroids(withInts, k, iterations, trainSampleMod))
-  }
 
   /** The probe-limited search tail of [[ivfTopKExact]] against an
     * EXPLICIT centroid set — factored out so [[ivfRetrainRecall]] can
@@ -1031,8 +965,8 @@ object SimilarityOps {
                       queryIds: Seq[Long], topK: Int,
                       nProbe: Int): DataFrame = {
     val withIntsAll = withFixedInts(embeddings).lineageTruncate()
-    val cents = cachedIntCentroids(embeddings, withIntsAll, cacheKey, k,
-      iterations, trainSampleMod)
+    val cents = memoCentroids(SessionMemo.frameId(embeddings), withIntsAll,
+      cacheKey, k, iterations, trainSampleMod)
     if (cents.isEmpty) return emptyTopKFrame(embeddings)
     ivfSearchCorpusQueries(
       withFixedInts(embeddings.filter(corpusFilter)),
@@ -1067,10 +1001,10 @@ object SimilarityOps {
                        queryIds: Seq[Long], topK: Int): DataFrame = {
     val wb = withFixedInts(base).lineageTruncate()
     val wd = withFixedInts(drifted).lineageTruncate()
-    val stale = cachedIntCentroids(base, wb, cacheKeyStale, k, iterations,
-      trainSampleMod)
-    val fresh = cachedIntCentroids(drifted, wd, cacheKeyNew, k, iterations,
-      trainSampleMod)
+    val stale = memoCentroids(SessionMemo.frameId(base), wb, cacheKeyStale,
+      k, iterations, trainSampleMod)
+    val fresh = memoCentroids(SessionMemo.frameId(drifted), wd, cacheKeyNew,
+      k, iterations, trainSampleMod)
     val queries = wd
       .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
       .select(col("vec_id").as("q_id"), col("vi").as("qvi"))
@@ -1200,18 +1134,12 @@ object SimilarityOps {
       : Option[(DataFrame, DataFrame)] = {
     require(dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     val subDim = dim / m
-    intCentroidCache.forEach { (key, _) =>
-      if (key._1.s.sparkContext.isStopped) intCentroidCache.remove(key)
-    }
     val withInts = withFixedInts(embeddings).lineageTruncate()
-    val planKey = memoPlanKey(embeddings)
+    val id = SessionMemo.frameId(embeddings)
     val codebooks: Seq[Array[(Int, Seq[Long])]] = (0 until m).map { j =>
-      val subbed = withInts
-        .withColumn("vi", slice(col("vi"), j * subDim + 1, subDim))
-      intCentroidCache.computeIfAbsent(
-        (new SessionRef(embeddings.sparkSession), s"$cacheKey#pq$j", planKey,
-          kSub, iterations, trainSampleMod),
-        _ => intCentroids(subbed, kSub, iterations, trainSampleMod))
+      memoCentroids(id, withInts
+        .withColumn("vi", slice(col("vi"), j * subDim + 1, subDim)),
+        s"$cacheKey#pq$j", kSub, iterations, trainSampleMod)
     }
     if (codebooks.exists(_.isEmpty)) return None
     // codes: per-subspace argmax against the literal codebook —
@@ -1266,39 +1194,12 @@ object SimilarityOps {
                      nProbe: Int, m: Int, kSub: Int, iterations: Int,
                      trainSampleMod: Int, queryIds: Seq[Long], topK: Int,
                      refineCandidates: Int, dim: Int = 64): DataFrame = {
-    require(dim % m == 0, s"dim=$dim must split into m=$m subspaces")
+    val (withInts, coarse, assigned, books) = ivfPqTrain(embeddings,
+        cacheKey, kIvf, m, kSub, iterations, trainSampleMod, dim) match {
+      case Some(trained) => trained
+      case None => return emptyTopKFrame(embeddings)
+    }
     val subDim = dim / m
-    intCentroidCache.forEach { (key, _) =>
-      if (key._1.s.sparkContext.isStopped) intCentroidCache.remove(key)
-    }
-    val withInts = withFixedInts(embeddings).lineageTruncate()
-    val planKey = memoPlanKey(embeddings)
-    // coarse codebook: the SAME cache entry ivfTopKExact(cacheKey, kIvf,
-    // iterations, trainSampleMod) trains — shared, not retrained
-    val coarse = intCentroidCache.computeIfAbsent(
-      (new SessionRef(embeddings.sparkSession), cacheKey, planKey, kIvf,
-        iterations, trainSampleMod),
-      _ => intCentroids(withInts, kIvf, iterations, trainSampleMod))
-    if (coarse.isEmpty) return emptyTopKFrame(embeddings)
-    val sortedCoarse = coarse.sortBy(_._1)
-    // assign cells, subtract the coarse centroid → residual frame;
-    // truncated once (codebook training + coding + stats all read it)
-    val assigned = Lineage.truncate(
-      assignCellsInt(withInts, coarse)
-        .withColumn("cvec",
-          element_at(typedLit(sortedCoarse.map(_._2)), col("cell") + 1))
-        .withColumn("rvi",
-          zip_with(col("vi"), col("cvec"), (a, b) => a - b)),
-      None)
-    val books: Seq[Array[(Int, Seq[Long])]] = (0 until m).map { j =>
-      val subbed = assigned.select(col("vec_id"),
-        slice(col("rvi"), j * subDim + 1, subDim).as("vi"))
-      intCentroidCache.computeIfAbsent(
-        (new SessionRef(embeddings.sparkSession), s"$cacheKey#ivfpq$j",
-          planKey, kSub, iterations, trainSampleMod),
-        _ => intCentroids(subbed, kSub, iterations, trainSampleMod))
-    }
-    if (books.exists(_.isEmpty)) return emptyTopKFrame(embeddings)
     val sortedBooks = books.map(_.sortBy(_._1))
     val coded = (0 until m).foldLeft(assigned) { (df, j) =>
       df.withColumn(s"code_$j", graft.plans.ArgMaxDot.argMaxDotLong(
@@ -1387,7 +1288,7 @@ object SimilarityOps {
     * bounded candidate set.
     *
     * Memoized on (session, spec, SOURCE FINGERPRINT) via
-    * [[graft.sources.StorageOps.materializeCached]]: the write runs
+    * [[graft.sources.SessionMemo.artifact]]: the write runs
     * once per corpus state; regenerated source files move the
     * fingerprint and force a re-code (the r8 staleness lesson).
     * `srcDir` must be the parquet directory `embeddings` reads from.
@@ -1404,7 +1305,7 @@ object SimilarityOps {
         // made a same-dir rewrite with a different subspace split — or
         // a different fit identity — a false memo hit serving stale
         // codes)
-        graft.sources.StorageOps.materializeCached(embeddings.sparkSession,
+        SessionMemo.artifact(embeddings.sparkSession,
           s"ivfpq_codes:$outDir:$cacheKey:$kIvf:$m:$kSub:$iterations:" +
             s"$trainSampleMod:$dim",
           srcDir, outDir) {
@@ -1489,7 +1390,7 @@ object SimilarityOps {
         import spark.implicits._
         // same key discipline as the codes writer (ADVICE r14): dim and
         // cacheKey are part of the artifact's identity
-        graft.sources.StorageOps.materializeCached(spark,
+        SessionMemo.artifact(spark,
           s"ivfpq_index:$outDir:$cacheKey:$kIvf:$m:$kSub:$iterations:" +
             s"$trainSampleMod:$dim",
           srcDir, outDir) {
@@ -1523,15 +1424,10 @@ object SimilarityOps {
     */
   def ivfDriftMatrix(embeddings: DataFrame, cacheKey: String, k: Int,
                      iterations: Int, modOld: Int, modNew: Int): DataFrame = {
-    intCentroidCache.forEach { (key, _) =>
-      if (key._1.s.sparkContext.isStopped) intCentroidCache.remove(key)
-    }
     val withInts = withFixedInts(embeddings).lineageTruncate()
-    val planKey = memoPlanKey(embeddings)
-    def cents(mod: Int) = intCentroidCache.computeIfAbsent(
-      (new SessionRef(embeddings.sparkSession), s"$cacheKey#drift",
-        planKey, k, iterations, mod),
-      _ => intCentroids(withInts, k, iterations, mod))
+    val id = SessionMemo.frameId(embeddings)
+    def cents(mod: Int) =
+      memoCentroids(id, withInts, s"$cacheKey#drift", k, iterations, mod)
     val oldC = cents(modOld)
     val newC = cents(modNew)
     if (oldC.isEmpty || newC.isEmpty)
@@ -1648,7 +1544,7 @@ object SimilarityOps {
       return false
     val Some((coarse, books)) = ivfPqFit(base, cacheKey, kIvf, m, kSub,
       iterations, trainSampleMod, dim)
-    graft.sources.StorageOps.materializeCached(base.sparkSession,
+    SessionMemo.artifact(base.sparkSession,
       s"ivfpq_compact:$compactDir:$cacheKey:$batchKey:$kIvf:$m:$kSub:" +
         s"$iterations:$trainSampleMod:$dim",
       srcDir, compactDir) {
@@ -1772,17 +1668,33 @@ object SimilarityOps {
   def ivfPqFit(embeddings: DataFrame, cacheKey: String, kIvf: Int, m: Int,
                kSub: Int, iterations: Int, trainSampleMod: Int,
                dim: Int = 64)
-      : Option[(Array[(Int, Seq[Long])], Seq[Array[(Int, Seq[Long])]])] = {
+      : Option[(Array[(Int, Seq[Long])], Seq[Array[(Int, Seq[Long])]])] =
+    ivfPqTrain(embeddings, cacheKey, kIvf, m, kSub, iterations,
+      trainSampleMod, dim).map { case (_, coarse, _, books) => (coarse, books) }
+
+  /** The memoized IVF-PQ training behind [[ivfPqTopKExact]] and
+    * [[ivfPqFit]]: the coarse codebook (the SAME memo entry
+    * ivfTopKExact(cacheKey, kIvf, iterations, trainSampleMod) trains —
+    * shared, not retrained), then one codebook per residual subspace.
+    * Returns the fixed-point frame, the coarse codebook, the truncated
+    * residual frame (vec_id, vi, cell, cvec, rvi) and the subspace
+    * codebooks; None ⟺ the corpus is empty.
+    */
+  private def ivfPqTrain(embeddings: DataFrame, cacheKey: String, kIvf: Int,
+                         m: Int, kSub: Int, iterations: Int,
+                         trainSampleMod: Int, dim: Int)
+      : Option[(DataFrame, Array[(Int, Seq[Long])], DataFrame,
+        Seq[Array[(Int, Seq[Long])]])] = {
     require(dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     val subDim = dim / m
     val withInts = withFixedInts(embeddings).lineageTruncate()
-    val planKey = memoPlanKey(embeddings)
-    val coarse = intCentroidCache.computeIfAbsent(
-      (new SessionRef(embeddings.sparkSession), cacheKey, planKey, kIvf,
-        iterations, trainSampleMod),
-      _ => intCentroids(withInts, kIvf, iterations, trainSampleMod))
+    val id = SessionMemo.frameId(embeddings)
+    val coarse = memoCentroids(id, withInts, cacheKey, kIvf, iterations,
+      trainSampleMod)
     if (coarse.isEmpty) return None
     val sortedCoarse = coarse.sortBy(_._1)
+    // assign cells, subtract the coarse centroid → residual frame;
+    // truncated once (codebook training + coding + stats all read it)
     val assigned = Lineage.truncate(
       assignCellsInt(withInts, coarse)
         .withColumn("cvec",
@@ -1791,14 +1703,12 @@ object SimilarityOps {
           zip_with(col("vi"), col("cvec"), (a, b) => a - b)),
       None)
     val books = (0 until m).map { j =>
-      val subbed = assigned.select(col("vec_id"),
-        slice(col("rvi"), j * subDim + 1, subDim).as("vi"))
-      intCentroidCache.computeIfAbsent(
-        (new SessionRef(embeddings.sparkSession), s"$cacheKey#ivfpq$j",
-          planKey, kSub, iterations, trainSampleMod),
-        _ => intCentroids(subbed, kSub, iterations, trainSampleMod))
+      memoCentroids(id, assigned.select(col("vec_id"),
+        slice(col("rvi"), j * subDim + 1, subDim).as("vi")),
+        s"$cacheKey#ivfpq$j", kSub, iterations, trainSampleMod)
     }
-    if (books.exists(_.isEmpty)) None else Some((coarse, books))
+    if (books.exists(_.isEmpty)) None
+    else Some((withInts, coarse, assigned, books))
   }
 
   /** Code vectors against a FROZEN IVF-PQ index — pure per-row
@@ -2170,7 +2080,7 @@ object SimilarityOps {
     */
   def knnGraphWrite(embeddings: DataFrame, srcDir: String, outDir: String,
                     probeIds: Seq[Long], k: Int): Boolean = {
-    graft.sources.StorageOps.materializeCached(embeddings.sparkSession,
+    SessionMemo.artifact(embeddings.sparkSession,
       s"knn_graph:$outDir:k=$k:p=${probeIds.mkString("_")}",
       srcDir, outDir) {
       knnGraphExactUnsorted(embeddings, probeIds, k)
@@ -2384,7 +2294,7 @@ object SimilarityOps {
     val probeKey = java.security.MessageDigest.getInstance("MD5")
       .digest(probeIds.mkString(",").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    graft.sources.StorageOps.materializeCached(base.sparkSession,
+    SessionMemo.artifact(base.sparkSession,
       s"knn_graph_gen:$genDir:$batchKey:k=$k:p=$probeKey",
       srcDir, genDir) {
       knnGraphUpsertedUnsorted(base, batch, deletes, srcDir, outDir,

@@ -2181,43 +2181,19 @@ object TextOps {
       .orderBy("merge_round")
   }
 
-  /** Session-identity-keyed memo of fitted merge tables (the
-    * [[SimilarityOps]] centroid-cache discipline: a tokenizer refitted
-    * per query is no tokenizer). Values are plain driver rows —
-    * `rounds` tuples, nothing to release; stopped sessions' entries are
-    * swept on each lookup. Keyed by the semantic hash of the input
-    * frame's analyzed plan COMBINED with the data fingerprint of the
-    * files under it ([[graft.sources.StorageOps.filesFingerprint]] —
-    * VERDICT r13 #4): different corpora never share merges, and a
-    * mid-session rewrite of the files at the same path now moves the
-    * fingerprint and forces a refit instead of serving stale merges
-    * (Round14OpsSpec pins the refit on a mutated temp-copy parquet).
+  /** Fitted merge tables memoized per session, data identity and
+    * parameters ([[graft.sources.SessionMemo]]): a tokenizer refitted per
+    * query is no tokenizer. Round14OpsSpec pins the refit when the files
+    * under the same path are rewritten.
     */
-  private final class SessionRef(val s: org.apache.spark.sql.SparkSession) {
-    override def hashCode(): Int = System.identityHashCode(s)
-    override def equals(o: Any): Boolean = o match {
-      case r: SessionRef => r.s eq s
-      case _ => false
-    }
-  }
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SessionRef, Int, Int, Int), Seq[(Long, String, String, Long, Long, Long)]]()
-
   private def bpeFitCached(documents: DataFrame, rounds: Int, topWords: Int)
-      : Seq[(Long, String, String, Long, Long, Long)] = {
-    bpeMergeCache.forEach { (key, _) =>
-      if (key._1.s.sparkContext.isStopped) bpeMergeCache.remove(key)
+      : Seq[(Long, String, String, Long, Long, Long)] =
+    graft.sources.SessionMemo.value(documents.sparkSession, ("bpe",
+        graft.sources.SessionMemo.frameId(documents), rounds, topWords)) {
+      val (out, syms) = bpeFitLoop(documents, rounds, topWords)
+      syms.unpersist()
+      out
     }
-    val planKey = (documents.queryExecution.analyzed.semanticHash(),
-      graft.sources.StorageOps.filesFingerprint(documents)).hashCode()
-    bpeMergeCache.computeIfAbsent(
-      (new SessionRef(documents.sparkSession), planKey, rounds, topWords),
-      _ => {
-        val (out, syms) = bpeFitLoop(documents, rounds, topWords)
-        syms.unpersist()
-        out
-      })
-  }
 
   /** L4 — encode the corpus with the merges [[bpeFit]] learns: per
     * source, the whitespace token count and the symbol count the fitted
@@ -2393,7 +2369,7 @@ object TextOps {
     // source fingerprint alone cannot distinguish two tokenizers over
     // the same corpus — a 6x31 and a 12x64 fit writing the same outDir
     // must not memo-collide)
-    graft.sources.StorageOps.materializeCached(spark,
+    graft.sources.SessionMemo.artifact(spark,
       s"pack_shards:$outDir:$tokKey:$budgetTokens:$shardDocs",
       srcDir, outDir) {
       packBinStreams(documents, wordSyms, budgetTokens, shardDocs)
@@ -2444,7 +2420,7 @@ object TextOps {
     packShardsWrite(baseDocs, wordSyms, budgetTokens, shardDocs, srcDir,
       outDir, tokKey)
     val spark = baseDocs.sparkSession
-    graft.sources.StorageOps.materializeCached(spark,
+    graft.sources.SessionMemo.artifact(spark,
       s"pack_upsert:$upsertDir:$batchKey:$tokKey:$budgetTokens:$shardDocs",
       srcDir, upsertDir) {
       val stored = spark.read.parquet(outDir)
@@ -2512,7 +2488,7 @@ object TextOps {
     require(clash == 0L,
       "packShardsCompact: batch doc_ids and deletes must be disjoint — " +
         "a delete+re-add is two maintenance cycles, not one")
-    graft.sources.StorageOps.materializeCached(spark,
+    graft.sources.SessionMemo.artifact(spark,
       s"pack_compact:$genDir:$batchKey:$tokKey:$budgetTokens:$shardDocs",
       srcDir, genDir) {
       val stored = spark.read.parquet(outDir)

@@ -18,7 +18,7 @@
   *
   * Map of the library:
   *  - [[graft.Queries]] / [[graft.SparkEntry]] — the declared-query
-  *    contract (71 queries; 63 DuckDB-oracle-checked).
+  *    contract: each declared query and its DuckDB oracle SQL.
   *  - [[graft.Tables]] — testdata loaders incl. the TIMESTAMP(NANOS)
   *    shim.
   *  - `graft.functions.Cleaning` — the reference's money/date/runtime

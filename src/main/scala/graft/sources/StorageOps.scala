@@ -272,133 +272,23 @@ object StorageOps {
       .saveAsTable(tableName)
   }
 
-  /** Source-staleness fingerprint of a parquet file/directory: the
-    * sorted (name, length, mtime) tuples of every plain file under
-    * `dir`, md5'd. Cheap (one filesystem listing, no data read) and
-    * exactly the signal the rewrite-every-run staleness discipline
-    * needs: the driver regenerating the testdata rewrites the parquet
-    * files, which moves their length or mtime, which invalidates any
-    * layout memoized against the old fingerprint. Listing is
-    * NON-recursive by design — the engine's layout inputs are flat
-    * parquet files/dirs; a partitioned source would need the recursive
-    * form (and at 10⁸ files a manifest/catalog snapshot id instead).
-    */
-  def dirFingerprint(spark: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(path).filter(_.isFile)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** DATA-IDENTITY fingerprint of a DataFrame's file-backed inputs
-    * (VERDICT r13 #4): the sorted (path, length, mtime) tuples of every
-    * file the plan reads (`Dataset.inputFiles` — the public leaf-scan
-    * enumeration), md5'd. This is the missing staleness component of
-    * the artifact memos: a plan's SEMANTIC hash is identical before and
-    * after the files under the same path are rewritten, so a memo keyed
-    * on the plan alone serves a stale artifact (centroids, BPE merges)
-    * against regenerated data. Folding this fingerprint into the key
-    * makes the memo watch the DATA, not the path — the
-    * [[dirFingerprint]] discipline extended from explicit directories
-    * to arbitrary plans. Frames with no file-backed leaves (memory
-    * streams, literal ranges) fingerprint as a constant, preserving the
-    * plan-hash-only behavior where no files exist to go stale.
-    *
-    * Cost: ONE listStatus RPC per distinct parent directory per memo
-    * LOOKUP (ADVICE r14: the first cut issued a serial getFileStatus
-    * per FILE — on an object store that is N round-trips where the
-    * directory listing is one) — genuinely listing cost, negligible
-    * next to the refit it guards. A file named by `inputFiles` but
-    * absent from its directory's listing (an external regeneration
-    * replaced the part files between plan construction and this
-    * lookup) folds into the fingerprint as a `missing` marker instead
-    * of throwing: a mid-rewrite race moves the fingerprint and forces
-    * a refit — the safe outcome — rather than failing the fit/search
-    * entry point with FileNotFoundException.
-    */
-  def filesFingerprint(df: DataFrame): String = {
-    val files = df.inputFiles
-    if (files.isEmpty) "nofiles"
-    else {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val stats = files.groupBy(f =>
-          new org.apache.hadoop.fs.Path(f).getParent)
-        .flatMap { case (dir, names) =>
-          val wanted = names.map(f =>
-            new org.apache.hadoop.fs.Path(f).getName).toSet
-          val listed =
-            try {
-              dir.getFileSystem(conf).listStatus(dir).iterator
-                .filter(s => wanted(s.getPath.getName))
-                .map(s => s.getPath.getName ->
-                  s"${s.getLen}:${s.getModificationTime}")
-                .toMap
-            } catch {
-              // directory itself vanished mid-rewrite: every file in it
-              // fingerprints as missing (refit, not crash)
-              case _: java.io.FileNotFoundException =>
-                Map.empty[String, String]
-            }
-          names.toSeq.map { f =>
-            val name = new org.apache.hadoop.fs.Path(f).getName
-            f -> listed.getOrElse(name, "missing")
-          }
-        }
-      val entries = files.sorted.map(f => s"$f:${stats(f)}").mkString("|")
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(entries.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-  }
-
-  /** Per-session memo of completed layout rewrites: layout key →
-    * source fingerprint at write time. Weak-keyed by the OWNING
-    * session (a bucketed table lives in that session's catalog, so the
-    * memo must die with it; the values hold no session reference, so
-    * the weak key actually collects). VERDICT r10 #3: the two
-    * layout-read-back declared queries used to re-run their full
-    * rewrite on EVERY invocation for staleness safety — ~5% of bench
-    * suite wall-time spent re-writing an unchanged layout. The
-    * fingerprint carries the same staleness guarantee at the cost of
-    * one directory listing: rewrite when (and only when) the source
-    * files changed, the layout is missing, or the JVM is fresh.
-    */
-  private val layoutMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private def memoFor(ss: SparkSession) = layoutMemo.synchronized {
-    var m = layoutMemo.get(ss)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-      layoutMemo.put(ss, m)
-    }
-    m
-  }
-
-  /** [[writeBucketedTable]] memoized on (session, layout params, source
-    * fingerprint): skips the rewrite when THIS session already wrote
-    * `tableName` with the same spec from byte-identical source files —
-    * and re-runs it the moment the fingerprint moves (regenerated
-    * testdata can never leave a stale layout behind, the r8 lesson).
-    * `srcDir` must be the parquet location `df` reads from; the
-    * staleness check is on those files.
+  /** [[writeBucketedTable]] memoized as a [[SessionMemo]] artifact of
+    * its layout spec (VERDICT r10 #3: the layout read-back queries used
+    * to re-run the full rewrite on every invocation): skips the rewrite
+    * while this session's table exists and was written from
+    * byte-identical source files, and re-runs it the moment the source
+    * fingerprint moves. `srcDir` must be the parquet location `df`
+    * reads from.
     */
   def writeBucketedTableCached(df: DataFrame, srcDir: String,
                                tableName: String, bucketCol: String,
                                nBuckets: Int,
-                               sortCols: Seq[String] = Nil): Unit = {
-    val ss = df.sparkSession
-    val key = s"bucketed:$tableName:$bucketCol:$nBuckets:${sortCols.mkString(",")}"
-    val fp = dirFingerprint(ss, srcDir)
-    val memo = memoFor(ss)
-    if (memo.get(key) != fp || !ss.catalog.tableExists(tableName)) {
+                               sortCols: Seq[String] = Nil): Unit =
+    SessionMemo.tableArtifact(df.sparkSession,
+      s"bucketed:$tableName:$bucketCol:$nBuckets:${sortCols.mkString(",")}",
+      srcDir, tableName) {
       writeBucketedTable(df, tableName, bucketCol, nBuckets, sortCols)
-      memo.put(key, fp)
     }
-  }
 
   /** [[compactZOrder]] memoized the same way: rewrite once per
     * (session, z-spec, source fingerprint), skip while the input files
@@ -406,38 +296,12 @@ object StorageOps {
     */
   def compactZOrderCached(spark: SparkSession, inDir: String, outDir: String,
                           targetBytes: Long, zCols: Seq[String],
-                          bits: Int = 8): Unit = {
-    val key = s"zorder:$outDir:${zCols.mkString(",")}:$bits:$targetBytes"
-    val fp = dirFingerprint(spark, inDir)
-    val memo = memoFor(spark)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val outFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (memo.get(key) != fp || !outFs.exists(outPath)) {
+                          bits: Int = 8): Unit =
+    SessionMemo.artifact(spark,
+      s"zorder:$outDir:${zCols.mkString(",")}:$bits:$targetBytes",
+      inDir, outDir) {
       compactZOrder(spark, inDir, outDir, targetBytes, zCols, bits)
-      memo.put(key, fp)
     }
-  }
-
-  /** Generic (session, key, source-fingerprint) memo runner for a
-    * derived on-disk artifact — the [[writeBucketedTableCached]] /
-    * [[compactZOrderCached]] pattern factored out so new derived
-    * layouts (e.g. the media corpus files) inherit the same staleness
-    * contract: `build` runs when the memoized fingerprint for `key` is
-    * missing/stale (fresh JVM, regenerated source files) or `outDir`
-    * is gone; otherwise the existing artifact is reused. `srcDir` must
-    * be the files the artifact derives from.
-    */
-  def materializeCached(spark: SparkSession, key: String, srcDir: String,
-                        outDir: String)(build: => Unit): Unit = {
-    val fp = dirFingerprint(spark, srcDir)
-    val memo = memoFor(spark)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val outFs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (memo.get(key) != fp || !outFs.exists(outPath)) {
-      build
-      memo.put(key, fp)
-    }
-  }
 
   /** Run `df` to a parquet sink while OBSERVING row counts and a null
     * tally on `keyCol` — `Observation` rides the existing job (metrics

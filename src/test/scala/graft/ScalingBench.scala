@@ -93,12 +93,7 @@ object ScalingBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_x10")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     if (!synthReusable(sfDir, outDir, 10)) synth(spark, sfDir, outDir, 10)
     Bench.warmupRelational(spark, sfDir)
     Bench.warmupSubsystems(spark, sfDir)
@@ -109,16 +104,11 @@ object ScalingBench {
     val probeIds = (0L until 8L)
     val sw = Seq("a", "the", "of", "and", "in")
 
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      Lineage.releaseAll(spark)
-      System.gc()
-    }
     def t(name: String)(f: => Unit): Unit = {
       val samples = (1 to 3).map { _ =>
         val t0 = System.nanoTime(); f
         val dt = (System.nanoTime() - t0) / 1e9
-        hygiene(); dt
+        Bench.hygiene(spark); dt
       }
       println(f"SCALEBENCH $name cpus=$cpus min=${samples.min}%.3f " +
         s"samples=${samples.map(s => f"$s%.3f").mkString(",")}")
@@ -163,7 +153,7 @@ object ScalingBench {
       val samples = (1 to 3).map { _ =>
         val pairs = freshPairs()
         val t0 = System.nanoTime(); f(pairs); val dt = (System.nanoTime() - t0) / 1e9
-        hygiene(); dt
+        Bench.hygiene(spark); dt
       }
       println(f"SCALEBENCH $name cpus=$cpus min=${samples.min}%.3f " +
         s"samples=${samples.map(s => f"$s%.3f").mkString(",")}")

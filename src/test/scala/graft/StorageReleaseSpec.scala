@@ -37,9 +37,10 @@ class StorageReleaseSpec extends SparkSpec {
 
   test("iterative operators leave the CacheManager empty and all blocks reclaimable") {
     // Suites share one session: evict the deliberate long-lived caches
-    // (the IVF index memo) and anything earlier suites pinned, so the
-    // assertions below see only what THESE five queries leak.
-    operators.SimilarityOps.clearIvfCache()
+    // (the session memo's IVF indexes) and anything earlier suites
+    // pinned, so the assertions below see only what THESE five queries
+    // leak.
+    graft.sources.SessionMemo.clear()
     spark.catalog.clearCache()
     val keys = Seq("q_neardup_clusters", "q_dedup_canonical", "q_pagerank",
       "q_gap_fill", "q_neardup_jaccard", "q_ngram_jaccard")
@@ -76,7 +77,7 @@ class StorageReleaseSpec extends SparkSpec {
     * storage pressure.
     */
   test("Bench inter-query hygiene releases all storage blocks deterministically") {
-    operators.SimilarityOps.clearIvfCache()
+    graft.sources.SessionMemo.clear()
     spark.catalog.clearCache()
     val heaviest = Seq("q_cluster_cap_sample", "q_dedup_canonical",
       "q_ngram_jaccard", "q_boilerplate", "q_kcore", "q_minhash_lsh",
@@ -84,9 +85,8 @@ class StorageReleaseSpec extends SparkSpec {
       "q_dedup_tokens_saved")
     heaviest.foreach { k =>
       assert(SparkEntry.queries(k)(spark, dir).count() >= 0)
-      // the exact hygiene sequence Bench.runSuite applies between queries
-      spark.catalog.clearCache()
-      operators.Lineage.releaseAll(spark)
+      // the exact hygiene step Bench.runSuite applies between queries
+      Bench.hygiene(spark)
       val residual = spark.sparkContext.getRDDStorageInfo
         .filter(_.numCachedPartitions > 0)
       assert(residual.isEmpty,
