@@ -18,6 +18,15 @@ import org.apache.spark.sql.types._
   * RE2-safe regexes in oracle-checked queries; event-time math on raw
   * epoch nanos (timezone-free); `row_number` outputs cast to long to
   * match DuckDB's BIGINT.
+  *
+  * Oracle building blocks are defined once, in the "oracle building
+  * blocks" section above `all`: the brute-force Jaccard join, the
+  * recursive components closure, the Lloyd/assignment chain, the DSIR
+  * posterior, the pack prefix sum, the 3-gram shingle, the curation
+  * chain and the rest. An oracle composes them by name instead of
+  * carrying a pasted copy, and two keys that share an oracle share one
+  * `val`. QueriesContractSpec keeps each block's text unique in this
+  * file.
   */
 object Queries {
 
@@ -110,14 +119,8 @@ object Queries {
     s"""WITH c AS (SELECT doc_id, string_split(text, ' ') AS w
                 FROM documents WHERE doc_id % 100 <> 0),
         b AS ($benchSql),
-        cs AS (SELECT DISTINCT doc_id, sh
-               FROM (SELECT doc_id,
-                       unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS sh
-                     FROM c WHERE len(w) >= 3)),
-        bs AS (SELECT DISTINCT bench_id, sh
-               FROM (SELECT bench_id,
-                       unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS sh
-                     FROM b WHERE len(w) >= 3))
+        ${shingleCte("cs", "doc_id", "c")},
+        ${shingleCte("bs", "bench_id", "b")}
         SELECT cs.doc_id, bs.bench_id, COUNT(*)::BIGINT AS n_shared
         FROM cs JOIN bs USING (sh)
         GROUP BY cs.doc_id, bs.bench_id
@@ -216,47 +219,10 @@ object Queries {
   private def ivfExactOracle(k: Int, iterations: Int, mod: Int,
                              nProbe: Int, topK: Int,
                              candFilter: Option[String] = None): String = {
-    val lloyd = (1 to iterations).map { i =>
-      s"""d${i - 1} AS (SELECT t.vec_id, c.cell, SUM(t.vi * c.c) AS dt
-             FROM tr t JOIN c${i - 1} c ON t.pos = c.pos
-             GROUP BY t.vec_id, c.cell),
-        a${i - 1} AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM d${i - 1}) WHERE rn = 1),
-        u$i AS (SELECT a.cell, e.pos,
-               CAST(SUM(e.vi) // COUNT(*) AS BIGINT) AS c
-             FROM a${i - 1} a JOIN tr e ON e.vec_id = a.vec_id
-             GROUP BY a.cell, e.pos),
-        c$i AS (SELECT p.cell, p.pos, COALESCE(u.c, p.c) AS c
-             FROM c${i - 1} p
-             LEFT JOIN u$i u ON p.cell = u.cell AND p.pos = u.pos)"""
-    }.mkString(",\n        ")
-    s"""WITH e AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range(64)) AS pos FROM embeddings)),
-        tr AS (SELECT * FROM e WHERE vec_id % $mod = 0),
-        seed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM tr)) WHERE rn <= $k),
-        c0 AS (SELECT s.cell, e.pos, e.vi AS c
-             FROM seed s JOIN e ON e.vec_id = s.vec_id),
-        $lloyd,
-        dful AS (SELECT v.vec_id, c.cell, SUM(v.vi * c.c) AS dt
-             FROM e v JOIN c$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, c.cell),
-        af AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM dful) WHERE rn = 1),
-        pc AS (SELECT q_id, cell FROM (
-             SELECT vec_id AS q_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM dful WHERE vec_id < 8) WHERE rn <= $nProbe),
+    s"""WITH ${fixedPointExplode()},
+        ${lloydCtes("", "tr", "e", mod, k, iterations, member = "e")},
+        ${assignCtes("dful", "af", "e", s"c$iterations")},
+        pc AS (${rankCells("dful WHERE vec_id < 8", s"rn <= $nProbe", id = "q_id")}),
         cand AS (SELECT pc.q_id, af.vec_id AS n_id
              FROM pc JOIN af ON af.cell = pc.cell${candFilter
                .map(f => s"""
@@ -268,12 +234,7 @@ object Queries {
              FROM cand c JOIN e a ON a.vec_id = c.q_id
                          JOIN e b ON b.vec_id = c.n_id AND a.pos = b.pos
              GROUP BY c.q_id, c.n_id)
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM s) WHERE rn <= $topK
-        ORDER BY q_id, rn"""
+        ${topKByScore("s", topK)}"""
   }
 
   /** The hyperplane set q_simsearch_lsh passes to
@@ -309,16 +270,10 @@ object Queries {
         s"""${p}pr AS (SELECT vec_id AS p_id, vi AS pvi, pos FROM ${p}e
                WHERE vec_id IN (${lshProbeIds.mkString(", ")}))"""
       else
-        s"""${p}pe AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM $planes)),
+        s"""${fixedPointExplode(s"${p}pe", planes)},
         ${p}pr AS (SELECT vec_id AS p_id, vi AS pvi, pos FROM ${p}pe
                WHERE vec_id IN (${lshProbeIds.mkString(", ")}))"""
-    s"""${p}e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM $corpus)),
+    s"""${fixedPointExplode(s"${p}e", corpus)},
         $planeCtes,
         ${p}dp AS (SELECT e.vec_id, pr.p_id, SUM(e.vi * pr.pvi) AS dt
                FROM ${p}e e JOIN ${p}pr pr USING (pos)
@@ -401,14 +356,8 @@ object Queries {
         ${p}h AS (SELECT t.q_id, COUNT(*)::BIGINT AS hits
                FROM ${p}tk t JOIN xs ON xs.q_id = t.q_id AND xs.n_id = t.n_id
                GROUP BY t.q_id)"""
-    s"""WITH me AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM $corpus)),
-        be AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings)),
+    s"""WITH ${fixedPointExplode("me", corpus)},
+        ${fixedPointExplode("be")},
         ql AS (SELECT CAST(unnest([${queryIds.mkString(", ")}]) AS BIGINT)
                  AS q_id),
         xq AS (SELECT vec_id AS q_id, vi, pos FROM me
@@ -463,8 +412,7 @@ object Queries {
         m AS (SELECT a.q_id AS a_id, a.n_id AS b_id
               FROM g a JOIN g b ON a.q_id = b.n_id AND a.n_id = b.q_id
               WHERE a.q_id < a.n_id),
-        ed AS (SELECT a_id AS src, b_id AS dst FROM m
-               UNION SELECT b_id, a_id FROM m)"""
+        ${symEdgesCte("m", "ed")}"""
 
   /** [[knnMutualEdgeCtes]] + transitive closure — adds CTE
     * `cl(vec_id, cluster_id)`, the per-vector cluster assignment.
@@ -472,10 +420,7 @@ object Queries {
   private def knnMutualClusterCtes(k: Int, corpus: String = "embeddings",
                                    planes: String = "embeddings"): String =
     s"""${knnMutualEdgeCtes(k, corpus, planes)},
-        reach(src, dst) AS (
-          SELECT src, dst FROM ed
-          UNION
-          SELECT r.src, ed.dst FROM reach r JOIN ed ON r.dst = ed.src),
+        ${reachCte("ed")},
         cl AS (SELECT v.vec_id,
                  LEAST(v.vec_id, COALESCE(MIN(r.dst), v.vec_id))::BIGINT
                    AS cluster_id
@@ -649,19 +594,7 @@ object Queries {
     }.mkString(",\n        ")
     s"""WITH docs AS (SELECT doc_id, text FROM documents
                 WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' '))
-                AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w
-               GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        e0 AS (SELECT c.a_id, c.b_id FROM c
-              JOIN sz sa ON c.a_id = sa.doc_id
-              JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >=
-                    (sa.set_size + sb.set_size - c.common) * 80),
+        ${jaccardPairCtes("docs", 80, pairs = "e0")},
         $roundCtes
         SELECT id AS doc_id, COUNT(*)::BIGINT AS deg
         FROM (SELECT a_id AS id FROM e$rounds
@@ -669,104 +602,88 @@ object Queries {
         GROUP BY id ORDER BY doc_id"""
   }
 
-  /** DuckDB replay of [[SketchOps.hllEstimate]] at m = 64 over the
-    * documents word stream. Every double constant is emitted via
-    * `Double.toString` from the SAME Scala values the engine uses
-    * (`hllAlpha`/`hllLinearCountLut`), wrapped in CAST(.. AS DOUBLE)
-    * (a bare decimal literal is DECIMAL in DuckDB; string→double
-    * parsing is correctly rounded, so the round-trip is bit-exact).
-    * The harmonic sum is the integer Σ 2^(55−rho) with absent
-    * registers contributing 2^55 — exact int64 both engines.
+  /** `r`/`regs([day,] register, max_rho)`: the m = 64 HLL registers of
+    * the 60-bit hashes `h([day,] h)`; `byDay` keys them per epoch-day.
     */
-  private def hllEstimateOracle: String = {
-    val m = 64
-    val p = 55
+  private def hllRegisterCtes(byDay: Boolean): String = {
+    val (m, p, k) = (64, 55, if (byDay) "day, " else "")
+    s"""r AS (SELECT ${k}h % $m AS register,
+                $p - length(ltrim(bin(h // $m), '0')) AS rho FROM h),
+        regs AS (SELECT ${k}register, MAX(rho) AS max_rho FROM r
+                 GROUP BY ${k}register)"""
+  }
+
+  /** The HLL estimator over `regs([day,] register, max_rho)` at m = 64.
+    * Every double constant is emitted via `Double.toString` from the
+    * SAME Scala values the engine uses (`hllAlpha`/`hllLinearCountLut`),
+    * wrapped in CAST(.. AS DOUBLE) (a bare decimal literal is DECIMAL in
+    * DuckDB; string→double parsing is correctly rounded, so the
+    * round-trip is bit-exact). The harmonic sum is the integer
+    * Σ 2^(55−rho) with absent registers contributing 2^55 — exact int64
+    * both engines.
+    */
+  private def hllEstimateSelect(regs: String, byDay: Boolean): String = {
+    val (m, p) = (64, 55)
     def d(x: Double) = s"CAST('${java.lang.Double.toString(x)}' AS DOUBLE)"
     val num = SketchOps.hllAlpha(m) * m.toDouble * m.toDouble * math.pow(2.0, p)
     val lutCase = SketchOps.hllLinearCountLut(m).zipWithIndex
       .map { case (x, i) => s"WHEN ${i + 1} THEN ${d(x)}" }
       .mkString(" ")
+    val (k, groupBy, orderBy) =
+      if (byDay) ("day, ", " GROUP BY day", " ORDER BY day") else ("", "", "")
+    s"""a AS (SELECT ${k}COALESCE(CAST(SUM(1::BIGINT << ($p - max_rho))
+                       AS BIGINT), 0) AS s_obs,
+                     COUNT(*)::BIGINT AS n_obs FROM $regs$groupBy),
+        s AS (SELECT ${k}s_obs + ($m - n_obs) * (1::BIGINT << $p)
+                       AS s_scaled,
+                     $m - n_obs AS v FROM a),
+        e AS (SELECT ${k}s_scaled, v,
+                ${d(num)} / CAST(s_scaled AS DOUBLE) AS est_raw FROM s)
+        SELECT ${k}s_scaled, v, est_raw,
+          CASE WHEN est_raw <= ${d(2.5 * m)} AND v > 0
+               THEN CASE v $lutCase END
+               ELSE est_raw END AS est
+        FROM e$orderBy"""
+  }
+
+  /** `h(day, h)`: the 60-bit user-id hash of each `events` row (`where`
+    * filters them) with its epoch-day.
+    */
+  private def hllUserDayCte(where: String = ""): String =
+    s"""h AS (SELECT epoch_ns(ts) // 86400000000000 AS day,
+                ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
+                  AS h
+              FROM events$where)"""
+
+  /** DuckDB replay of [[SketchOps.hllEstimate]] at m = 64 over the
+    * documents word stream ([[hllEstimateSelect]]).
+    */
+  private def hllEstimateOracle: String =
     s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS word
                 FROM documents),
         h AS (SELECT ('0x' || substr(md5(word), 1, 15))::BIGINT AS h
               FROM tok),
-        r AS (SELECT h % $m AS register,
-                $p - length(ltrim(bin(h // $m), '0')) AS rho FROM h),
-        regs AS (SELECT register, MAX(rho) AS max_rho FROM r
-                 GROUP BY register),
-        a AS (SELECT COALESCE(CAST(SUM(1::BIGINT << ($p - max_rho))
-                       AS BIGINT), 0) AS s_obs,
-                     COUNT(*)::BIGINT AS n_obs FROM regs),
-        s AS (SELECT s_obs + ($m - n_obs) * (1::BIGINT << $p) AS s_scaled,
-                     $m - n_obs AS v FROM a),
-        e AS (SELECT s_scaled, v,
-                ${d(num)} / CAST(s_scaled AS DOUBLE) AS est_raw FROM s)
-        SELECT s_scaled, v, est_raw,
-          CASE WHEN est_raw <= ${d(2.5 * m)} AND v > 0
-               THEN CASE v $lutCase END
-               ELSE est_raw END AS est
-        FROM e"""
-  }
+        ${hllRegisterCtes(byDay = false)},
+        ${hllEstimateSelect("regs", byDay = false)}"""
 
   /** DuckDB replay of [[SketchOps.hllRegistersBy]] ∘ [[SketchOps
     * .hllEstimateBy]] at m = 64: one HLL sketch PER epoch-day over the
-    * event stream's user ids — the grouped COUNT(DISTINCT) sketch. Same
-    * constants discipline as [[hllEstimateOracle]] (shared Scala
-    * doubles, integer harmonic sums), with the grouping key threaded
-    * through every CTE.
+    * event stream's user ids — the grouped COUNT(DISTINCT) sketch, the
+    * grouping key threaded through every CTE.
     */
-  private def hllDailyUsersOracle: String = {
-    val m = 64
-    val p = 55
-    def d(x: Double) = s"CAST('${java.lang.Double.toString(x)}' AS DOUBLE)"
-    val num = SketchOps.hllAlpha(m) * m.toDouble * m.toDouble * math.pow(2.0, p)
-    val lutCase = SketchOps.hllLinearCountLut(m).zipWithIndex
-      .map { case (x, i) => s"WHEN ${i + 1} THEN ${d(x)}" }
-      .mkString(" ")
-    s"""WITH h AS (SELECT epoch_ns(ts) // 86400000000000 AS day,
-                ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
-                  AS h
-              FROM events),
-        r AS (SELECT day, h % $m AS register,
-                $p - length(ltrim(bin(h // $m), '0')) AS rho FROM h),
-        regs AS (SELECT day, register, MAX(rho) AS max_rho FROM r
-                 GROUP BY day, register),
-        a AS (SELECT day, COALESCE(CAST(SUM(1::BIGINT << ($p - max_rho))
-                       AS BIGINT), 0) AS s_obs,
-                     COUNT(*)::BIGINT AS n_obs FROM regs GROUP BY day),
-        s AS (SELECT day, s_obs + ($m - n_obs) * (1::BIGINT << $p)
-                       AS s_scaled,
-                     $m - n_obs AS v FROM a),
-        e AS (SELECT day, s_scaled, v,
-                ${d(num)} / CAST(s_scaled AS DOUBLE) AS est_raw FROM s)
-        SELECT day, s_scaled, v, est_raw,
-          CASE WHEN est_raw <= ${d(2.5 * m)} AND v > 0
-               THEN CASE v $lutCase END
-               ELSE est_raw END AS est
-        FROM e ORDER BY day"""
-  }
+  private def hllDailyUsersOracle: String =
+    s"""WITH ${hllUserDayCte()},
+        ${hllRegisterCtes(byDay = true)},
+        ${hllEstimateSelect("regs", byDay = true)}"""
 
   /** DuckDB replay of the ROLLING 7-day sketch union
     * ([[SketchOps.hllRollingRegisters]] ∘ [[SketchOps.hllEstimateBy]]):
     * per-day registers, max-rho over each trailing window, then the
     * same bit-deterministic estimator — the WAU shape, sketch-merged.
     */
-  private def hllRollingUsersOracle(windowDays: Int): String = {
-    val m = 64
-    val p = 55
-    def d(x: Double) = s"CAST('${java.lang.Double.toString(x)}' AS DOUBLE)"
-    val num = SketchOps.hllAlpha(m) * m.toDouble * m.toDouble * math.pow(2.0, p)
-    val lutCase = SketchOps.hllLinearCountLut(m).zipWithIndex
-      .map { case (x, i) => s"WHEN ${i + 1} THEN ${d(x)}" }
-      .mkString(" ")
-    s"""WITH h AS (SELECT epoch_ns(ts) // 86400000000000 AS day,
-                ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
-                  AS h
-              FROM events WHERE event_id % 7 = 0),
-        r AS (SELECT day, h % $m AS register,
-                $p - length(ltrim(bin(h // $m), '0')) AS rho FROM h),
-        regs AS (SELECT day, register, MAX(rho) AS max_rho FROM r
-                 GROUP BY day, register),
+  private def hllRollingUsersOracle(windowDays: Int): String =
+    s"""WITH ${hllUserDayCte(" WHERE event_id % 7 = 0")},
+        ${hllRegisterCtes(byDay = true)},
         dd AS (SELECT DISTINCT day AS w_day FROM regs),
         mrg AS (SELECT dd.w_day AS day, regs.register,
                 MAX(regs.max_rho) AS max_rho
@@ -774,20 +691,7 @@ object Queries {
                 ON regs.day BETWEEN dd.w_day - ${windowDays - 1}
                                AND dd.w_day
               GROUP BY dd.w_day, regs.register),
-        a AS (SELECT day, COALESCE(CAST(SUM(1::BIGINT << ($p - max_rho))
-                       AS BIGINT), 0) AS s_obs,
-                     COUNT(*)::BIGINT AS n_obs FROM mrg GROUP BY day),
-        s AS (SELECT day, s_obs + ($m - n_obs) * (1::BIGINT << $p)
-                       AS s_scaled,
-                     $m - n_obs AS v FROM a),
-        e AS (SELECT day, s_scaled, v,
-                ${d(num)} / CAST(s_scaled AS DOUBLE) AS est_raw FROM s)
-        SELECT day, s_scaled, v, est_raw,
-          CASE WHEN est_raw <= ${d(2.5 * m)} AND v > 0
-               THEN CASE v $lutCase END
-               ELSE est_raw END AS est
-        FROM e ORDER BY day"""
-  }
+        ${hllEstimateSelect("mrg", byDay = true)}"""
 
   /** (maxHamming+1)-band banding + bit_count(xor) verify — the DuckDB
     * replay of [[DedupOps.simHashPairs]] (portable hash, 60 bits).
@@ -823,44 +727,9 @@ object Queries {
                             topK: Int, nQueries: Int, dim: Int = 64,
                             refine: Option[Int] = None): String = {
     val subDim = dim / m
-    val lloyd = (1 to iterations).map { i =>
-      s"""d${i - 1} AS (SELECT t.vec_id, t.j, c.cell, SUM(t.vi * c.c) AS dt
-             FROM tr t JOIN c${i - 1} c ON t.pos = c.pos
-             GROUP BY t.vec_id, t.j, c.cell),
-        a${i - 1} AS (SELECT vec_id, j, cell FROM (
-             SELECT vec_id, j, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM d${i - 1}) WHERE rn = 1),
-        u$i AS (SELECT a.cell, e2.pos,
-               CAST(SUM(e2.vi) // COUNT(*) AS BIGINT) AS c
-             FROM a${i - 1} a
-             JOIN tr e2 ON e2.vec_id = a.vec_id AND e2.j = a.j
-             GROUP BY a.cell, e2.pos),
-        c$i AS (SELECT p.cell, p.pos, COALESCE(u.c, p.c) AS c
-             FROM c${i - 1} p
-             LEFT JOIN u$i u ON p.cell = u.cell AND p.pos = u.pos)"""
-    }.mkString(",\n        ")
-    s"""WITH e AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-             pos, pos // $subDim AS j
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range($dim)) AS pos FROM embeddings)),
-        tr AS (SELECT * FROM e WHERE vec_id % $mod = 0),
-        seed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM tr)) WHERE rn <= $kSub),
-        c0 AS (SELECT s.cell, e.pos, e.vi AS c
-             FROM seed s JOIN e ON e.vec_id = s.vec_id),
-        $lloyd,
-        dful AS (SELECT v.vec_id, v.j, c.cell, SUM(v.vi * c.c) AS dt
-             FROM e v JOIN c$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, v.j, c.cell),
-        code AS (SELECT vec_id, j, cell FROM (
-             SELECT vec_id, j, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM dful) WHERE rn = 1),
+    s"""WITH ${fixedPointExplode("e", "embeddings", dim, subDim = Some(subDim))},
+        ${lloydCtes("", "tr", "e", mod, kSub, iterations, perSubspace = true)},
+        ${assignCtes("dful", "code", "e", s"c$iterations", perSubspace = true)},
         q AS (SELECT vec_id AS q_id, pos, vi FROM e
              WHERE vec_id < $nQueries),
         sc AS (SELECT q.q_id, n.vec_id AS n_id,
@@ -880,12 +749,7 @@ object Queries {
              FROM cand cd JOIN e b ON b.vec_id = cd.n_id
                           JOIN q ON q.q_id = cd.q_id AND q.pos = b.pos
              GROUP BY cd.q_id, cd.n_id)""").getOrElse("")}
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM ${if (refine.isDefined) "rer" else "sc"}) WHERE rn <= $topK
-        ORDER BY q_id, rn"""
+        ${topKByScore(if (refine.isDefined) "rer" else "sc", topK)}"""
   }
 
   /** DuckDB replay of [[graft.operators.SimilarityOps.ivfPqTopKExact]]:
@@ -902,119 +766,14 @@ object Queries {
                                nQueries: Int, refineC: Int,
                                dim: Int = 64): String = {
     val subDim = dim / m
-    val coarseLloyd = (1 to iterations).map { i =>
-      s"""d${i - 1} AS (SELECT t.vec_id, c.cell, SUM(t.vi * c.c) AS dt
-             FROM tr t JOIN c${i - 1} c ON t.pos = c.pos
-             GROUP BY t.vec_id, c.cell),
-        a${i - 1} AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM d${i - 1}) WHERE rn = 1),
-        u$i AS (SELECT a.cell, e2.pos,
-               CAST(SUM(e2.vi) // COUNT(*) AS BIGINT) AS c
-             FROM a${i - 1} a JOIN tr e2 ON e2.vec_id = a.vec_id
-             GROUP BY a.cell, e2.pos),
-        c$i AS (SELECT p.cell, p.pos, COALESCE(u.c, p.c) AS c
-             FROM c${i - 1} p
-             LEFT JOIN u$i u ON p.cell = u.cell AND p.pos = u.pos)"""
-    }.mkString(",\n        ")
-    val pqLloyd = (1 to iterations).map { i =>
-      s"""pd${i - 1} AS (SELECT t.vec_id, t.j, c.cell, SUM(t.vi * c.c) AS dt
-             FROM rtr t JOIN pc${i - 1} c ON t.pos = c.pos
-             GROUP BY t.vec_id, t.j, c.cell),
-        pa${i - 1} AS (SELECT vec_id, j, cell FROM (
-             SELECT vec_id, j, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM pd${i - 1}) WHERE rn = 1),
-        pu$i AS (SELECT a.cell, r2.pos,
-               CAST(SUM(r2.vi) // COUNT(*) AS BIGINT) AS c
-             FROM pa${i - 1} a
-             JOIN rtr r2 ON r2.vec_id = a.vec_id AND r2.j = a.j
-             GROUP BY a.cell, r2.pos),
-        pc$i AS (SELECT p.cell, p.pos, COALESCE(u.c, p.c) AS c
-             FROM pc${i - 1} p
-             LEFT JOIN pu$i u ON p.cell = u.cell AND p.pos = u.pos)"""
-    }.mkString(",\n        ")
-    s"""WITH e AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-             pos, pos // $subDim AS j
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range($dim)) AS pos FROM embeddings)),
-        tr AS (SELECT * FROM e WHERE vec_id % $mod = 0),
-        seed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM tr)) WHERE rn <= $kIvf),
-        c0 AS (SELECT s.cell, e.pos, e.vi AS c
-             FROM seed s JOIN e ON e.vec_id = s.vec_id),
-        $coarseLloyd,
-        dful AS (SELECT v.vec_id, c.cell, SUM(v.vi * c.c) AS dt
-             FROM e v JOIN c$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, c.cell),
-        af AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM dful) WHERE rn = 1),
-        res AS (SELECT v.vec_id, v.pos, v.j, v.vi - cc.c AS vi
-             FROM e v JOIN af a ON v.vec_id = a.vec_id
-             JOIN c$iterations cc ON cc.cell = a.cell AND cc.pos = v.pos),
-        rtr AS (SELECT * FROM res WHERE vec_id % $mod = 0),
-        pseed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM rtr)) WHERE rn <= $kSub),
-        pc0 AS (SELECT s.cell, r.pos, r.vi AS c
-             FROM pseed s JOIN res r ON r.vec_id = s.vec_id),
-        $pqLloyd,
-        pdful AS (SELECT v.vec_id, v.j, c.cell, SUM(v.vi * c.c) AS dt
-             FROM res v JOIN pc$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, v.j, c.cell),
-        code AS (SELECT vec_id, j, cell FROM (
-             SELECT vec_id, j, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM pdful) WHERE rn = 1),
-        q AS (SELECT vec_id AS q_id, pos, vi FROM e
-             WHERE vec_id < $nQueries),
-        qprobe AS (SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cell,
-               ROW_NUMBER() OVER (PARTITION BY q.q_id
-                                  ORDER BY SUM(q.vi * c.c) DESC, c.cell) AS rn
-             FROM q JOIN c$iterations c ON q.pos = c.pos
-             GROUP BY q.q_id, c.cell) WHERE rn <= $nProbe),
-        tcoarse AS (SELECT p.q_id, n.vec_id AS n_id,
-               CAST(SUM(q.vi * cc.c) AS BIGINT) AS t1
-             FROM af n JOIN qprobe p ON p.cell = n.cell
-             JOIN c$iterations cc ON cc.cell = n.cell
-             JOIN q ON q.q_id = p.q_id AND q.pos = cc.pos
-             GROUP BY p.q_id, n.vec_id),
-        tres AS (SELECT p.q_id, n.vec_id AS n_id,
-               CAST(SUM(q.vi * pc.c) AS BIGINT) AS t2
-             FROM code n
-             JOIN af a ON a.vec_id = n.vec_id
-             JOIN qprobe p ON p.cell = a.cell
-             JOIN pc$iterations pc
-               ON pc.cell = n.cell AND pc.pos // $subDim = n.j
-             JOIN q ON q.q_id = p.q_id AND q.pos = pc.pos
-             GROUP BY p.q_id, n.vec_id),
-        cand AS (SELECT q_id, n_id FROM (
-             SELECT t.q_id, t.n_id,
-               ROW_NUMBER() OVER (PARTITION BY t.q_id
-                                  ORDER BY t.t1 + r.t2 DESC, t.n_id) AS rn
-             FROM tcoarse t JOIN tres r USING (q_id, n_id))
-             WHERE rn <= $refineC),
-        rer AS (SELECT cd.q_id, cd.n_id,
-               CAST(SUM(q.vi * b.vi) AS BIGINT) AS score_s14
-             FROM cand cd JOIN e b ON b.vec_id = cd.n_id
-                          JOIN q ON q.q_id = cd.q_id AND q.pos = b.pos
-             GROUP BY cd.q_id, cd.n_id)
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM rer) WHERE rn <= $topK
-        ORDER BY q_id, rn"""
+    s"""WITH ${fixedPointExplode("e", "embeddings", dim, subDim = Some(subDim))},
+        ${lloydCtes("", "tr", "e", mod, kIvf, iterations)},
+        ${assignCtes("dful", "af", "e", s"c$iterations")},
+        ${residualCte("res", "e", "af", s"c$iterations")},
+        ${lloydCtes("p", "rtr", "res", mod, kSub, iterations,
+          perSubspace = true, seedAl = "r", member = "r2")},
+        ${assignCtes("pdful", "code", "res", s"pc$iterations", perSubspace = true)},
+        ${ivfPqServe(nQueries, nProbe, refineC, topK, s"c$iterations", s"pc$iterations", subDim)}"""
   }
 
   /** DuckDB replay of [[graft.operators.SimilarityOps.ivfDriftMatrix]]:
@@ -1025,44 +784,10 @@ object Queries {
     */
   private def ivfDriftOracle(k: Int, iterations: Int, modOld: Int,
                              modNew: Int): String = {
-    def chain(p: String, mod: Int): String = {
-      val lloyd = (1 to iterations).map { i =>
-        s"""${p}d${i - 1} AS (SELECT t.vec_id, c.cell, SUM(t.vi * c.c) AS dt
-               FROM ${p}tr t JOIN ${p}c${i - 1} c ON t.pos = c.pos
-               GROUP BY t.vec_id, c.cell),
-          ${p}a${i - 1} AS (SELECT vec_id, cell FROM (
-               SELECT vec_id, cell,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id
-                                    ORDER BY dt DESC, cell) AS rn
-               FROM ${p}d${i - 1}) WHERE rn = 1),
-          ${p}u$i AS (SELECT a.cell, e2.pos,
-                 CAST(SUM(e2.vi) // COUNT(*) AS BIGINT) AS c
-               FROM ${p}a${i - 1} a JOIN ${p}tr e2 ON e2.vec_id = a.vec_id
-               GROUP BY a.cell, e2.pos),
-          ${p}c$i AS (SELECT q.cell, q.pos, COALESCE(u.c, q.c) AS c
-               FROM ${p}c${i - 1} q
-               LEFT JOIN ${p}u$i u ON q.cell = u.cell AND q.pos = u.pos)"""
-      }.mkString(",\n        ")
-      s"""${p}tr AS (SELECT * FROM e WHERE vec_id % $mod = 0),
-        ${p}seed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM ${p}tr)) WHERE rn <= $k),
-        ${p}c0 AS (SELECT s.cell, e.pos, e.vi AS c
-             FROM ${p}seed s JOIN e ON e.vec_id = s.vec_id),
-        $lloyd,
-        ${p}dful AS (SELECT v.vec_id, c.cell, SUM(v.vi * c.c) AS dt
-             FROM e v JOIN ${p}c$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, c.cell),
-        ${p}af AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM ${p}dful) WHERE rn = 1)"""
-    }
-    s"""WITH e AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range(64)) AS pos FROM embeddings)),
+    def chain(p: String, mod: Int): String =
+      s"""${lloydCtes(p, s"${p}tr", "e", mod, k, iterations, prev = "q")},
+        ${assignCtes(s"${p}dful", s"${p}af", "e", s"${p}c$iterations")}"""
+    s"""WITH ${fixedPointExplode()},
         ${chain("o", modOld)},
         ${chain("n", modNew)}
         SELECT CAST(o.cell AS BIGINT) AS old_cell,
@@ -1107,136 +832,18 @@ object Queries {
                                 nQueries: Int, refineC: Int,
                                 dim: Int = 64): String = {
     val subDim = dim / m
-    val coarseLloyd = (1 to iterations).map { i =>
-      s"""d${i - 1} AS (SELECT t.vec_id, c.cell, SUM(t.vi * c.c) AS dt
-             FROM tr t JOIN c${i - 1} c ON t.pos = c.pos
-             GROUP BY t.vec_id, c.cell),
-        a${i - 1} AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM d${i - 1}) WHERE rn = 1),
-        u$i AS (SELECT a.cell, e2.pos,
-               CAST(SUM(e2.vi) // COUNT(*) AS BIGINT) AS c
-             FROM a${i - 1} a JOIN tr e2 ON e2.vec_id = a.vec_id
-             GROUP BY a.cell, e2.pos),
-        c$i AS (SELECT p.cell, p.pos, COALESCE(u.c, p.c) AS c
-             FROM c${i - 1} p
-             LEFT JOIN u$i u ON p.cell = u.cell AND p.pos = u.pos)"""
-    }.mkString(",\n        ")
-    val pqLloyd = (1 to iterations).map { i =>
-      s"""pd${i - 1} AS (SELECT t.vec_id, t.j, c.cell, SUM(t.vi * c.c) AS dt
-             FROM rtr t JOIN pc${i - 1} c ON t.pos = c.pos
-             GROUP BY t.vec_id, t.j, c.cell),
-        pa${i - 1} AS (SELECT vec_id, j, cell FROM (
-             SELECT vec_id, j, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM pd${i - 1}) WHERE rn = 1),
-        pu$i AS (SELECT a.cell, r2.pos,
-               CAST(SUM(r2.vi) // COUNT(*) AS BIGINT) AS c
-             FROM pa${i - 1} a
-             JOIN rtr r2 ON r2.vec_id = a.vec_id AND r2.j = a.j
-             GROUP BY a.cell, r2.pos),
-        pc$i AS (SELECT p.cell, p.pos, COALESCE(u.c, p.c) AS c
-             FROM pc${i - 1} p
-             LEFT JOIN pu$i u ON p.cell = u.cell AND p.pos = u.pos)"""
-    }.mkString(",\n        ")
-    s"""WITH eb AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-             pos, pos // $subDim AS j
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range($dim)) AS pos FROM embeddings)),
+    s"""WITH ${fixedPointExplode("eb", "embeddings", dim, subDim = Some(subDim))},
         $driftedCorpusCte,
-        e AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-             pos, pos // $subDim AS j
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range($dim)) AS pos FROM corpus)),
-        tr AS (SELECT * FROM eb WHERE vec_id % $mod = 0),
-        seed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM tr)) WHERE rn <= $kIvf),
-        c0 AS (SELECT s.cell, e.pos, e.vi AS c
-             FROM seed s JOIN eb e ON e.vec_id = s.vec_id),
-        $coarseLloyd,
-        bdful AS (SELECT v.vec_id, c.cell, SUM(v.vi * c.c) AS dt
-             FROM eb v JOIN c$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, c.cell),
-        baf AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM bdful) WHERE rn = 1),
-        bres AS (SELECT v.vec_id, v.pos, v.j, v.vi - cc.c AS vi
-             FROM eb v JOIN baf a ON v.vec_id = a.vec_id
-             JOIN c$iterations cc ON cc.cell = a.cell AND cc.pos = v.pos),
-        rtr AS (SELECT * FROM bres WHERE vec_id % $mod = 0),
-        pseed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM rtr)) WHERE rn <= $kSub),
-        pc0 AS (SELECT s.cell, r.pos, r.vi AS c
-             FROM pseed s JOIN bres r ON r.vec_id = s.vec_id),
-        $pqLloyd,
-        dful AS (SELECT v.vec_id, c.cell, SUM(v.vi * c.c) AS dt
-             FROM e v JOIN c$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, c.cell),
-        af AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM dful) WHERE rn = 1),
-        res AS (SELECT v.vec_id, v.pos, v.j, v.vi - cc.c AS vi
-             FROM e v JOIN af a ON v.vec_id = a.vec_id
-             JOIN c$iterations cc ON cc.cell = a.cell AND cc.pos = v.pos),
-        pdful AS (SELECT v.vec_id, v.j, c.cell, SUM(v.vi * c.c) AS dt
-             FROM res v JOIN pc$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, v.j, c.cell),
-        code AS (SELECT vec_id, j, cell FROM (
-             SELECT vec_id, j, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM pdful) WHERE rn = 1),
-        q AS (SELECT vec_id AS q_id, pos, vi FROM e
-             WHERE vec_id < $nQueries),
-        qprobe AS (SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cell,
-               ROW_NUMBER() OVER (PARTITION BY q.q_id
-                                  ORDER BY SUM(q.vi * c.c) DESC, c.cell) AS rn
-             FROM q JOIN c$iterations c ON q.pos = c.pos
-             GROUP BY q.q_id, c.cell) WHERE rn <= $nProbe),
-        tcoarse AS (SELECT p.q_id, n.vec_id AS n_id,
-               CAST(SUM(q.vi * cc.c) AS BIGINT) AS t1
-             FROM af n JOIN qprobe p ON p.cell = n.cell
-             JOIN c$iterations cc ON cc.cell = n.cell
-             JOIN q ON q.q_id = p.q_id AND q.pos = cc.pos
-             GROUP BY p.q_id, n.vec_id),
-        tres AS (SELECT p.q_id, n.vec_id AS n_id,
-               CAST(SUM(q.vi * pc.c) AS BIGINT) AS t2
-             FROM code n
-             JOIN af a ON a.vec_id = n.vec_id
-             JOIN qprobe p ON p.cell = a.cell
-             JOIN pc$iterations pc
-               ON pc.cell = n.cell AND pc.pos // $subDim = n.j
-             JOIN q ON q.q_id = p.q_id AND q.pos = pc.pos
-             GROUP BY p.q_id, n.vec_id),
-        cand AS (SELECT q_id, n_id FROM (
-             SELECT t.q_id, t.n_id,
-               ROW_NUMBER() OVER (PARTITION BY t.q_id
-                                  ORDER BY t.t1 + r.t2 DESC, t.n_id) AS rn
-             FROM tcoarse t JOIN tres r USING (q_id, n_id))
-             WHERE rn <= $refineC),
-        rer AS (SELECT cd.q_id, cd.n_id,
-               CAST(SUM(q.vi * b.vi) AS BIGINT) AS score_s14
-             FROM cand cd JOIN e b ON b.vec_id = cd.n_id
-                          JOIN q ON q.q_id = cd.q_id AND q.pos = b.pos
-             GROUP BY cd.q_id, cd.n_id)
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM rer) WHERE rn <= $topK
-        ORDER BY q_id, rn"""
+        ${fixedPointExplode("e", "corpus", dim, subDim = Some(subDim))},
+        ${lloydCtes("", "tr", "eb", mod, kIvf, iterations)},
+        ${assignCtes("bdful", "baf", "eb", s"c$iterations")},
+        ${residualCte("bres", "eb", "baf", s"c$iterations")},
+        ${lloydCtes("p", "rtr", "bres", mod, kSub, iterations,
+          perSubspace = true, seedAl = "r", member = "r2")},
+        ${assignCtes("dful", "af", "e", s"c$iterations")},
+        ${residualCte("res", "e", "af", s"c$iterations")},
+        ${assignCtes("pdful", "code", "res", s"pc$iterations", perSubspace = true)},
+        ${ivfPqServe(nQueries, nProbe, refineC, topK, s"c$iterations", s"pc$iterations", subDim)}"""
   }
 
   /** DuckDB replay of [[graft.operators.SimilarityOps.ivfRetrainRecall]]:
@@ -1255,46 +862,13 @@ object Queries {
     // the stale-vs-retrained recall gap is the audit's signal, not an
     // average over untouched queries that dilutes it
     val qPred = s"vec_id % 10 = 0 AND vec_id < ${10 * nQueries}"
-    def chain(p: String, trainSrc: String): String = {
-      val lloyd = (1 to iterations).map { i =>
-        s"""${p}d${i - 1} AS (SELECT t.vec_id, c.cell, SUM(t.vi * c.c) AS dt
-               FROM ${p}tr t JOIN ${p}c${i - 1} c ON t.pos = c.pos
-               GROUP BY t.vec_id, c.cell),
-          ${p}a${i - 1} AS (SELECT vec_id, cell FROM (
-               SELECT vec_id, cell,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id
-                                    ORDER BY dt DESC, cell) AS rn
-               FROM ${p}d${i - 1}) WHERE rn = 1),
-          ${p}u$i AS (SELECT a.cell, e2.pos,
-                 CAST(SUM(e2.vi) // COUNT(*) AS BIGINT) AS c
-               FROM ${p}a${i - 1} a JOIN ${p}tr e2 ON e2.vec_id = a.vec_id
-               GROUP BY a.cell, e2.pos),
-          ${p}c$i AS (SELECT q.cell, q.pos, COALESCE(u.c, q.c) AS c
-               FROM ${p}c${i - 1} q
-               LEFT JOIN ${p}u$i u ON q.cell = u.cell AND q.pos = u.pos)"""
-      }.mkString(",\n        ")
-      // search runs over the DRIFTED corpus (e) regardless of where the
-      // chain trained — that is the whole point of the audit
-      s"""${p}tr AS (SELECT * FROM $trainSrc WHERE vec_id % $mod = 0),
-        ${p}seed AS (SELECT vec_id, rn - 1 AS cell FROM (
-             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-             FROM (SELECT DISTINCT vec_id FROM ${p}tr)) WHERE rn <= $k),
-        ${p}c0 AS (SELECT s.cell, src.pos, src.vi AS c
-             FROM ${p}seed s JOIN $trainSrc src ON src.vec_id = s.vec_id),
-        $lloyd,
-        ${p}dful AS (SELECT v.vec_id, c.cell, SUM(v.vi * c.c) AS dt
-             FROM e v JOIN ${p}c$iterations c ON v.pos = c.pos
-             GROUP BY v.vec_id, c.cell),
-        ${p}af AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM ${p}dful) WHERE rn = 1),
-        ${p}pc AS (SELECT q_id, cell FROM (
-             SELECT vec_id AS q_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dt DESC, cell) AS rn
-             FROM ${p}dful WHERE $qPred) WHERE rn <= $nProbe),
+    // search runs over the DRIFTED corpus (e) regardless of where the
+    // chain trained — that is the whole point of the audit
+    def chain(p: String, trainSrc: String): String =
+      s"""${lloydCtes(p, s"${p}tr", trainSrc, mod, k, iterations,
+          seedAl = "src", prev = "q")},
+        ${assignCtes(s"${p}dful", s"${p}af", "e", s"${p}c$iterations")},
+        ${p}pc AS (${rankCells(s"${p}dful WHERE $qPred", s"rn <= $nProbe", id = "q_id")}),
         ${p}cand AS (SELECT pc.q_id, af.vec_id AS n_id
              FROM ${p}pc pc JOIN ${p}af af ON af.cell = pc.cell),
         ${p}s AS (SELECT c.q_id, c.n_id,
@@ -1307,16 +881,9 @@ object Queries {
                  ROW_NUMBER() OVER (PARTITION BY q_id
                                     ORDER BY sc DESC, n_id) AS rn
           FROM ${p}s) WHERE rn <= $topK)"""
-    }
-    s"""WITH eb AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range(64)) AS pos FROM embeddings)),
+    s"""WITH ${fixedPointExplode("eb")},
         $driftedCorpusCte,
-        e AS (SELECT vec_id,
-             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-           FROM (SELECT vec_id, unnest(embedding) AS v,
-                   unnest(range(64)) AS pos FROM corpus)),
+        ${fixedPointExplode("e", "corpus")},
         ${chain("o", "eb")},
         ${chain("n", "e")},
         xs AS (SELECT a.vec_id AS q_id, b.vec_id AS n_id,
@@ -1346,20 +913,12 @@ object Queries {
   }
 
   /** The three quality-signal CTE bodies proven under
-    * q_quality_agreement — heuristic keep (30 words / <10% stopwords),
-    * unigram-surprisal keep (bits_q8 ≤ 1040), DSIR md5-gate keep —
-    * joined into the per-document flag frame `f`. Shared by the
-    * round-15 ensemble keys (q_quality_ensemble, q_budget_ensemble);
-    * the agreement key's inlined copy stays byte-identical and pinned.
+    * q_quality_agreement — heuristic keep `qual` (30 words / <10%
+    * stopwords), unigram-surprisal keep `sup` (bits_q8 ≤ 1040), DSIR
+    * md5-gate keep `dsir` — over the full documents table.
     */
-  private val qualityVotesCtes: String =
-    """w AS (SELECT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        swc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
-        stot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM swc),
-        swb AS (SELECT word,
-                  CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
-                FROM swc CROSS JOIN stot),
+  private def qualityFlagCtes: String =
+    s"""${unigramBitsCtes("s")},
         sup AS (SELECT w.doc_id,
                   CASE WHEN SUM(swb.bits) * 256 // COUNT(*) <= 1040
                     THEN 1 ELSE 0 END::BIGINT AS k_surprisal
@@ -1373,26 +932,22 @@ object Queries {
                            x -> x = 'a' OR x = 'the' OR x = 'of' OR x = 'and' OR x = 'in')) AS BIGINT) AS sc
                        FROM documents)),
         tok AS (SELECT doc_id,
-                  ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
+                  $dsirBucket AS b
                 FROM w),
-        rawc AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
-        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
-                FROM (SELECT ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                      FROM (SELECT unnest(string_split(text, ' ')) AS word
-                            FROM documents WHERE lang = 'en')) GROUP BY b),
-        tot AS (SELECT (SELECT SUM(r_c) FROM rawc) AS r_tot,
-                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
-        bt AS (SELECT rawc.b,
-                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
-                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
-               FROM rawc LEFT JOIN tgt ON rawc.b = tgt.b CROSS JOIN tot),
-        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt),
+        ${dsirPostCtes("documents")},
         wts AS (SELECT doc_id, CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
                 FROM tok JOIN post USING (b) GROUP BY doc_id),
         dsir AS (SELECT doc_id,
-                   CASE WHEN ('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 < dsir_ppm
+                   CASE WHEN $dsirGate < dsir_ppm
                      THEN 1 ELSE 0 END::BIGINT AS k_dsir
-                 FROM wts),
+                 FROM wts)"""
+
+  /** [[qualityFlagCtes]] joined into the per-document flag frame `f`:
+    * the agreement key and the round-15 ensemble keys
+    * (q_quality_ensemble, q_budget_ensemble).
+    */
+  private val qualityVotesCtes: String =
+    s"""$qualityFlagCtes,
         f AS (SELECT q.doc_id, k_quality, k_surprisal, k_dsir
               FROM qual q JOIN sup USING (doc_id) JOIN dsir USING (doc_id))"""
 
@@ -1520,6 +1075,554 @@ object Queries {
         FROM wc),
       $roundCtes"""
   }
+
+  // ================= oracle building blocks ===========================
+  // Every SQL fragment more than one oracle needs is written ONCE below
+  // and composed by name (the bm25Oracle / knnGraphCtes pattern).
+  // Whitespace is free — `normalize` collapses it — so a fragment
+  // composes into any oracle's layout without changing its text.
+
+  /** `name(vec_id, vi, pos[, j])`: `src`'s embeddings exploded to one
+    * row per component on the engine's fixed-point ×10⁷ integer grid;
+    * `subDim` adds the PQ subspace id `j = pos // subDim`.
+    */
+  private def fixedPointExplode(name: String = "e",
+                                src: String = "embeddings", dim: Int = 64,
+                                subDim: Option[Int] = None): String =
+    s"""$name AS (SELECT vec_id,
+             CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
+             pos${subDim.map(d => s", pos // $d AS j").getOrElse("")}
+           FROM (SELECT vec_id, unnest(embedding) AS v,
+                   unnest(range($dim)) AS pos FROM $src))"""
+
+  /** Each vector's cells (with `perSubspace`, each vector-subspace's)
+    * from `from(vec_id[, j], cell, dt)`, ranked by dot descending with
+    * ties to the lower cell, kept where `keep`: the Lloyd assignment
+    * step (`rn = 1`) and the IVF probe list (`rn <= nProbe`). `id`
+    * renames vec_id on the way out.
+    */
+  private def rankCells(from: String, keep: String = "rn = 1",
+                        perSubspace: Boolean = false,
+                        id: String = "vec_id"): String = {
+    val cols = if (perSubspace) "j, cell" else "cell"
+    val inId = if (id == "vec_id") id else s"vec_id AS $id"
+    s"""SELECT $id, $cols FROM (
+             SELECT $inId, $cols,
+               ROW_NUMBER() OVER (PARTITION BY vec_id${if (perSubspace) ", j" else ""}
+                                  ORDER BY dt DESC, cell) AS rn
+             FROM $from) WHERE $keep"""
+  }
+
+  /** `dist`: the dot of every component row of `src` (aliased `al`)
+    * with every centroid of `centroids(cell, pos, c)`; `assign`: each
+    * row's nearest cell.
+    */
+  private def assignCtes(dist: String, assign: String, src: String,
+                         centroids: String, perSubspace: Boolean = false,
+                         al: String = "v"): String = {
+    val j = if (perSubspace) s"$al.j, " else ""
+    s"""$dist AS (SELECT $al.vec_id, ${j}c.cell, SUM($al.vi * c.c) AS dt
+             FROM $src $al JOIN $centroids c ON $al.pos = c.pos
+             GROUP BY $al.vec_id, ${j}c.cell),
+        $assign AS (${rankCells(dist, perSubspace = perSubspace)})"""
+  }
+
+  /** Each query's `k` best (q_id, n_id) rows of `from` by integer
+    * score, ties to the lower n_id — the declared top-k output shape.
+    */
+  private def topKByScore(from: String, k: Int): String =
+    s"""SELECT q_id, rn, n_id, score_s14 FROM (
+          SELECT q_id, n_id, score_s14,
+                 ROW_NUMBER() OVER (PARTITION BY q_id
+                                    ORDER BY score_s14 DESC, n_id) AS rn
+          FROM $from) WHERE rn <= $k
+        ORDER BY q_id, rn"""
+
+  /** Integer Lloyd over `src`'s `vec_id % mod = 0` sample (CTE `train`):
+    * the first `k` sampled vectors seed `${prefix}c0`, then `iterations`
+    * unrolled rounds (assign → truncating-mean update, emptied cells
+    * carried via COALESCE) end in `${prefix}c$iterations`.
+    * `perSubspace` trains every PQ subspace at once (j rides along).
+    * `seedAl`, `member` and `prev` alias the seed rows, the update's
+    * member rows and the carried centroids.
+    */
+  private def lloydCtes(prefix: String, train: String, src: String,
+                        mod: Int, k: Int, iterations: Int,
+                        perSubspace: Boolean = false, seedAl: String = "e",
+                        member: String = "e2", prev: String = "p"): String = {
+    val rounds = (1 to iterations).map { i =>
+      val (c, a) = (s"${prefix}c${i - 1}", s"${prefix}a${i - 1}")
+      val sameJ = if (perSubspace) s" AND $member.j = a.j" else ""
+      s"""${assignCtes(s"${prefix}d${i - 1}", a, train, c, perSubspace, "t")},
+        ${prefix}u$i AS (SELECT a.cell, $member.pos,
+               CAST(SUM($member.vi) // COUNT(*) AS BIGINT) AS c
+             FROM $a a JOIN $train $member ON $member.vec_id = a.vec_id$sameJ
+             GROUP BY a.cell, $member.pos),
+        ${prefix}c$i AS (SELECT $prev.cell, $prev.pos, COALESCE(u.c, $prev.c) AS c
+             FROM $c $prev
+             LEFT JOIN ${prefix}u$i u ON $prev.cell = u.cell AND $prev.pos = u.pos)"""
+    }
+    val seedSrc = if (seedAl == src) src else s"$src $seedAl"
+    s"""$train AS (SELECT * FROM $src WHERE vec_id % $mod = 0),
+        ${prefix}seed AS (SELECT vec_id, rn - 1 AS cell FROM (
+             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
+             FROM (SELECT DISTINCT vec_id FROM $train)) WHERE rn <= $k),
+        ${prefix}c0 AS (SELECT s.cell, $seedAl.pos, $seedAl.vi AS c
+             FROM ${prefix}seed s JOIN $seedSrc ON $seedAl.vec_id = s.vec_id),
+        ${rounds.mkString(",\n        ")}"""
+  }
+
+  /** The IVF-PQ serving half over the corpus `e` with its `af` cells
+    * and `code` PQ codes: the first `nQueries` vectors probe
+    * their `nProbe` nearest coarse cells, the two-term ADC score
+    * q·c[cell] + q·recon(code) cuts `refineC` candidates, and the exact
+    * re-rank keeps the top `topK`.
+    */
+  private def ivfPqServe(nQueries: Int, nProbe: Int, refineC: Int,
+                         topK: Int, coarse: String, pq: String,
+                         subDim: Int): String =
+    s"""q AS (SELECT vec_id AS q_id, pos, vi FROM e
+             WHERE vec_id < $nQueries),
+        qprobe AS (SELECT q_id, cell FROM (
+             SELECT q.q_id, c.cell,
+               ROW_NUMBER() OVER (PARTITION BY q.q_id
+                                  ORDER BY SUM(q.vi * c.c) DESC, c.cell) AS rn
+             FROM q JOIN $coarse c ON q.pos = c.pos
+             GROUP BY q.q_id, c.cell) WHERE rn <= $nProbe),
+        tcoarse AS (SELECT p.q_id, n.vec_id AS n_id,
+               CAST(SUM(q.vi * cc.c) AS BIGINT) AS t1
+             FROM af n JOIN qprobe p ON p.cell = n.cell
+             JOIN $coarse cc ON cc.cell = n.cell
+             JOIN q ON q.q_id = p.q_id AND q.pos = cc.pos
+             GROUP BY p.q_id, n.vec_id),
+        tres AS (SELECT p.q_id, n.vec_id AS n_id,
+               CAST(SUM(q.vi * pc.c) AS BIGINT) AS t2
+             FROM code n
+             JOIN af a ON a.vec_id = n.vec_id
+             JOIN qprobe p ON p.cell = a.cell
+             JOIN $pq pc
+               ON pc.cell = n.cell AND pc.pos // $subDim = n.j
+             JOIN q ON q.q_id = p.q_id AND q.pos = pc.pos
+             GROUP BY p.q_id, n.vec_id),
+        cand AS (SELECT q_id, n_id FROM (
+             SELECT t.q_id, t.n_id,
+               ROW_NUMBER() OVER (PARTITION BY t.q_id
+                                  ORDER BY t.t1 + r.t2 DESC, t.n_id) AS rn
+             FROM tcoarse t JOIN tres r USING (q_id, n_id))
+             WHERE rn <= $refineC),
+        rer AS (SELECT cd.q_id, cd.n_id,
+               CAST(SUM(q.vi * b.vi) AS BIGINT) AS score_s14
+             FROM cand cd JOIN e b ON b.vec_id = cd.n_id
+                          JOIN q ON q.q_id = cd.q_id AND q.pos = b.pos
+             GROUP BY cd.q_id, cd.n_id)
+        ${topKByScore("rer", topK)}"""
+
+  /** `name(vec_id, pos, j, vi)`: `src`'s components minus their cell's
+    * coarse centroid — the PQ training and coding input.
+    */
+  private def residualCte(name: String, src: String, assign: String,
+                          centroids: String): String =
+    s"""$name AS (SELECT v.vec_id, v.pos, v.j, v.vi - cc.c AS vi
+             FROM $src v JOIN $assign a ON v.vec_id = a.vec_id
+             JOIN $centroids cc ON cc.cell = a.cell AND cc.pos = v.pos)"""
+
+  /** `name(source, shard, doc_id, n, cb)`: each doc's token count `n`
+    * from `src(source, shard, doc_id, n)` with `cb`, the tokens before
+    * it in its (source, shard) — the concat-then-chunk packer's offset.
+    */
+  private def packCumCte(name: String, src: String): String =
+    s"""$name AS (SELECT source, shard, doc_id, n,
+                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
+                  ORDER BY doc_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                  AS BIGINT) AS cb
+              FROM $src)"""
+
+  /** The regex tokenizer's token count of `text` (TextOps' pack and
+    * mixture pricing).
+    */
+  private def regexTokens: String =
+    "CAST(len(regexp_extract_all(text, '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT)"
+
+  /** `name(source, shard, doc_id, n)`: `src`'s docs in 100-doc shards,
+    * priced by [[regexTokens]].
+    */
+  private def regexTokCte(name: String, src: String): String =
+    s"""$name AS (SELECT source, doc_id // 100 AS shard, doc_id,
+                $regexTokens AS n
+              FROM $src)"""
+
+  /** The BPE-priced pack over `docs`, after [[bpeOracleCtes]]: `wt`
+    * per-word token counts of the fitted s6 vocabulary, `wtok` per-doc
+    * totals (OOV words count their characters), `t` 100-doc shards and
+    * `cpk` the [[packCumCte]] offsets.
+    */
+  private def bpePackCtes(docs: String): String =
+    s"""wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
+        wtok AS (SELECT doc_id,
+                   CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS n
+                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
+                       FROM $docs) w
+                 LEFT JOIN wt ON w.word = wt.word
+                 GROUP BY doc_id),
+        t AS (SELECT d.source, d.doc_id // 100 AS shard, d.doc_id,
+                COALESCE(wtok.n, 0) AS n
+              FROM $docs d LEFT JOIN wtok USING (doc_id)),
+        ${packCumCte("cpk", "t")}"""
+
+  /** The BPE pack shards over `docs`: [[bpePackCtes]] bins plus each
+    * doc's tok_offset in its bin and the md5 of its BPE symbol sequence
+    * (`dstr`: the doc re-spelled under the fitted s6 vocabulary, OOV
+    * words split into characters).
+    */
+  private def bpePackShards(docs: String): String =
+    s"""${bpePackCtes(docs)},
+        ww AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
+                 unnest(range(len(string_split(text, ' ')))) AS wpos
+               FROM $docs),
+        wtk AS (SELECT ww.doc_id, ww.wpos,
+                  COALESCE(s6.syms,
+                    list_filter(string_split(ww.word, ''),
+                      x -> x <> '')) AS syms
+                FROM ww LEFT JOIN s6 ON ww.word = s6.word),
+        flat AS (SELECT doc_id, wpos, unnest(syms) AS sym,
+                   unnest(range(len(syms))) AS spos
+                 FROM wtk),
+        dstr AS (SELECT doc_id,
+                   COALESCE(string_agg(sym, ' ' ORDER BY wpos, spos), '')
+                     AS str
+                 FROM flat GROUP BY doc_id)
+        SELECT cpk.source, cpk.shard, cpk.cb // 128 AS bin, cpk.doc_id,
+          cpk.n AS n_tokens,
+          CAST(cpk.cb - MIN(cpk.cb) OVER (PARTITION BY cpk.source,
+            cpk.shard, cpk.cb // 128) AS BIGINT) AS tok_offset,
+          COALESCE(md5(dstr.str), md5('')) AS tok_md5
+        FROM cpk LEFT JOIN dstr USING (doc_id)
+        ORDER BY source, shard, bin, doc_id"""
+
+  /** `w(doc_id, word)`: every word occurrence of the documents;
+    * `${p}wb(word, bits)`: each word's integer surprisal
+    * floor(log2(total / count)) via the portable `length(bin(x)) - 1`
+    * identity — the unigram LM-bits quality signal.
+    */
+  private def unigramBitsCtes(p: String = ""): String =
+    s"""w AS (SELECT doc_id,
+                unnest(string_split(text, ' ')) AS word FROM documents),
+        ${p}wc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
+        ${p}tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM ${p}wc),
+        ${p}wb AS (SELECT word,
+                 CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
+               FROM ${p}wc CROSS JOIN ${p}tot)"""
+
+  /** `sess(user_id, tsn, session_id)`: every event (µs time `tsn`)
+    * with its per-user session number under a 30-minute inactivity gap.
+    */
+  private def sessionCtes: String =
+    """e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn FROM events),
+        g AS (SELECT user_id, tsn, event_id,
+                CASE WHEN lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) IS NULL
+                       OR tsn - lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) > 1800000000
+                     THEN 1 ELSE 0 END AS new_sess
+              FROM e),
+        sess AS (SELECT user_id, tsn,
+                CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY tsn, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+              FROM g)"""
+
+  /** The 600-word per-source budget pick: documents ranked by
+    * distinct-word ratio (ppm) within their source, kept while the
+    * source's running word count fits. `keepOnly` restricts the
+    * candidates to a preceding `keep(doc_id)` CTE.
+    */
+  private def tokenBudgetSelect(keepOnly: Boolean = false): String =
+    s"""q AS (SELECT source, doc_id,
+                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+                CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
+                  * 1000000 // CAST(len(string_split(text, ' ')) AS BIGINT)
+                  AS score_ppm
+              FROM documents${if (keepOnly)
+                "\n              WHERE doc_id IN (SELECT doc_id FROM keep)" else ""}),
+        r AS (SELECT source, doc_id, score_ppm, n_words,
+                CAST(SUM(n_words) OVER (PARTITION BY source
+                  ORDER BY score_ppm DESC, doc_id
+                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
+              FROM q)
+        SELECT source, doc_id, score_ppm, n_words, cum_tokens
+        FROM r WHERE cum_tokens <= 600
+        ORDER BY source, doc_id"""
+
+  /** DSIR's hashed-unigram bucket of `word` (1024 buckets; the engine's
+    * `TextOps.importanceWeights` hashes the same md5 prefix).
+    */
+  private def dsirBucket: String =
+    "('0x' || substr(md5(word), 1, 8))::BIGINT % 1024"
+
+  /** DSIR's deterministic keep gate: a doc survives when this ppm draw
+    * is below its posterior score.
+    */
+  private def dsirGate: String =
+    "('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000"
+
+  /** DSIR posterior per bucket, given `tok(doc_id, b)`: raw counts in
+    * CTE `raw`, counts over `target`'s en slice in `tgt`, and the
+    * add-one smoothed `post(b, post_ppm)`, truncated in HUGEINT.
+    */
+  private def dsirPostCtes(target: String, raw: String = "rawc"): String =
+    s"""$raw AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
+        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
+                FROM (SELECT $dsirBucket AS b
+                      FROM (SELECT unnest(string_split(text, ' ')) AS word
+                            FROM $target WHERE lang = 'en')) GROUP BY b),
+        tot AS (SELECT (SELECT SUM(r_c) FROM $raw) AS r_tot,
+                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
+        bt AS (SELECT $raw.b,
+                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
+                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
+               FROM $raw LEFT JOIN tgt ON $raw.b = tgt.b CROSS JOIN tot),
+        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt)"""
+
+  /** `name(ids…, col)`: the distinct space-joined word 3-grams of the
+    * word array `arr` of `src`, over rows with at least three words —
+    * the shingle unit of decontamination, boilerplate and novelty.
+    */
+  private def shingleCte(name: String, ids: String, src: String,
+                         arr: String = "w", col: String = "sh"): String =
+    s"""$name AS (SELECT DISTINCT $ids, $col
+               FROM (SELECT $ids,
+                       unnest([array_to_string($arr[i:i+2], ' ') for i in range(1, len($arr) - 1)]) AS $col
+                     FROM $src WHERE len($arr) >= 3))"""
+
+  /** `w(doc_id, word)`: the distinct words of `src(doc_id, text)`;
+    * `sz`: per-doc set sizes; `c(a_id, b_id, common)`: the shared-word
+    * count of every doc pair a < b — the brute-force Jaccard join.
+    */
+  private def wordOverlapCtes(src: String): String =
+    s"""w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM $src),
+        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
+        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
+              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
+              GROUP BY a.doc_id, b.doc_id)"""
+
+  /** [[wordOverlapCtes]] + `pairs(a_id, b_id)`: the pairs at Jaccard
+    * ≥ `pct` % — the exact answer every near-dup oracle starts from.
+    */
+  private def jaccardPairCtes(src: String, pct: Int,
+                              pairs: String = "p"): String =
+    s"""${wordOverlapCtes(src)},
+        $pairs AS (SELECT c.a_id, c.b_id
+              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
+              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * $pct)"""
+
+  /** `edges(src, dst)`: both directions of the pair CTE `pairs(a, b)`. */
+  private def symEdgesCte(pairs: String = "p", edges: String = "e",
+                          a: String = "a_id", b: String = "b_id"): String =
+    s"""$edges AS (SELECT $a AS src, $b AS dst FROM $pairs
+              UNION SELECT $b, $a FROM $pairs)"""
+
+  /** `reach(src, dst)`: the transitive closure of `edges(src, dst)`
+    * (needs WITH RECURSIVE). The min-label component of `src` is
+    * `LEAST(src, MIN(dst))`, order-free in both engines.
+    */
+  private def reachCte(edges: String = "e"): String =
+    s"""reach(src, dst) AS (
+          SELECT src, dst FROM $edges
+          UNION
+          SELECT r.src, $edges.dst FROM reach r JOIN $edges ON r.dst = $edges.src)"""
+
+  /** [[symEdgesCte]] + [[reachCte]] over the pair CTE `p(a_id, b_id)`. */
+  private def componentCtes: String =
+    s"""${symEdgesCte()},
+        ${reachCte()}"""
+
+  /** The composed curation chain of q_pipeline_curate and
+    * q_pipeline_curate_bpe: docs0 (the %4 slice plus re-inserted %200
+    * dupes) → d1 exact dedup → d2 near-dup canonical keepers → d3
+    * decontaminated vs the %100=50 bench slice → d4 quality filter →
+    * d5 DSIR select → `bins` pack. `keeper` names the exact-dedup
+    * keeper CTE (the BPE key's fit chain already owns `k1`).
+    */
+  private def curationChainCtes(keeper: String): String =
+    s"""docs0 AS MATERIALIZED (
+          SELECT doc_id, text, lang, source FROM documents WHERE doc_id % 4 = 0
+          UNION ALL
+          SELECT doc_id + 10000000, text, lang, source FROM documents
+          WHERE doc_id % 200 = 0),
+        $keeper AS (SELECT MIN(doc_id) AS doc_id FROM docs0 GROUP BY md5(text)),
+        d1 AS MATERIALIZED (SELECT d.* FROM docs0 d JOIN $keeper USING (doc_id)),
+        ${jaccardPairCtes("d1", 80)},
+        $componentCtes,
+        m AS MATERIALIZED (SELECT src AS doc_id,
+               LEAST(src, MIN(dst))::BIGINT AS cluster_id
+             FROM reach GROUP BY src),
+        t1 AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n FROM d1),
+        keep2 AS (SELECT arg_max(m.doc_id,
+                    CAST(t1.n AS HUGEINT) * 18446744073709551616::HUGEINT - m.doc_id) AS doc_id
+                  FROM m JOIN t1 USING (doc_id) GROUP BY m.cluster_id),
+        d2 AS MATERIALIZED (SELECT d.* FROM d1 d
+             WHERE d.doc_id NOT IN (SELECT doc_id FROM m)
+                OR d.doc_id IN (SELECT doc_id FROM keep2)),
+        bench AS (SELECT doc_id AS bench_id, string_split(text, ' ') AS ws
+                  FROM documents WHERE doc_id % 100 = 50),
+        ${shingleCte("cs", "doc_id", "(SELECT doc_id, string_split(text, ' ') AS ws FROM d2)", arr = "ws")},
+        ${shingleCte("bs", "bench_id", "bench", arr = "ws")},
+        flag AS (SELECT DISTINCT doc_id FROM (
+                   SELECT cs.doc_id FROM cs JOIN bs USING (sh)
+                   GROUP BY cs.doc_id, bs.bench_id HAVING COUNT(*) >= 3)),
+        d3 AS MATERIALIZED (SELECT * FROM d2
+             WHERE doc_id NOT IN (SELECT doc_id FROM flag)),
+        q AS (SELECT doc_id,
+                CAST(len(string_split(text, ' ')) AS BIGINT) AS nw,
+                CAST(len(list_filter(string_split(text, ' '),
+                  x -> x = 'a' OR x = 'the' OR x = 'of' OR x = 'and' OR x = 'in')) AS BIGINT) AS sc
+              FROM d3),
+        d4 AS MATERIALIZED (SELECT d.* FROM d3 d JOIN q USING (doc_id)
+             WHERE q.nw >= 30 AND q.sc * 1000000 // q.nw < 100000),
+        tok AS MATERIALIZED (
+          SELECT doc_id, $dsirBucket AS b
+          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM d4)),
+        ${dsirPostCtes("d4")},
+        wts AS (SELECT doc_id, CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
+                FROM tok JOIN post USING (b) GROUP BY doc_id),
+        sel AS (SELECT doc_id FROM wts
+                WHERE $dsirGate < dsir_ppm),
+        d5 AS MATERIALIZED (SELECT d.* FROM d4 d JOIN sel USING (doc_id)),
+        ${regexTokCte("pt", "d5")},
+        ${packCumCte("pc", "pt")},
+        bins AS (SELECT source, shard, cb // 128 AS bin, COUNT(*)::BIGINT AS n_docs,
+                   CAST(SUM(n) AS BIGINT) AS bin_tokens FROM pc GROUP BY 1, 2, 3)"""
+
+  /** The per-stage accounting over [[curationChainCtes]]: one (rows_in,
+    * rows_out, tokens_out) row per stage. `bpe` adds each stage's
+    * BPE-token total over the fitted vocabulary CTE `wt(word, n_bpe)`
+    * (OOV words count their characters); the pack row repeats d5's,
+    * since packing drops no document.
+    */
+  private def curationAcct(bpe: Boolean): String = {
+    val stages = Seq(("exact_dedup", "docs0", "d1"),
+      ("neardup_canonical", "d1", "d2"), ("decontaminate", "d2", "d3"),
+      ("quality_filter", "d3", "d4"), ("dsir_select", "d4", "d5"),
+      ("pack", "d5", "bins"))
+    val names = Seq("stage_idx", "stage", "rows_in", "rows_out",
+      "tokens_out", "bpe_tokens_out")
+    val rows = stages.zipWithIndex.map { case ((stage, in, out), i) =>
+      val tokens =
+        if (out == "bins") "(SELECT COALESCE(SUM(bin_tokens), 0) FROM bins)"
+        else s"(SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM $out)"
+      val cols = Seq(s"${i + 1}", s"'$stage'", s"(SELECT COUNT(*) FROM $in)",
+        s"(SELECT COUNT(*) FROM $out)", tokens) ++
+        (if (bpe) Seq(s"(SELECT btok FROM bpe${math.min(i + 1, 5)})") else Nil)
+      if (i == 0) cols.zip(names).map { case (c, n) => s"$c AS $n" }
+        .mkString("SELECT ", ",\n            ", "")
+      else cols.mkString("UNION ALL SELECT ", ",\n            ", "")
+    }
+    val bpeCtes = if (!bpe) "" else (1 to 5).map { i =>
+      s"""bpe$i AS (SELECT CAST(COALESCE(SUM(COALESCE(wt.n_bpe, len(wx.word))), 0) AS BIGINT) AS btok
+                 FROM (SELECT unnest(string_split(text, ' ')) AS word FROM d$i) wx
+                 LEFT JOIN wt USING (word)),
+        """
+    }.mkString
+    s"""${bpeCtes}acct AS (
+          ${rows.mkString("\n          ")})
+        SELECT ${names.take(if (bpe) 6 else 5).map {
+          case "stage" => "stage"
+          case n => s"$n::BIGINT AS $n"
+        }.mkString(", ")}
+        FROM acct ORDER BY stage_idx"""
+  }
+
+  /** The brute-force pair answer of q_neardup_jaccard and
+    * q_neardup_lsh_verified.
+    */
+  private val neardupJaccardOracle: String =
+    s"""WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+        ${wordOverlapCtes("docs")}
+        SELECT c.a_id, c.b_id, c.common,
+               sa.set_size + sb.set_size - c.common AS union_size,
+               c.common * 1000000 // (sa.set_size + sb.set_size - c.common) AS jaccard_ppm
+        FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
+        WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80
+        ORDER BY c.a_id, c.b_id"""
+
+  /** Min-label components over the exact pairs: q_neardup_clusters
+    * and q_neardup_clusters_star.
+    */
+  private val neardupClustersOracle: String =
+    s"""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+        ${jaccardPairCtes("docs", 80)},
+        $componentCtes
+        SELECT src AS doc_id,
+               LEAST(src, MIN(dst))::BIGINT AS cluster_id,
+               (LEAST(src, MIN(dst)) = src) AS is_keeper
+        FROM reach GROUP BY src ORDER BY doc_id"""
+
+  /** q_containment and q_containment_prefix: two engine plans, one
+    * answer.
+    */
+  private val containmentOracle: String =
+    s"""WITH docs AS (SELECT doc_id, text FROM documents
+                WHERE doc_id % 10 = 0),
+        ${wordOverlapCtes("docs")},
+        cs AS (SELECT c.a_id, c.b_id, c.common,
+                 sa.set_size AS n_a, sb.set_size AS n_b
+               FROM c JOIN sz sa ON c.a_id = sa.doc_id
+                      JOIN sz sb ON c.b_id = sb.doc_id),
+        dir AS (SELECT a_id AS src_id, b_id AS dst_id, common,
+                  n_a AS n_src, n_b AS n_dst FROM cs
+                UNION ALL
+                SELECT b_id, a_id, common, n_b, n_a FROM cs)
+        SELECT src_id, dst_id, common, n_src, n_dst,
+          common * 1000000 // n_src AS cont_ppm
+        FROM dir WHERE common * 100 >= n_src * 90
+        ORDER BY src_id, dst_id"""
+
+  /** q_tfidf_cosine and q_tfidf_cosine_prefix: two engine plans, one
+    * answer.
+    */
+  private val tfidfCosineOracle: String =
+    """WITH docs AS (SELECT doc_id, text FROM documents
+                WHERE doc_id % 10 = 0),
+        tf AS (SELECT doc_id, word, COUNT(*)::BIGINT AS tf
+               FROM (SELECT doc_id, unnest(string_split(text, ' '))
+                       AS word FROM docs)
+               GROUP BY doc_id, word),
+        dfq AS (SELECT word, COUNT(*)::BIGINT AS df FROM tf GROUP BY word),
+        wt AS (SELECT tf.doc_id, tf.word, tf.tf * (1000000 // dfq.df) AS w
+               FROM tf JOIN dfq USING (word)),
+        n AS (SELECT doc_id, SUM(w * w)::BIGINT AS norm_s FROM wt
+              GROUP BY doc_id),
+        d AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+                SUM(a.w * b.w)::BIGINT AS dot_s
+              FROM wt a JOIN wt b ON a.word = b.word
+                                 AND a.doc_id < b.doc_id
+              GROUP BY a.doc_id, b.doc_id)
+        SELECT d.a_id, d.b_id, d.dot_s,
+               na.norm_s AS a_norm_s, nb.norm_s AS b_norm_s
+        FROM d JOIN n na ON d.a_id = na.doc_id
+               JOIN n nb ON d.b_id = nb.doc_id
+        WHERE d.dot_s > 0
+          AND CAST(d.dot_s AS DOUBLE) * CAST(d.dot_s AS DOUBLE) * 10000.0 >=
+              CAST(na.norm_s AS DOUBLE) * CAST(nb.norm_s AS DOUBLE) * 6400.0
+        ORDER BY d.a_id, d.b_id"""
+
+  /** q_simsearch_topk and q_simsearch_fast: two engine plans, one
+    * answer.
+    */
+  private val simsearchTopkOracle: String =
+    """WITH q AS (SELECT vec_id AS q_id, unnest(embedding) AS qv,
+                     unnest(range(64)) AS pos
+              FROM embeddings WHERE vec_id < 8),
+        c AS (SELECT vec_id AS n_id, unnest(embedding) AS cv, unnest(range(64)) AS pos
+              FROM embeddings),
+        s AS (SELECT q.q_id, c.n_id,
+                SUM(CAST(round(CAST(q.qv AS DOUBLE) * 10000000) AS BIGINT)
+                    * CAST(round(CAST(c.cv AS DOUBLE) * 10000000) AS BIGINT)) AS score_s14
+              FROM q JOIN c ON q.pos = c.pos GROUP BY q.q_id, c.n_id)
+        SELECT q_id, rn, n_id, score_s14 FROM (
+          SELECT q_id, n_id, CAST(score_s14 AS BIGINT) AS score_s14,
+                 ROW_NUMBER() OVER (PARTITION BY q_id
+                                    ORDER BY score_s14 DESC, n_id) AS rn
+          FROM s) WHERE rn <= 5
+        ORDER BY q_id, rn"""
 
   val all: Seq[Declared] = Seq(
 
@@ -2547,16 +2650,7 @@ object Queries {
         30L * 60L * 1000L * 1000L)
         .withColumnRenamed("session_start", "session_start_us")
         .withColumnRenamed("session_end", "session_end_us"),
-      Some("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn FROM events),
-        g AS (SELECT user_id, tsn, event_id,
-                CASE WHEN lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) IS NULL
-                       OR tsn - lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) > 1800000000
-                     THEN 1 ELSE 0 END AS new_sess
-              FROM e),
-        sess AS (SELECT user_id, tsn,
-                CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-              FROM g)
+      Some(s"""WITH ${sessionCtes}
         SELECT user_id, session_id, COUNT(*)::BIGINT AS n_events,
                MIN(tsn) AS session_start_us, MAX(tsn) AS session_end_us
         FROM sess GROUP BY user_id, session_id
@@ -2643,26 +2737,12 @@ object Queries {
     Declared("q_neardup_jaccard",
       (s, d) => DedupOps.jaccardPairs(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 80),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id)
-        SELECT c.a_id, c.b_id, c.common,
-               sa.set_size + sb.set_size - c.common AS union_size,
-               c.common * 1000000 // (sa.set_size + sb.set_size - c.common) AS jaccard_ppm
-        FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-        WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80
-        ORDER BY c.a_id, c.b_id""")),
+      Some(neardupJaccardOracle)),
 
     Declared("q_neardup_cosine",
       (s, d) => SimilarityOps.cosinePairsExact(
         embeddings(s, d).filter(pmod(col("vec_id"), lit(5)) === 0), 30),
-      Some("""WITH e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v, unnest(range(64)) AS pos
-                    FROM embeddings WHERE vec_id % 5 = 0)),
+      Some(s"""WITH ${fixedPointExplode("e", "embeddings WHERE vec_id % 5 = 0")},
         n AS (SELECT vec_id, SUM(vi * vi)::BIGINT AS norm_s FROM e GROUP BY vec_id),
         d AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, SUM(a.vi * b.vi)::BIGINT AS dot_s
               FROM e a JOIN e b ON a.pos = b.pos AND a.vec_id < b.vec_id
@@ -2676,21 +2756,7 @@ object Queries {
 
     Declared("q_simsearch_topk",
       (s, d) => SimilarityOps.topKDotExact(embeddings(s, d), (0L until 8L), 5),
-      Some("""WITH q AS (SELECT vec_id AS q_id, unnest(embedding) AS qv,
-                     unnest(range(64)) AS pos
-              FROM embeddings WHERE vec_id < 8),
-        c AS (SELECT vec_id AS n_id, unnest(embedding) AS cv, unnest(range(64)) AS pos
-              FROM embeddings),
-        s AS (SELECT q.q_id, c.n_id,
-                SUM(CAST(round(CAST(q.qv AS DOUBLE) * 10000000) AS BIGINT)
-                    * CAST(round(CAST(c.cv AS DOUBLE) * 10000000) AS BIGINT)) AS score_s14
-              FROM q JOIN c ON q.pos = c.pos GROUP BY q.q_id, c.n_id)
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, CAST(score_s14 AS BIGINT) AS score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM s) WHERE rn <= 5
-        ORDER BY q_id, rn""")),
+      Some(simsearchTopkOracle)),
 
     Declared("q_wordcount",
       (s, d) => TextOps.wordCounts(documents(s, d)),
@@ -2731,8 +2797,8 @@ object Queries {
 
     Declared("q_token_count",
       (s, d) => TextOps.tokenCounts(documents(s, d)),
-      Some("""SELECT doc_id,
-          CAST(len(regexp_extract_all(text, '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_tokens,
+      Some(s"""SELECT doc_id,
+          $regexTokens AS n_tokens,
           n_chars
         FROM documents ORDER BY doc_id""")),
 
@@ -2841,20 +2907,9 @@ object Queries {
     Declared("q_dsir_weights",
       (s, d) => TextOps.importanceWeights(
         documents(s, d), documents(s, d).filter(col("lang") === "en"), 1024),
-      Some("""WITH tok AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
+      Some(s"""WITH tok AS (SELECT doc_id, $dsirBucket AS b
               FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)),
-        raw AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
-        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
-                FROM (SELECT ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                      FROM (SELECT unnest(string_split(text, ' ')) AS word
-                            FROM documents WHERE lang = 'en')) GROUP BY b),
-        tot AS (SELECT (SELECT SUM(r_c) FROM raw) AS r_tot,
-                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
-        bt AS (SELECT raw.b,
-                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
-                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
-               FROM raw LEFT JOIN tgt ON raw.b = tgt.b CROSS JOIN tot),
-        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt)
+        ${dsirPostCtes("documents", raw = "raw")}
         SELECT doc_id, COUNT(*)::BIGINT AS n_tokens,
                CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
         FROM tok JOIN post USING (b)
@@ -2867,25 +2922,14 @@ object Queries {
     Declared("q_dsir_resample",
       (s, d) => TextOps.importanceResample(
         documents(s, d), documents(s, d).filter(col("lang") === "en"), 1024),
-      Some("""WITH tok AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
+      Some(s"""WITH tok AS (SELECT doc_id, $dsirBucket AS b
               FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)),
-        raw AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
-        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
-                FROM (SELECT ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                      FROM (SELECT unnest(string_split(text, ' ')) AS word
-                            FROM documents WHERE lang = 'en')) GROUP BY b),
-        tot AS (SELECT (SELECT SUM(r_c) FROM raw) AS r_tot,
-                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
-        bt AS (SELECT raw.b,
-                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
-                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
-               FROM raw LEFT JOIN tgt ON raw.b = tgt.b CROSS JOIN tot),
-        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt),
+        ${dsirPostCtes("documents", raw = "raw")},
         w AS (SELECT doc_id, COUNT(*)::BIGINT AS n_tokens,
                 CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
               FROM tok JOIN post USING (b) GROUP BY doc_id),
         g AS (SELECT doc_id, n_tokens, dsir_ppm,
-                ('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS bucket_ppm
+                $dsirGate AS bucket_ppm
               FROM w)
         SELECT doc_id, n_tokens, dsir_ppm, bucket_ppm
         FROM g WHERE bucket_ppm < dsir_ppm
@@ -2917,10 +2961,7 @@ object Queries {
       (s, d) => SimilarityOps.crossCosinePairs(
         embeddings(s, d).filter(pmod(col("vec_id"), lit(20)) =!= 0),
         embeddings(s, d).filter(pmod(col("vec_id"), lit(20)) === 0), 30),
-      Some("""WITH e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v, unnest(range(64)) AS pos
-                    FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode()},
         n AS (SELECT vec_id, SUM(vi * vi)::BIGINT AS norm_s FROM e GROUP BY vec_id),
         d AS (SELECT a.vec_id AS vec_id, b.vec_id AS bench_id,
                 SUM(a.vi * b.vi)::BIGINT AS dot_s
@@ -2998,18 +3039,7 @@ object Queries {
       (s, d) => DedupOps.lshVerifiedJaccardPairs(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0),
         numHashes = 32, rowsPerBand = 2, minJaccardPct = 80),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id)
-        SELECT c.a_id, c.b_id, c.common,
-               sa.set_size + sb.set_size - c.common AS union_size,
-               c.common * 1000000 // (sa.set_size + sb.set_size - c.common) AS jaccard_ppm
-        FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-        WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80
-        ORDER BY c.a_id, c.b_id""")),
+      Some(neardupJaccardOracle)),
 
     // Clusters + keeper selection over the verified near-dup pairs: the
     // decision step of dedup (which rows survive). Oracle recomputes the
@@ -3020,25 +3050,7 @@ object Queries {
       (s, d) => DedupOps.nearDupKeepers(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0),
         numHashes = 32, rowsPerBand = 2, minJaccardPct = 80),
-      Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM e
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
-        SELECT src AS doc_id,
-               LEAST(src, MIN(dst))::BIGINT AS cluster_id,
-               (LEAST(src, MIN(dst)) = src) AS is_keeper
-        FROM reach GROUP BY src ORDER BY doc_id""")),
+      Some(neardupClustersOracle)),
 
     // Quality-weighted canonical keeper per cluster. Wider sample than
     // q_neardup_clusters (%4 vs %10: the %10 slice collapses to ONE
@@ -3048,21 +3060,9 @@ object Queries {
       (s, d) => DedupOps.canonicalKeepers(
         documents(s, d).filter(pmod(col("doc_id"), lit(4)) === 0),
         numHashes = 32, rowsPerBand = 2, minJaccardPct = 80),
-      Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM e
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
+      Some(s"""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
+        ${jaccardPairCtes("docs", 80)},
+        $componentCtes,
         m AS (SELECT src AS doc_id, LEAST(src, MIN(dst))::BIGINT AS cluster_id
               FROM reach GROUP BY src),
         t AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n
@@ -3087,15 +3087,8 @@ object Queries {
           .select("a_id", "b_id"),
         iterations = 3)
         .select(col("id").as("doc_id"), col("rank_ppm")),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
+      Some(s"""WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+        ${jaccardPairCtes("docs", 80)},
         e AS (SELECT a_id AS src, b_id AS dst FROM p
               UNION SELECT b_id, a_id FROM p),
         deg AS (SELECT src, COUNT(*)::BIGINT AS outdeg FROM e GROUP BY src),
@@ -3163,21 +3156,7 @@ object Queries {
     // one oracle while this one carries the 100 TB plan shape
     Declared("q_simsearch_fast",
       (s, d) => SimilarityOps.topKDotFastExact(embeddings(s, d), (0L until 8L), 5),
-      Some("""WITH q AS (SELECT vec_id AS q_id, unnest(embedding) AS qv,
-                     unnest(range(64)) AS pos
-              FROM embeddings WHERE vec_id < 8),
-        c AS (SELECT vec_id AS n_id, unnest(embedding) AS cv, unnest(range(64)) AS pos
-              FROM embeddings),
-        s AS (SELECT q.q_id, c.n_id,
-                SUM(CAST(round(CAST(q.qv AS DOUBLE) * 10000000) AS BIGINT)
-                    * CAST(round(CAST(c.cv AS DOUBLE) * 10000000) AS BIGINT)) AS score_s14
-              FROM q JOIN c ON q.pos = c.pos GROUP BY q.q_id, c.n_id)
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, CAST(score_s14 AS BIGINT) AS score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM s) WHERE rn <= 5
-        ORDER BY q_id, rn""")),
+      Some(simsearchTopkOracle)),
 
     // Int8-quantized exact search (SimilarityOps.topKDotQuantized): the
     // memory-bound 100 TB path (4x less scan IO than float32) with
@@ -3185,10 +3164,7 @@ object Queries {
     // end-to-end oracle-checked INCLUDING the quantization grid.
     Declared("q_simsearch_quantized",
       (s, d) => SimilarityOps.topKDotQuantized(embeddings(s, d), (0L until 8L), 5),
-      Some("""WITH e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode()},
         sc AS (SELECT vec_id, MAX(abs(vi)) AS scale_s FROM e GROUP BY vec_id),
         q8 AS (SELECT e.vec_id, e.pos,
                  CASE WHEN sc.scale_s = 0 THEN CAST(0 AS BIGINT)
@@ -3217,10 +3193,7 @@ object Queries {
     Declared("q_simsearch_lsh",
       (s, d) => SimilarityOps.lshBucketTopKExact(embeddings(s, d),
         probeIds = lshProbeIds, queryIds = (0L until 8L), k = 5, maxFlip = 1),
-      Some(s"""WITH e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi, pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode()},
         pr AS (SELECT vec_id AS p_id, vi AS pvi, pos FROM e
                WHERE vec_id IN (${lshProbeIds.mkString(", ")})),
         dp AS (SELECT e.vec_id, pr.p_id, SUM(e.vi * pr.pvi) AS dt
@@ -3242,12 +3215,7 @@ object Queries {
               FROM cand c JOIN e a ON a.vec_id = c.q_id
                           JOIN e b ON b.vec_id = c.n_id AND a.pos = b.pos
               GROUP BY c.q_id, c.n_id)
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM s) WHERE rn <= 5
-        ORDER BY q_id, rn""")),
+        ${topKByScore("s", 5)}""")),
 
     // probe-only declared query, since round 11 in the ORACLE-CHECKABLE
     // integer form (the last no_oracle row): deterministic lowest-id
@@ -3953,11 +3921,8 @@ object Queries {
     // in ≥4 docs are boilerplate (p99 of the df distribution here).
     Declared("q_boilerplate",
       (s, d) => TextOps.boilerplateShare(documents(s, d), 3, 4),
-      Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        g AS (SELECT DISTINCT doc_id, sh
-              FROM (SELECT doc_id,
-                      unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS sh
-                    FROM d WHERE len(w) >= 3)),
+      Some(s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        ${shingleCte("g", "doc_id", "d")},
         hot AS (SELECT sh FROM g GROUP BY sh HAVING COUNT(*) >= 4)
         SELECT g.doc_id, COUNT(*)::BIGINT AS n_grams,
           CAST(COUNT(*) FILTER (WHERE hot.sh IS NOT NULL) AS BIGINT) AS n_boiler,
@@ -3973,11 +3938,8 @@ object Queries {
     // tokenization. Two gram-keyed bounded shuffles; bodies never move.
     Declared("q_ngram_novelty",
       (s, d) => TextOps.ngramNovelty(documents(s, d), 3),
-      Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        g AS (SELECT DISTINCT doc_id, sh
-              FROM (SELECT doc_id,
-                      unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS sh
-                    FROM d WHERE len(w) >= 3)),
+      Some(s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        ${shingleCte("g", "doc_id", "d")},
         f AS (SELECT sh, MIN(doc_id) AS first_doc FROM g GROUP BY sh)
         SELECT g.doc_id, COUNT(*)::BIGINT AS n_grams,
           CAST(COUNT(*) FILTER (WHERE f.first_doc = g.doc_id) AS BIGINT)
@@ -3994,12 +3956,9 @@ object Queries {
     // q_ngram_novelty plus one vocab⋈docs equi-join for the source.
     Declared("q_novelty_by_source",
       (s, d) => TextOps.noveltyBySource(documents(s, d), 3),
-      Some("""WITH dd AS (SELECT doc_id, source, string_split(text, ' ') AS w
+      Some(s"""WITH dd AS (SELECT doc_id, source, string_split(text, ' ') AS w
                 FROM documents),
-        g AS (SELECT DISTINCT doc_id, source, sh
-              FROM (SELECT doc_id, source,
-                      unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS sh
-                    FROM dd WHERE len(w) >= 3)),
+        ${shingleCte("g", "doc_id, source", "dd")},
         occ AS (SELECT source, COUNT(*) AS n_occ FROM g GROUP BY source),
         fd AS (SELECT sh, MIN(doc_id) AS doc_id FROM g GROUP BY sh),
         fs AS (SELECT d2.source, COUNT(*) AS n_first
@@ -4034,16 +3993,8 @@ object Queries {
     // 100-doc shards.
     Declared("q_pack_sequences",
       (s, d) => TextOps.packSequences(documents(s, d), 128L, 100L),
-      Some("""WITH t AS (SELECT source, doc_id // 100 AS shard, doc_id,
-                CAST(len(regexp_extract_all(text,
-                  '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT) AS n
-              FROM documents),
-        c AS (SELECT source, shard, doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
-                  ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS cb
-              FROM t)
+      Some(s"""WITH ${regexTokCte("t", "documents")},
+        ${packCumCte("c", "t")}
         SELECT source, shard, cb // 128 AS bin, COUNT(*)::BIGINT AS n_docs,
           CAST(SUM(n) AS BIGINT) AS bin_tokens,
           MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
@@ -4170,9 +4121,8 @@ object Queries {
             expr("raw * 1000000L div __tot").as("weight_ppm"))
         TextOps.mixtureEpochs(docs, w, budgetTokens = 250000L)
       },
-      Some("""WITH tok AS (SELECT source,
-                CAST(len(regexp_extract_all(text,
-                  '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_tok
+      Some(s"""WITH tok AS (SELECT source,
+                $regexTokens AS n_tok
               FROM documents),
         sup AS (SELECT source, SUM(n_tok)::BIGINT AS tokens_have
                 FROM tok GROUP BY source),
@@ -4282,28 +4232,7 @@ object Queries {
     Declared("q_containment",
       (s, d) => DedupOps.containmentPairs(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 90),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
-                WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' '))
-                AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w
-               GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        cs AS (SELECT c.a_id, c.b_id, c.common,
-                 sa.set_size AS n_a, sb.set_size AS n_b
-               FROM c JOIN sz sa ON c.a_id = sa.doc_id
-                      JOIN sz sb ON c.b_id = sb.doc_id),
-        dir AS (SELECT a_id AS src_id, b_id AS dst_id, common,
-                  n_a AS n_src, n_b AS n_dst FROM cs
-                UNION ALL
-                SELECT b_id, a_id, common, n_b, n_a FROM cs)
-        SELECT src_id, dst_id, common, n_src, n_dst,
-          common * 1000000 // n_src AS cont_ppm
-        FROM dir WHERE common * 100 >= n_src * 90
-        ORDER BY src_id, dst_id""")),
+      Some(containmentOracle)),
 
     // The SAME containment relation through the bounded 100 TB plan
     // (DedupOps.containmentPairsPrefix): PPJoin prefix filtering —
@@ -4314,28 +4243,7 @@ object Queries {
     Declared("q_containment_prefix",
       (s, d) => DedupOps.containmentPairsPrefix(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 90),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
-                WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' '))
-                AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w
-               GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        cs AS (SELECT c.a_id, c.b_id, c.common,
-                 sa.set_size AS n_a, sb.set_size AS n_b
-               FROM c JOIN sz sa ON c.a_id = sa.doc_id
-                      JOIN sz sb ON c.b_id = sb.doc_id),
-        dir AS (SELECT a_id AS src_id, b_id AS dst_id, common,
-                  n_a AS n_src, n_b AS n_dst FROM cs
-                UNION ALL
-                SELECT b_id, a_id, common, n_b, n_a FROM cs)
-        SELECT src_id, dst_id, common, n_src, n_dst,
-          common * 1000000 // n_src AS cont_ppm
-        FROM dir WHERE common * 100 >= n_src * 90
-        ORDER BY src_id, dst_id""")),
+      Some(containmentOracle)),
 
     // Incremental dedup (DedupOps.dedupAgainstCorpus): flag batch docs
     // (%10 slice) sharing any MinHash/LSH band with the remaining 90%
@@ -4465,21 +4373,9 @@ object Queries {
         DedupOps.jaccardPairs(
           documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 80)
           .select("a_id", "b_id")),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
+      Some(s"""WITH docs AS (SELECT doc_id, text FROM documents
                 WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' '))
-                AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w
-               GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id FROM c
-              JOIN sz sa ON c.a_id = sa.doc_id
-              JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >=
-                    (sa.set_size + sb.set_size - c.common) * 80),
+        ${jaccardPairCtes("docs", 80)},
         tri AS (SELECT e1.a_id AS x, e1.b_id AS y, e2.b_id AS z
                 FROM p e1 JOIN p e2 ON e1.b_id = e2.a_id
                 JOIN p e3 ON e3.a_id = e1.a_id AND e3.b_id = e2.b_id)
@@ -4497,30 +4393,7 @@ object Queries {
     Declared("q_tfidf_cosine",
       (s, d) => DedupOps.tfidfCosinePairs(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 80),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
-                WHERE doc_id % 10 = 0),
-        tf AS (SELECT doc_id, word, COUNT(*)::BIGINT AS tf
-               FROM (SELECT doc_id, unnest(string_split(text, ' '))
-                       AS word FROM docs)
-               GROUP BY doc_id, word),
-        dfq AS (SELECT word, COUNT(*)::BIGINT AS df FROM tf GROUP BY word),
-        wt AS (SELECT tf.doc_id, tf.word, tf.tf * (1000000 // dfq.df) AS w
-               FROM tf JOIN dfq USING (word)),
-        n AS (SELECT doc_id, SUM(w * w)::BIGINT AS norm_s FROM wt
-              GROUP BY doc_id),
-        d AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                SUM(a.w * b.w)::BIGINT AS dot_s
-              FROM wt a JOIN wt b ON a.word = b.word
-                                 AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id)
-        SELECT d.a_id, d.b_id, d.dot_s,
-               na.norm_s AS a_norm_s, nb.norm_s AS b_norm_s
-        FROM d JOIN n na ON d.a_id = na.doc_id
-               JOIN n nb ON d.b_id = nb.doc_id
-        WHERE d.dot_s > 0
-          AND CAST(d.dot_s AS DOUBLE) * CAST(d.dot_s AS DOUBLE) * 10000.0 >=
-              CAST(na.norm_s AS DOUBLE) * CAST(nb.norm_s AS DOUBLE) * 6400.0
-        ORDER BY d.a_id, d.b_id""")),
+      Some(tfidfCosineOracle)),
 
     // Temperature-rebalanced corpus sampling: the α=½ language weights
     // (q_lang_weights) drive a COMPUTED-rate deterministic sample
@@ -4591,30 +4464,7 @@ object Queries {
     Declared("q_tfidf_cosine_prefix",
       (s, d) => DedupOps.tfidfCosinePairsPrefix(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 80),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
-                WHERE doc_id % 10 = 0),
-        tf AS (SELECT doc_id, word, COUNT(*)::BIGINT AS tf
-               FROM (SELECT doc_id, unnest(string_split(text, ' '))
-                       AS word FROM docs)
-               GROUP BY doc_id, word),
-        dfq AS (SELECT word, COUNT(*)::BIGINT AS df FROM tf GROUP BY word),
-        wt AS (SELECT tf.doc_id, tf.word, tf.tf * (1000000 // dfq.df) AS w
-               FROM tf JOIN dfq USING (word)),
-        n AS (SELECT doc_id, SUM(w * w)::BIGINT AS norm_s FROM wt
-              GROUP BY doc_id),
-        d AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                SUM(a.w * b.w)::BIGINT AS dot_s
-              FROM wt a JOIN wt b ON a.word = b.word
-                                 AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id)
-        SELECT d.a_id, d.b_id, d.dot_s,
-               na.norm_s AS a_norm_s, nb.norm_s AS b_norm_s
-        FROM d JOIN n na ON d.a_id = na.doc_id
-               JOIN n nb ON d.b_id = nb.doc_id
-        WHERE d.dot_s > 0
-          AND CAST(d.dot_s AS DOUBLE) * CAST(d.dot_s AS DOUBLE) * 10000.0 >=
-              CAST(na.norm_s AS DOUBLE) * CAST(nb.norm_s AS DOUBLE) * 6400.0
-        ORDER BY d.a_id, d.b_id""")),
+      Some(tfidfCosineOracle)),
 
     // TPC-H Q18 shape (large-volume customers) via spark.sql: the
     // IN-(aggregated subquery WITH HAVING) form — Catalyst decorrelates
@@ -5100,11 +4950,7 @@ object Queries {
       // and breaks outright for ids ≥ 63. The interpolated CASE maps
       // each id VALUE to its positional bit weight, keeping oracle and
       // engine in lockstep under ANY future probe set.
-      Some(s"""WITH e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-                pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode()},
         n AS (SELECT vec_id, SUM(vi * vi)::BIGINT AS norm_s FROM e
               GROUP BY vec_id),
         pr AS (SELECT vec_id AS p_id, vi AS pvi, pos FROM e
@@ -5276,25 +5122,7 @@ object Queries {
       (s, d) => DedupOps.nearDupKeepers(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0),
         numHashes = 32, rowsPerBand = 2, minJaccardPct = 80),
-      Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM e
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
-        SELECT src AS doc_id,
-               LEAST(src, MIN(dst))::BIGINT AS cluster_id,
-               (LEAST(src, MIN(dst)) = src) AS is_keeper
-        FROM reach GROUP BY src ORDER BY doc_id""")),
+      Some(neardupClustersOracle)),
 
     // Histogram-sketch quantile estimates (EventOps.histogramQuantiles):
     // the MERGEABLE quantile path — sketch state is |types|·12 bin
@@ -5733,21 +5561,9 @@ object Queries {
         DedupOps.jaccardPairs(
           documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 80)
           .select("a_id", "b_id")),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
+      Some(s"""WITH docs AS (SELECT doc_id, text FROM documents
                 WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' '))
-                AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w
-               GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id FROM c
-              JOIN sz sa ON c.a_id = sa.doc_id
-              JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >=
-                    (sa.set_size + sb.set_size - c.common) * 80),
+        ${jaccardPairCtes("docs", 80)},
         deg AS (SELECT id AS doc_id, COUNT(*)::BIGINT AS deg
               FROM (SELECT a_id AS id FROM p
                     UNION ALL SELECT b_id FROM p)
@@ -5901,21 +5717,9 @@ object Queries {
       (s, d) => DedupOps.clusterCapSample(
         documents(s, d).filter(pmod(col("doc_id"), lit(4)) === 0),
         numHashes = 32, rowsPerBand = 2, minJaccardPct = 80, cap = 2),
-      Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM e
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
+      Some(s"""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
+        ${jaccardPairCtes("docs", 80)},
+        $componentCtes
         SELECT cluster_id, doc_id, rn FROM (
           SELECT cluster_id, doc_id,
             ROW_NUMBER() OVER (PARTITION BY cluster_id
@@ -5971,13 +5775,12 @@ object Queries {
           .withColumn("doc_id", col("doc_id") + lit(10000000L))
         DedupOps.dedupTokensSaved(base.unionByName(dupes))
       },
-      Some("""WITH aug AS (SELECT doc_id, source, text FROM documents
+      Some(s"""WITH aug AS (SELECT doc_id, source, text FROM documents
           UNION ALL
           SELECT doc_id + 10000000, source, text FROM documents
           WHERE doc_id % 7 = 0),
         k AS (SELECT doc_id, source, md5(text) AS fp,
-                CAST(len(regexp_extract_all(text,
-                  '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_tok
+                $regexTokens AS n_tok
               FROM aug),
         f AS (SELECT fp, MIN(doc_id) AS keep_id FROM k GROUP BY fp),
         agg AS (SELECT k.source, COUNT(*)::BIGINT AS n_docs,
@@ -6148,21 +5951,9 @@ object Queries {
         DedupOps.negativeSamples(docs,
           DedupOps.jaccardPairs(docs, 80).select("a_id", "b_id"), k = 2)
       },
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
+      Some(s"""WITH docs AS (SELECT doc_id, text FROM documents
                 WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' '))
-                AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w
-               GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id FROM c
-              JOIN sz sa ON c.a_id = sa.doc_id
-              JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >=
-                    (sa.set_size + sb.set_size - c.common) * 80),
+        ${jaccardPairCtes("docs", 80)},
         pos AS (SELECT a_id AS anchor_id, b_id AS cand_id FROM p
                 UNION ALL SELECT b_id, a_id FROM p),
         ids AS (SELECT doc_id FROM docs),
@@ -6197,19 +5988,7 @@ object Queries {
           DedupOps.jaccardPairs(docs, 80).select("a_id", "b_id"),
           k = 2, expectedCandidates = 16)
       },
-      Some("""WITH w AS (SELECT DISTINCT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w
-               GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id FROM c
-              JOIN sz sa ON c.a_id = sa.doc_id
-              JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >=
-                    (sa.set_size + sb.set_size - c.common) * 80),
+      Some(s"""WITH ${jaccardPairCtes("documents", 80)},
         pos AS (SELECT a_id AS anchor_id, b_id AS cand_id FROM p
                 UNION ALL SELECT b_id, a_id FROM p),
         ids AS (SELECT DISTINCT doc_id FROM documents),
@@ -6270,20 +6049,7 @@ object Queries {
     // non-trivial). Counts shuffle, text never does.
     Declared("q_token_budget",
       (s, d) => TextOps.tokenBudgetSelect(documents(s, d), budgetTokens = 600L),
-      Some("""WITH q AS (SELECT source, doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-                CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-                  * 1000000 // CAST(len(string_split(text, ' ')) AS BIGINT)
-                  AS score_ppm
-              FROM documents),
-        r AS (SELECT source, doc_id, score_ppm, n_words,
-                CAST(SUM(n_words) OVER (PARTITION BY source
-                  ORDER BY score_ppm DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-              FROM q)
-        SELECT source, doc_id, score_ppm, n_words, cum_tokens
-        FROM r WHERE cum_tokens <= 600
-        ORDER BY source, doc_id""")),
+      Some(s"""WITH ${tokenBudgetSelect()}""")),
 
     // Deterministic shard assignment (Relational.shardAssign): the
     // reproducible "global shuffle" layout step — shard + in-shard
@@ -6391,21 +6157,9 @@ object Queries {
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0),
         numHashes = 32, rowsPerBand = 2, minJaccardPct = 80,
         testPermille = 300),
-      Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM e
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
+      Some(s"""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+        ${jaccardPairCtes("docs", 80)},
+        $componentCtes,
         m AS (SELECT src AS doc_id, LEAST(src, MIN(dst))::BIGINT AS cluster_id
               FROM reach GROUP BY src)
         SELECT d.doc_id,
@@ -6632,112 +6386,9 @@ object Queries {
             .filter(pmod(col("doc_id"), lit(200)) === 0)
             .withColumn("doc_id", col("doc_id") + lit(10000000L))),
         documents(s, d).filter(pmod(col("doc_id"), lit(100)) === 50)),
-      Some("""WITH RECURSIVE
-        docs0 AS MATERIALIZED (
-          SELECT doc_id, text, lang, source FROM documents WHERE doc_id % 4 = 0
-          UNION ALL
-          SELECT doc_id + 10000000, text, lang, source FROM documents
-          WHERE doc_id % 200 = 0),
-        k1 AS (SELECT MIN(doc_id) AS doc_id FROM docs0 GROUP BY md5(text)),
-        d1 AS MATERIALIZED (SELECT d.* FROM docs0 d JOIN k1 USING (doc_id)),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM d1),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (SELECT src, dst FROM e
-          UNION SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
-        m AS MATERIALIZED (SELECT src AS doc_id,
-               LEAST(src, MIN(dst))::BIGINT AS cluster_id
-             FROM reach GROUP BY src),
-        t1 AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n FROM d1),
-        keep2 AS (SELECT arg_max(m.doc_id,
-                    CAST(t1.n AS HUGEINT) * 18446744073709551616::HUGEINT - m.doc_id) AS doc_id
-                  FROM m JOIN t1 USING (doc_id) GROUP BY m.cluster_id),
-        d2 AS MATERIALIZED (SELECT d.* FROM d1 d
-             WHERE d.doc_id NOT IN (SELECT doc_id FROM m)
-                OR d.doc_id IN (SELECT doc_id FROM keep2)),
-        bench AS (SELECT doc_id AS bench_id, string_split(text, ' ') AS ws
-                  FROM documents WHERE doc_id % 100 = 50),
-        cs AS (SELECT DISTINCT doc_id, sh
-               FROM (SELECT doc_id,
-                       unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-                     FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM d2)
-                     WHERE len(ws) >= 3)),
-        bs AS (SELECT DISTINCT bench_id, sh
-               FROM (SELECT bench_id,
-                       unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-                     FROM bench WHERE len(ws) >= 3)),
-        flag AS (SELECT DISTINCT doc_id FROM (
-                   SELECT cs.doc_id FROM cs JOIN bs USING (sh)
-                   GROUP BY cs.doc_id, bs.bench_id HAVING COUNT(*) >= 3)),
-        d3 AS MATERIALIZED (SELECT * FROM d2
-             WHERE doc_id NOT IN (SELECT doc_id FROM flag)),
-        q AS (SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS nw,
-                CAST(len(list_filter(string_split(text, ' '),
-                  x -> x = 'a' OR x = 'the' OR x = 'of' OR x = 'and' OR x = 'in')) AS BIGINT) AS sc
-              FROM d3),
-        d4 AS MATERIALIZED (SELECT d.* FROM d3 d JOIN q USING (doc_id)
-             WHERE q.nw >= 30 AND q.sc * 1000000 // q.nw < 100000),
-        tok AS MATERIALIZED (
-          SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM d4)),
-        rawc AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
-        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
-                FROM (SELECT ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                      FROM (SELECT unnest(string_split(text, ' ')) AS word
-                            FROM d4 WHERE lang = 'en')) GROUP BY b),
-        tot AS (SELECT (SELECT SUM(r_c) FROM rawc) AS r_tot,
-                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
-        bt AS (SELECT rawc.b,
-                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
-                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
-               FROM rawc LEFT JOIN tgt ON rawc.b = tgt.b CROSS JOIN tot),
-        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt),
-        wts AS (SELECT doc_id, CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
-                FROM tok JOIN post USING (b) GROUP BY doc_id),
-        sel AS (SELECT doc_id FROM wts
-                WHERE ('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 < dsir_ppm),
-        d5 AS MATERIALIZED (SELECT d.* FROM d4 d JOIN sel USING (doc_id)),
-        pt AS (SELECT source, doc_id // 100 AS shard, doc_id,
-                 CAST(len(regexp_extract_all(text,
-                   '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT) AS n
-               FROM d5),
-        pc AS (SELECT source, shard, doc_id, n,
-                 CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
-               FROM pt),
-        bins AS (SELECT source, shard, cb // 128 AS bin, COUNT(*)::BIGINT AS n_docs,
-                   CAST(SUM(n) AS BIGINT) AS bin_tokens FROM pc GROUP BY 1, 2, 3),
-        acct AS (
-          SELECT 1 AS stage_idx, 'exact_dedup' AS stage,
-            (SELECT COUNT(*) FROM docs0) AS rows_in,
-            (SELECT COUNT(*) FROM d1) AS rows_out,
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d1) AS tokens_out
-          UNION ALL SELECT 2, 'neardup_canonical',
-            (SELECT COUNT(*) FROM d1), (SELECT COUNT(*) FROM d2),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d2)
-          UNION ALL SELECT 3, 'decontaminate',
-            (SELECT COUNT(*) FROM d2), (SELECT COUNT(*) FROM d3),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d3)
-          UNION ALL SELECT 4, 'quality_filter',
-            (SELECT COUNT(*) FROM d3), (SELECT COUNT(*) FROM d4),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d4)
-          UNION ALL SELECT 5, 'dsir_select',
-            (SELECT COUNT(*) FROM d4), (SELECT COUNT(*) FROM d5),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d5)
-          UNION ALL SELECT 6, 'pack',
-            (SELECT COUNT(*) FROM d5), (SELECT COUNT(*) FROM bins),
-            (SELECT COALESCE(SUM(bin_tokens), 0) FROM bins))
-        SELECT stage_idx::BIGINT AS stage_idx, stage, rows_in::BIGINT AS rows_in,
-               rows_out::BIGINT AS rows_out, tokens_out::BIGINT AS tokens_out
-        FROM acct ORDER BY stage_idx""")),
+      Some(s"""WITH RECURSIVE
+        ${curationChainCtes("k1")},
+        ${curationAcct(bpe = false)}""")),
 
     // LSH INDEX MAINTENANCE (VERDICT r11 #3): the ingest loop's upsert
     // verb, oracle-checked by its REBUILD-EQUIVALENCE contract. Batch 1
@@ -6975,16 +6626,8 @@ object Queries {
     // extends the pack CTE with the same rollup.
     Declared("q_pack_utilization",
       (s, d) => TextOps.packUtilization(documents(s, d), 128L, 100L),
-      Some("""WITH t AS (SELECT source, doc_id // 100 AS shard, doc_id,
-                CAST(len(regexp_extract_all(text,
-                  '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT) AS n
-              FROM documents),
-        c AS (SELECT source, shard, doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
-                  ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS cb
-              FROM t),
+      Some(s"""WITH ${regexTokCte("t", "documents")},
+        ${packCumCte("c", "t")},
         bins AS (SELECT source, shard, cb // 128 AS bin,
                 CAST(SUM(n) AS BIGINT) AS bin_tokens
               FROM c GROUP BY 1, 2, 3)
@@ -7013,20 +6656,14 @@ object Queries {
         documents(s, d).filter(pmod(col("doc_id"), lit(4)) === 0),
         32, 2, 80,
         Seq(800000L, 850000L, 900000L, 950000L, 1000000L)),
-      Some("""WITH docs AS (SELECT doc_id, text FROM documents
+      Some(s"""WITH docs AS (SELECT doc_id, text FROM documents
                 WHERE doc_id % 4 = 0),
-        w AS (SELECT DISTINCT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS s FROM w GROUP BY doc_id),
-        co AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-        p AS (SELECT co.a_id, co.b_id,
-                common * 1000000 // (sa.s + sb.s - common) AS j_ppm
-              FROM co JOIN sz sa ON co.a_id = sa.doc_id
-                      JOIN sz sb ON co.b_id = sb.doc_id
-              WHERE common * 100 >= (sa.s + sb.s - common) * 80),
+        ${wordOverlapCtes("docs")},
+        p AS (SELECT c.a_id, c.b_id,
+                c.common * 1000000 // (sa.set_size + sb.set_size - c.common) AS j_ppm
+              FROM c JOIN sz sa ON c.a_id = sa.doc_id
+                     JOIN sz sb ON c.b_id = sb.doc_id
+              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
         grid(tau_ppm) AS (VALUES (800000), (850000), (900000),
                 (950000), (1000000)),
         f AS (SELECT g.tau_ppm, p.a_id, p.b_id FROM grid g
@@ -7056,13 +6693,7 @@ object Queries {
       (s, d) => TextOps.surprisalBits(documents(s, d))
         .withColumn("keep",
           when(col("bits_q8") <= 1040L, 1L).otherwise(0L)),
-      Some("""WITH w AS (SELECT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        wc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
-        tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM wc),
-        wb AS (SELECT word,
-                 CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
-               FROM wc CROSS JOIN tot)
+      Some(s"""WITH ${unigramBitsCtes()}
         SELECT w.doc_id, COUNT(*)::BIGINT AS n_words,
                CAST(SUM(wb.bits) AS BIGINT) AS sum_bits,
                CAST(SUM(wb.bits) * 256 // COUNT(*) AS BIGINT) AS bits_q8,
@@ -7158,133 +6789,8 @@ object Queries {
         ${bpeOracleCtes(rounds = 6, topWords = 31)},
         wt AS MATERIALIZED (
           SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
-        docs0 AS MATERIALIZED (
-          SELECT doc_id, text, lang, source FROM documents WHERE doc_id % 4 = 0
-          UNION ALL
-          SELECT doc_id + 10000000, text, lang, source FROM documents
-          WHERE doc_id % 200 = 0),
-        kd1 AS (SELECT MIN(doc_id) AS doc_id FROM docs0 GROUP BY md5(text)),
-        d1 AS MATERIALIZED (SELECT d.* FROM docs0 d JOIN kd1 USING (doc_id)),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM d1),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (SELECT src, dst FROM e
-          UNION SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
-        m AS MATERIALIZED (SELECT src AS doc_id,
-               LEAST(src, MIN(dst))::BIGINT AS cluster_id
-             FROM reach GROUP BY src),
-        t1 AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n FROM d1),
-        keep2 AS (SELECT arg_max(m.doc_id,
-                    CAST(t1.n AS HUGEINT) * 18446744073709551616::HUGEINT - m.doc_id) AS doc_id
-                  FROM m JOIN t1 USING (doc_id) GROUP BY m.cluster_id),
-        d2 AS MATERIALIZED (SELECT d.* FROM d1 d
-             WHERE d.doc_id NOT IN (SELECT doc_id FROM m)
-                OR d.doc_id IN (SELECT doc_id FROM keep2)),
-        bench AS (SELECT doc_id AS bench_id, string_split(text, ' ') AS ws
-                  FROM documents WHERE doc_id % 100 = 50),
-        cs AS (SELECT DISTINCT doc_id, sh
-               FROM (SELECT doc_id,
-                       unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-                     FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM d2)
-                     WHERE len(ws) >= 3)),
-        bs AS (SELECT DISTINCT bench_id, sh
-               FROM (SELECT bench_id,
-                       unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-                     FROM bench WHERE len(ws) >= 3)),
-        flag AS (SELECT DISTINCT doc_id FROM (
-                   SELECT cs.doc_id FROM cs JOIN bs USING (sh)
-                   GROUP BY cs.doc_id, bs.bench_id HAVING COUNT(*) >= 3)),
-        d3 AS MATERIALIZED (SELECT * FROM d2
-             WHERE doc_id NOT IN (SELECT doc_id FROM flag)),
-        q AS (SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS nw,
-                CAST(len(list_filter(string_split(text, ' '),
-                  x -> x = 'a' OR x = 'the' OR x = 'of' OR x = 'and' OR x = 'in')) AS BIGINT) AS sc
-              FROM d3),
-        d4 AS MATERIALIZED (SELECT d.* FROM d3 d JOIN q USING (doc_id)
-             WHERE q.nw >= 30 AND q.sc * 1000000 // q.nw < 100000),
-        tok AS MATERIALIZED (
-          SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM d4)),
-        rawc AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
-        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
-                FROM (SELECT ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                      FROM (SELECT unnest(string_split(text, ' ')) AS word
-                            FROM d4 WHERE lang = 'en')) GROUP BY b),
-        tot AS (SELECT (SELECT SUM(r_c) FROM rawc) AS r_tot,
-                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
-        bt AS (SELECT rawc.b,
-                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
-                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
-               FROM rawc LEFT JOIN tgt ON rawc.b = tgt.b CROSS JOIN tot),
-        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt),
-        wts AS (SELECT doc_id, CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
-                FROM tok JOIN post USING (b) GROUP BY doc_id),
-        sel AS (SELECT doc_id FROM wts
-                WHERE ('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 < dsir_ppm),
-        d5 AS MATERIALIZED (SELECT d.* FROM d4 d JOIN sel USING (doc_id)),
-        pt AS (SELECT source, doc_id // 100 AS shard, doc_id,
-                 CAST(len(regexp_extract_all(text,
-                   '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT) AS n
-               FROM d5),
-        pc AS (SELECT source, shard, doc_id, n,
-                 CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
-               FROM pt),
-        bins AS (SELECT source, shard, cb // 128 AS bin, COUNT(*)::BIGINT AS n_docs,
-                   CAST(SUM(n) AS BIGINT) AS bin_tokens FROM pc GROUP BY 1, 2, 3),
-        bpe1 AS (SELECT CAST(COALESCE(SUM(COALESCE(wt.n_bpe, len(wx.word))), 0) AS BIGINT) AS btok
-                 FROM (SELECT unnest(string_split(text, ' ')) AS word FROM d1) wx
-                 LEFT JOIN wt USING (word)),
-        bpe2 AS (SELECT CAST(COALESCE(SUM(COALESCE(wt.n_bpe, len(wx.word))), 0) AS BIGINT) AS btok
-                 FROM (SELECT unnest(string_split(text, ' ')) AS word FROM d2) wx
-                 LEFT JOIN wt USING (word)),
-        bpe3 AS (SELECT CAST(COALESCE(SUM(COALESCE(wt.n_bpe, len(wx.word))), 0) AS BIGINT) AS btok
-                 FROM (SELECT unnest(string_split(text, ' ')) AS word FROM d3) wx
-                 LEFT JOIN wt USING (word)),
-        bpe4 AS (SELECT CAST(COALESCE(SUM(COALESCE(wt.n_bpe, len(wx.word))), 0) AS BIGINT) AS btok
-                 FROM (SELECT unnest(string_split(text, ' ')) AS word FROM d4) wx
-                 LEFT JOIN wt USING (word)),
-        bpe5 AS (SELECT CAST(COALESCE(SUM(COALESCE(wt.n_bpe, len(wx.word))), 0) AS BIGINT) AS btok
-                 FROM (SELECT unnest(string_split(text, ' ')) AS word FROM d5) wx
-                 LEFT JOIN wt USING (word)),
-        acct AS (
-          SELECT 1 AS stage_idx, 'exact_dedup' AS stage,
-            (SELECT COUNT(*) FROM docs0) AS rows_in,
-            (SELECT COUNT(*) FROM d1) AS rows_out,
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d1) AS tokens_out,
-            (SELECT btok FROM bpe1) AS bpe_tokens_out
-          UNION ALL SELECT 2, 'neardup_canonical',
-            (SELECT COUNT(*) FROM d1), (SELECT COUNT(*) FROM d2),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d2),
-            (SELECT btok FROM bpe2)
-          UNION ALL SELECT 3, 'decontaminate',
-            (SELECT COUNT(*) FROM d2), (SELECT COUNT(*) FROM d3),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d3),
-            (SELECT btok FROM bpe3)
-          UNION ALL SELECT 4, 'quality_filter',
-            (SELECT COUNT(*) FROM d3), (SELECT COUNT(*) FROM d4),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d4),
-            (SELECT btok FROM bpe4)
-          UNION ALL SELECT 5, 'dsir_select',
-            (SELECT COUNT(*) FROM d4), (SELECT COUNT(*) FROM d5),
-            (SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM d5),
-            (SELECT btok FROM bpe5)
-          UNION ALL SELECT 6, 'pack',
-            (SELECT COUNT(*) FROM d5), (SELECT COUNT(*) FROM bins),
-            (SELECT COALESCE(SUM(bin_tokens), 0) FROM bins),
-            (SELECT btok FROM bpe5))
-        SELECT stage_idx::BIGINT AS stage_idx, stage, rows_in::BIGINT AS rows_in,
-               rows_out::BIGINT AS rows_out, tokens_out::BIGINT AS tokens_out,
-               bpe_tokens_out::BIGINT AS bpe_tokens_out
-        FROM acct ORDER BY stage_idx""")),
+        ${curationChainCtes("kd1")},
+        ${curationAcct(bpe = true)}""")),
 
     // TOKENIZER-UNIT SEQUENCE PACKING (round 14): q_pack_sequences'
     // concat-then-chunk bins, priced by the fitted BPE artifact
@@ -7303,22 +6809,7 @@ object Queries {
           TextOps.bpeWordTokens(docs, merges, topWords = 31), 128L, 100L)
       },
       Some(s"""WITH ${bpeOracleCtes(rounds = 6, topWords = 31)},
-        wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
-        wtok AS (SELECT doc_id,
-                   CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS n
-                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                       FROM documents) w
-                 LEFT JOIN wt ON w.word = wt.word
-                 GROUP BY doc_id),
-        t AS (SELECT d.source, d.doc_id // 100 AS shard, d.doc_id,
-                COALESCE(wtok.n, 0) AS n
-              FROM documents d LEFT JOIN wtok USING (doc_id)),
-        cpk AS (SELECT source, shard, doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
-                  ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS cb
-              FROM t)
+        ${bpePackCtes("documents")}
         SELECT source, shard, cb // 128 AS bin, COUNT(*)::BIGINT AS n_docs,
           CAST(SUM(n) AS BIGINT) AS bin_tokens,
           MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
@@ -7353,22 +6844,7 @@ object Queries {
           TextOps.bpeWordTokens(docs, merges, topWords = 31), 128L, 100L)
       },
       Some(s"""WITH ${bpeOracleCtes(rounds = 6, topWords = 31)},
-        wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
-        wtok AS (SELECT doc_id,
-                   CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS n
-                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                       FROM documents) w
-                 LEFT JOIN wt ON w.word = wt.word
-                 GROUP BY doc_id),
-        t AS (SELECT d.source, d.doc_id // 100 AS shard, d.doc_id,
-                COALESCE(wtok.n, 0) AS n
-              FROM documents d LEFT JOIN wtok USING (doc_id)),
-        cpk AS (SELECT source, shard, doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
-                  ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS cb
-              FROM t)
+        ${bpePackCtes("documents")}
         SELECT source, shard, cb // 128 AS bin, doc_id,
           n AS n_tokens,
           CAST(cb - MIN(cb) OVER (PARTITION BY source, shard, cb // 128)
@@ -7423,48 +6899,7 @@ object Queries {
         documents(s, d), documents(s, d).filter(col("lang") === "en"),
         stopwords = Seq("a", "the", "of", "and", "in"), minWords = 30L,
         maxStopwordPpm = 100000L, numBuckets = 1024, maxBitsQ8 = 1040L),
-      Some("""WITH w AS (SELECT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        swc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
-        stot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM swc),
-        swb AS (SELECT word,
-                  CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
-                FROM swc CROSS JOIN stot),
-        sup AS (SELECT w.doc_id,
-                  CASE WHEN SUM(swb.bits) * 256 // COUNT(*) <= 1040
-                    THEN 1 ELSE 0 END::BIGINT AS k_surprisal
-                FROM w JOIN swb USING (word) GROUP BY w.doc_id),
-        qual AS (SELECT doc_id,
-                   CASE WHEN nw >= 30 AND sc * 1000000 // nw < 100000
-                     THEN 1 ELSE 0 END::BIGINT AS k_quality
-                 FROM (SELECT doc_id,
-                         CAST(len(string_split(text, ' ')) AS BIGINT) AS nw,
-                         CAST(len(list_filter(string_split(text, ' '),
-                           x -> x = 'a' OR x = 'the' OR x = 'of' OR x = 'and' OR x = 'in')) AS BIGINT) AS sc
-                       FROM documents)),
-        tok AS (SELECT doc_id,
-                  ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                FROM w),
-        rawc AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
-        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
-                FROM (SELECT ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                      FROM (SELECT unnest(string_split(text, ' ')) AS word
-                            FROM documents WHERE lang = 'en')) GROUP BY b),
-        tot AS (SELECT (SELECT SUM(r_c) FROM rawc) AS r_tot,
-                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
-        bt AS (SELECT rawc.b,
-                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
-                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
-               FROM rawc LEFT JOIN tgt ON rawc.b = tgt.b CROSS JOIN tot),
-        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt),
-        wts AS (SELECT doc_id, CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
-                FROM tok JOIN post USING (b) GROUP BY doc_id),
-        dsir AS (SELECT doc_id,
-                   CASE WHEN ('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 < dsir_ppm
-                     THEN 1 ELSE 0 END::BIGINT AS k_dsir
-                 FROM wts),
-        f AS (SELECT q.doc_id, k_quality, k_surprisal, k_dsir
-              FROM qual q JOIN sup USING (doc_id) JOIN dsir USING (doc_id)),
+      Some(s"""WITH ${qualityVotesCtes},
         pr AS (
           SELECT 'dsir' AS sig_a, 'quality' AS sig_b,
                  k_dsir AS ka, k_quality AS kb FROM f
@@ -7495,31 +6930,11 @@ object Queries {
         TextOps.tokenBudgetSelect(docs.join(keep, Seq("doc_id"), "left_semi"),
           budgetTokens = 600L)
       },
-      Some("""WITH w AS (SELECT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        wc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
-        tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM wc),
-        wb AS (SELECT word,
-                 CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
-               FROM wc CROSS JOIN tot),
+      Some(s"""WITH ${unigramBitsCtes()},
         keep AS (SELECT w.doc_id FROM w JOIN wb USING (word)
                  GROUP BY w.doc_id
                  HAVING SUM(wb.bits) * 256 // COUNT(*) <= 1040),
-        q AS (SELECT source, doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-                CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-                  * 1000000 // CAST(len(string_split(text, ' ')) AS BIGINT)
-                  AS score_ppm
-              FROM documents
-              WHERE doc_id IN (SELECT doc_id FROM keep)),
-        r AS (SELECT source, doc_id, score_ppm, n_words,
-                CAST(SUM(n_words) OVER (PARTITION BY source
-                  ORDER BY score_ppm DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-              FROM q)
-        SELECT source, doc_id, score_ppm, n_words, cum_tokens
-        FROM r WHERE cum_tokens <= 600
-        ORDER BY source, doc_id""")),
+        ${tokenBudgetSelect(keepOnly = true)}""")),
 
     // INCREMENTAL CONNECTED COMPONENTS (VERDICT r13 #6): the clustering
     // half of the ingest loop, oracle-checked by REBUILD EQUIVALENCE
@@ -7562,21 +6977,9 @@ object Queries {
           .select(col("id").as("doc_id"), col("cluster_id"))
           .orderBy("doc_id")
       },
-      Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM e
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
+      Some(s"""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
+        ${jaccardPairCtes("docs", 80)},
+        $componentCtes
         SELECT src AS doc_id,
                LEAST(src, MIN(dst))::BIGINT AS cluster_id
         FROM reach GROUP BY src ORDER BY doc_id""")),
@@ -7617,21 +7020,7 @@ object Queries {
       Some(s"""WITH $qualityVotesCtes,
         keep AS (SELECT doc_id FROM f
                  WHERE k_quality + k_surprisal + k_dsir >= 2),
-        q AS (SELECT source, doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-                CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-                  * 1000000 // CAST(len(string_split(text, ' ')) AS BIGINT)
-                  AS score_ppm
-              FROM documents
-              WHERE doc_id IN (SELECT doc_id FROM keep)),
-        r AS (SELECT source, doc_id, score_ppm, n_words,
-                CAST(SUM(n_words) OVER (PARTITION BY source
-                  ORDER BY score_ppm DESC, doc_id
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-              FROM q)
-        SELECT source, doc_id, score_ppm, n_words, cum_tokens
-        FROM r WHERE cum_tokens <= 600
-        ORDER BY source, doc_id""")),
+        ${tokenBudgetSelect(keepOnly = true)}""")),
 
     // DATA CARD v2 (VERDICT r14 #5): the release card with tokens
     // priced by the FROZEN tokenizer (bpe_tokens — the q_pack_bpe
@@ -7724,44 +7113,7 @@ object Queries {
         TextOps.packShardsSliceAudit(docs, syms, 128L, 100L, out)
       },
       Some(s"""WITH ${bpeOracleCtes(rounds = 6, topWords = 31)},
-        wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
-        wtok AS (SELECT doc_id,
-                   CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS n
-                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                       FROM documents) w
-                 LEFT JOIN wt ON w.word = wt.word
-                 GROUP BY doc_id),
-        t AS (SELECT d.source, d.doc_id // 100 AS shard, d.doc_id,
-                COALESCE(wtok.n, 0) AS n
-              FROM documents d LEFT JOIN wtok USING (doc_id)),
-        cpk AS (SELECT source, shard, doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
-                  ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS cb
-              FROM t),
-        ww AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                 unnest(range(len(string_split(text, ' ')))) AS wpos
-               FROM documents),
-        wtk AS (SELECT ww.doc_id, ww.wpos,
-                  COALESCE(s6.syms,
-                    list_filter(string_split(ww.word, ''),
-                      x -> x <> '')) AS syms
-                FROM ww LEFT JOIN s6 ON ww.word = s6.word),
-        flat AS (SELECT doc_id, wpos, unnest(syms) AS sym,
-                   unnest(range(len(syms))) AS spos
-                 FROM wtk),
-        dstr AS (SELECT doc_id,
-                   COALESCE(string_agg(sym, ' ' ORDER BY wpos, spos), '')
-                     AS str
-                 FROM flat GROUP BY doc_id)
-        SELECT cpk.source, cpk.shard, cpk.cb // 128 AS bin, cpk.doc_id,
-          cpk.n AS n_tokens,
-          CAST(cpk.cb - MIN(cpk.cb) OVER (PARTITION BY cpk.source,
-            cpk.shard, cpk.cb // 128) AS BIGINT) AS tok_offset,
-          COALESCE(md5(dstr.str), md5('')) AS tok_md5
-        FROM cpk LEFT JOIN dstr USING (doc_id)
-        ORDER BY source, shard, bin, doc_id""")),
+        ${bpePackShards("documents")}""")),
 
     // FOUR-SIGNAL AGREEMENT MATRIX (round 15): q_quality_agreement
     // extended with the bigram fluency flag (q_surprisal_bigram's 1104
@@ -7778,46 +7130,7 @@ object Queries {
         stopwords = Seq("a", "the", "of", "and", "in"), minWords = 30L,
         maxStopwordPpm = 100000L, numBuckets = 1024, maxBitsQ8 = 1040L,
         maxBiQ8 = 1104L),
-      Some("""WITH w AS (SELECT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        swc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
-        stot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM swc),
-        swb AS (SELECT word,
-                  CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
-                FROM swc CROSS JOIN stot),
-        sup AS (SELECT w.doc_id,
-                  CASE WHEN SUM(swb.bits) * 256 // COUNT(*) <= 1040
-                    THEN 1 ELSE 0 END::BIGINT AS k_surprisal
-                FROM w JOIN swb USING (word) GROUP BY w.doc_id),
-        qual AS (SELECT doc_id,
-                   CASE WHEN nw >= 30 AND sc * 1000000 // nw < 100000
-                     THEN 1 ELSE 0 END::BIGINT AS k_quality
-                 FROM (SELECT doc_id,
-                         CAST(len(string_split(text, ' ')) AS BIGINT) AS nw,
-                         CAST(len(list_filter(string_split(text, ' '),
-                           x -> x = 'a' OR x = 'the' OR x = 'of' OR x = 'and' OR x = 'in')) AS BIGINT) AS sc
-                       FROM documents)),
-        tok AS (SELECT doc_id,
-                  ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                FROM w),
-        rawc AS (SELECT b, COUNT(*)::BIGINT AS r_c FROM tok GROUP BY b),
-        tgt AS (SELECT b, COUNT(*)::BIGINT AS t_c
-                FROM (SELECT ('0x' || substr(md5(word), 1, 8))::BIGINT % 1024 AS b
-                      FROM (SELECT unnest(string_split(text, ' ')) AS word
-                            FROM documents WHERE lang = 'en')) GROUP BY b),
-        tot AS (SELECT (SELECT SUM(r_c) FROM rawc) AS r_tot,
-                       (SELECT COALESCE(SUM(t_c), 0) FROM tgt) AS t_tot),
-        bt AS (SELECT rawc.b,
-                 CAST(COALESCE(t_c, 0) + 1 AS HUGEINT) * (r_tot + 1024) AS num,
-                 CAST(r_c + 1 AS HUGEINT) * (t_tot + 1024) AS den
-               FROM rawc LEFT JOIN tgt ON rawc.b = tgt.b CROSS JOIN tot),
-        post AS (SELECT b, CAST(num * 1000000 // (num + den) AS BIGINT) AS post_ppm FROM bt),
-        wts AS (SELECT doc_id, CAST(SUM(post_ppm) // COUNT(*) AS BIGINT) AS dsir_ppm
-                FROM tok JOIN post USING (b) GROUP BY doc_id),
-        dsir AS (SELECT doc_id,
-                   CASE WHEN ('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 < dsir_ppm
-                     THEN 1 ELSE 0 END::BIGINT AS k_dsir
-                 FROM wts),
+      Some(s"""WITH ${qualityFlagCtes},
         dw AS (SELECT doc_id, string_split(text, ' ') AS ws
                FROM documents),
         bpr AS (SELECT doc_id, ws[i] AS prev, ws[i + 1] AS word
@@ -8048,11 +7361,7 @@ object Queries {
     Declared("q_simsearch_matryoshka",
       (s, d) => SimilarityOps.matryoshkaTopK(embeddings(s, d),
         queryIds = (0L until 8L), prefixDim = 32, candidates = 80, k = 5),
-      Some("""WITH e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-                pos
-              FROM (SELECT vec_id, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode()},
         q AS (SELECT vec_id AS q_id, vi, pos FROM e WHERE vec_id < 8),
         pre AS (SELECT q.q_id, c.vec_id AS n_id, SUM(q.vi * c.vi) AS ps
                 FROM q JOIN e c ON q.pos = c.pos WHERE q.pos < 32
@@ -8067,12 +7376,7 @@ object Queries {
                FROM cand cd JOIN q ON q.q_id = cd.q_id
                JOIN e c ON c.vec_id = cd.n_id AND c.pos = q.pos
                GROUP BY cd.q_id, cd.n_id)
-        SELECT q_id, rn, n_id, score_s14 FROM (
-          SELECT q_id, n_id, score_s14,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY score_s14 DESC, n_id) AS rn
-          FROM fl) WHERE rn <= 5
-        ORDER BY q_id, rn""")),
+        ${topKByScore("fl", 5)}""")),
 
     // INCREMENTAL SHARD PACK (round 15): the codesUpsert economics
     // applied to the training-shard artifact — an ingest batch (the
@@ -8107,44 +7411,7 @@ object Queries {
           UNION ALL
           SELECT doc_id + 20000000, text, lang, source, n_chars
           FROM documents WHERE doc_id % 6 = 3),
-        wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
-        wtok AS (SELECT doc_id,
-                   CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS n
-                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                       FROM docs) w
-                 LEFT JOIN wt ON w.word = wt.word
-                 GROUP BY doc_id),
-        t AS (SELECT d.source, d.doc_id // 100 AS shard, d.doc_id,
-                COALESCE(wtok.n, 0) AS n
-              FROM docs d LEFT JOIN wtok USING (doc_id)),
-        cpk AS (SELECT source, shard, doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
-                  ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS cb
-              FROM t),
-        ww AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                 unnest(range(len(string_split(text, ' ')))) AS wpos
-               FROM docs),
-        wtk AS (SELECT ww.doc_id, ww.wpos,
-                  COALESCE(s6.syms,
-                    list_filter(string_split(ww.word, ''),
-                      x -> x <> '')) AS syms
-                FROM ww LEFT JOIN s6 ON ww.word = s6.word),
-        flat AS (SELECT doc_id, wpos, unnest(syms) AS sym,
-                   unnest(range(len(syms))) AS spos
-                 FROM wtk),
-        dstr AS (SELECT doc_id,
-                   COALESCE(string_agg(sym, ' ' ORDER BY wpos, spos), '')
-                     AS str
-                 FROM flat GROUP BY doc_id)
-        SELECT cpk.source, cpk.shard, cpk.cb // 128 AS bin, cpk.doc_id,
-          cpk.n AS n_tokens,
-          CAST(cpk.cb - MIN(cpk.cb) OVER (PARTITION BY cpk.source,
-            cpk.shard, cpk.cb // 128) AS BIGINT) AS tok_offset,
-          COALESCE(md5(dstr.str), md5('')) AS tok_md5
-        FROM cpk LEFT JOIN dstr USING (doc_id)
-        ORDER BY source, shard, bin, doc_id""")),
+        ${bpePackShards("docs")}""")),
 
     // INCREMENTAL INGEST PIPELINE (VERDICT r14 #3): the full two-batch
     // ingest loop as ONE declared relation — the StreamingNearDupSpec
@@ -8203,21 +7470,9 @@ object Queries {
         lab.unionByName(dec1).unionByName(dec2)
           .orderBy("phase", "doc_id")
       },
-      Some("""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
-        w AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size FROM w GROUP BY doc_id),
-        c AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*)::BIGINT AS common
-              FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT c.a_id, c.b_id
-              FROM c JOIN sz sa ON c.a_id = sa.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-              WHERE c.common * 100 >= (sa.set_size + sb.set_size - c.common) * 80),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION SELECT b_id, a_id FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM e
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
+      Some(s"""WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
+        ${jaccardPairCtes("docs", 80)},
+        $componentCtes
         SELECT 'label' AS phase, d.doc_id,
                CAST(COALESCE(r.cl, d.doc_id) AS BIGINT) AS val
         FROM docs d LEFT JOIN (
@@ -8591,7 +7846,7 @@ object Queries {
     Declared("q_rank_fusion",
       (s, d) => RetrievalOps.hybridRrfTopK(documents(s, d), probeMod = 50,
         kPerRanker = 10, topK = 5),
-      Some("""WITH tf AS (SELECT doc_id, word, COUNT(*)::BIGINT AS tf
+      Some(s"""WITH tf AS (SELECT doc_id, word, COUNT(*)::BIGINT AS tf
                FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
                      FROM documents)
                GROUP BY doc_id, word),
@@ -8608,13 +7863,7 @@ object Queries {
                    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
                      ORDER BY dot_s DESC, doc_id) AS BIGINT) AS rank
                  FROM dts) WHERE rank <= 10),
-        gr AS (SELECT DISTINCT doc_id, gram
-               FROM (SELECT doc_id,
-                       unnest([array_to_string(w[i:i+2], ' ')
-                               for i in range(1, len(w) - 1)]) AS gram
-                     FROM (SELECT doc_id, string_split(text, ' ') AS w
-                           FROM documents)
-                     WHERE len(w) >= 3)),
+        ${shingleCte("gr", "doc_id", "(SELECT doc_id, string_split(text, ' ') AS w FROM documents)", col = "gram")},
         gsz AS (SELECT doc_id, COUNT(*)::BIGINT AS sz FROM gr
                 GROUP BY doc_id),
         gcm AS (SELECT p.doc_id AS q_id, c.doc_id,
@@ -8669,19 +7918,15 @@ object Queries {
     // injective on this vocabulary, so the partitions coincide).
     Declared("q_entity_resolve",
       (s, d) => DedupOps.fuzzyEntityResolve(part(s, d), "p_name", tau = 2),
-      Some("""WITH RECURSIVE n AS (SELECT p_name AS name,
+      Some(s"""WITH RECURSIVE n AS (SELECT p_name AS name,
                 COUNT(*)::BIGINT AS n_rows,
                 string_split(p_name, ' ')[-1] AS block
               FROM part GROUP BY p_name),
         p AS (SELECT a.name AS a_name, b.name AS b_name
               FROM n a JOIN n b ON a.block = b.block AND a.name < b.name
               WHERE levenshtein(a.name, b.name) <= 2),
-        ed AS (SELECT a_name AS src, b_name AS dst FROM p
-               UNION SELECT b_name, a_name FROM p),
-        reach(src, dst) AS (
-          SELECT src, dst FROM ed
-          UNION
-          SELECT r.src, ed.dst FROM reach r JOIN ed ON r.dst = ed.src),
+        ${symEdgesCte("p", "ed", "a_name", "b_name")},
+        ${reachCte("ed")},
         lab AS (SELECT n.name, n.n_rows,
                   LEAST(n.name, COALESCE(MIN(r.dst), n.name)) AS canon
                 FROM n LEFT JOIN reach r ON r.src = n.name
@@ -8834,16 +8079,7 @@ object Queries {
             sum(col("ov_us")).cast(LongType).as("ov_us_total"))
           .orderBy("user_a", "user_b")
       },
-      Some("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn FROM events),
-        g AS (SELECT user_id, tsn, event_id,
-                CASE WHEN lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) IS NULL
-                       OR tsn - lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) > 1800000000
-                     THEN 1 ELSE 0 END AS new_sess
-              FROM e),
-        sess AS (SELECT user_id, tsn,
-                CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-              FROM g),
+      Some(s"""WITH ${sessionCtes},
         iv AS (SELECT user_id, session_id, MIN(tsn) AS s_start,
                       MAX(tsn) + 7200000000 AS s_end
                FROM sess GROUP BY user_id, session_id),
@@ -8974,16 +8210,7 @@ object Queries {
             (col("session_end") + lit(7200000000L)).as("s_end"))
         Relational.intervalCoverage(iv, "user_id")
       },
-      Some("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn FROM events),
-        g AS (SELECT user_id, tsn, event_id,
-                CASE WHEN lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) IS NULL
-                       OR tsn - lag(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) > 1800000000
-                     THEN 1 ELSE 0 END AS new_sess
-              FROM e),
-        sess AS (SELECT user_id, tsn,
-                CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-              FROM g),
+      Some(s"""WITH ${sessionCtes},
         iv AS (SELECT user_id, MIN(tsn) AS s_start,
                       MAX(tsn) + 7200000000 AS s_end
                FROM sess GROUP BY user_id, session_id),
@@ -9416,13 +8643,7 @@ object Queries {
     // the proven q_surprisal CTE chain + the identical NTILE rollup.
     Declared("q_ccnet_buckets",
       (s, d) => TextOps.ccnetBuckets(documents(s, d)),
-      Some("""WITH w AS (SELECT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        wc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
-        tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM wc),
-        wb AS (SELECT word,
-                 CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
-               FROM wc CROSS JOIN tot),
+      Some(s"""WITH ${unigramBitsCtes()},
         db AS (SELECT w.doc_id, COUNT(*)::BIGINT AS n_words,
                  CAST(SUM(wb.bits) * 256 // COUNT(*) AS BIGINT) AS bits_q8
                FROM w JOIN wb USING (word) GROUP BY w.doc_id),
@@ -9445,13 +8666,7 @@ object Queries {
     // the shared tercile chain + a conditional rollup.
     Declared("q_ccnet_filter",
       (s, d) => TextOps.ccnetFilter(documents(s, d)),
-      Some("""WITH w AS (SELECT doc_id,
-                unnest(string_split(text, ' ')) AS word FROM documents),
-        wc AS (SELECT word, COUNT(*)::BIGINT AS cnt FROM w GROUP BY word),
-        tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM wc),
-        wb AS (SELECT word,
-                 CAST(length(bin(t // cnt)) - 1 AS BIGINT) AS bits
-               FROM wc CROSS JOIN tot),
+      Some(s"""WITH ${unigramBitsCtes()},
         db AS (SELECT w.doc_id, COUNT(*)::BIGINT AS n_words,
                  CAST(SUM(wb.bits) * 256 // COUNT(*) AS BIGINT) AS bits_q8
                FROM w JOIN wb USING (word) GROUP BY w.doc_id),
@@ -9572,44 +8787,7 @@ object Queries {
           UNION ALL
           SELECT doc_id + 20000000, text, lang, source, n_chars
           FROM documents WHERE doc_id % 6 = 3),
-        wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
-        wtok AS (SELECT doc_id,
-                   CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS n
-                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                       FROM docs) w
-                 LEFT JOIN wt ON w.word = wt.word
-                 GROUP BY doc_id),
-        t AS (SELECT d.source, d.doc_id // 100 AS shard, d.doc_id,
-                COALESCE(wtok.n, 0) AS n
-              FROM docs d LEFT JOIN wtok USING (doc_id)),
-        cpk AS (SELECT source, shard, doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (PARTITION BY source, shard
-                  ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS cb
-              FROM t),
-        ww AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                 unnest(range(len(string_split(text, ' ')))) AS wpos
-               FROM docs),
-        wtk AS (SELECT ww.doc_id, ww.wpos,
-                  COALESCE(s6.syms,
-                    list_filter(string_split(ww.word, ''),
-                      x -> x <> '')) AS syms
-                FROM ww LEFT JOIN s6 ON ww.word = s6.word),
-        flat AS (SELECT doc_id, wpos, unnest(syms) AS sym,
-                   unnest(range(len(syms))) AS spos
-                 FROM wtk),
-        dstr AS (SELECT doc_id,
-                   COALESCE(string_agg(sym, ' ' ORDER BY wpos, spos), '')
-                     AS str
-                 FROM flat GROUP BY doc_id)
-        SELECT cpk.source, cpk.shard, cpk.cb // 128 AS bin, cpk.doc_id,
-          cpk.n AS n_tokens,
-          CAST(cpk.cb - MIN(cpk.cb) OVER (PARTITION BY cpk.source,
-            cpk.shard, cpk.cb // 128) AS BIGINT) AS tok_offset,
-          COALESCE(md5(dstr.str), md5('')) AS tok_md5
-        FROM cpk LEFT JOIN dstr USING (doc_id)
-        ORDER BY source, shard, bin, doc_id""")),
+        ${bpePackShards("docs")}""")),
 
     // SIGN-LSH PLANES RETRAIN (round 18,
     // SimilarityOps.knnPlanesRetrainRecall — VERDICT r17 #6): the

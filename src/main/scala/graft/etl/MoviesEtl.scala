@@ -225,13 +225,20 @@ object MoviesEtl {
 
   final case class Result(movies: DataFrame, moviesWithRatings: DataFrame)
 
+  /** The pipeline's spine: the wiki JSON read, filtered to movie
+    * records, cleaned, deduplicated by IMDb id and parsed into typed
+    * columns.
+    */
+  private def wikiMovies(spark: SparkSession, path: String): DataFrame =
+    parseWikiColumns(dedupByImdbId(cleanMovies(
+      filterMovieRecords(readWikiJson(spark, path)))))
+
   /** E1 — the whole pipeline, lazily. Call `.load`/`.write` on the
     * results to execute.
     */
   def extractTransformLoad(spark: SparkSession, wikiPath: String,
                            kagglePath: String, ratingsPath: String): Result = {
-    val wiki = parseWikiColumns(dedupByImdbId(cleanMovies(
-      filterMovieRecords(readWikiJson(spark, wikiPath)))))
+    val wiki = wikiMovies(spark, wikiPath)
     val kaggle = cleanKaggle(readCsv(spark, kagglePath))
     val movies = mergeMovies(wiki, kaggle)
     Result(movies, withRatings(movies, ratingCounts(readRatings(spark, ratingsPath))))
@@ -272,8 +279,7 @@ object MoviesEtl {
           failed += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
           None
       }
-    val wiki = parseWikiColumns(dedupByImdbId(cleanMovies(
-      filterMovieRecords(readWikiJson(spark, wikiPath)))))
+    val wiki = wikiMovies(spark, wikiPath)
     completed += "wiki_extract_transform"
     val movies = stage("kaggle_clean")(cleanKaggle(readCsv(spark, kagglePath)))
       .flatMap(k => stage("merge_movies")(mergeMovies(wiki, k)))

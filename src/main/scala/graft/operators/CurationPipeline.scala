@@ -185,6 +185,27 @@ object CurationPipeline {
       .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
         col("rows_in"), col("rows_out"), col("tokens_out"))
 
+  /** One accounting row: the stage's input frame, its surviving
+    * documents, and the (rows_out, tokens_out) aggregate it reports.
+    */
+  private final case class StageRow(idx: Long, name: String, prev: DataFrame,
+                                    survivors: DataFrame, agg: DataFrame)
+
+  /** The six accounting rows of [[curate]] and [[curateBpe]]. The pack
+    * row reports bins and bin_tokens; its survivors are d5's, since
+    * packing drops no document.
+    */
+  private def stageRows(st: Stages): Seq[StageRow] =
+    Seq((1L, "exact_dedup", st.input, st.afterExactDedup),
+      (2L, "neardup_canonical", st.afterExactDedup, st.afterNearDup),
+      (3L, "decontaminate", st.afterNearDup, st.afterDecontaminate),
+      (4L, "quality_filter", st.afterDecontaminate, st.afterQuality),
+      (5L, "dsir_select", st.afterQuality, st.afterDsir))
+      .map { case (i, n, prev, cur) => StageRow(i, n, prev, cur, acctAgg(cur)) } :+
+      StageRow(6L, "pack", st.afterDsir, st.afterDsir,
+        st.packedBins.agg(count(lit(1)).as("rows_out"),
+          coalesce(sum(col("bin_tokens")), lit(0L)).as("tokens_out")))
+
   /** The per-stage accounting rollup — one row per stage with
     * (rows_in, rows_out, tokens_out). rows_in of stage k = rows_out of
     * stage k−1; the pack row counts BINS out and reports bin_tokens
@@ -196,20 +217,9 @@ object CurationPipeline {
     */
   def curate(documents: DataFrame, benchmark: DataFrame,
              p: Params = Params()): DataFrame = {
-    val st = stages(documents, benchmark, p)
-    val rows = Seq(
-      acctRow(1L, "exact_dedup", st.input, acctAgg(st.afterExactDedup)),
-      acctRow(2L, "neardup_canonical", st.afterExactDedup,
-        acctAgg(st.afterNearDup)),
-      acctRow(3L, "decontaminate", st.afterNearDup,
-        acctAgg(st.afterDecontaminate)),
-      acctRow(4L, "quality_filter", st.afterDecontaminate,
-        acctAgg(st.afterQuality)),
-      acctRow(5L, "dsir_select", st.afterQuality, acctAgg(st.afterDsir)),
-      acctRow(6L, "pack", st.afterDsir,
-        st.packedBins.agg(count(lit(1)).as("rows_out"),
-          coalesce(sum(col("bin_tokens")), lit(0L)).as("tokens_out"))))
-    rows.reduce(_ unionByName _).orderBy("stage_idx")
+    stageRows(stages(documents, benchmark, p))
+      .map(r => acctRow(r.idx, r.name, r.prev, r.agg))
+      .reduce(_ unionByName _).orderBy("stage_idx")
   }
 
   /** TOKENIZER-token total of a survivor frame (VERDICT r13 #2): the
@@ -241,25 +251,9 @@ object CurationPipeline {
     */
   def curateBpe(documents: DataFrame, benchmark: DataFrame,
                 wordTokens: DataFrame, p: Params = Params()): DataFrame = {
-    val st = stages(documents, benchmark, p)
-    def row(idx: Long, name: String, prev: DataFrame, cur: DataFrame,
-            curAgg: DataFrame): DataFrame =
-      acctRow(idx, name, prev, curAgg)
-        .crossJoin(bpeAgg(cur, wordTokens))
-    val rows = Seq(
-      row(1L, "exact_dedup", st.input, st.afterExactDedup,
-        acctAgg(st.afterExactDedup)),
-      row(2L, "neardup_canonical", st.afterExactDedup, st.afterNearDup,
-        acctAgg(st.afterNearDup)),
-      row(3L, "decontaminate", st.afterNearDup, st.afterDecontaminate,
-        acctAgg(st.afterDecontaminate)),
-      row(4L, "quality_filter", st.afterDecontaminate, st.afterQuality,
-        acctAgg(st.afterQuality)),
-      row(5L, "dsir_select", st.afterQuality, st.afterDsir,
-        acctAgg(st.afterDsir)),
-      row(6L, "pack", st.afterDsir, st.afterDsir,
-        st.packedBins.agg(count(lit(1)).as("rows_out"),
-          coalesce(sum(col("bin_tokens")), lit(0L)).as("tokens_out"))))
-    rows.reduce(_ unionByName _).orderBy("stage_idx")
+    stageRows(stages(documents, benchmark, p))
+      .map(r => acctRow(r.idx, r.name, r.prev, r.agg)
+        .crossJoin(bpeAgg(r.survivors, wordTokens)))
+      .reduce(_ unionByName _).orderBy("stage_idx")
   }
 }

@@ -293,10 +293,6 @@ object DedupOps {
   val Md5SeedHash60: (Int, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
     (i, w) => md5Hash60(concat(lit(s"$i:"), w))
 
-  /** Backwards-compatible method form of [[Md5SeedHash60]]. */
-  def md5SeedHash60(i: Int, w: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    Md5SeedHash60(i, w)
-
   /** L2 — MinHash + LSH banding: split the signature into bands of
     * `rowsPerBand`, hash each band, group docs by (band_idx, band_hash).
     * Docs sharing any band bucket become candidate pairs — candidate
@@ -814,16 +810,6 @@ object DedupOps {
       .orderBy("a_id", "b_id")
   }
 
-  /** Lineage truncation for the iterative graph ops — the
-    * fault-tolerance contract and the local-vs-reliable switch live in
-    * [[graft.operators.Lineage]] (r10: session-conf-governed, so a
-    * cluster deployment flips EVERY truncation site with one conf).
-    * An explicit `checkpointDir` still takes precedence per call.
-    */
-  private def truncateLineage(df: DataFrame,
-                              checkpointDir: Option[String]): DataFrame =
-    Lineage.truncate(df, checkpointDir)
-
   /** LOCAL CONTRACTION for [[connectedComponents]]: collapse each
     * partition's edge list to its spanning forest with an in-partition
     * union-find (one narrow pass, no shuffle). The union of
@@ -934,7 +920,7 @@ object DedupOps {
     *
     * Lineage truncation is `localCheckpoint` by default; pass
     * `checkpointDir` for the RELIABLE `checkpoint()` that survives
-    * executor loss (see [[truncateLineage]] — the 100 TB production
+    * executor loss (see [[Lineage.truncate]] — the 100 TB production
     * setting).
     *
     * Returns (id, cluster_id) where cluster_id = min doc id of the
@@ -960,7 +946,7 @@ object DedupOps {
     // below) then process ~|V| forest edges, not the possibly-quadratic
     // verified pair list
     val forest = localSpanningForest(pairs)
-    val edges = truncateLineage(
+    val edges = Lineage.truncate(
       forest.select(explode(array(
           struct(col("a_id").as("src"), col("b_id").as("dst")),
           struct(col("b_id").as("src"), col("a_id").as("dst")),
@@ -1015,7 +1001,7 @@ object DedupOps {
     // session accumulates no dead blocks across invocations (round-3
     // finding: a long-lived session leaked one cached round + the edges
     // blocks per call).
-    try truncateLineage(
+    try Lineage.truncate(
       if (converged) labels.select(col("id"), col("label").as("cluster_id"))
       else starContraction(edges, labels, iter, maxIter, checkpointDir),
       checkpointDir)
@@ -1043,7 +1029,7 @@ object DedupOps {
   private def starContraction(edges: DataFrame, labels: DataFrame,
                               startIter: Int, maxIter: Int,
                               checkpointDir: Option[String]): DataFrame = {
-    var star = truncateLineage(
+    var star = Lineage.truncate(
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(labels.select(col("label").as("a"), col("id").as("b")))
         .select(least(col("a"), col("b")).as("u"),
@@ -1079,7 +1065,7 @@ object DedupOps {
     var iter = startIter
     var converged = false
     while (!converged && iter < maxIter) {
-      val next = truncateLineage(smallStar(largeStar(star)), checkpointDir)
+      val next = Lineage.truncate(smallStar(largeStar(star)), checkpointDir)
       converged = next.exceptAll(star).union(star.exceptAll(next)).isEmpty
       star = next
       iter += 1
@@ -1171,14 +1157,14 @@ object DedupOps {
 
   def pageRankFixedPoint(pairs: DataFrame, iterations: Int,
                          checkpointDir: Option[String] = None): DataFrame = {
-    val edges = truncateLineage( // truncate lineage once; the loop reuses edges
+    val edges = Lineage.truncate( // truncate lineage once; the loop reuses edges
       pairs.select(explode(array(
           struct(col("a_id").as("src"), col("b_id").as("dst")),
           struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .distinct(),
       checkpointDir)
-    val deg = truncateLineage(
+    val deg = Lineage.truncate(
       edges.groupBy("src").agg(count(lit(1)).as("outdeg")), checkpointDir)
     // outdeg rides IN the rank relation (optimization round 18, guide
     // §2.4): it is a static property of the graph, so re-joining the
@@ -1200,7 +1186,7 @@ object DedupOps {
           (lit(150000L) + expr("850000L * coalesce(sc, 0L) div 1000000L"))
             .as("rank_ppm"))
       if (i % PageRankCheckpointEvery == 0 && i < iterations)
-        ranks = truncateLineage(ranks, checkpointDir)
+        ranks = Lineage.truncate(ranks, checkpointDir)
     }
     ranks.select(col("id"), col("rank_ppm")).orderBy("id")
   }
@@ -1297,7 +1283,7 @@ object DedupOps {
     // pipeline — possibly a full inverted-index jaccard join — would
     // re-execute 2^rounds times in one action. Checkpoint blocks are
     // ContextCleaner-released when the result frame drops.
-    var edges = truncateLineage(
+    var edges = Lineage.truncate(
       pairs
         .select(least(col("a_id"), col("b_id")).as("a_id"),
           greatest(col("a_id"), col("b_id")).as("b_id"))
@@ -1313,7 +1299,7 @@ object DedupOps {
         .join(keep.select(col("id").as("a_id")), Seq("a_id"), "left_semi")
         .join(keep.select(col("id").as("b_id")), Seq("b_id"), "left_semi")
         .select("a_id", "b_id")
-      edges = if (r < rounds) truncateLineage(next, checkpointDir) else next
+      edges = if (r < rounds) Lineage.truncate(next, checkpointDir) else next
     }
     degrees(edges).select(col("id").as("doc_id"), col("deg"))
       .orderBy("doc_id")
@@ -1347,7 +1333,7 @@ object DedupOps {
     import spark.implicits._
     val fwd = pairs.select(col("a_id").cast("long").as("src"),
       col("b_id").cast("long").as("dst"))
-    val edges = truncateLineage(
+    val edges = Lineage.truncate(
       fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
         .distinct(),
       checkpointDir) // consumed once per round
@@ -1357,7 +1343,7 @@ object DedupOps {
     var d = 1
     var frontierNonEmpty = true
     while (d <= maxDepth && frontierNonEmpty) {
-      val next = truncateLineage(
+      val next = Lineage.truncate(
         frontier.join(edges, col("id") === col("src"))
           .select(col("dst").as("id")).distinct()
           .join(visited, Seq("id"), "left_anti"),

@@ -27,6 +27,45 @@ class QueriesContractSpec extends SparkSpec {
       s"README says $figures, SparkEntry declares ${SparkEntry.queries.size}")
   }
 
+  test("each shared oracle building block is written once in Queries.scala") {
+    // one distinctive line per builder (or shared oracle): a second
+    // occurrence means an oracle pasted the block instead of composing it
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/Queries.scala"))
+    val blocks = Seq(
+      "FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id",
+      "UNION SELECT $b, $a FROM $pairs)",
+      "reach(src, dst) AS (",
+      "unnest(range($dim)) AS pos FROM $src))",
+      "ORDER BY dt DESC, cell) AS rn",
+      "ROW_NUMBER() OVER (ORDER BY vec_id) AS rn",
+      "// COUNT(*) AS BIGINT) AS c",
+      "v.vi - cc.c AS vi",
+      "ORDER BY t.t1 + r.t2 DESC, t.n_id) AS rn",
+      "substr(md5(word), 1, 8))::BIGINT % 1024",
+      "substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000",
+      "CAST(COALESCE(t_c, 0) + 1 AS HUGEINT)",
+      "THEN 1 ELSE 0 END::BIGINT AS k_dsir",
+      "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)",
+      "'[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]'",
+      "FROM $docs d LEFT JOIN wtok USING (doc_id))",
+      "COALESCE(string_agg(sym, ' ' ORDER BY wpos, spos), '')",
+      "[i:i+2]",
+      "d5 AS MATERIALIZED (SELECT d.* FROM d4 d JOIN sel USING (doc_id))",
+      "(SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM",
+      "c.common * 1000000 // (sa.set_size + sb.set_size - c.common) AS jaccard_ppm",
+      "(LEAST(src, MIN(dst)) = src) AS is_keeper",
+      "common * 1000000 // n_src AS cont_ppm",
+      "SELECT q_id, n_id, CAST(score_s14 AS BIGINT) AS score_s14,",
+      "CAST(na.norm_s AS DOUBLE) * CAST(nb.norm_s AS DOUBLE) * 6400.0")
+    def occurrences(b: String) =
+      Iterator.iterate(src.indexOf(b))(i => src.indexOf(b, i + 1))
+        .takeWhile(_ >= 0).size
+    val counts = blocks.map(b => b -> occurrences(b))
+    assert(counts.forall(_._2 == 1),
+      counts.filter(_._2 != 1).map { case (b, n) => s"$n× $b" }.mkString("\n"))
+  }
+
   test("every oracle key is a declared query") {
     val undeclared = Queries.oracleSql.keySet -- Queries.queries.keySet
     assert(undeclared.isEmpty, s"oracle without query: $undeclared")

@@ -198,7 +198,7 @@ class Round7ExtOpsSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .filter(pmod(col("doc_id"), lit(10)) === 0)
     val est = DedupOps.minHashEstJaccard(docs, 12, 3,
-        seedHash = DedupOps.md5SeedHash60)
+        seedHash = (i, w) => DedupOps.Md5SeedHash60(i, w))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
     val exact = DedupOps.jaccardPairs(docs, 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(4)).toMap
