@@ -1082,18 +1082,23 @@ object Queries {
   // Whitespace is free — `normalize` collapses it — so a fragment
   // composes into any oracle's layout without changing its text.
 
-  /** `name(vec_id, vi, pos[, j])`: `src`'s embeddings exploded to one
-    * row per component on the engine's fixed-point ×10⁷ integer grid;
-    * `subDim` adds the PQ subspace id `j = pos // subDim`.
+  /** `name(vec_id[, label], vi, pos[, j])`: `src`'s embeddings exploded
+    * to one row per component on the engine's fixed-point ×10⁷ integer
+    * grid; `label` carries the BIGINT class label, `subDim` adds the PQ
+    * subspace id `j = pos // subDim`.
     */
   private def fixedPointExplode(name: String = "e",
                                 src: String = "embeddings", dim: Int = 64,
-                                subDim: Option[Int] = None): String =
-    s"""$name AS (SELECT vec_id,
+                                subDim: Option[Int] = None,
+                                label: Boolean = false): String = {
+    val (lab, labSrc) =
+      if (label) (" CAST(label AS BIGINT) AS label,", " label,") else ("", "")
+    s"""$name AS (SELECT vec_id,$lab
              CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
              pos${subDim.map(d => s", pos // $d AS j").getOrElse("")}
-           FROM (SELECT vec_id, unnest(embedding) AS v,
+           FROM (SELECT vec_id,$labSrc unnest(embedding) AS v,
                    unnest(range($dim)) AS pos FROM $src))"""
+  }
 
   /** Each vector's cells (with `perSubspace`, each vector-subspace's)
     * from `from(vec_id[, j], cell, dt)`, ranked by dot descending with
@@ -1252,19 +1257,24 @@ object Queries {
                 $regexTokens AS n
               FROM $src)"""
 
-  /** The BPE-priced pack over `docs`, after [[bpeOracleCtes]]: `wt`
-    * per-word token counts of the fitted s6 vocabulary, `wtok` per-doc
-    * totals (OOV words count their characters), `t` 100-doc shards and
-    * `cpk` the [[packCumCte]] offsets.
+  /** After [[bpeOracleCtes]]: `wt` per-word token counts of the fitted
+    * s6 vocabulary, `wtok(doc_id, n)` the per-doc totals over `docs`
+    * (OOV words count their characters).
     */
-  private def bpePackCtes(docs: String): String =
+  private def bpeDocTokCtes(docs: String): String =
     s"""wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
         wtok AS (SELECT doc_id,
                    CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS n
                  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
                        FROM $docs) w
                  LEFT JOIN wt ON w.word = wt.word
-                 GROUP BY doc_id),
+                 GROUP BY doc_id)"""
+
+  /** The BPE-priced pack over `docs`: [[bpeDocTokCtes]], `t` 100-doc
+    * shards and `cpk` the [[packCumCte]] offsets.
+    */
+  private def bpePackCtes(docs: String): String =
+    s"""${bpeDocTokCtes(docs)},
         t AS (SELECT d.source, d.doc_id // 100 AS shard, d.doc_id,
                 COALESCE(wtok.n, 0) AS n
               FROM $docs d LEFT JOIN wtok USING (doc_id)),
@@ -2732,8 +2742,8 @@ object Queries {
     // with the data — an all-pairs non-equi self-join over it would be
     // O(n²) at 100× (round-3 verdict). The inverted index stays linear
     // in index size (AQE handles this corpus's 31-key word skew); the
-    // dense kernel (jaccardPairsDense) remains the verify stage behind
-    // BOUNDED candidate sets only (LSH buckets / fixed-size samples).
+    // merge-walk kernel (DedupOps.verifyJaccard) verifies only BOUNDED
+    // candidate sets (LSH buckets, index probes).
     Declared("q_neardup_jaccard",
       (s, d) => DedupOps.jaccardPairs(
         documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0), 80),
@@ -5191,11 +5201,7 @@ object Queries {
     // hash-match even where dimension sums go negative.
     Declared("q_label_centroids",
       (s, d) => SimilarityOps.labelCentroids(embeddings(s, d)),
-      Some("""WITH e AS (SELECT CAST(label AS BIGINT) AS label,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-                pos
-              FROM (SELECT label, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings))
+      Some(s"""WITH ${fixedPointExplode(label = true)}
         SELECT label, pos,
           CAST(SUM(vi) AS BIGINT) // COUNT(*) AS c
         FROM e GROUP BY label, pos
@@ -5208,11 +5214,7 @@ object Queries {
     // broadcast; the corpus never shuffles its vectors.
     Declared("q_centroid_assign",
       (s, d) => SimilarityOps.centroidAssign(embeddings(s, d)),
-      Some("""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-                pos
-              FROM (SELECT vec_id, label, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode(label = true)},
         cent AS (SELECT label AS clabel, pos,
                 CAST(SUM(vi) AS BIGINT) // COUNT(*) AS c
               FROM e GROUP BY label, pos),
@@ -5236,11 +5238,7 @@ object Queries {
     // order (po/pe truncated first, kappa from the truncated values).
     Declared("q_label_kappa",
       (s, d) => SimilarityOps.labelAgreementKappa(embeddings(s, d)),
-      Some("""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi,
-                pos
-              FROM (SELECT vec_id, label, unnest(embedding) AS v,
-                      unnest(range(64)) AS pos FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode(label = true)},
         cent AS (SELECT label AS clabel, pos,
                 CAST(SUM(vi) AS BIGINT) // COUNT(*) AS c
               FROM e GROUP BY label, pos),
@@ -6021,9 +6019,7 @@ object Queries {
     // explode); the oracle replays it relationally via unnest.
     Declared("q_vec_quantize",
       (s, d) => SimilarityOps.quantizeInt8Error(embeddings(s, d)),
-      Some("""WITH e AS (SELECT vec_id,
-                CAST(round(CAST(v AS DOUBLE) * 10000000) AS BIGINT) AS vi
-              FROM (SELECT vec_id, unnest(embedding) AS v FROM embeddings)),
+      Some(s"""WITH ${fixedPointExplode()},
         s AS (SELECT vec_id, MAX(abs(vi)) AS scale_s,
                 CAST(SUM(abs(vi)) AS BIGINT) AS abs_sum_s
               FROM e GROUP BY vec_id),
@@ -7042,38 +7038,19 @@ object Queries {
           numHashes = 32, rowsPerBand = 2, minJaccardPct = 80)
       },
       Some(s"""WITH ${bpeOracleCtes(rounds = 6, topWords = 31)},
-        wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM s6),
         docs AS (SELECT * FROM documents
           UNION ALL
           SELECT doc_id + 20000000, text, lang, source, n_chars
           FROM documents WHERE doc_id % 50 = 0),
-        wtok AS (SELECT doc_id,
-                   CAST(SUM(COALESCE(wt.n_bpe, len(w.word))) AS BIGINT) AS nb
-                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                       FROM docs) w
-                 LEFT JOIN wt ON w.word = wt.word
-                 GROUP BY doc_id),
-        wmh AS (SELECT DISTINCT doc_id,
-                  unnest(string_split(text, ' ')) AS word FROM docs),
-        sz AS (SELECT doc_id, COUNT(*)::BIGINT AS set_size
-               FROM wmh GROUP BY doc_id),
-        cmn AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                  COUNT(*)::BIGINT AS common
-                FROM wmh a JOIN wmh b
-                  ON a.word = b.word AND a.doc_id < b.doc_id
-                GROUP BY a.doc_id, b.doc_id),
-        p AS (SELECT cmn.a_id, cmn.b_id
-              FROM cmn JOIN sz sa ON cmn.a_id = sa.doc_id
-                       JOIN sz sb ON cmn.b_id = sb.doc_id
-              WHERE cmn.common * 100 >=
-                    (sa.set_size + sb.set_size - cmn.common) * 80),
+        ${bpeDocTokCtes("docs")},
+        ${jaccardPairCtes("docs", 80)},
         nd AS (SELECT a_id AS doc_id FROM p
                UNION SELECT b_id FROM p),
         b AS (SELECT d.source, d.lang, d.n_chars,
                 CAST(len(string_split(d.text, ' ')) AS BIGINT) AS nw,
                 CAST(len(list_filter(string_split(d.text, ' '),
                   x -> x = 'a' OR x = 'the' OR x = 'of' OR x = 'and' OR x = 'in')) AS BIGINT) AS sc,
-                COALESCE(wtok.nb, 0) AS nb,
+                COALESCE(wtok.n, 0) AS nb,
                 CASE WHEN COUNT(*) OVER (PARTITION BY md5(d.text)) > 1
                   THEN 1 ELSE 0 END AS is_dup,
                 CASE WHEN d.doc_id IN (SELECT doc_id FROM nd)
@@ -7783,7 +7760,7 @@ object Queries {
     // per-vec_id window. All bits and scores exact int64.
     Declared("q_knn_join",
       (s, d) => SimilarityOps.knnGraphExact(embeddings(s, d),
-        probeIds = lshProbeIds, k = 3),
+        probeIds = lshProbeIds, k = 3).orderBy("q_id", "rn"),
       Some(s"""WITH ${knnGraphCtes(3)}
         SELECT q_id, rn, n_id, score_s14 FROM g ORDER BY q_id, rn""")),
 
@@ -8364,7 +8341,7 @@ object Queries {
           outDir = new java.io.File(
             s"target/knn_graph_${math.abs(d.hashCode.toLong)}")
             .getAbsolutePath,
-          probeIds = lshProbeIds, k = 3)
+          probeIds = lshProbeIds, k = 3).orderBy("q_id", "rn")
       },
       Some(s"""WITH ${knnGraphCtes(3, knnUpsertCorpusSql, "embeddings")}
         SELECT q_id, rn, n_id, score_s14 FROM g ORDER BY q_id, rn""")),

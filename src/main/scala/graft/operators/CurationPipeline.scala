@@ -234,8 +234,7 @@ object CurationPipeline {
   private def bpeAgg(df: DataFrame, wordTokens: DataFrame): DataFrame =
     df.select(explode(split(col("text"), " ")).as("word"))
       .join(broadcast(wordTokens), Seq("word"), "left")
-      .agg(coalesce(sum(coalesce(col("n_bpe"),
-        length(col("word")).cast("long"))), lit(0L)).as("bpe_tokens_out"))
+      .agg(coalesce(TextOps.bpeTokenSum, lit(0L)).as("bpe_tokens_out"))
 
   /** [[curate]] with TOKENIZER-token accounting alongside the
     * whitespace counts: per stage, (rows_in, rows_out, tokens_out,

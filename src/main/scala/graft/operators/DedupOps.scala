@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import graft.operators.Lineage.LineageOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions._
   * shuffle key is the token, candidate generation is linear in index
   * size, and skewed tokens can be handled by AQE skew-join. Nothing here
   * is O(n²) in the corpus except the *verified candidate set*.
+  *
+  * Shared builders (word overlap, exact Jaccard gate, MinHash banding)
+  * sit after [[docWords]]; StreamingOps verifies through them too.
   */
 object DedupOps {
 
@@ -69,6 +72,88 @@ object DedupOps {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .distinct()
 
+  /** The word self-join of an inverted index (doc_id, word, …): one
+    * (a_id, b_id) row per a < b pair sharing a word, with `agg` over the
+    * shared words.
+    */
+  private def sharedWordPairs(index: DataFrame, agg: Column): DataFrame =
+    index.as("a")
+      .join(index.as("b"),
+        col("a.word") === col("b.word") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+      .agg(agg)
+
+  /** Per-pair shared-word counts (a_id, b_id, common). */
+  private def overlapCounts(index: DataFrame): DataFrame =
+    sharedWordPairs(index, count(lit(1)).as("common"))
+
+  private def setSizes(index: DataFrame): DataFrame =
+    index.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
+
+  /** Exact Jaccard over an inverted index: [[overlapCounts]], then
+    * |A∪B| = |A|+|B|−common from the per-doc set sizes, then
+    * [[jaccardGate]]. The sizes are O(corpus) — no broadcast hint; AQE
+    * promotes to broadcast when the aggregated side is small at runtime.
+    */
+  private def overlapJaccard(index: DataFrame, minJaccardPct: Int): DataFrame = {
+    val sizes = setSizes(index)
+    jaccardGate(overlapCounts(index)
+      .join(sizes.as("sa"), col("a_id") === col("sa.doc_id"))
+      .join(sizes.as("sb"), col("b_id") === col("sb.doc_id"))
+      .withColumn("union_size", col("sa.set_size") + col("sb.set_size") - col("common")),
+      minJaccardPct)
+  }
+
+  /** The exact integer Jaccard gate over a frame carrying `common` and
+    * `union_size`: keep `common · 100 ≥ union_size · minJaccardPct`.
+    */
+  private def jaccardGate(pairs: DataFrame, minJaccardPct: Int): DataFrame =
+    pairs.filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+
+  /** Jaccard in ppm, `common · 10⁶ div union_size`. */
+  private def jaccardPpm: Column =
+    expr("common * 1000000L div union_size").as("jaccard_ppm")
+
+  /** Merge-walk verify of two sorted-hashed word-set columns: `common`
+    * is one allocation-free walk ([[graft.plans.SortedIntersectCount]])
+    * over fixed-width longs, `union_size` follows from the set sizes,
+    * and [[jaccardGate]] keeps the survivors. |A∩B| over hashes equals
+    * |A∩B| over words unless two distinct words in one pair's union
+    * collide in 64 bits (≤ |A∪B|²/2⁶⁴ ≈ 1e-14 per pair).
+    */
+  private[graft] def verifyJaccard(pairs: DataFrame, a: String, b: String,
+                                   minJaccardPct: Int): DataFrame =
+    jaccardGate(pairs
+      .withColumn("common",
+        graft.plans.VecDot.sortedIntersectCount(col(a), col(b)))
+      .withColumn("union_size",
+        size(col(a)).cast("long") + size(col(b)).cast("long") - col("common")),
+      minJaccardPct)
+
+  /** [[verifyJaccard]] of candidate (a_id, b_id) pairs against their
+    * [[corpusHashedSets]] rows: `aSets` for a_id, `bSets` for b_id.
+    */
+  private def verifyPairs(cands: DataFrame, aSets: DataFrame, bSets: DataFrame,
+                          minJaccardPct: Int): DataFrame =
+    verifyJaccard(cands
+      .join(aSets.select(col("corpus_id").as("a_id"), col("cws").as("aws")),
+        "a_id")
+      .join(bSets.select(col("corpus_id").as("b_id"), col("cws").as("bws")),
+        "b_id"),
+      "aws", "bws", minJaccardPct)
+
+  /** Distinct (a_id, b_id) doc pairs sharing a (band_idx, band_hash)
+    * bucket of a [[bandFrame]]: the LSH band self-join.
+    */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bands.as("a")
+      .join(bands.as("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+          col("a.band_hash") === col("b.band_hash") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+      .distinct()
+
   /** L2 — exact pairwise word-set Jaccard via inverted-index join:
     * explode distinct words, self-join on word (candidate pairs share ≥1
     * word), count common words per pair, derive |A∪B| = |A|+|B|-common,
@@ -84,22 +169,9 @@ object DedupOps {
     // the result frame is dropped. At petabyte scale set
     // spark.graft.checkpointDir and this becomes a reliable checkpoint
     // to storage (see Lineage).
-    val words = docWords(documents).lineageTruncate()
-    val sizes = words.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
-    val common = words.as("a")
-      .join(words.as("b"),
-        col("a.word") === col("b.word") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("common"))
-    // sizes is O(corpus) — no broadcast hint; AQE promotes to broadcast
-    // when the aggregated side is actually small at runtime
-    common
-      .join(sizes.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("b_id") === col("sb.doc_id"))
-      .withColumn("union_size", col("sa.set_size") + col("sb.set_size") - col("common"))
-      .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+    overlapJaccard(docWords(documents).lineageTruncate(), minJaccardPct)
       .select(col("a_id"), col("b_id"), col("common"), col("union_size"),
-        expr("common * 1000000L div union_size").as("jaccard_ppm"))
+        jaccardPpm)
       .orderBy("a_id", "b_id")
   }
 
@@ -120,12 +192,8 @@ object DedupOps {
     */
   def containmentPairs(documents: DataFrame, minContPct: Int): DataFrame = {
     val words = docWords(documents).lineageTruncate()
-    val sizes = words.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
-    val common = words.as("a")
-      .join(words.as("b"),
-        col("a.word") === col("b.word") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("common"))
+    val sizes = setSizes(words)
+    val common = overlapCounts(words)
       .join(sizes.select(col("doc_id").as("a_id"), col("set_size").as("n_a")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("set_size").as("n_b")), "b_id")
       .lineageTruncate() // feeds both direction scans below, computed once
@@ -147,10 +215,9 @@ object DedupOps {
     * L = n − o + 1 src tokens the overlap is ≤ n − L = o − 1 < o. Choose
     * those L tokens GLOBALLY RAREST-FIRST (order by document frequency,
     * then word) and the join keys are, by construction, the least-skewed
-    * tokens each document owns — the hot-token df² blowup the full
-    * self-join suffers (see [[jaccardPairsDense]]'s scaladoc) never
-    * materializes, because a token enters the probe side only while it is
-    * among a document's ~(1−t)·n rarest.
+    * tokens each document owns — the hot-token df² blowup of the full
+    * self-join never materializes, because a token enters the probe side
+    * only while it is among a document's ~(1−t)·n rarest.
     *
     * Verification is the same codegen'd sorted merge-walk as
     * [[lshVerifiedJaccardPairs]] (per-candidate, zero shuffle beyond the
@@ -195,43 +262,6 @@ object DedupOps {
       .select(col("src_id"), col("dst_id"), col("common"), col("n_src"),
         col("n_dst"), expr("common * 1000000L div n_src").as("cont_ppm"))
       .orderBy("src_id", "dst_id")
-  }
-
-  /** L2 — exact pairwise Jaccard for BOUNDED candidate sets: broadcast
-    * non-equi self-join + a codegen'd sorted merge walk per pair
-    * ([[graft.plans.SortedIntersectCount]]). Complements
-    * [[jaccardPairs]]: the inverted index wins when candidates are
-    * sparse relative to n²; with a tiny shared vocabulary (or LSH-
-    * prefiltered candidates) the token join degenerates to vocab-many
-    * skewed shuffle keys, and the dense N²/2 array-intersect — no
-    * shuffle at all, broadcast side bounded — is the better plan.
-    * Same integer-exact output contract as [[jaccardPairs]]. No
-    * broadcast hint: the caller bounds the candidate set (sample / LSH
-    * bucket) and Spark picks BNLJ vs cartesian from actual sizes.
-    */
-  def jaccardPairsDense(documents: DataFrame, minJaccardPct: Int): DataFrame = {
-    // intersect HASHED words: xxhash64 per distinct word once map-side,
-    // sorted once per DOC, then the per-pair intersection count is one
-    // allocation-free merge walk (plans.SortedIntersectCount) over
-    // fixed-width longs — `size(array_intersect(...))` would build a
-    // hash set per PAIR. |A∩B| over hashes equals |A∩B| over words
-    // unless two distinct words in one pair's union collide in 64 bits
-    // (≤ |A∪B|²/2⁶⁴ ≈ 1e-14 per pair — corpus-pinned negligible, like
-    // the LSH margin).
-    val sets = documents.select(col("doc_id"),
-      graft.plans.SortedHashedSet.sortedHashedSet(
-        split(col("text"), " ")).as("ws"))
-    val a = sets.select(col("doc_id").as("a_id"), col("ws").as("aws"))
-    val b = sets.select(col("doc_id").as("b_id"), col("ws").as("bws"))
-    a.join(b, col("a_id") < col("b_id"))
-      .withColumn("common",
-        graft.plans.VecDot.sortedIntersectCount(col("aws"), col("bws")))
-      .withColumn("union_size",
-        size(col("aws")).cast("long") + size(col("bws")).cast("long") - col("common"))
-      .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
-      .select(col("a_id"), col("b_id"), col("common"), col("union_size"),
-        expr("common * 1000000L div union_size").as("jaccard_ppm"))
-      .orderBy("a_id", "b_id")
   }
 
   /** L2 — MinHash signatures: k independent hash permutations approximated
@@ -326,13 +356,7 @@ object DedupOps {
       .repartition(
         documents.sparkSession.sessionState.conf.numShufflePartitions,
         col("band_idx"), col("band_hash"))
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    bandPairs(bands)
   }
 
   /** The exploded (doc_id, band_idx, band_hash) LSH relation every
@@ -342,8 +366,13 @@ object DedupOps {
     */
   private[graft] def bandFrame(documents: DataFrame, numHashes: Int, rowsPerBand: Int,
                                seedHash: (Int, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
-                               carry: Seq[String] = Nil): DataFrame = {
-    val sigs = minHashSignatures(documents, numHashes, seedHash, carry)
+                               carry: Seq[String] = Nil): DataFrame =
+    bandsOf(minHashSignatures(documents, numHashes, seedHash, carry),
+      numHashes, rowsPerBand, carry)
+
+  /** [[bandFrame]] over an already computed signature frame. */
+  private def bandsOf(sigs: DataFrame, numHashes: Int, rowsPerBand: Int,
+                      carry: Seq[String] = Nil): DataFrame = {
     val numBands = numHashes / rowsPerBand
     val bandHashes = array((0 until numBands).map { b =>
       val bandCols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh_$i"))
@@ -500,11 +529,7 @@ object DedupOps {
       .join(corpusBandDocs, Seq("band_idx", "band_hash"))
       .dropDuplicates("doc_id", "corpus_id")
       .join(corpusSets, Seq("corpus_id"))
-      .withColumn("common",
-        graft.plans.VecDot.sortedIntersectCount(col("ws"), col("cws")))
-      .withColumn("union_size",
-        size(col("ws")).cast("long") + size(col("cws")).cast("long") - col("common"))
-      .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+      .transform(verifyJaccard(_, "ws", "cws", minJaccardPct))
       .select("doc_id", "corpus_id")
   }
 
@@ -530,32 +555,14 @@ object DedupOps {
       bandFrame(batch, numHashes, rowsPerBand, seedHash), None)
     val bsets = Lineage.truncate(corpusHashedSets(batch), None)
     def verify(cands: DataFrame, bSide: DataFrame, flag: Int): DataFrame =
-      cands
-        .join(bsets.select(col("corpus_id").as("a_id"), col("cws").as("aws")),
-          "a_id")
-        .join(bSide.select(col("corpus_id").as("b_id"), col("cws").as("bws")),
-          "b_id")
-        .withColumn("common",
-          graft.plans.VecDot.sortedIntersectCount(col("aws"), col("bws")))
-        .withColumn("union_size",
-          size(col("aws")).cast("long") + size(col("bws")).cast("long")
-            - col("common"))
-        .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+      verifyPairs(cands, bsets, bSide, minJaccardPct)
         .select(col("a_id"), col("b_id"), lit(flag.toLong).as("vs_corpus"))
     val vsIndex = verify(
       bb.join(corpusBands, Seq("band_idx", "band_hash"))
         .select(col("doc_id").as("a_id"), col("corpus_id").as("b_id"))
         .distinct(),
       corpusSets, 1)
-    val internal = verify(
-      bb.as("a")
-        .join(bb.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_hash") === col("b.band_hash") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .distinct(),
-      bsets, 0)
+    val internal = verify(bandPairs(bb), bsets, 0)
     vsIndex.unionByName(internal)
   }
 
@@ -580,20 +587,7 @@ object DedupOps {
                           XxSeedHash): DataFrame = {
     val sigs = minHashSignatures(documents, numHashes, seedHash)
       .lineageTruncate() // feeds the band frame + both pair sides
-    val numBands = numHashes / rowsPerBand
-    val bandHashes = array((0 until numBands).map { b =>
-      val bandCols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh_$i"))
-      xxhash64(bandCols: _*)
-    }: _*)
-    val bands = sigs.select(col("doc_id"),
-      posexplode(bandHashes).as(Seq("band_idx", "band_hash")))
-    val pairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    val pairs = bandPairs(bandsOf(sigs, numHashes, rowsPerBand))
     val nEq = (0 until numHashes)
       .map(i => when(col(s"sa.mh_$i") === col(s"sb.mh_$i"), 1L).otherwise(0L))
       .reduce(_ + _)
@@ -658,22 +652,11 @@ object DedupOps {
     */
   def lshVerifiedJaccardPairsUnsorted(documents: DataFrame, numHashes: Int,
                                       rowsPerBand: Int, minJaccardPct: Int): DataFrame = {
-    val cands = minHashCandidatesUnsorted(documents, numHashes, rowsPerBand)
-    // sorted-hashed-word merge-count, same rationale/bound as
-    // [[jaccardPairsDense]]
-    val sets = documents.select(col("doc_id"),
-      graft.plans.SortedHashedSet.sortedHashedSet(
-        split(col("text"), " ")).as("ws"))
-    cands
-      .join(sets.select(col("doc_id").as("a_id"), col("ws").as("aws")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("ws").as("bws")), "b_id")
-      .withColumn("common",
-        graft.plans.VecDot.sortedIntersectCount(col("aws"), col("bws")))
-      .withColumn("union_size",
-        size(col("aws")).cast("long") + size(col("bws")).cast("long") - col("common"))
-      .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+    val sets = corpusHashedSets(documents)
+    verifyPairs(minHashCandidatesUnsorted(documents, numHashes, rowsPerBand),
+      sets, sets, minJaccardPct)
       .select(col("a_id"), col("b_id"), col("common"), col("union_size"),
-        expr("common * 1000000L div union_size").as("jaccard_ppm"))
+        jaccardPpm)
   }
 
   /** Near-dup THRESHOLD SENSITIVITY curve (round 13): how the verified
@@ -795,17 +778,7 @@ object DedupOps {
         explode(array_distinct(when(size(col("__ws")) >= n,
           TextOps.wordNgrams(col("__ws"), n)))).as("word"))
       .lineageTruncate()
-    val sizes = shingled.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
-    val common = shingled.as("a")
-      .join(shingled.as("b"),
-        col("a.word") === col("b.word") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("b_id") === col("sb.doc_id"))
-      .withColumn("union_size", col("sa.set_size") + col("sb.set_size") - col("common"))
-      .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+    overlapJaccard(shingled, minJaccardPct)
       .select(col("a_id"), col("b_id"), col("common"), col("union_size"))
       .orderBy("a_id", "b_id")
   }
@@ -1391,15 +1364,13 @@ object DedupOps {
     val common = cw.join(broadcast(bw), Seq("word"))
       .groupBy("doc_id", "bench_id")
       .agg(count(lit(1)).as("common"))
-    common
+    jaccardGate(common
       .join(cSizes, Seq("doc_id"))
       .join(broadcast(bSizes), Seq("bench_id"))
       .withColumn("union_size",
-        col("c_size") + col("b_size") - col("common"))
-      .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+        col("c_size") + col("b_size") - col("common")), minJaccardPct)
       .select(col("doc_id"), col("bench_id"), col("common"),
-        col("union_size"),
-        expr("common * 1000000L div union_size").as("jaccard_ppm"))
+        col("union_size"), jaccardPpm)
       .orderBy("doc_id", "bench_id")
   }
 
@@ -1432,6 +1403,40 @@ object DedupOps {
             "coalesce(n_triangles, 0L) * 2000000L div (deg * (deg - 1))"))
           .as("coeff_ppm"))
       .orderBy("doc_id")
+  }
+
+  /** Σw² accumulated in Decimal(38,0) and checked against 2⁶³ before the
+    * cast back to BIGINT — the enforcement half of the overflow contract
+    * on [[tfidfCosinePairs]]/[[tfidfCosinePairsPrefix]]: a violating
+    * corpus raises at the norms aggregate (the first place overflow is
+    * provable) instead of silently wrapping downstream dot products.
+    */
+  private def guardedNormS(w: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column = {
+    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    val s = sum(w.cast(d38) * w.cast(d38))
+    when(s.isNull || s > lit(Long.MaxValue).cast(d38),
+      raise_error(lit("tfidf cosine: per-doc sum(w*w) >= 2^63 breaks the " +
+        "int64 dot/norm contract — pre-chunk oversized documents " +
+        "(see tfidfCosinePairs scaladoc)")))
+      .otherwise(s.cast("long"))
+  }
+
+  /** The integer tf·idf weights (doc_id, word, `carry`…, w) with
+    * w = tf · (10⁶ div df) — the block [[tfidfCosinePairs]] and
+    * [[tfidfCosinePairsPrefix]] share. The vocabulary broadcast is a
+    * PARAMETER (the tfIdfTopTerms r10 discipline): pass false when the
+    * vocabulary outgrows executors.
+    */
+  private def tfidfWeights(documents: DataFrame, broadcastVocab: Boolean,
+                           carry: Column*): DataFrame = {
+    val tf = documents
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    val dfq = tf.groupBy("word").agg(count(lit(1)).as("df"))
+    tf.join(if (broadcastVocab) broadcast(dfq) else dfq, Seq("word"))
+      .select(Seq(col("doc_id"), col("word")) ++ carry :+
+        (col("tf") * expr("1000000L div df")).as("w"): _*)
   }
 
   /** L2/L4 — sparse TF-IDF cosine near-dup pairs: the weighted cousin of
@@ -1474,49 +1479,17 @@ object DedupOps {
     * vocabularies use [[tfidfCosinePairsPrefix]], the AllPairs
     * prefix-filtered sibling with the same output and exact recall.
     */
-  /** Σw² accumulated in Decimal(38,0) and checked against 2⁶³ before the
-    * cast back to BIGINT — the enforcement half of the overflow contract
-    * on [[tfidfCosinePairs]]/[[tfidfCosinePairsPrefix]]: a violating
-    * corpus raises at the norms aggregate (the first place overflow is
-    * provable) instead of silently wrapping downstream dot products.
-    */
-  private def guardedNormS(w: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val s = sum(w.cast(d38) * w.cast(d38))
-    when(s.isNull || s > lit(Long.MaxValue).cast(d38),
-      raise_error(lit("tfidf cosine: per-doc sum(w*w) >= 2^63 breaks the " +
-        "int64 dot/norm contract — pre-chunk oversized documents " +
-        "(see tfidfCosinePairs scaladoc)")))
-      .otherwise(s.cast("long"))
-  }
-
   def tfidfCosinePairs(documents: DataFrame, minCosPct: Int,
                        broadcastVocab: Boolean = true): DataFrame = {
-    val tf = documents
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-    val dfq = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    // vocabulary broadcast is a PARAMETER (the tfIdfTopTerms r10
-    // discipline): pass false when the vocabulary outgrows executors
-    val wt = tf.join(if (broadcastVocab) broadcast(dfq) else dfq, Seq("word"))
-      .select(col("doc_id"), col("word"),
-        (col("tf") * expr("1000000L div df")).as("w"))
-      .lineageTruncate()
+    val wt = tfidfWeights(documents, broadcastVocab).lineageTruncate()
     val norms = wt.groupBy("doc_id")
       .agg(guardedNormS(col("w")).as("norm_s"))
-    val dots = wt.as("a")
-      .join(wt.as("b"),
-        col("a.word") === col("b.word") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(sum(col("a.w") * col("b.w")).as("dot_s"))
-    val tauSq = (minCosPct.toLong * minCosPct).toDouble
+    val dots = sharedWordPairs(wt, sum(col("a.w") * col("b.w")).as("dot_s"))
     dots
       .join(norms.select(col("doc_id").as("a_id"), col("norm_s").as("a_norm_s")), "a_id")
       .join(norms.select(col("doc_id").as("b_id"), col("norm_s").as("b_norm_s")), "b_id")
-      .filter(col("dot_s") > 0 &&
-        col("dot_s").cast("double") * col("dot_s").cast("double") * lit(10000.0) >=
-          col("a_norm_s").cast("double") * col("b_norm_s").cast("double") * lit(tauSq))
+      .filter(SimilarityOps.cosGate(col("dot_s"), col("a_norm_s"),
+        col("b_norm_s"), minCosPct))
       .select(col("a_id"), col("b_id"), col("dot_s"), col("a_norm_s"), col("b_norm_s"))
       .orderBy("a_id", "b_id")
   }
@@ -1546,13 +1519,7 @@ object DedupOps {
       s"minCosPct must be in [1,100], got $minCosPct")
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val tauSqL = minCosPct.toLong * minCosPct
-    val tf = documents
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-    val dfq = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    val wt = tf.join(if (broadcastVocab) broadcast(dfq) else dfq, Seq("word"))
-      .select(col("doc_id"), col("word"), col("df"),
-        (col("tf") * expr("1000000L div df")).as("w"))
+    val wt = tfidfWeights(documents, broadcastVocab, col("df"))
       .lineageTruncate()  // feeds perDoc, the probe index, and nothing else twice
     val perDoc = wt.groupBy("doc_id").agg(
       sort_array(collect_list(struct(col("df"), col("word"), col("w"))))
@@ -1581,7 +1548,6 @@ object DedupOps {
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
     val sides = perDoc.select(col("doc_id"), col("kw"), col("norm_s"))
-    val tauSqD = tauSqL.toDouble
     cands
       .join(sides.select(col("doc_id").as("a_id"), col("kw").as("akw"),
         col("norm_s").as("a_norm_s")), "a_id")
@@ -1589,9 +1555,8 @@ object DedupOps {
         col("norm_s").as("b_norm_s")), "b_id")
       .withColumn("dot_s",
         graft.plans.VecDot.sortedKeyWeightDot(col("akw"), col("bkw")))
-      .filter(col("dot_s") > 0 &&
-        col("dot_s").cast("double") * col("dot_s").cast("double") * lit(10000.0) >=
-          col("a_norm_s").cast("double") * col("b_norm_s").cast("double") * lit(tauSqD))
+      .filter(SimilarityOps.cosGate(col("dot_s"), col("a_norm_s"),
+        col("b_norm_s"), minCosPct))
       .select(col("a_id"), col("b_id"), col("dot_s"), col("a_norm_s"),
         col("b_norm_s"))
       .orderBy("a_id", "b_id")

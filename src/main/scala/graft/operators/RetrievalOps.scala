@@ -27,6 +27,9 @@ import org.apache.spark.sql.types.LongType
   * than log-idf BM25. A `min(·, 10⁹ ppm)` saturation bounds the
   * rare-term boost so idf·tf products stay far inside int64 at any
   * corpus size (Lucene similarly bounds idf in float32).
+  *
+  * Shared builders: [[tfDl]] and [[Ranks]] open the object; every
+  * per-query cut goes through [[SimilarityOps.topKPerQuery]].
   */
 object RetrievalOps {
 
@@ -434,6 +437,9 @@ object RetrievalOps {
     bm25TopKFromIndex(base.sparkSession, outDir, queries, k)
   }
 
+  /** The (q_id, doc_id, rank) relation every ranker feeds [[rrfFuse]]. */
+  private val Ranks = Seq("q_id", "doc_id", "rank")
+
   /** Per-probe tf·idf-dot ranking: neighbors of each probe document by
     * the integer dot product of `tf·(10⁶ div df)` weight vectors (the
     * [[DedupOps.tfidfCosinePairs]] weight grid), self excluded, top
@@ -453,10 +459,8 @@ object RetrievalOps {
       .filter(col("doc_id") =!= col("q_id"))
       .groupBy("q_id", "doc_id")
       .agg(sum(col("w") * col("qw")).cast(LongType).as("dot_s"))
-    val w = Window.partitionBy("q_id").orderBy(desc("dot_s"), asc("doc_id"))
-    dots.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select("q_id", "doc_id", "rank")
+    SimilarityOps.topKPerQuery(dots, "dot_s", k, Ranks, tie = "doc_id",
+      rank = "rank")
   }
 
   /** Per-probe 3-gram Jaccard ranking: neighbors by
@@ -488,10 +492,8 @@ object RetrievalOps {
       .join(sizes, Seq("doc_id"))
       .withColumn("jac_ppm",
         expr("common * 1000000L div (q_sz + sz - common)"))
-    val w = Window.partitionBy("q_id").orderBy(desc("jac_ppm"), asc("doc_id"))
-    jac.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select("q_id", "doc_id", "rank")
+    SimilarityOps.topKPerQuery(jac, "jac_ppm", k, Ranks, tie = "doc_id",
+      rank = "rank")
   }
 
   /** RECIPROCAL-RANK FUSION (Cormack et al.): fuse ranker outputs
@@ -513,10 +515,8 @@ object RetrievalOps {
       .groupBy("q_id", "doc_id")
       .agg(sum(col("contrib")).cast(LongType).as("rrf_ppm"),
         count(lit(1)).cast(LongType).as("n_rankers"))
-    val w = Window.partitionBy("q_id").orderBy(desc("rrf_ppm"), asc("doc_id"))
-    fused.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= topK)
-      .select("q_id", "rn", "doc_id", "rrf_ppm", "n_rankers")
+    SimilarityOps.topKPerQuery(fused, "rrf_ppm", topK,
+      Seq("q_id", "rn", "doc_id", "rrf_ppm", "n_rankers"), tie = "doc_id")
       .orderBy("q_id", "rn")
   }
 

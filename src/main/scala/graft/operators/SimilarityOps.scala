@@ -23,6 +23,9 @@ import org.apache.spark.sql.types._
   *    exact and commutative).
   *  - [[lshBucketTopK]] — the approximate scale path: random-hyperplane
   *    (sign-LSH) bucketing; candidates only within the query's bucket.
+  *
+  * Shared builders (probe split, fixed-point vectors, per-query top-k)
+  * sit right after [[fixedPoint]]; RetrievalOps ranks through them too.
   */
 object SimilarityOps {
 
@@ -39,14 +42,53 @@ object SimilarityOps {
   def fixedPoint(c: Column): Column =
     round(c.cast(DoubleType) * FixedPointScale).cast(LongType)
 
+  /** The probe split: the rows of `df` whose `vec_id` is in `queryIds`. */
+  private def probeRows(df: DataFrame, queryIds: Seq[Long]): DataFrame =
+    df.filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+
+  /** The `embedding` array on the fixed-point integer grid. */
+  private def fixedVec: Column = transform(col("embedding"), v => fixedPoint(v))
+
+  /** Per-query ranked top-k: number each `q_id`'s rows by `score`
+    * descending, then `tie` ascending, into `rank`; keep ranks ≤ `k`;
+    * project `keep` (every column when empty). `longRank` casts the rank
+    * to bigint before the cut, the type of the declared search relations.
+    */
+  private[operators] def topKPerQuery(scored: DataFrame, score: String,
+      k: Int, keep: Seq[String] = Nil, tie: String = "n_id",
+      rank: String = "rn", longRank: Boolean = true): DataFrame = {
+    val rn = row_number()
+      .over(Window.partitionBy("q_id").orderBy(desc(score), asc(tie)))
+    val ranked = scored.withColumn(rank, if (longRank) rn.cast(LongType) else rn)
+      .filter(col(rank) <= k)
+    if (keep.isEmpty) ranked else ranked.select(keep.map(col): _*)
+  }
+
+  /** The columns of every declared exact search relation. */
+  private val Ranked = Seq("q_id", "rn", "n_id", "score_s14")
+
+  /** (q_id, qvi): the probe rows of a [[withFixedInts]] frame. */
+  private def queryInts(withInts: DataFrame, ids: Seq[Long]): DataFrame =
+    probeRows(withInts, ids).select(col("vec_id").as("q_id"), col("vi").as("qvi"))
+
+  /** (p_id, pvi): the hyperplane rows of a [[withFixedInts]] frame. */
+  private def planeInts(withInts: DataFrame, ids: Seq[Long]): DataFrame =
+    probeRows(withInts, ids).select(col("vec_id").as("p_id"), col("vi").as("pvi"))
+
+  /** A `bucket` plus its one-bit flips under `numPlanes` planes: the
+    * hamming ≤ 1 probe set of multi-probe sign-LSH.
+    */
+  private def flipBuckets(numPlanes: Int): Column =
+    array((col("bucket") +: (0 until numPlanes).map(p =>
+      col("bucket").bitwiseXOR(lit(1L << p)))): _*)
+
   /** Exact top-k by dot product with fixed-point integer scores
     * (`score_s14` ≈ dot · 1e14). Position-exploded + equi-joined on the
     * element index, so the same plan works whatever the corpus size; the
     * tiny query side is broadcast.
     */
   def topKDotExact(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val queries = embeddings
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+    val queries = probeRows(embeddings, queryIds)
       .select(col("vec_id").as("q_id"), posexplode(col("embedding")).as(Seq("pos", "qv")))
       .withColumn("qi", fixedPoint(col("qv")))
     val corpus = embeddings
@@ -56,11 +98,7 @@ object SimilarityOps {
       .join(broadcast(queries), Seq("pos"))
       .groupBy("q_id", "n_id")
       .agg(sum(col("qi") * col("ci")).as("score_s14"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    scores.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score_s14")
-      .orderBy("q_id", "rn")
+    topKPerQuery(scores, "score_s14", k, Ranked).orderBy("q_id", "rn")
   }
 
   /** HARD-NEGATIVE MINING (round 15, wave 5) — per probe, the `k`
@@ -80,8 +118,7 @@ object SimilarityOps {
     */
   def hardNegativesTopK(embeddings: DataFrame, queryIds: Seq[Long],
                         k: Int): DataFrame = {
-    val queries = embeddings
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+    val queries = probeRows(embeddings, queryIds)
       .select(col("vec_id").as("q_id"), col("label").cast(LongType)
         .as("q_label"), posexplode(col("embedding")).as(Seq("pos", "qv")))
       .withColumn("qi", fixedPoint(col("qv")))
@@ -95,11 +132,8 @@ object SimilarityOps {
         col("n_id") =!= col("q_id"))
       .groupBy("q_id", "n_id", "n_label")
       .agg(sum(col("qi") * col("ci")).as("score_s14"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    scores.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "n_label", "score_s14")
-      .orderBy("q_id", "rn")
+    topKPerQuery(scores, "score_s14", k,
+      Seq("q_id", "rn", "n_id", "n_label", "score_s14")).orderBy("q_id", "rn")
   }
 
   /** EMBEDDING DIMENSION-HEALTH AUDIT (round 15, wave 6) — per
@@ -185,9 +219,7 @@ object SimilarityOps {
     * cannot diverge bit-for-bit on the frame they verify over.
     */
   private def withFixedInts(embeddings: DataFrame): DataFrame =
-    embeddings.select(
-      col("vec_id"),
-      transform(col("embedding"), v => fixedPoint(v)).as("vi"))
+    embeddings.select(col("vec_id"), fixedVec.as("vi"))
       .withColumn("norm_s", graft.plans.VecDot.dotLong(col("vi"), col("vi")))
 
   /** The exact `cos ≥ τ` boundary predicate: `dot²·10⁴ ≥ τ²·|a|²·|b|²`
@@ -196,7 +228,7 @@ object SimilarityOps {
     * self-join, bucketed, and cross-set variants for the same reason as
     * [[withFixedInts]].
     */
-  private def cosGate(dot: Column, normA: Column, normB: Column,
+  private[operators] def cosGate(dot: Column, normA: Column, normB: Column,
                       minCosPct: Int): Column = {
     val tauSq = (minCosPct.toLong * minCosPct).toDouble
     dot > 0 &&
@@ -303,11 +335,7 @@ object SimilarityOps {
     * executor-sized at any corpus scale.
     */
   private def signBuckets(withInts: DataFrame, probeIds: Seq[Long]): DataFrame =
-    signBucketsWithPlanes(withInts,
-      withInts
-        .filter(col("vec_id").isin(probeIds.map(_.asInstanceOf[Any]): _*))
-        .select(col("vec_id").as("p_id"), col("vi").as("pvi")),
-      probeIds)
+    signBucketsWithPlanes(withInts, planeInts(withInts, probeIds), probeIds)
 
   /** [[signBuckets]] with the hyperplane frame supplied EXPLICITLY
     * (round 16): the planes are index PARAMETERS, not corpus rows — an
@@ -361,22 +389,15 @@ object SimilarityOps {
     val bucketed = signBuckets(withInts, probeIds)
     val numPlanes = probeIds.size
     val probeBuckets =
-      if (maxFlip == 0) array(col("bucket"))
-      else array((col("bucket") +: (0 until numPlanes).map(p =>
-        col("bucket").bitwiseXOR(lit(1L << p)))): _*)
-    val queries = bucketed
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+      if (maxFlip == 0) array(col("bucket")) else flipBuckets(numPlanes)
+    val queries = probeRows(bucketed, queryIds)
       .select(col("vec_id").as("q_id"), col("vi").as("qvi"),
         explode(probeBuckets).as("bucket"))
     val cands = bucketed
       .select(col("vec_id").as("n_id"), col("vi").as("nvi"), col("bucket"))
       .join(broadcast(queries), Seq("bucket"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    cands
-      .withColumn("score_s14", graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score_s14")
+    topKPerQuery(cands.withColumn("score_s14",
+      graft.plans.VecDot.dotLong(col("qvi"), col("nvi"))), "score_s14", k, Ranked)
       .orderBy("q_id", "rn")
   }
 
@@ -395,8 +416,7 @@ object SimilarityOps {
   def labelCentroids(embeddings: DataFrame): DataFrame =
     embeddings
       .select(col("label").cast(LongType).as("label"),
-        posexplode(transform(col("embedding"), v => fixedPoint(v)))
-          .as(Seq("pos", "vi")))
+        posexplode(fixedVec).as(Seq("pos", "vi")))
       .groupBy("label", "pos")
       .agg(expr("sum(vi) div count(1)").as("c"))
       .orderBy("label", "pos")
@@ -420,8 +440,7 @@ object SimilarityOps {
       .select(col("label").as("clabel"), col("pos"), col("c"))
     val vecs = embeddings
       .select(col("vec_id"), col("label").cast(LongType).as("label"),
-        posexplode(transform(col("embedding"), v => fixedPoint(v)))
-          .as(Seq("pos", "vi")))
+        posexplode(fixedVec).as(Seq("pos", "vi")))
     val dists = vecs.join(broadcast(cents), Seq("pos"))
       .groupBy("vec_id", "label", "clabel")
       .agg(sum((col("vi") - col("c")) * (col("vi") - col("c"))).as("dist"))
@@ -456,7 +475,7 @@ object SimilarityOps {
     */
   def quantizeInt8Error(embeddings: DataFrame): DataFrame =
     embeddings
-      .select(col("vec_id"), transform(col("embedding"), v => fixedPoint(v)).as("vi"))
+      .select(col("vec_id"), fixedVec.as("vi"))
       .withColumn("scale_s", expr("array_max(transform(vi, x -> abs(x)))"))
       .withColumn("abs_sum_s", expr("aggregate(vi, 0L, (a, x) -> a + abs(x))"))
       .withColumn("err_s", expr(
@@ -555,22 +574,18 @@ object SimilarityOps {
   def topKDotQuantized(embeddings: DataFrame, queryIds: Seq[Long],
                        k: Int): DataFrame = {
     val q8 = embeddings
-      .select(col("vec_id"), transform(col("embedding"), v => fixedPoint(v)).as("vi"))
+      .select(col("vec_id"), fixedVec.as("vi"))
       .withColumn("scale_s", expr("array_max(transform(vi, x -> abs(x)))"))
       .withColumn("q8", expr(
         "CASE WHEN scale_s = 0L THEN transform(vi, x -> 0L) " +
           "ELSE transform(vi, x -> x * 127L div scale_s) END"))
       .select(col("vec_id"), col("q8"))
-    val probes = q8
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+    val probes = probeRows(q8, queryIds)
       .select(col("vec_id").as("q_id"), col("q8").as("qq"))
     val scores = q8.select(col("vec_id").as("n_id"), col("q8").as("nq"))
       .crossJoin(broadcast(probes))
       .withColumn("score_q", graft.plans.VecDot.dotLong(col("qq"), col("nq")))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_q"), asc("n_id"))
-    scores.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score_q")
+    topKPerQuery(scores, "score_q", k, Seq("q_id", "rn", "n_id", "score_q"))
       .orderBy("q_id", "rn")
   }
 
@@ -598,8 +613,7 @@ object SimilarityOps {
     */
   def topKDotFast(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
                   cosine: Boolean = true): DataFrame = {
-    val queries = embeddings
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+    val queries = probeRows(embeddings, queryIds)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val joined = embeddings
       .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
@@ -607,12 +621,8 @@ object SimilarityOps {
     val score =
       if (cosine) dotF(col("q_emb"), col("n_emb")) / (l2Norm(col("q_emb")) * l2Norm(col("n_emb")))
       else dotF(col("q_emb"), col("n_emb"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score"), asc("n_id"))
-    joined.withColumn("score", score)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score")
-      .orderBy("q_id", "rn")
+    topKPerQuery(joined.withColumn("score", score), "score", k,
+      Seq("q_id", "rn", "n_id", "score"), longRank = false).orderBy("q_id", "rn")
   }
 
   /** The production brute-force plan made oracle-exact: same shape as
@@ -624,19 +634,13 @@ object SimilarityOps {
     * [[topKDotExact]] stays as the independent cross-check formulation.
     */
   def topKDotFastExact(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val toInts = transform(col("embedding"), v => fixedPoint(v))
-    val queries = embeddings
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("q_id"), toInts.as("qi"))
+    val queries = probeRows(embeddings, queryIds)
+      .select(col("vec_id").as("q_id"), fixedVec.as("qi"))
     val scores = embeddings
-      .select(col("vec_id").as("n_id"), toInts.as("ci"))
+      .select(col("vec_id").as("n_id"), fixedVec.as("ci"))
       .crossJoin(broadcast(queries))
       .withColumn("score_s14", graft.plans.VecDot.dotLong(col("qi"), col("ci")))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    scores.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score_s14")
-      .orderBy("q_id", "rn")
+    topKPerQuery(scores, "score_s14", k, Ranked).orderBy("q_id", "rn")
   }
 
   /** MATRYOSHKA PREFIX SEARCH (round 15) — the dimension-truncation
@@ -655,25 +659,17 @@ object SimilarityOps {
     */
   def matryoshkaTopK(embeddings: DataFrame, queryIds: Seq[Long],
                      prefixDim: Int, candidates: Int, k: Int): DataFrame = {
-    val toInts = transform(col("embedding"), v => fixedPoint(v))
-    val queries = embeddings
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("q_id"), toInts.as("qi"))
+    val queries = probeRows(embeddings, queryIds)
+      .select(col("vec_id").as("q_id"), fixedVec.as("qi"))
     val pre = embeddings
-      .select(col("vec_id").as("n_id"), toInts.as("ci"))
+      .select(col("vec_id").as("n_id"), fixedVec.as("ci"))
       .crossJoin(broadcast(queries))
       .withColumn("pre_s14", graft.plans.VecDot.dotLong(
         slice(col("qi"), 1, prefixDim), slice(col("ci"), 1, prefixDim)))
-    val wc = Window.partitionBy("q_id").orderBy(desc("pre_s14"), asc("n_id"))
-    val wk = Window.partitionBy("q_id").orderBy(desc("score_s14"),
-      asc("n_id"))
-    pre.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= candidates)
-      .withColumn("score_s14",
-        graft.plans.VecDot.dotLong(col("qi"), col("ci")))
-      .withColumn("rn", row_number().over(wk).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score_s14")
+    val cut = topKPerQuery(pre, "pre_s14", candidates, rank = "crn",
+      longRank = false)
+    topKPerQuery(cut.withColumn("score_s14",
+      graft.plans.VecDot.dotLong(col("qi"), col("ci"))), "score_s14", k, Ranked)
       .orderBy("q_id", "rn")
   }
 
@@ -785,25 +781,24 @@ object SimilarityOps {
     * O(corpus · nProbe / k) per query; recall governed by nProbe.
     */
   def ivfTopK(index: IvfIndex, queryIds: Seq[Long], topK: Int, nProbe: Int): DataFrame = {
-    val queries = index.assigned
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+    val queries = probeRows(index.assigned, queryIds)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wc = Window.partitionBy("q_id").orderBy(desc("cscore"), asc("cell"))
-    val probeCells = queries.crossJoin(broadcast(index.centroids))
-      .withColumn("cscore", dot(col("q_emb"), col("centroid")))
-      .withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= nProbe)
-      .select("q_id", "cell")
+    val probeCells = probeCellsOf(queries.crossJoin(broadcast(index.centroids))
+      .withColumn("cscore", dot(col("q_emb"), col("centroid"))), nProbe)
     val cands = index.assigned
       .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("cell"))
       .join(broadcast(probeCells.join(queries, "q_id")), Seq("cell"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score"), asc("n_id"))
-    cands.withColumn("score", dotF(col("q_emb"), col("n_emb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .select("q_id", "rn", "n_id", "score")
+    topKPerQuery(cands.withColumn("score", dotF(col("q_emb"), col("n_emb"))),
+      "score", topK, Seq("q_id", "rn", "n_id", "score"), longRank = false)
       .orderBy("q_id", "rn")
   }
+
+  /** (q_id, cell): each query's `nProbe` best cells by `cscore`, ties
+    * to the lowest cell.
+    */
+  private def probeCellsOf(scored: DataFrame, nProbe: Int): DataFrame =
+    topKPerQuery(scored, "cscore", nProbe, Seq("q_id", "cell"), tie = "cell",
+      rank = "crn", longRank = false)
 
   /** Nearest-centroid assignment over FIXED-POINT integer vectors — the
     * exact-arithmetic sibling of [[assignCells]] (zero shuffle, ties to
@@ -911,11 +906,8 @@ object SimilarityOps {
                                  cents: Array[(Int, Seq[Long])],
                                  nProbe: Int, queryIds: Seq[Long],
                                  topK: Int): DataFrame =
-    ivfSearchCorpusQueries(withInts,
-      withInts
-        .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-        .select(col("vec_id").as("q_id"), col("vi").as("qvi")),
-      cents, nProbe, topK)
+    ivfSearchCorpusQueries(withInts, queryInts(withInts, queryIds), cents,
+      nProbe, topK)
 
   /** The probe tail with SEPARATE corpus and query relations — the
     * generalization [[ivfTopKFiltered]] needs (candidates drawn from a
@@ -928,21 +920,13 @@ object SimilarityOps {
                                      nProbe: Int, topK: Int): DataFrame = {
     val assigned = assignCellsInt(corpusInts, cents)
     val centsDf = broadcast(centroidIntDf(corpusInts.sparkSession, cents))
-    val wc = Window.partitionBy("q_id").orderBy(desc("cscore"), asc("cell"))
-    val probeCells = queries.crossJoin(centsDf)
-      .withColumn("cscore", graft.plans.VecDot.dotLong(col("qvi"), col("cvec")))
-      .withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= nProbe)
-      .select("q_id", "cell")
+    val probeCells = probeCellsOf(queries.crossJoin(centsDf).withColumn("cscore",
+      graft.plans.VecDot.dotLong(col("qvi"), col("cvec"))), nProbe)
     val cands = assigned
       .select(col("vec_id").as("n_id"), col("vi").as("nvi"), col("cell"))
       .join(broadcast(probeCells.join(queries, "q_id")), Seq("cell"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    cands
-      .withColumn("score_s14", graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= topK)
-      .select("q_id", "rn", "n_id", "score_s14")
+    topKPerQuery(cands.withColumn("score_s14",
+      graft.plans.VecDot.dotLong(col("qvi"), col("nvi"))), "score_s14", topK, Ranked)
       .orderBy("q_id", "rn")
   }
 
@@ -970,10 +954,7 @@ object SimilarityOps {
     if (cents.isEmpty) return emptyTopKFrame(embeddings)
     ivfSearchCorpusQueries(
       withFixedInts(embeddings.filter(corpusFilter)),
-      withIntsAll
-        .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-        .select(col("vec_id").as("q_id"), col("vi").as("qvi")),
-      cents, nProbe, topK)
+      queryInts(withIntsAll, queryIds), cents, nProbe, topK)
   }
 
   /** RETRAIN-ON-DRIFT AUDIT (VERDICT r14 #2) — the RESPONSE to the
@@ -1005,9 +986,7 @@ object SimilarityOps {
       k, iterations, trainSampleMod)
     val fresh = memoCentroids(SessionMemo.frameId(drifted), wd, cacheKeyNew,
       k, iterations, trainSampleMod)
-    val queries = wd
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("q_id"), col("vi").as("qvi"))
+    val queries = queryInts(wd, queryIds)
     if (stale.isEmpty || fresh.isEmpty) {
       import org.apache.spark.sql.types.{StructField, StructType}
       return base.sparkSession.createDataFrame(
@@ -1016,13 +995,10 @@ object SimilarityOps {
           StructField("q_id", LongType), StructField("n_hits", LongType))))
     }
     // ground truth on the drifted corpus: exact-scan top-k per query
-    val wx = Window.partitionBy("q_id").orderBy(desc("xs"), asc("n_id"))
-    val exact = wd.select(col("vec_id").as("n_id"), col("vi").as("nvi"))
+    val exact = topKPerQuery(wd.select(col("vec_id").as("n_id"), col("vi").as("nvi"))
       .crossJoin(broadcast(queries))
-      .withColumn("xs", graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-      .withColumn("xrn", row_number().over(wx))
-      .filter(col("xrn") <= topK)
-      .select("q_id", "n_id")
+      .withColumn("xs", graft.plans.VecDot.dotLong(col("qvi"), col("nvi"))),
+      "xs", topK, Seq("q_id", "n_id"), rank = "xrn", longRank = false)
       .lineageTruncate()
     def recallOf(tag: String, cents: Array[(Int, Seq[Long])]): DataFrame =
       queries.select(col("q_id"))
@@ -1075,12 +1051,7 @@ object SimilarityOps {
       trainSampleMod, queryIds, dim)
     if (adc.isEmpty) return emptyTopKFrame(embeddings)
     val (scores, _) = adc.get
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    scores
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= topK)
-      .select("q_id", "rn", "n_id", "score_s14")
-      .orderBy("q_id", "rn")
+    topKPerQuery(scores, "score_s14", topK, Ranked).orderBy("q_id", "rn")
   }
 
   /** PQ + EXACT REFINE (the production shape — FAISS's `refine` stage):
@@ -1102,26 +1073,23 @@ object SimilarityOps {
       trainSampleMod, queryIds, dim)
     if (adc.isEmpty) return emptyTopKFrame(embeddings)
     val (scores, withInts) = adc.get
-    val wAdc = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    val cands = scores
-      .withColumn("crn", row_number().over(wAdc))
-      .filter(col("crn") <= refineCandidates)
-      .select("q_id", "n_id")
-    val queries = withInts
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("q_id"), col("vi").as("qvi"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    cands
+    exactRefine(topKPerQuery(scores, "score_s14", refineCandidates,
+      Seq("q_id", "n_id"), rank = "crn", longRank = false),
+      withInts, queryInts(withInts, queryIds), topK)
+  }
+
+  /** The exact re-rank: score the (q_id, n_id) candidate cut against
+    * full-precision vectors and keep each query's top `topK`.
+    */
+  private def exactRefine(cands: DataFrame, withInts: DataFrame,
+                          queries: DataFrame, topK: Int): DataFrame =
+    topKPerQuery(cands
       .join(withInts.select(col("vec_id").as("n_id"), col("vi").as("nvi")),
         Seq("n_id"))
       .join(broadcast(queries), Seq("q_id"))
       .withColumn("score_s14",
-        graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= topK)
-      .select("q_id", "rn", "n_id", "score_s14")
-      .orderBy("q_id", "rn")
-  }
+        graft.plans.VecDot.dotLong(col("qvi"), col("nvi"))),
+      "score_s14", topK, Ranked).orderBy("q_id", "rn")
 
   /** Shared PQ core: train the m per-subspace codebooks (memoized),
     * code the corpus, and emit ADC scores (q_id, n_id, score_s14) for
@@ -1157,9 +1125,7 @@ object SimilarityOps {
     }: _*)
     val codesDf = coded.select(col("vec_id").as("n_id"),
       reconstructed.as("rvi"))
-    val queries = withInts
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("q_id"), col("vi").as("qvi"))
+    val queries = queryInts(withInts, queryIds)
     val scores = codesDf.crossJoin(broadcast(queries))
       .withColumn("score_s14",
         graft.plans.VecDot.dotLong(col("qvi"), col("rvi")))
@@ -1230,16 +1196,10 @@ object SimilarityOps {
                                coarse: Array[(Int, Seq[Long])], nProbe: Int,
                                queryIds: Seq[Long], topK: Int,
                                refineCandidates: Int): DataFrame = {
-    val queries = withInts
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("q_id"), col("vi").as("qvi"))
+    val queries = queryInts(withInts, queryIds)
     val centsDf = broadcast(centroidIntDf(withInts.sparkSession, coarse))
-    val wc = Window.partitionBy("q_id").orderBy(desc("cscore"), asc("cell"))
-    val probeCells = queries.crossJoin(centsDf)
-      .withColumn("cscore", graft.plans.VecDot.dotLong(col("qvi"), col("cvec")))
-      .withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= nProbe)
-      .select("q_id", "cell")
+    val probeCells = probeCellsOf(queries.crossJoin(centsDf).withColumn("cscore",
+      graft.plans.VecDot.dotLong(col("qvi"), col("cvec"))), nProbe)
     ivfPqAdcRefine(approx, withInts, queries, probeCells, topK,
       refineCandidates)
   }
@@ -1254,25 +1214,13 @@ object SimilarityOps {
   private def ivfPqAdcRefine(approx: DataFrame, withInts: DataFrame,
                              queries: DataFrame, probeCells: DataFrame,
                              topK: Int, refineCandidates: Int): DataFrame = {
-    val wAdc = Window.partitionBy("q_id").orderBy(desc("adc_s14"), asc("n_id"))
     val cands = approx
       .join(broadcast(probeCells.join(queries, "q_id")), Seq("cell"))
       .withColumn("adc_s14",
         graft.plans.VecDot.dotLong(col("qvi"), col("avi")))
-      .withColumn("crn", row_number().over(wAdc))
-      .filter(col("crn") <= refineCandidates)
-      .select("q_id", "n_id")
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    cands
-      .join(withInts.select(col("vec_id").as("n_id"), col("vi").as("nvi")),
-        Seq("n_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("score_s14",
-        graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= topK)
-      .select("q_id", "rn", "n_id", "score_s14")
-      .orderBy("q_id", "rn")
+    exactRefine(topKPerQuery(cands, "adc_s14", refineCandidates,
+      Seq("q_id", "n_id"), rank = "crn", longRank = false),
+      withInts, queries, topK)
   }
 
   /** PERSISTED CODED CORPUS (VERDICT r13 #1): materialize the
@@ -1604,9 +1552,7 @@ object SimilarityOps {
     val (coarse, books) = ivfPqReadIndex(spark, indexDir)
     if (coarse.isEmpty) return emptyTopKFrame(embeddings)
     val withInts = withFixedInts(embeddings).lineageTruncate()
-    val queries = withInts
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("q_id"), col("vi").as("qvi"))
+    val queries = queryInts(withInts, queryIds)
     // driver-side probe: same truncating long dot and (score desc,
     // cell asc) tie-break as the in-plan ranking — bounded to the
     // request batch
@@ -1727,8 +1673,7 @@ object SimilarityOps {
     val subDim = dim / m
     val sortedCoarse = coarse.sortBy(_._1)
     val sortedBooks = books.map(_.sortBy(_._1))
-    val withInts = vecs.select(col("vec_id"),
-      transform(col("embedding"), v => fixedPoint(v)).as("vi"))
+    val withInts = vecs.select(col("vec_id"), fixedVec.as("vi"))
     val coded = withInts
       .withColumn("ivf_cell", element_at(
         typedLit(sortedCoarse.map(_._1)),
@@ -1831,21 +1776,15 @@ object SimilarityOps {
     require(maxFlip >= 0 && maxFlip <= 1, "maxFlip ∈ {0, 1} supported")
     val bucketed = embeddings.withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim))
     val probeBuckets =
-      if (maxFlip == 0) array(col("bucket"))
-      else array((col("bucket") +: (0 until numPlanes).map(p =>
-        col("bucket").bitwiseXOR(lit(1L << p)))): _*)
-    val queries = bucketed
-      .filter(col("vec_id").isin(queryIds.map(_.asInstanceOf[Any]): _*))
+      if (maxFlip == 0) array(col("bucket")) else flipBuckets(numPlanes)
+    val queries = probeRows(bucketed, queryIds)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         explode(probeBuckets).as("bucket"))
     val cands = bucketed
       .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("bucket"))
       .join(broadcast(queries), Seq("bucket"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score"), asc("n_id"))
-    cands.withColumn("score", dotF(col("q_emb"), col("n_emb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score")
+    topKPerQuery(cands.withColumn("score", dotF(col("q_emb"), col("n_emb"))),
+      "score", k, Seq("q_id", "rn", "n_id", "score"), longRank = false)
       .orderBy("q_id", "rn")
   }
 
@@ -1869,7 +1808,8 @@ object SimilarityOps {
     * bucket-size skew is AQE skew-join territory (the bits are
     * data-derived, near-uniform for centered embeddings). The final
     * ranking is a per-vec_id window over the candidate rows — partitioned
-    * by the graph's natural key, no global sort.
+    * by the graph's natural key, no global sort. The relation is
+    * unordered: a declared key that publishes it applies the total order.
     */
   def knnGraphExact(embeddings: DataFrame, probeIds: Seq[Long],
                     k: Int): DataFrame =
@@ -1883,35 +1823,15 @@ object SimilarityOps {
     * corpus under the BASE corpus's frozen planes.
     */
   def knnGraphExactWithPlanes(corpus: DataFrame, planesFrom: DataFrame,
-                              probeIds: Seq[Long], k: Int): DataFrame =
-    knnGraphExactWithPlanesUnsorted(corpus, planesFrom, probeIds, k)
-      .orderBy("q_id", "rn")
-
-  /** [[knnGraphExactWithPlanes]] without the final total-order sort
-    * (optimization round 18 — the lshVerifiedJaccardPairsUnsorted
-    * discipline): the declared-query contract needs the sort, but the
-    * graph's internal consumers (mutuality joins, CC, the
-    * q_id-clustered artifact write) checkpoint or re-shuffle the frame
-    * immediately, which EXECUTES the range-partition sort for nothing —
-    * Catalyst's EliminateSorts cannot see across a localCheckpoint.
-    */
-  private[graft] def knnGraphExactWithPlanesUnsorted(
-      corpus: DataFrame, planesFrom: DataFrame,
-      probeIds: Seq[Long], k: Int): DataFrame = {
+                              probeIds: Seq[Long], k: Int): DataFrame = {
     // 2 consumers (both sides of the bucket self-join) — the usual
     // truncation discipline so sign assignment runs once
     val bucketed = signBucketsWithPlanes(withFixedInts(corpus),
-      withFixedInts(planesFrom)
-        .filter(col("vec_id").isin(probeIds.map(_.asInstanceOf[Any]): _*))
-        .select(col("vec_id").as("p_id"), col("vi").as("pvi")),
-      probeIds)
+      planeInts(withFixedInts(planesFrom), probeIds), probeIds)
       .lineageTruncate()
-    val numPlanes = probeIds.size
-    val probeBuckets = array((col("bucket") +: (0 until numPlanes).map(p =>
-      col("bucket").bitwiseXOR(lit(1L << p)))): _*)
     val queries = bucketed
       .select(col("vec_id").as("q_id"), col("vi").as("qvi"),
-        explode(probeBuckets).as("bucket"))
+        explode(flipBuckets(probeIds.size)).as("bucket"))
     // NOTE (optimization round 19): an explicit by-bucket repartition of
     // the candidate side — the §2.5 fan-out fix applied to the interval
     // and MinHash-band joins this round — was measured here and REVERTED:
@@ -1923,21 +1843,9 @@ object SimilarityOps {
       .select(col("vec_id").as("n_id"), col("vi").as("nvi"), col("bucket"))
       .join(queries, Seq("bucket"))
       .filter(col("q_id") =!= col("n_id"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    cands
-      .withColumn("score_s14", graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score_s14")
+    topKPerQuery(cands.withColumn("score_s14",
+      graft.plans.VecDot.dotLong(col("qvi"), col("nvi"))), "score_s14", k, Ranked)
   }
-
-  /** Internal unsorted twin of [[knnGraphExact]] — see
-    * [[knnGraphExactWithPlanesUnsorted]].
-    */
-  private[graft] def knnGraphExactUnsorted(embeddings: DataFrame,
-                                           probeIds: Seq[Long],
-                                           k: Int): DataFrame =
-    knnGraphExactWithPlanesUnsorted(embeddings, embeddings, probeIds, k)
 
   /** kNN LABEL VOTE (round 15): classify every vector by the majority
     * label of its [[knnGraphExact]] neighbors — the
@@ -1956,7 +1864,7 @@ object SimilarityOps {
     val labels = embeddings
       .select(col("vec_id"), col("label").cast(LongType).as("label"))
       .lineageTruncate() // 2 consumers: neighbor labels + truth join-back
-    val graph = knnGraphExactUnsorted(embeddings, probeIds, k)
+    val graph = knnGraphExact(embeddings, probeIds, k)
     val votes = graph
       .join(labels.select(col("vec_id").as("n_id"),
         col("label").as("n_label")), Seq("n_id"))
@@ -1989,9 +1897,8 @@ object SimilarityOps {
   def mutualKnnClusters(embeddings: DataFrame, probeIds: Seq[Long], k: Int,
                         checkpointDir: Option[String] = None): DataFrame =
     mutualClustersFromGraph(
-      // 2 consumers (both sides of the mutuality self-join); unsorted —
-      // the checkpoint would otherwise execute the declared-output sort
-      knnGraphExactUnsorted(embeddings, probeIds, k)
+      // 2 consumers (both sides of the mutuality self-join)
+      knnGraphExact(embeddings, probeIds, k)
         .select(col("q_id"), col("n_id")).lineageTruncate(),
       embeddings, checkpointDir)
 
@@ -2033,7 +1940,7 @@ object SimilarityOps {
   def mutualKnnEdges(embeddings: DataFrame, probeIds: Seq[Long],
                      k: Int): DataFrame =
     mutualEdgesFromGraph(
-      knnGraphExactUnsorted(embeddings, probeIds, k)
+      knnGraphExact(embeddings, probeIds, k)
         .select(col("q_id"), col("n_id")).lineageTruncate())
 
   /** CLUSTER-PURITY AUDIT (round 15, wave 7) — per non-singleton
@@ -2083,7 +1990,7 @@ object SimilarityOps {
     SessionMemo.artifact(embeddings.sparkSession,
       s"knn_graph:$outDir:k=$k:p=${probeIds.mkString("_")}",
       srcDir, outDir) {
-      knnGraphExactUnsorted(embeddings, probeIds, k)
+      knnGraphExact(embeddings, probeIds, k)
         .repartitionByRange(8, col("q_id"))
         .sortWithinPartitions("q_id", "rn")
         .write.mode("overwrite").parquet(s"$outDir/edges")
@@ -2158,26 +2065,13 @@ object SimilarityOps {
     * of the corpus each). Deletes propagate by edge invalidation, not by
     * rebuild — and the takedown side is a RELATION joined distributively
     * (the [[RetrievalOps.bm25CompactWrite]] discipline; a 100 TB
-    * takedown list is itself a table, never an `isin` literal).
+    * takedown list is itself a table, never an `isin` literal). Like
+    * [[knnGraphExact]], the relation is unordered.
     */
   def knnGraphUpserted(base: DataFrame, batch: DataFrame,
                        deletes: DataFrame, srcDir: String, outDir: String,
                        probeIds: Seq[Long], k: Int,
-                       broadcastBatch: Boolean = true): DataFrame =
-    knnGraphUpsertedUnsorted(base, batch, deletes, srcDir, outDir,
-      probeIds, k, broadcastBatch).orderBy("q_id", "rn")
-
-  /** [[knnGraphUpserted]] without the final total-order sort — the
-    * [[knnGraphExactWithPlanesUnsorted]] rationale: the cluster tail,
-    * the churn diff, and the generation write all checkpoint or
-    * re-shuffle the fold immediately, which would execute the
-    * declared-output range sort for nothing.
-    */
-  private[graft] def knnGraphUpsertedUnsorted(
-      base: DataFrame, batch: DataFrame,
-      deletes: DataFrame, srcDir: String, outDir: String,
-      probeIds: Seq[Long], k: Int,
-      broadcastBatch: Boolean = true): DataFrame = {
+                       broadcastBatch: Boolean = true): DataFrame = {
     val delKeys = deletes.select("vec_id").distinct()
       .lineageTruncate() // 4 consumers: clash guard, invalidN, fullQ
                          // anti, keptStored anti
@@ -2200,9 +2094,7 @@ object SimilarityOps {
 
     // FROZEN hyperplanes: the probe vectors as the BASE build saw them —
     // re-crawled or deleted plane ids keep their index-time content
-    val planes = withFixedInts(base)
-      .filter(col("vec_id").isin(probeIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("p_id"), col("vi").as("pvi"))
+    val planes = planeInts(withFixedInts(base), probeIds)
     val bucketed = signBucketsWithPlanes(
       withFixedInts(upsertedCorpus(base, batch, delKeys)),
       planes, probeIds).lineageTruncate()
@@ -2218,9 +2110,7 @@ object SimilarityOps {
       .join(delKeys, Seq("vec_id"), "left_anti")
       .lineageTruncate()
 
-    val numPlanes = probeIds.size
-    val probeBuckets = array((col("bucket") +: (0 until numPlanes).map(p =>
-      col("bucket").bitwiseXOR(lit(1L << p)))): _*)
+    val probeBuckets = flipBuckets(probeIds.size)
 
     // (a) full re-search: batch + affected queries against everything
     val fullQueries = bucketed
@@ -2259,11 +2149,8 @@ object SimilarityOps {
         "left_anti")
       .select("q_id", "n_id", "score_s14")
 
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    keptStored.unionByName(freshCands).unionByName(fullCands)
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "rn", "n_id", "score_s14")
+    topKPerQuery(keptStored.unionByName(freshCands).unionByName(fullCands),
+      "score_s14", k, Ranked)
   }
 
   /** PERSIST THE POST-UPSERT GRAPH AS THE NEXT ARTIFACT GENERATION
@@ -2297,7 +2184,7 @@ object SimilarityOps {
     SessionMemo.artifact(base.sparkSession,
       s"knn_graph_gen:$genDir:$batchKey:k=$k:p=$probeKey",
       srcDir, genDir) {
-      knnGraphUpsertedUnsorted(base, batch, deletes, srcDir, outDir,
+      knnGraphUpserted(base, batch, deletes, srcDir, outDir,
         probeIds, k)
         .repartitionByRange(8, col("q_id"))
         .sortWithinPartitions("q_id", "rn")
@@ -2340,7 +2227,7 @@ object SimilarityOps {
   def knnUpsertChurn(base: DataFrame, batch: DataFrame,
                      deletes: DataFrame, srcDir: String, outDir: String,
                      probeIds: Seq[Long], k: Int): DataFrame = {
-    val newG = knnGraphUpsertedUnsorted(base, batch, deletes, srcDir,
+    val newG = knnGraphUpserted(base, batch, deletes, srcDir,
       outDir, probeIds, k)
       .select(col("q_id"), col("n_id"), lit(1L).as("in_new"))
     // knnGraphUpserted just built/validated the artifact — read it back
@@ -2398,42 +2285,32 @@ object SimilarityOps {
     require(queryIds.nonEmpty, "knnPlanesRetrainRecall needs queries")
     val spark = base.sparkSession
     import spark.implicits._
-    val qSet = queryIds.map(_.asInstanceOf[Any])
     val mi = withFixedInts(upsertedCorpus(base, batch, deletes))
       .lineageTruncate() // consumers: exact scan (2 sides), two
                          // bucketers, fresh planes
     // exact top-k over the post-ingest corpus: the recall ground truth
-    val exQ = mi.filter(col("vec_id").isin(qSet: _*))
-      .select(col("vec_id").as("q_id"), col("vi").as("qvi"))
-    val w = Window.partitionBy("q_id").orderBy(desc("score_s14"), asc("n_id"))
-    val exact = mi.select(col("vec_id").as("n_id"), col("vi").as("nvi"))
-      .crossJoin(broadcast(exQ))
+    val exact = topKPerQuery(mi.select(col("vec_id").as("n_id"), col("vi").as("nvi"))
+      .crossJoin(broadcast(queryInts(mi, queryIds)))
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("score_s14",
-        graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select("q_id", "n_id")
+        graft.plans.VecDot.dotLong(col("qvi"), col("nvi"))),
+      "score_s14", k, Seq("q_id", "n_id"))
       .lineageTruncate() // 2 consumers: one hit-join per configuration
     // bucketed: (vec_id, bucket, vi over CURRENT content)
     def configHits(cfg: String, bucketed0: DataFrame,
                    numPlanes: Int): DataFrame = {
       val bucketed = bucketed0
         .lineageTruncate() // 2 consumers: query slice + candidate side
-      val probeBuckets = array((col("bucket") +: (0 until numPlanes).map(p =>
-        col("bucket").bitwiseXOR(lit(1L << p)))): _*)
-      val queries = bucketed.filter(col("vec_id").isin(qSet: _*))
+      val queries = probeRows(bucketed, queryIds)
         .select(col("vec_id").as("q_id"), col("vi").as("qvi"),
-          explode(probeBuckets).as("bucket"))
-      val approx = bucketed
+          explode(flipBuckets(numPlanes)).as("bucket"))
+      val approx = topKPerQuery(bucketed
         .select(col("vec_id").as("n_id"), col("vi").as("nvi"),
           col("bucket"))
         .join(broadcast(queries), Seq("bucket"))
         .filter(col("q_id") =!= col("n_id"))
         .withColumn("score_s14",
-          graft.plans.VecDot.dotLong(col("qvi"), col("nvi")))
-        .withColumn("rn", row_number().over(w).cast(LongType))
-        .filter(col("rn") <= k)
+          graft.plans.VecDot.dotLong(col("qvi"), col("nvi"))), "score_s14", k)
       val hits = approx
         .join(exact, Seq("q_id", "n_id"), "left_semi")
         .groupBy("q_id")
@@ -2443,9 +2320,7 @@ object SimilarityOps {
         .select(lit(cfg).as("config"), col("q_id"),
           coalesce(col("hits"), lit(0L)).as("hits"))
     }
-    val stalePlanes = withFixedInts(base)
-      .filter(col("vec_id").isin(stalePlaneIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("p_id"), col("vi").as("pvi"))
+    val stalePlanes = planeInts(withFixedInts(base), stalePlaneIds)
       .lineageTruncate() // 2 consumers: stored assignments + arrivals
     // the artifact's stored bucket column: base-content assignments
     val storedAssign = signBucketsWithPlanes(withFixedInts(base),
@@ -2459,9 +2334,7 @@ object SimilarityOps {
       .join(storedAssign, Seq("vec_id"), "left_outer")
       .select(col("vec_id"),
         coalesce(col("stored_b"), col("cur_b")).as("bucket"), col("vi"))
-    val freshPlanes = mi
-      .filter(col("vec_id").isin(freshPlaneIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("vec_id").as("p_id"), col("vi").as("pvi"))
+    val freshPlanes = planeInts(mi, freshPlaneIds)
     val freshBucketed = signBucketsWithPlanes(mi, freshPlanes,
       freshPlaneIds)
       .select(col("vec_id"), col("bucket"), col("vi"))
@@ -2484,7 +2357,7 @@ object SimilarityOps {
                                 checkpointDir: Option[String] = None)
       : DataFrame =
     mutualClustersFromGraph(
-      knnGraphUpsertedUnsorted(base, batch, deletes, srcDir, outDir,
+      knnGraphUpserted(base, batch, deletes, srcDir, outDir,
         probeIds, k)
         .select(col("q_id"), col("n_id")).lineageTruncate(),
       upsertedCorpus(base, batch, deletes), checkpointDir)

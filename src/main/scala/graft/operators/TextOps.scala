@@ -13,11 +13,120 @@ import org.apache.spark.sql.types.DecimalType
   * fully distributed, no driver materialization, no UDFs. At 100 TB the
   * word-level explode is the classic inverted-index build: it shuffles on
   * the grouping keys once and map-side-combines first.
+  *
+  * Shared builders (unigram bits, adjacent bigrams, BPE pricing, pack
+  * bins, the agreement matrix) sit right after [[words]].
   */
 object TextOps {
 
   /** Tokenize on single spaces (the documents corpus is space-joined). */
   def words(c: Column): Column = split(c, " ")
+
+  /** Unigram counts (word, cnt) of an exploded `word` column and their
+    * one-row total (t).
+    */
+  private def wordCountTotal(w: DataFrame): (DataFrame, DataFrame) = {
+    val wc = w.groupBy("word").agg(count(lit(1)).as("cnt"))
+    (wc, wc.agg(sum(col("cnt")).as("t")))
+  }
+
+  /** floor(log₂(num div den)) bits, computed portably as
+    * `length(bin(num div den)) − 1` (both Spark and DuckDB ship `bin`).
+    */
+  private def floorLog2Bits(num: String, den: String): Column =
+    (length(bin(expr(s"$num div $den"))) - 1).cast("long")
+
+  /** (word, `as`): the unigram surprisal bits of every word of `w`. */
+  private def unigramBits(w: DataFrame, as: String = "bits"): DataFrame = {
+    val (wc, total) = wordCountTotal(w)
+    wc.crossJoin(broadcast(total)).select(col("word"), floorLog2Bits("t", "cnt").as(as))
+  }
+
+  /** Per-`key` word count and surprisal-bit sum of the word stream `w`. */
+  private def bitsRollup(w: DataFrame, key: String): DataFrame =
+    w.join(broadcast(unigramBits(w)), Seq("word"))
+      .groupBy(key)
+      .agg(count(lit(1)).as("n_words"), sum("bits").as("sum_bits"))
+
+  /** The frozen top-`topWords` unigram bits table of the word stream `w`
+    * and its token total, collected for a streaming scorer.
+    */
+  private def topWordBits(w: DataFrame, topWords: Int)
+      : (Seq[(String, Long)], Long) = {
+    val (wc, total) = wordCountTotal(w)
+    val bitsRows = wc.crossJoin(broadcast(total))
+      .orderBy(desc("cnt"), asc("word")).limit(topWords)
+      .select(col("word"), floorLog2Bits("t", "cnt").as("bits"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    (bitsRows, total.collect()(0).getLong(0))
+  }
+
+  /** Adjacent word pairs (prev, word) of the `ws` word arrays, one row
+    * per pair, carrying `keep`: zip_with over each document's OWN array
+    * (slice vs slice-shifted), no per-doc window, no shuffle.
+    */
+  private def bigrams(docsW: DataFrame, keep: String*): DataFrame =
+    docsW.select(keep.map(col) :+ explode(zip_with(
+        slice(col("ws"), lit(1), size(col("ws")) - 1),
+        slice(col("ws"), lit(2), size(col("ws")) - 1),
+        (a, b) => struct(a.as("prev"), b.as("word")))).as("pr"): _*)
+      .select(keep.map(col) ++ Seq(col("pr.prev").as("prev"),
+        col("pr.word").as("word")): _*)
+
+  /** BPE tokens of a word stream joined to a (word, n_bpe) table:
+    * out-of-vocabulary words fall back to their character count.
+    */
+  private[operators] def bpeTokenSum: Column =
+    sum(coalesce(col("n_bpe"), length(col("word")).cast("long")))
+
+  /** (doc_id, `as`): each document's BPE token count under `wordTokens`. */
+  private def bpeDocTokens(documents: DataFrame, wordTokens: DataFrame,
+                           as: String): DataFrame =
+    documents
+      .select(col("doc_id"), explode(words(col("text"))).as("word"))
+      .join(broadcast(wordTokens), Seq("word"), "left")
+      .groupBy("doc_id")
+      .agg(bpeTokenSum.as(as))
+
+  /** The pack prefix sum over (source, shard, doc_id, n_tokens): per
+    * (source, shard) in doc_id order, `cum_before` = the tokens of the
+    * earlier documents and `bin` = cum_before div budgetTokens.
+    */
+  private def packBins(toks: DataFrame, budgetTokens: Long): DataFrame = {
+    val before = Window.partitionBy("source", "shard").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    toks
+      .withColumn("cum_before", coalesce(sum("n_tokens").over(before), lit(0L)))
+      .withColumn("bin", expr(s"cum_before div $budgetTokens"))
+  }
+
+  /** One row per pack bin of a [[packBins]] frame. */
+  private def binRollup(bins: DataFrame): DataFrame =
+    bins.groupBy("source", "shard", "bin")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("bin_tokens"),
+        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
+      .orderBy("source", "shard", "bin")
+
+  /** Per ordered signal pair (a, b), the confusion counts of the keep
+    * flags `k_a`, `k_b` over `flags` and the agreement rate in ppm.
+    */
+  private def agreementMatrix(flags: DataFrame,
+                              pairs: (String, String)*): DataFrame =
+    flags.select(explode(array(pairs.map { case (a, b) =>
+        struct(lit(a).as("sig_a"), lit(b).as("sig_b"),
+          col(s"k_$a").as("ka"), col(s"k_$b").as("kb"))
+      }: _*)).as("p"))
+      .select(col("p.sig_a").as("sig_a"), col("p.sig_b").as("sig_b"),
+        col("p.ka").as("ka"), col("p.kb").as("kb"))
+      .groupBy("sig_a", "sig_b")
+      .agg(sum(col("ka") * col("kb")).as("both_keep"),
+        sum(col("ka") * (lit(1L) - col("kb"))).as("a_only_keep"),
+        sum((lit(1L) - col("ka")) * col("kb")).as("b_only_keep"),
+        sum((lit(1L) - col("ka")) * (lit(1L) - col("kb"))).as("both_drop"),
+        count(lit(1)).as("n_docs"))
+      .withColumn("agree_ppm",
+        expr("(both_keep + both_drop) * 1000000L div n_docs"))
+      .orderBy("sig_a", "sig_b")
 
   /** The engine's BPE-ish tokenizer regex: alpha runs + digit runs +
     * single non-space symbols. ONE definition — per-doc accounting
@@ -661,15 +770,7 @@ object TextOps {
     val toks = documents.select(col("source"),
       expr(s"doc_id div $shardDocs").as("shard"), col("doc_id"),
       tokenCountCol(col("text")).as("n_tokens"))
-    val before = Window.partitionBy("source", "shard").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("cum_before", coalesce(sum("n_tokens").over(before), lit(0L)))
-      .withColumn("bin", expr(s"cum_before div $budgetTokens"))
-      .groupBy("source", "shard", "bin")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("bin_tokens"),
-        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
-      .orderBy("source", "shard", "bin")
+    binRollup(packBins(toks, budgetTokens))
   }
 
   /** L4 — unigram SURPRISAL scoring (round 13): the CCNet-style
@@ -692,16 +793,8 @@ object TextOps {
     * one-row cross join — no driver collect.
     */
   def surprisalBits(documents: DataFrame): DataFrame = {
-    val w = documents.select(col("doc_id"),
-      explode(words(col("text"))).as("word"))
-    val wc = w.groupBy("word").agg(count(lit(1)).as("cnt"))
-    val total = wc.agg(sum(col("cnt")).as("t"))
-    val wordBits = wc.crossJoin(broadcast(total))
-      .select(col("word"),
-        (length(bin(expr("t div cnt"))) - 1).cast("long").as("bits"))
-    w.join(broadcast(wordBits), Seq("word"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"), sum("bits").as("sum_bits"))
+    bitsRollup(documents.select(col("doc_id"),
+        explode(words(col("text"))).as("word")), "doc_id")
       .withColumn("bits_q8", expr("sum_bits * 256L div n_words"))
       .orderBy("doc_id")
   }
@@ -960,16 +1053,8 @@ object TextOps {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = documents.sparkSession
     import spark.implicits._
-    val w = documents.select(col("source"),
-      explode(words(col("text"))).as("word"))
-    val wc = w.groupBy("word").agg(count(lit(1)).as("cnt"))
-    val total = wc.agg(sum(col("cnt")).as("t"))
-    val wordBits = wc.crossJoin(broadcast(total))
-      .select(col("word"),
-        (length(bin(expr("t div cnt"))) - 1).cast("long").as("bits"))
-    val dom = w.join(broadcast(wordBits), Seq("word"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_words"), sum("bits").as("sum_bits"))
+    val dom = bitsRollup(documents.select(col("source"),
+        explode(words(col("text"))).as("word")), "source")
       .withColumn("loss_q8", expr("sum_bits * 256L div n_words"))
       .select("source", "loss_q8")
       // bounded collect: one row per DOMAIN (source), not per document —
@@ -1286,24 +1371,13 @@ object TextOps {
                           keepBitsQ8: Long): DataFrame = {
     val docsW = documents.select(col("doc_id"), words(col("text")).as("ws"))
     val w = docsW.select(col("doc_id"), explode(col("ws")).as("word"))
-    val wc = w.groupBy("word").agg(count(lit(1)).as("cnt"))
-    val total = wc.agg(sum(col("cnt")).as("t"))
-    val wb = wc.crossJoin(broadcast(total))
-      .select(col("word"),
-        (length(bin(expr("t div cnt"))) - 1).cast("long").as("ubits"))
-    val pairs = docsW.select(col("doc_id"),
-      explode(zip_with(
-        slice(col("ws"), lit(1), size(col("ws")) - 1),
-        slice(col("ws"), lit(2), size(col("ws")) - 1),
-        (a, b) => struct(a.as("prev"), b.as("word")))).as("pr"))
-      .select(col("doc_id"), col("pr.prev").as("prev"),
-        col("pr.word").as("word"))
+    val wb = unigramBits(w, "ubits")
+    val pairs = bigrams(docsW, "doc_id")
     val bc = pairs.groupBy("prev", "word").agg(count(lit(1)).as("cnt2"))
     val cx = bc.groupBy("prev").agg(sum(col("cnt2")).as("ctx"))
     val pairBits = pairs
       .join(bc.join(cx, Seq("prev")), Seq("prev", "word"))
-      .select(col("doc_id"),
-        (length(bin(expr("ctx div cnt2"))) - 1).cast("long").as("bits"))
+      .select(col("doc_id"), floorLog2Bits("ctx", "cnt2").as("bits"))
     val firstBits = docsW.filter(size(col("ws")) >= 1)
       .select(col("doc_id"), element_at(col("ws"), 1).as("word"))
       .join(broadcast(wb), Seq("word"))
@@ -1337,28 +1411,16 @@ object TextOps {
                             topPairs: Int)
       : (Seq[(String, Long)], Seq[(String, Long)], Long) = {
     val docsW = documents.select(words(col("text")).as("ws"))
-    val w = docsW.select(explode(col("ws")).as("word"))
-    val wc = w.groupBy("word").agg(count(lit(1)).as("cnt"))
-    val total = wc.agg(sum(col("cnt")).as("t"))
-    val wordBits = wc.crossJoin(broadcast(total))
-      .orderBy(desc("cnt"), asc("word")).limit(topWords)
-      .select(col("word"),
-        (length(bin(expr("t div cnt"))) - 1).cast("long").as("bits"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val pairs = docsW.select(
-      explode(zip_with(
-        slice(col("ws"), lit(1), size(col("ws")) - 1),
-        slice(col("ws"), lit(2), size(col("ws")) - 1),
-        (a, b) => struct(a.as("prev"), b.as("word")))).as("pr"))
-      .select(col("pr.prev").as("prev"), col("pr.word").as("word"))
+    val (wordBits, totalTokens) =
+      topWordBits(docsW.select(explode(col("ws")).as("word")), topWords)
+    val pairs = bigrams(docsW)
     val bc = pairs.groupBy("prev", "word").agg(count(lit(1)).as("cnt2"))
     val cx = bc.groupBy("prev").agg(sum(col("cnt2")).as("ctx"))
     val pairBits = bc.join(cx, Seq("prev"))
       .orderBy(desc("cnt2"), asc("prev"), asc("word")).limit(topPairs)
       .select(concat(col("prev"), lit(" "), col("word")).as("pair"),
-        (length(bin(expr("ctx div cnt2"))) - 1).cast("long").as("bits"))
+        floorLog2Bits("ctx", "cnt2").as("bits"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val totalTokens = total.collect()(0).getLong(0)
     (wordBits, pairBits,
       java.lang.Long.toBinaryString(math.max(totalTokens, 1L)).length - 1L)
   }
@@ -1372,16 +1434,9 @@ object TextOps {
     */
   def surprisalFitTop(documents: DataFrame, topWords: Int)
       : (Seq[(String, Long)], Long) = {
-    val w = documents.select(explode(words(col("text"))).as("word"))
-      .filter(length(col("word")) > 0)
-    val wc = w.groupBy("word").agg(count(lit(1)).as("cnt"))
-    val total = wc.agg(sum(col("cnt")).as("t"))
-    val bitsRows = wc.crossJoin(broadcast(total))
-      .orderBy(desc("cnt"), asc("word")).limit(topWords)
-      .select(col("word"),
-        (length(bin(expr("t div cnt"))) - 1).cast("long").as("bits"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val totalTokens = total.collect()(0).getLong(0)
+    val (bitsRows, totalTokens) = topWordBits(documents
+      .select(explode(words(col("text"))).as("word"))
+      .filter(length(col("word")) > 0), topWords)
     (bitsRows, java.lang.Long.toBinaryString(totalTokens).length - 1L)
   }
 
@@ -1401,11 +1456,7 @@ object TextOps {
     */
   def packSequencesBpe(documents: DataFrame, wordTokens: DataFrame,
                        budgetTokens: Long, shardDocs: Long): DataFrame =
-    bpeBinFrame(documents, wordTokens, budgetTokens, shardDocs)
-      .groupBy("source", "shard", "bin")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("bin_tokens"),
-        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
-      .orderBy("source", "shard", "bin")
+    binRollup(bpeBinFrame(documents, wordTokens, budgetTokens, shardDocs))
 
   /** PACK MANIFEST (round 14): the loader handoff [[packSequencesBpe]]
     * summarizes — one row per document with its bin AND its token
@@ -1433,22 +1484,12 @@ object TextOps {
     */
   private def bpeBinFrame(documents: DataFrame, wordTokens: DataFrame,
                           budgetTokens: Long, shardDocs: Long): DataFrame = {
-    val priced = documents
-      .select(col("doc_id"), explode(words(col("text"))).as("word"))
-      .join(broadcast(wordTokens), Seq("word"), "left")
-      .groupBy("doc_id")
-      .agg(sum(coalesce(col("n_bpe"), length(col("word")).cast("long")))
-        .as("__n"))
     val toks = documents.select(col("source"),
         expr(s"doc_id div $shardDocs").as("shard"), col("doc_id"))
-      .join(priced, Seq("doc_id"), "left")
+      .join(bpeDocTokens(documents, wordTokens, "__n"), Seq("doc_id"), "left")
       .select(col("source"), col("shard"), col("doc_id"),
         coalesce(col("__n"), lit(0L)).as("n_tokens"))
-    val before = Window.partitionBy("source", "shard").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("cum_before", coalesce(sum("n_tokens").over(before), lit(0L)))
-      .withColumn("bin", expr(s"cum_before div $budgetTokens"))
+    packBins(toks, budgetTokens)
   }
 
   /** Packing-efficiency audit over [[packSequences]]: per source, how
@@ -1497,26 +1538,9 @@ object TextOps {
                              stopwords: Seq[String], minWords: Long,
                              maxStopwordPpm: Long, numBuckets: Int,
                              maxBitsQ8: Long): DataFrame = {
-    val flags = qualitySignalVotes(documents, target, stopwords, minWords,
-      maxStopwordPpm, numBuckets, maxBitsQ8)
-    val pairs = flags.select(explode(array(
-      struct(lit("dsir").as("sig_a"), lit("quality").as("sig_b"),
-        col("k_dsir").as("ka"), col("k_quality").as("kb")),
-      struct(lit("dsir").as("sig_a"), lit("surprisal").as("sig_b"),
-        col("k_dsir").as("ka"), col("k_surprisal").as("kb")),
-      struct(lit("quality").as("sig_a"), lit("surprisal").as("sig_b"),
-        col("k_quality").as("ka"), col("k_surprisal").as("kb")))).as("p"))
-    pairs.select(col("p.sig_a").as("sig_a"), col("p.sig_b").as("sig_b"),
-        col("p.ka").as("ka"), col("p.kb").as("kb"))
-      .groupBy("sig_a", "sig_b")
-      .agg(sum(col("ka") * col("kb")).as("both_keep"),
-        sum(col("ka") * (lit(1L) - col("kb"))).as("a_only_keep"),
-        sum((lit(1L) - col("ka")) * col("kb")).as("b_only_keep"),
-        sum((lit(1L) - col("ka")) * (lit(1L) - col("kb"))).as("both_drop"),
-        count(lit(1)).as("n_docs"))
-      .withColumn("agree_ppm",
-        expr("(both_keep + both_drop) * 1000000L div n_docs"))
-      .orderBy("sig_a", "sig_b")
+    agreementMatrix(qualitySignalVotes(documents, target, stopwords, minWords,
+        maxStopwordPpm, numBuckets, maxBitsQ8),
+      ("dsir", "quality"), ("dsir", "surprisal"), ("quality", "surprisal"))
   }
 
   /** FOUR-SIGNAL AGREEMENT MATRIX (round 15) —
@@ -1539,24 +1563,9 @@ object TextOps {
       maxStopwordPpm, numBuckets, maxBitsQ8)
       .join(surprisalBigramBits(documents, maxBiQ8)
         .select(col("doc_id"), col("keep").as("k_bigram")), Seq("doc_id"))
-    def pair(a: String, b: String) =
-      struct(lit(a).as("sig_a"), lit(b).as("sig_b"),
-        col(s"k_$a").as("ka"), col(s"k_$b").as("kb"))
-    flags.select(explode(array(
-        pair("bigram", "dsir"), pair("bigram", "quality"),
-        pair("bigram", "surprisal"), pair("dsir", "quality"),
-        pair("dsir", "surprisal"), pair("quality", "surprisal"))).as("p"))
-      .select(col("p.sig_a").as("sig_a"), col("p.sig_b").as("sig_b"),
-        col("p.ka").as("ka"), col("p.kb").as("kb"))
-      .groupBy("sig_a", "sig_b")
-      .agg(sum(col("ka") * col("kb")).as("both_keep"),
-        sum(col("ka") * (lit(1L) - col("kb"))).as("a_only_keep"),
-        sum((lit(1L) - col("ka")) * col("kb")).as("b_only_keep"),
-        sum((lit(1L) - col("ka")) * (lit(1L) - col("kb"))).as("both_drop"),
-        count(lit(1)).as("n_docs"))
-      .withColumn("agree_ppm",
-        expr("(both_keep + both_drop) * 1000000L div n_docs"))
-      .orderBy("sig_a", "sig_b")
+    agreementMatrix(flags, ("bigram", "dsir"), ("bigram", "quality"),
+      ("bigram", "surprisal"), ("dsir", "quality"), ("dsir", "surprisal"),
+      ("quality", "surprisal"))
   }
 
   /** ENSEMBLE QUALITY VOTES (VERDICT r14 #6) — the per-document flag
@@ -1684,12 +1693,7 @@ object TextOps {
                  wordTokens: DataFrame, numHashes: Int, rowsPerBand: Int,
                  minJaccardPct: Int): DataFrame = {
     import graft.operators.DedupOps
-    val priced = documents
-      .select(col("doc_id"), explode(words(col("text"))).as("word"))
-      .join(broadcast(wordTokens), Seq("word"), "left")
-      .groupBy("doc_id")
-      .agg(sum(coalesce(col("n_bpe"), length(col("word")).cast("long")))
-        .as("__nb"))
+    val priced = bpeDocTokens(documents, wordTokens, "__nb")
     val pairs = DedupOps.lshVerifiedJaccardPairsUnsorted(
       documents.select("doc_id", "text"), numHashes, rowsPerBand,
       minJaccardPct)
@@ -2228,8 +2232,7 @@ object TextOps {
       .join(broadcast(wordTokens), Seq("word"), "left")
       .groupBy("source")
       .agg(count(lit(1)).as("whitespace_tokens"),
-        sum(coalesce(col("n_bpe"), length(col("word")).cast("long")))
-          .as("bpe_tokens"))
+        bpeTokenSum.as("bpe_tokens"))
       .orderBy("source")
   }
 
@@ -2289,8 +2292,7 @@ object TextOps {
       .join(broadcast(wt), Seq("word"), "left")
       .groupBy("phase", "source")
       .agg(count(lit(1)).as("whitespace_tokens"),
-        sum(coalesce(col("n_bpe"), length(col("word")).cast("long")))
-          .as("bpe_tokens"),
+        bpeTokenSum.as("bpe_tokens"),
         sum(when(col("n_bpe").isNull && length(col("word")) > 0, 1L)
           .otherwise(0L)).as("oov_words"))
       .withColumn("oov_ppm",

@@ -14,6 +14,9 @@ import org.apache.spark.sql.Row
   * user_id, so state partitions across executors; watermarks bound state
   * size; `foreachBatch` gives the reference's chunked-load semantics
   * (A4/A7) with exactly-once per micro-batch.
+  *
+  * Shared builders: near-dup verification composes DedupOps' (bandFrame,
+  * verifyJaccard) rather than carrying a copy.
   */
 object StreamingOps {
 
@@ -379,11 +382,8 @@ object StreamingOps {
       .join(corpusBandDocs, Seq("band_idx", "band_hash"))
       .dropDuplicatesWithinWatermark("doc_id", "corpus_id")
       .join(corpusSets, Seq("corpus_id"))
-      .withColumn("common",
-        graft.plans.VecDot.sortedIntersectCount(col("ws"), col("cws")))
-      .withColumn("union_size",
-        size(col("ws")).cast("long") + size(col("cws")).cast("long") - col("common"))
-      .filter(col("common") * 100 >= col("union_size") * minJaccardPct)
+      .transform(graft.operators.DedupOps.verifyJaccard(_, "ws", "cws",
+        minJaccardPct))
       .dropDuplicatesWithinWatermark("doc_id")
       .select("doc_id", "ts_ts")
   }

@@ -31,14 +31,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 4L)))
   }
 
-  test("jaccardPairsDense agrees with the inverted-index implementation") {
-    val sparse = DedupOps.jaccardPairs(docs, 50).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val dense = DedupOps.jaccardPairsDense(docs, 50).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(dense == sparse)
-  }
-
   test("minHash: identical docs share signatures; LSH surfaces them") {
     val sigs = DedupOps.minHashSignatures(docs, 8).collect()
       .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
@@ -299,7 +291,9 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("lshVerifiedJaccardPairs equals dense all-pairs Jaccard") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val dense = DedupOps.jaccardPairsDense(docs, 80).collect().toSeq
+    // all pairs via the exact inverted-index engine q_neardup_jaccard's
+    // oracle checks
+    val dense = DedupOps.jaccardPairs(docs, 80).collect().toSeq
     val lsh = DedupOps.lshVerifiedJaccardPairs(docs, 24, 2, 80).collect().toSeq
     assert(lsh == dense)
   }

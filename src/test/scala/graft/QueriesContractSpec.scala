@@ -28,42 +28,73 @@ class QueriesContractSpec extends SparkSpec {
   }
 
   test("each shared oracle building block is written once in Queries.scala") {
-    // one distinctive line per builder (or shared oracle): a second
-    // occurrence means an oracle pasted the block instead of composing it
-    val src = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("src/main/scala/graft/Queries.scala"))
+    // one distinctive line per builder (or shared oracle) with the file
+    // that holds it: a second occurrence anywhere in Queries.scala, the
+    // operators or the streaming operators means a caller pasted the
+    // block instead of composing it
+    val q = "src/main/scala/graft/Queries.scala"
+    def op(name: String) = s"src/main/scala/graft/operators/$name.scala"
+    val (sim, dedup, text) = (op("SimilarityOps"), op("DedupOps"), op("TextOps"))
+    val dirs = Seq("src/main/scala/graft/operators",
+      "src/main/scala/graft/streaming")
+    val files = q +: dirs.flatMap(d =>
+      new java.io.File(d).listFiles().map(_.getPath)
+        .filter(_.endsWith(".scala")).sorted.toSeq)
+    val srcs = files.map(f =>
+      f -> java.nio.file.Files.readString(java.nio.file.Paths.get(f)))
     val blocks = Seq(
-      "FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id",
-      "UNION SELECT $b, $a FROM $pairs)",
-      "reach(src, dst) AS (",
-      "unnest(range($dim)) AS pos FROM $src))",
-      "ORDER BY dt DESC, cell) AS rn",
-      "ROW_NUMBER() OVER (ORDER BY vec_id) AS rn",
-      "// COUNT(*) AS BIGINT) AS c",
-      "v.vi - cc.c AS vi",
-      "ORDER BY t.t1 + r.t2 DESC, t.n_id) AS rn",
-      "substr(md5(word), 1, 8))::BIGINT % 1024",
-      "substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000",
-      "CAST(COALESCE(t_c, 0) + 1 AS HUGEINT)",
-      "THEN 1 ELSE 0 END::BIGINT AS k_dsir",
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)",
-      "'[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]'",
-      "FROM $docs d LEFT JOIN wtok USING (doc_id))",
-      "COALESCE(string_agg(sym, ' ' ORDER BY wpos, spos), '')",
-      "[i:i+2]",
-      "d5 AS MATERIALIZED (SELECT d.* FROM d4 d JOIN sel USING (doc_id))",
-      "(SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM",
-      "c.common * 1000000 // (sa.set_size + sb.set_size - c.common) AS jaccard_ppm",
-      "(LEAST(src, MIN(dst)) = src) AS is_keeper",
-      "common * 1000000 // n_src AS cont_ppm",
-      "SELECT q_id, n_id, CAST(score_s14 AS BIGINT) AS score_s14,",
-      "CAST(na.norm_s AS DOUBLE) * CAST(nb.norm_s AS DOUBLE) * 6400.0")
-    def occurrences(b: String) =
+      q -> "FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id",
+      q -> "UNION SELECT $b, $a FROM $pairs)",
+      q -> "reach(src, dst) AS (",
+      q -> "unnest(range($dim)) AS pos FROM $src))",
+      q -> "ORDER BY dt DESC, cell) AS rn",
+      q -> "ROW_NUMBER() OVER (ORDER BY vec_id) AS rn",
+      q -> "// COUNT(*) AS BIGINT) AS c",
+      q -> "v.vi - cc.c AS vi",
+      q -> "ORDER BY t.t1 + r.t2 DESC, t.n_id) AS rn",
+      q -> "substr(md5(word), 1, 8))::BIGINT % 1024",
+      q -> "substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000",
+      q -> "CAST(COALESCE(t_c, 0) + 1 AS HUGEINT)",
+      q -> "THEN 1 ELSE 0 END::BIGINT AS k_dsir",
+      q -> "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)",
+      q -> "'[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9 ]'",
+      q -> "FROM $docs d LEFT JOIN wtok USING (doc_id))",
+      q -> "COALESCE(string_agg(sym, ' ' ORDER BY wpos, spos), '')",
+      q -> "[i:i+2]",
+      q -> "d5 AS MATERIALIZED (SELECT d.* FROM d4 d JOIN sel USING (doc_id))",
+      q -> "(SELECT COALESCE(SUM(len(string_split(text, ' '))), 0) FROM",
+      q -> "c.common * 1000000 // (sa.set_size + sb.set_size - c.common) AS jaccard_ppm",
+      q -> "(LEAST(src, MIN(dst)) = src) AS is_keeper",
+      q -> "common * 1000000 // n_src AS cont_ppm",
+      q -> "SELECT q_id, n_id, CAST(score_s14 AS BIGINT) AS score_s14,",
+      q -> "CAST(na.norm_s AS DOUBLE) * CAST(nb.norm_s AS DOUBLE) * 6400.0",
+      sim -> ".over(Window.partitionBy(\"q_id\").orderBy(desc(score), asc(tie)))",
+      sim -> "isin(queryIds.map(_.asInstanceOf[Any]): _*)",
+      sim -> "transform(col(\"embedding\"), v => fixedPoint(v))",
+      sim -> "col(\"bucket\").bitwiseXOR(lit(1L << p)))): _*)",
+      dedup -> "col(\"common\") * 100 >= col(\"union_size\")",
+      dedup -> "expr(\"common * 1000000L div union_size\")",
+      dedup -> "size(col(a)).cast(\"long\") + size(col(b)).cast(\"long\") - col(\"common\")",
+      dedup -> "col(\"a.band_hash\") === col(\"b.band_hash\") &&",
+      dedup -> "col(\"a.word\") === col(\"b.word\") && col(\"a.doc_id\") < col(\"b.doc_id\"))",
+      dedup -> "(col(\"tf\") * expr(\"1000000L div df\")).as(\"w\")",
+      text -> "val wc = w.groupBy(\"word\").agg(count(lit(1)).as(\"cnt\"))",
+      text -> "slice(col(\"ws\"), lit(2), size(col(\"ws\")) - 1),",
+      text -> "sum(coalesce(col(\"n_bpe\"), length(col(\"word\")).cast(\"long\")))",
+      text -> ".withColumn(\"cum_before\", coalesce(sum(\"n_tokens\").over(before), lit(0L)))",
+      text -> "min(\"doc_id\").as(\"first_doc\"), max(\"doc_id\").as(\"last_doc\"))",
+      text -> "sum((lit(1L) - col(\"ka\")) * (lit(1L) - col(\"kb\"))).as(\"both_drop\"),")
+    def occurrences(src: String, b: String) =
       Iterator.iterate(src.indexOf(b))(i => src.indexOf(b, i + 1))
         .takeWhile(_ >= 0).size
-    val counts = blocks.map(b => b -> occurrences(b))
-    assert(counts.forall(_._2 == 1),
-      counts.filter(_._2 != 1).map { case (b, n) => s"$n× $b" }.mkString("\n"))
+    val bad = blocks.flatMap { case (file, b) =>
+      val found = srcs.map { case (f, src) => f -> occurrences(src, b) }
+        .filter(_._2 > 0)
+      if (found == Seq(file -> 1)) None
+      else Some(s"$b: expected once in $file, found " +
+        found.map { case (f, n) => s"$n× $f" }.mkString("[", ", ", "]"))
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("every oracle key is a declared query") {

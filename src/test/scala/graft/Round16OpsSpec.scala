@@ -41,11 +41,11 @@ class Round16OpsSpec extends SparkSpec {
     val got = SimilarityOps.knnGraphUpserted(emb, batch, deletes,
       srcDir = s"$sf/embeddings.parquet", outDir = dir,
       probeIds = probes, k = 3)
-      .collect().map(_.toString).toSeq
+      .orderBy("q_id", "rn").collect().map(_.toString).toSeq
     val want = SimilarityOps.knnGraphExactWithPlanes(
       SimilarityOps.upsertedCorpus(emb, batch, deletes), emb,
       probeIds = probes, k = 3)
-      .collect().map(_.toString).toSeq
+      .orderBy("q_id", "rn").collect().map(_.toString).toSeq
     assert(got == want)
     // the three batch species actually reached the output
     val merged = SimilarityOps.upsertedCorpus(emb, batch, deletes)
@@ -64,9 +64,9 @@ class Round16OpsSpec extends SparkSpec {
       emb.filter(lit(false)).select("vec_id"),
       srcDir = s"$sf/embeddings.parquet", outDir = dir,
       probeIds = probes, k = 3)
-      .collect().map(_.toString).toSeq
+      .orderBy("q_id", "rn").collect().map(_.toString).toSeq
     val want = SimilarityOps.knnGraphExact(emb, probes, k = 3)
-      .collect().map(_.toString).toSeq
+      .orderBy("q_id", "rn").collect().map(_.toString).toSeq
     assert(got == want)
   }
 

@@ -43,11 +43,12 @@ class Round17OpsSpec extends SparkSpec {
     val noDel = emb.filter(lit(false)).select("vec_id")
     val withHint = SimilarityOps.knnGraphUpserted(emb, batch, noDel,
       srcDir = s"$sf/embeddings.parquet", outDir = d1,
-      probeIds = probes, k = 3).collect().map(_.toString).toSeq
+      probeIds = probes, k = 3).orderBy("q_id", "rn")
+      .collect().map(_.toString).toSeq
     val without = SimilarityOps.knnGraphUpserted(emb, batch, noDel,
       srcDir = s"$sf/embeddings.parquet", outDir = d2,
       probeIds = probes, k = 3, broadcastBatch = false)
-      .collect().map(_.toString).toSeq
+      .orderBy("q_id", "rn").collect().map(_.toString).toSeq
     assert(withHint == without)
   }
 
@@ -342,7 +343,8 @@ class Round17OpsSpec extends SparkSpec {
     val first = serve().collect().map(_.toString).toSeq
     val want = SimilarityOps.knnGraphUpserted(emb, batch, noDel,
       srcDir = s"$sf/embeddings.parquet", outDir = outDir,
-      probeIds = probes, k = 3).collect().map(_.toString).toSeq
+      probeIds = probes, k = 3).orderBy("q_id", "rn")
+      .collect().map(_.toString).toSeq
     assert(first.nonEmpty && first == want)
     def mtimes() = {
       val d = new java.io.File(s"$genDir/edges")

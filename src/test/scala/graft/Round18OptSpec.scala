@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupOps, SimilarityOps}
+import graft.operators.DedupOps
 
-/** Round-18 optimization pins (OPTIMIZATION_r18.md changes 2 and 5):
+/** Round-18 optimization pins (OPTIMIZATION_r18.md change 2):
   * structural guarantees of the optimized internals that behavioral
   * equality specs alone would not catch regressing.
   */
@@ -24,16 +24,5 @@ class Round18OptSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 51 && got.forall(_._2 == 0L),
       "star graph must collapse to cluster 0 within maxIter = 1")
-  }
-
-  test("kNN unsorted twins return exactly the sorted public relations") {
-    val emb = Tables.embeddings(spark, dir)
-    val probes = Seq(0L, 1L, 2L, 3L)
-    val sorted = SimilarityOps.knnGraphExact(emb, probes, k = 3)
-      .collect().map(_.toSeq).toSet
-    val unsorted = SimilarityOps.knnGraphExactUnsorted(emb, probes, k = 3)
-      .collect().map(_.toSeq).toSet
-    assert(sorted == unsorted && sorted.nonEmpty,
-      "knnGraphExactUnsorted must be knnGraphExact minus only the sort")
   }
 }
