@@ -21,6 +21,13 @@ import org.apache.spark.storage.StorageLevel
   * prunes unused wiki columns against the final projection, and picks
   * broadcast-hash for the (small) kaggle/pivot sides — so the same code
   * scales from the 12-record fixture to a multi-TB crawl.
+  *
+  * Only the wiki JSON is read with schema inference, because its key set
+  * is data-driven. The kaggle and ratings CSVs have declared layouts
+  * ([[readKaggle]], [[readRatings]]), so the output schema does not
+  * depend on the values and no inference job runs. The kaggle flags are
+  * tested without `lower`, so a pass loads no ICU case-mapping tables
+  * (see [[cleanKaggle]]), and the ratings pivot is one aggregate.
   */
 object MoviesEtl {
 
@@ -53,12 +60,31 @@ object MoviesEtl {
   def readWikiJson(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", true).json(path)
 
-  /** A2 — the kaggle metadata CSV, with schema inference (its inferred
-    * types flow into the output) and pandas-like mixed-type tolerance
-    * (PERMISSIVE). The A3 ratings CSV is read by [[readRatings]].
+  /** A CSV read with schema inference and pandas-like mixed-type
+    * tolerance (PERMISSIVE). The pipeline does not use it: inference
+    * costs two jobs per read and lets the values choose the column types.
+    * It is kept for perfbench's stage probes, which time this read.
     */
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", true).option("inferSchema", true)
+      .option("mode", "PERMISSIVE").csv(path)
+
+  /** The 24 columns of the kaggle `movies_metadata.csv`, in file order. */
+  private val KaggleSchema: StructType = StructType(Seq(
+    "adult", "belongs_to_collection", "budget", "genres", "homepage", "id",
+    "imdb_id", "original_language", "original_title", "overview",
+    "popularity", "poster_path", "production_companies",
+    "production_countries", "release_date", "revenue", "runtime",
+    "spoken_languages", "status", "tagline", "title", "video",
+    "vote_average", "vote_count").map(StructField(_, StringType)))
+
+  /** A2 — the kaggle metadata CSV with its declared layout, every column
+    * a string; [[cleanKaggle]] types the kept ones. No inference job runs,
+    * and a shifted or malformed row (PERMISSIVE) cannot change a column's
+    * type: its missing fields read as null and its extra ones are dropped.
+    */
+  def readKaggle(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(KaggleSchema).option("header", true)
       .option("mode", "PERMISSIVE").csv(path)
 
   /** The fixed MovieLens `ratings.csv` layout. */
@@ -128,47 +154,57 @@ object MoviesEtl {
         parsers.map { case (raw, out, parse) => parse(col(s"`$raw`")).as(out) }): _*)
   }
 
-  /** Kaggle cleanup (B6/H10/H11): drop adult rows+column, bool-ify
-    * `video`, numeric casts (ANSI cast ≡ errors='raise').
+  /** Kaggle cleanup (B6/H10/H11): drop adult rows and the column,
+    * bool-ify `video`, and type every kept numeric or date column:
+    * `kaggle_id` and `vote_count` int; `runtime`, `budget`, `revenue`,
+    * `popularity` and `vote_average` double; `release_date` date. The
+    * output schema is the same whether the input is [[readKaggle]]'s
+    * strings or [[readCsv]]'s inferred types.
+    *
+    * The flags match the reference's `'False'`/`'True'` in any ASCII case
+    * ([[Cleaning.stringFlagToBool]]), without `lower` and its ICU start-up.
+    * Values go through `try_cast`, so one that does not parse is null, as
+    * PERMISSIVE inference made it. An int column reads through double, so
+    * the whole-number spelling `12.0` (how the reference file writes its
+    * counts) is 12; a fraction truncates.
     */
   def cleanKaggle(kaggle: DataFrame): DataFrame = {
+    def flag(c: String, word: String): Column =
+      Cleaning.stringFlagToBool(col(c).cast(StringType), word)
+    def double(c: String): Column = col(c).try_cast(DoubleType)
+    def int(c: String): Column = double(c).try_cast(IntegerType)
     val retyped = Map(
-      "video" -> (lower(col("video").cast(StringType)) === "true"),
-      "runtime" -> col("runtime").cast(DoubleType),
-      "revenue" -> col("revenue").cast(DoubleType),
-      "popularity" -> col("popularity").cast(DoubleType))
+      "video" -> flag("video", "true"),
+      "runtime" -> double("runtime"),
+      "revenue" -> double("revenue"),
+      "popularity" -> double("popularity"),
+      "vote_average" -> double("vote_average"),
+      "vote_count" -> int("vote_count"))
     val renamed = Seq(
-      col("id").cast(IntegerType).as("kaggle_id"),
-      col("budget").cast(DoubleType).as("budget_kaggle"),
-      col("release_date").cast(DateType).as("release_date_kaggle"))
+      int("id").as("kaggle_id"),
+      double("budget").as("budget_kaggle"),
+      col("release_date").try_cast(DateType).as("release_date_kaggle"))
     val dropped = Set("adult", "id", "budget", "release_date")
     kaggle
-      // reference: kaggle['adult'] == 'False'; inferSchema may have read
-      // the flag as BooleanType already, so compare case-insensitively
-      .filter(lower(col("adult").cast(StringType)) === "false")
+      .filter(flag("adult", "false")) // reference: kaggle['adult'] == 'False'
       .select((kaggle.columns.toSeq.filterNot(dropped.contains).map(c =>
         retyped.get(c).fold(col(s"`$c`"))(_.as(c))) ++ renamed): _*)
   }
 
-  /** D1+D2+D7 — MovieLens rating counts pivoted wide per movie. The
-    * buckets match `rating` cast to string, so `rating` must be a double
-    * (as [[readRatings]] declares it): an integer `4` would print as `"4"`.
+  /** D1+D2+D7 — MovieLens rating counts per movie, one column per star
+    * bucket: the reference's pivot, written as one aggregate of ten
+    * `count_if`s (a `pivot` adds a second aggregation and a job). A bucket
+    * with no rating counts 0, and a rating off the grid or null counts in
+    * none. The buckets match `rating` cast to string, so `rating` must be
+    * a double (as [[readRatings]] declares it): an integer `4` would print
+    * as `"4"`.
     */
   def ratingCounts(ratings: DataFrame): DataFrame = {
     val values = Seq("0.5", "1.0", "1.5", "2.0", "2.5", "3.0", "3.5", "4.0", "4.5", "5.0")
-    ratings
-      .groupBy("movieId")
-      .pivot(col("rating").cast(StringType), values)
-      .agg(count(lit(1)))
-      .select(col("movieId") +: values.map(v => zeroFilled(v, s"rating_$v")): _*)
+    val rating = col("rating").cast(StringType)
+    val counts = values.map(v => count_if(rating === v).as(s"rating_$v"))
+    ratings.groupBy("movieId").agg(counts.head, counts.tail: _*)
   }
-
-  /** D7 — `fillna(0)` for a pivot column. `na.fill` mis-parses the
-    * reference-faithful dotted names (`rating_0.5`) as nested fields, so
-    * fill via coalesce with a backtick-quoted ref.
-    */
-  private def zeroFilled(c: String, as: String): Column =
-    coalesce(col(s"`$c`"), lit(0L)).as(as)
 
   /** C1 + B7 + H12 + B2/H13 — merge wiki and kaggle frames, drop
     * out-of-range outliers, fill kaggle zeros from wiki, curate columns.
@@ -213,14 +249,16 @@ object MoviesEtl {
   }
 
   /** C2 + D7 — left-merge pivoted rating counts onto movies, zero-fill
-    * movies with no ratings.
+    * movies with no ratings (`fillna(0)`). `na.fill` mis-parses the
+    * reference-faithful dotted names (`rating_0.5`) as nested fields, so
+    * fill via coalesce with a backtick-quoted ref.
     */
   def withRatings(movies: DataFrame, ratingCountsDf: DataFrame): DataFrame = {
     val ratingCols = ratingCountsDf.columns.filter(_.startsWith("rating_")).toSet
     val joined = movies.join(broadcast(ratingCountsDf),
       movies("kaggle_id") === ratingCountsDf("movieId"), "left")
     joined.select(joined.columns.toSeq.filter(_ != "movieId").map(c =>
-      if (ratingCols(c)) zeroFilled(c, c) else col(s"`$c`")): _*)
+      if (ratingCols(c)) coalesce(col(s"`$c`"), lit(0L)).as(c) else col(s"`$c`")): _*)
   }
 
   final case class Result(movies: DataFrame, moviesWithRatings: DataFrame)
@@ -239,7 +277,7 @@ object MoviesEtl {
   def extractTransformLoad(spark: SparkSession, wikiPath: String,
                            kagglePath: String, ratingsPath: String): Result = {
     val wiki = wikiMovies(spark, wikiPath)
-    val kaggle = cleanKaggle(readCsv(spark, kagglePath))
+    val kaggle = cleanKaggle(readKaggle(spark, kagglePath))
     val movies = mergeMovies(wiki, kaggle)
     Result(movies, withRatings(movies, ratingCounts(readRatings(spark, ratingsPath))))
   }
@@ -281,7 +319,7 @@ object MoviesEtl {
       }
     val wiki = wikiMovies(spark, wikiPath)
     completed += "wiki_extract_transform"
-    val movies = stage("kaggle_clean")(cleanKaggle(readCsv(spark, kagglePath)))
+    val movies = stage("kaggle_clean")(cleanKaggle(readKaggle(spark, kagglePath)))
       .flatMap(k => stage("merge_movies")(mergeMovies(wiki, k)))
       .getOrElse(wiki)
     val withR = stage("ratings_read")(readRatings(spark, ratingsPath))

@@ -125,8 +125,19 @@ object Cleaning {
   def fillZeroSentinel(kaggleCol: Column, wikiCol: Column): Column =
     when(kaggleCol === 0, wikiCol).otherwise(kaggleCol)
 
-  /** H11 — `'True'`/`'False'` string flag → boolean. */
-  def stringFlagToBool(c: Column): Column = c === "True"
+  /** H11 — `'True'`/`'False'` string flag test: true when `c` spells
+    * `flag` in any ASCII letter case (`True`, `TRUE`), false for any other
+    * string, null for null. For a lowercase ASCII `flag` this equals
+    * `lower(c) === flag` without evaluating `lower`, which Spark 4 runs
+    * through ICU, whose case-mapping tables take over a second to load on
+    * first use in a JVM. The regex folds ASCII case only (no
+    * `UNICODE_CASE`), and `\z` rejects the trailing newline `$` would
+    * accept. The two forms cannot differ on `true` or `false`: the only
+    * non-ASCII characters whose ICU lowercase holds an ASCII letter are
+    * `İ` (to `i̇`, two characters) and the Kelvin sign (to `k`).
+    */
+  def stringFlagToBool(c: Column, flag: String): Column =
+    c.rlike("^(?i:" + java.util.regex.Pattern.quote(flag) + ")\\z")
 
   // --- dataframe-level helpers ---
 

@@ -136,7 +136,21 @@ class CleaningSpec extends SparkSpec {
 
   test("stringFlagToBool") {
     val df = Seq("True", "False").toDF("s")
-      .select(Cleaning.stringFlagToBool(col("s")).as("v"))
+      .select(Cleaning.stringFlagToBool(col("s"), "true").as("v"))
     assert(df.collect().map(_.getBoolean(0)).toSeq == Seq(true, false))
+  }
+
+  test("stringFlagToBool equals lower(x) === flag on case, space and non-ASCII inputs") {
+    // U+0130 lowers to "i̇" and the Kelvin sign U+212A to "k": the only
+    // non-ASCII code points whose lowercase holds an ASCII letter
+    val inputs = Seq("False", "FALSE", "fAlSe", " false", "false ", "false\n",
+      "fals\u00e9", "\u0130", "\u212A", "", null, "True", "tRUE", "true")
+    val df = inputs.toDF("s")
+    for (flag <- Seq("false", "true")) {
+      val rows = df.select(col("s"), Cleaning.stringFlagToBool(col("s"), flag),
+        lower(col("s")) === flag).collect()
+      rows.foreach(r => assert(r.get(1) == r.get(2), s"flag $flag on ${r.get(0)}"))
+      assert(rows.count(r => r.get(1) == true) == 3, s"flag $flag")
+    }
   }
 }

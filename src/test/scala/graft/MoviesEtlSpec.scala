@@ -2,7 +2,9 @@ package graft
 
 import graft.etl.MoviesEtl
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
 /** End-to-end golden test of the reference pipeline shape on the
@@ -71,12 +73,57 @@ class MoviesEtlSpec extends SparkSpec {
     assert(kappa.getAs[Double]("budget") == 1.5e8)      // kaggle 150M (non-zero)
   }
 
-  test("curated schema has the reference's final column names") {
+  private val Buckets = Seq("0.5", "1.0", "1.5", "2.0", "2.5", "3.0", "3.5", "4.0", "4.5", "5.0")
+
+  private def assertPinnedSchemas(r: MoviesEtl.Result): Unit = {
     // pinned exactly: column order, types and nullability
-    assert(schemaOf(result.movies) == MoviesSchema)
-    val buckets = Seq("0.5", "1.0", "1.5", "2.0", "2.5", "3.0", "3.5", "4.0", "4.5", "5.0")
-    assert(schemaOf(result.moviesWithRatings) ==
-      MoviesSchema ++ buckets.map(b => (s"rating_$b", "bigint", false)))
+    assert(schemaOf(r.movies) == MoviesSchema)
+    assert(schemaOf(r.moviesWithRatings) ==
+      MoviesSchema ++ Buckets.map(b => (s"rating_$b", "bigint", false)))
+  }
+
+  private def writeLines(name: String, lines: Seq[String]): String = {
+    val path = java.nio.file.Files.createTempDirectory("movies_etl").resolve(name)
+    java.nio.file.Files.write(path, java.util.Arrays.asList(lines: _*))
+    path.toString
+  }
+
+  test("curated schema has the reference's final column names") {
+    assertPinnedSchemas(result)
+  }
+
+  test("the pinned schemas hold on a kaggle file with a 12.0 count and a shifted row") {
+    val src = scala.io.Source.fromFile(fixture("movies_metadata.csv"))
+    val fixtureLines = try src.getLines().toList finally src.close()
+    // the reference file's shifted rows: overview text spills into
+    // `adult`, a poster path into `budget`, and the row ends early
+    val shifted = "\" - Written by Someone\",0.065736,/poster.jpg," +
+      "\"[{'id': 18, 'name': 'Drama'}]\",,105,tt0000002"
+    val kaggle = writeLines("movies_metadata.csv", fixtureLines.map(l =>
+      if (l.contains("tt0000012")) l.stripSuffix(",12") + ",12.0" else l) :+ shifted)
+    for (r <- Seq(
+      MoviesEtl.extractTransformLoad(spark, fixture("wiki_movies.json"), kaggle,
+        fixture("ratings.csv")),
+      MoviesEtl.extractTransformLoadResilient(spark, fixture("wiki_movies.json"), kaggle,
+        fixture("ratings.csv")).result)) {
+      assertPinnedSchemas(r)
+      assert(r.movies.count() == 8)
+      // the whole-number spelling keeps its count
+      val lambda = r.movies.filter(col("imdb_id") === "tt0000012").collect()(0)
+      assert(lambda.getAs[Int]("vote_count") == 12)
+    }
+  }
+
+  test("no case-mapping expression in the optimized plans of either entry point") {
+    val resilient = MoviesEtl.extractTransformLoadResilient(spark,
+      fixture("wiki_movies.json"), fixture("movies_metadata.csv"), fixture("ratings.csv"))
+    for (df <- Seq(result.movies, result.moviesWithRatings,
+      resilient.result.movies, resilient.result.moviesWithRatings)) {
+      val found = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: Lower | _: Upper | _: InitCap) => e.prettyName
+      }))
+      assert(found.isEmpty)
+    }
   }
 
   test("writer consolidation merges the four source spellings") {
@@ -124,6 +171,27 @@ class MoviesEtlSpec extends SparkSpec {
     assert(alpha.getAs[Long]("rating_0.5") == 0L)
     val lambda = wr.filter(col("imdb_id") === "tt0000012").collect()(0)
     assert(lambda.getAs[Long]("rating_5.0") == 1L)
+  }
+
+  test("ratingCounts equals the pivot it replaced, off-grid and null ratings included") {
+    val ratings = MoviesEtl.readRatings(spark, writeLines("ratings.csv", Seq(
+      "userId,movieId,rating,timestamp",
+      "1,201,4.0,1", "2,201,0.0,2", "3,201,5.5,3", "4,201,,4", "5,201,4.0,5",
+      "6,202,0.5,6", "7,202,5.0,7",
+      "8,203,0.0,8", "9,203,5.5,9", "10,203,,10")))
+    val pivoted = ratings.groupBy("movieId")
+      .pivot(col("rating").cast(StringType), Buckets)
+      .agg(count(lit(1)))
+      .select(col("movieId") +: Buckets.map(v =>
+        coalesce(col(s"`$v`"), lit(0L)).as(s"rating_$v")): _*)
+    val got = MoviesEtl.ratingCounts(ratings)
+    assert(schemaOf(got) == schemaOf(pivoted))
+    assert(got.exceptAll(pivoted).isEmpty && pivoted.exceptAll(got).isEmpty)
+    assert(got.count() == 3)
+    // the movie rated only off the grid is there, with every bucket 0
+    val offGrid = got.filter(col("movieId") === 203).collect()(0)
+    assert(Buckets.forall(b => offGrid.getAs[Long](s"rating_$b") == 0L))
+    assert(got.filter(col("movieId") === 201).collect()(0).getAs[Long]("rating_4.0") == 2L)
   }
 
   test("moviesWithRatings preserves movie count (left join)") {
