@@ -9,10 +9,10 @@ appends to lambda variable names (`x_42`) depend on how many
 expressions the session built before, so both are masked before the
 compare. So are the group numbering and the column order of Spark's
 distinct-aggregate rewrite (the `gid` Expand under `countDistinct`),
-which follow hash order and differ between sessions. Prints every key added in B, removed from A, or whose masked
-plan changed (with the first differing line of each side). Exits 0
-when every key's masked plan is identical, 1 on any difference, 2 on
-bad usage.
+which follow hash order and differ between sessions. Prints every key
+added in B, removed from A, or whose masked plan changed (with the
+first differing line of each side). Exits 0 when every key's masked
+plan is identical, 1 on any difference, 2 on bad usage.
 """
 import json
 import re
