@@ -5607,7 +5607,7 @@ object Queries {
         WHERE prev_n = 3 AND cnt * 100 * prev_n > 300 * prev_sum
         ORDER BY event_type, hour""")),
 
-    // Point-in-time correct join (EventOps.pointInTimeJoin): facts
+    // Point-in-time correct join: facts
     // enriched with the dimension VERSION valid at their timestamp —
     // the leak-free versioned enrichment (joining today's attributes
     // onto last year's facts is the classic training-data bug). The
@@ -8399,10 +8399,9 @@ object Queries {
     // The 25k budget sits the per-domain epochs_q8 ASTRIDE 256 at
     // sf0.01, so both execution regimes — subsampled domains dropping
     // docs (repeats 0) and oversampled domains repeating them — are
-    // live in the audited values. Stateless per doc — the streaming
-    // twin (StreamingOps.priceScheduleStream) is append-safe with no
-    // state store; stream/batch parity is spec-pinned. Oracle = the
-    // shared reweight CTEs + one token rollup + the portable md5 draw.
+    // live in the audited values. Stateless per doc, so each arriving
+    // batch prices independently. Oracle = the shared reweight CTEs +
+    // one token rollup + the portable md5 draw.
     Declared("q_schedule_price",
       (s, d) => {
         val docs = documents(s, d)

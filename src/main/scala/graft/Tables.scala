@@ -102,22 +102,6 @@ object Tables {
     }
   }
 
-  /** Events across a MIXED-generation lake: each directory may carry a
-    * different parquet timestamp encoding (a 100 TB lake accumulates
-    * TIMESTAMP(NANOS) partitions from one writer generation next to
-    * TIMESTAMP(MICROS) from another — exactly the drift the harness
-    * itself exhibited between rounds 7 and 8). One `spark.read` cannot
-    * span them (int64 vs timestamp schemas don't merge), so the unit of
-    * encoding uniformity is the directory: read + normalize each, then
-    * `unionByName`. Each branch stays an independent pushdown-capable
-    * parquet scan — the union is plan-level, not a materialization, so
-    * filters on the union still prune per-branch.
-    */
-  def eventsLake(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    require(dirs.nonEmpty, "eventsLake: at least one directory")
-    dirs.map(events(spark, _)).reduce(_.unionByName(_))
-  }
-
   /** All table names under a data dir. */
   val Names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")

@@ -12,9 +12,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * Stage trace mirrors the reference's E1 lifecycle: JSON extract →
   * record filter → clean_movie (rename/alt-titles) → imdb-id extract →
-  * dedup → null-ratio prune → money/date/runtime parsing → kaggle
-  * cleanup → merge → outlier drop → zero-sentinel fills → column
-  * curation → ratings pivot → left merge + zero fill → load.
+  * dedup → money/date/runtime parsing → kaggle cleanup → merge →
+  * outlier drop → zero-sentinel fills → column curation → ratings pivot
+  * → left merge + zero fill → load. The reference's null-ratio column
+  * prune is not a stage: the column curation names every kept column,
+  * and Catalyst's projection pruning drops the unused wiki columns.
   *
   * Unlike the eager row-at-a-time reference, every stage here is a plan
   * fragment: Catalyst fuses the scalar stages into one codegen'd pass,
@@ -330,9 +332,7 @@ object MoviesEtl {
 
   /** A6/A7 — load stage: parquet sink (overwrite ≡ if_exists='replace');
     * `jdbcUrl` switches to a JDBC sink when a database is reachable.
-    * Both sinks overwrite for idempotent re-runs; the reference's
-    * chunked-append semantics live in
-    * [[graft.streaming.StreamingOps.chunkedLoad]].
+    * Both sinks overwrite for idempotent re-runs.
     *
     * `moviesWithRatings` extends `movies`, so `movies` is cached for the
     * two writes and the second one reads it instead of re-parsing and

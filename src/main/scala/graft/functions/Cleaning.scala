@@ -25,9 +25,6 @@ object Cleaning {
 
   private val MoneyNum = "\\$\\s*\\d+\\.?\\d*\\s*"
 
-  /** `$ 123.4 milli?on|billi?on` (typo-tolerant, case-insensitive). */
-  val MoneyFormWord: String = MoneyNum + "[mb]illi?on"
-
   /** `$ 123,456,789` (or dot-grouped), not followed by ` million`. */
   val MoneyFormPlain = "\\$\\s*\\d{1,3}(?:[,\\.]\\d{3})+(?!\\s[mb]illi?on)"
 
@@ -196,23 +193,5 @@ object Cleaning {
       val kept = df.columns.toSeq.filterNot(c => c == mapCol || live.contains(c))
       df.select(kept.map(c => col(s"`$c`")) :+ m.as(mapCol): _*)
     }
-  }
-
-  /** B4 — dynamic null-ratio pruning: keep columns whose null fraction is
-    * below `threshold`. One tiny aggregate row comes to the driver (the
-    * column list is bounded by schema width, not data size — safe at any
-    * scale); the projection itself stays distributed.
-    */
-  def pruneMostlyNullColumns(df: DataFrame, threshold: Double = 0.9): DataFrame = {
-    val counts = df.select(
-      (count(lit(1)).as("__total__") +:
-        df.columns.toIndexedSeq.map(c => count(col(s"`$c`")).as(c))): _*
-    ).head()
-    val total = counts.getAs[Long]("__total__")
-    val keep = df.columns.filter { c =>
-      val nonNull = counts.getAs[Long](c)
-      total == 0 || (total - nonNull).toDouble / total < threshold
-    }
-    df.select(keep.toIndexedSeq.map(c => col(s"`$c`")): _*)
   }
 }

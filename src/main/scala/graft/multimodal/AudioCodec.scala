@@ -2,27 +2,15 @@ package graft.multimodal
 
 /** REAL pure-JVM audio codec (round 5): RIFF/WAVE PCM (8-bit unsigned and
   * 16-bit signed little-endian — the canonical uncompressed WAV layouts)
-  * parses to true sample rate / channel count / duration plus a
-  * deterministic amplitude histogram. Compressed or malformed payloads
-  * return None and callers fall back to [[MultimodalOps.decodeStub]] —
-  * the same codec boundary as [[ImageCodec]]: more formats appear behind
-  * it, the Spark-side plumbing never changes.
+  * parses to a deterministic amplitude-envelope fingerprint. Compressed
+  * or malformed payloads return None — the same codec boundary as
+  * [[ImageCodec]]: more formats appear behind it, the Spark-side
+  * plumbing never changes.
   *
   * Everything is integer arithmetic over the raw PCM words, so the
-  * decoded features are bit-deterministic across JVMs and partitions.
+  * fingerprint is bit-deterministic across JVMs and partitions.
   */
 object AudioCodec {
-
-  /** Decoded audio + the deterministic sample-level feature used by
-    * [[MultimodalOps.extractFeatures]].
-    */
-  final case class DecodedAudio(
-      sampleRate: Int,
-      channels: Int,
-      bitsPerSample: Int,
-      nFrames: Long,
-      durationMs: Long,
-      amplitudeHistogram: Array[Double])
 
   /** Cheap signature sniff: RIFF container declaring a WAVE form. */
   def looksDecodable(payload: Array[Byte]): Boolean =
@@ -38,76 +26,6 @@ object AudioCodec {
     (p(o) & 0xFF) | ((p(o + 1) & 0xFF) << 8) |
       ((p(o + 2) & 0xFF) << 16) | ((p(o + 3) & 0xFF) << 24)
 
-  /** Decode a PCM WAV: walk the RIFF chunk list (word-aligned, per spec),
-    * read `fmt `, then histogram the `data` samples — 16 equal-width
-    * amplitude bins normalized by sample count (mono and multi-channel
-    * samples all land in the same histogram). None for non-PCM encodings,
-    * unsupported bit depths, or any structural inconsistency (truncated
-    * chunk, data before fmt, zero-rate header).
-    */
-  def decode(payload: Array[Byte]): Option[DecodedAudio] =
-    if (!looksDecodable(payload)) None
-    else
-      try {
-        var off = 12
-        var audioFormat, channels, sampleRate, blockAlign, bits = 0
-        var haveFmt = false
-        var result: Option[DecodedAudio] = None
-        var corrupt = false
-        while (!corrupt && result.isEmpty && off + 8 <= payload.length) {
-          val id = new String(payload, off, 4, "US-ASCII")
-          val size = le32(payload, off + 4)
-          if (size < 0 || off + 8 + size > payload.length) corrupt = true
-          else {
-            if (id == "fmt ") {
-              if (size < 16) corrupt = true
-              else {
-                audioFormat = le16(payload, off + 8)
-                channels = le16(payload, off + 10)
-                sampleRate = le32(payload, off + 12)
-                blockAlign = le16(payload, off + 20)
-                bits = le16(payload, off + 22)
-                haveFmt = true
-              }
-            } else if (id == "data") {
-              if (!haveFmt || audioFormat != 1 /* PCM */ ||
-                channels <= 0 || sampleRate <= 0 || blockAlign <= 0 ||
-                (bits != 8 && bits != 16) || size % blockAlign != 0)
-                corrupt = true
-              else {
-                val hist = new Array[Double](16)
-                val base = off + 8
-                var n = 0L
-                if (bits == 8) {
-                  var i = 0
-                  while (i < size) {
-                    // 8-bit WAV is UNSIGNED: 0..255 → 16 bins of 16
-                    hist((payload(base + i) & 0xFF) >> 4) += 1.0
-                    i += 1; n += 1
-                  }
-                } else {
-                  var i = 0
-                  while (i + 1 < size) {
-                    // 16-bit signed LE: −32768..32767 → shift to unsigned
-                    // then 16 bins of 4096
-                    val s = le16(payload, base + i).toShort
-                    hist((s + 32768) >> 12) += 1.0
-                    i += 2; n += 1
-                  }
-                }
-                var b = 0
-                while (b < 16) { hist(b) /= n; b += 1 }
-                val frames = size.toLong / blockAlign
-                result = Some(DecodedAudio(sampleRate, channels, bits, frames,
-                  frames * 1000L / sampleRate, hist))
-              }
-            }
-            off += 8 + size + (size & 1) // RIFF chunks are 2-byte aligned
-          }
-        }
-        result
-      } catch { case _: Exception => None } // corrupt payload ⇒ stub path
-
   /** 64-bit acoustic fingerprint — the audio twin of
     * [[ImageCodec.dHash]]: slice the PCM stream into 65 equal frames,
     * sum each frame's absolute amplitude (integer — |sample| around the
@@ -122,8 +40,8 @@ object AudioCodec {
     * ~2·10¹⁸ overflow headroom (2³¹ samples × 2¹⁵ amplitude).
     *
     * None for undecodable payloads or streams shorter than 65 samples
-    * (no meaningful envelope). Same codec-boundary contract as
-    * [[decode]]: callers route None to byte-level exact dedup.
+    * (no meaningful envelope), so callers route None to byte-level
+    * exact dedup.
     */
   def fingerprint(payload: Array[Byte]): Option[Long] =
     if (!looksDecodable(payload)) None

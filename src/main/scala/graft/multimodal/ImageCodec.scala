@@ -6,11 +6,10 @@ import javax.imageio.ImageIO
 
 /** REAL pure-JVM image codec (rounds 5–6): PNG, JPEG, GIF, BMP — the
   * formats the JRE's `javax.imageio` SPI registry ships readers for —
-  * decode to true pixels; formats the JVM can't decode return None and
-  * callers fall back to [[MultimodalOps.decodeStub]]. This retires the
-  * decode stub for the decodable set while keeping the codec BOUNDARY
-  * identical — the Spark-side plumbing (schema, per-partition batching,
-  * null passthrough) never changes when more codecs appear behind it.
+  * decode to true pixels; formats the JVM can't decode return None. The
+  * codec BOUNDARY is fixed — the Spark-side plumbing (schema,
+  * per-partition batching, null passthrough) never changes when more
+  * codecs appear behind it.
   *
   * Everything here is executor-side, driver-free, and allocation-bounded
   * per image; determinism holds because PNG/GIF/BMP decoding is lossless,
@@ -18,11 +17,6 @@ import javax.imageio.ImageIO
   * integer.
   */
 object ImageCodec {
-
-  /** Decoded image + the deterministic pixel-level feature used by
-    * [[MultimodalOps.extractFeatures]].
-    */
-  final case class Decoded(width: Int, height: Int, lumaHistogram: Array[Double])
 
   /** Once-per-partition codec init: disable ImageIO's disk-backed stream
     * cache (a tmp-file write per image would thrash executor-local disk
@@ -46,36 +40,6 @@ object ImageCodec {
         (payload(0) == 'G' && payload(1) == 'I' && payload(2) == 'F') ||
         (payload(0) == 'B' && payload(1) == 'M'))
 
-  /** Decode to true dimensions + a 16-bin integer-luminance histogram
-    * (Rec.601 weights, normalized by pixel count). None if the payload
-    * is not a JVM-decodable image.
-    */
-  def decode(payload: Array[Byte]): Option[Decoded] =
-    if (!looksDecodable(payload)) None
-    else
-      try {
-        Option(ImageIO.read(new ByteArrayInputStream(payload))).map { img =>
-          val (w, h) = (img.getWidth, img.getHeight)
-          val hist = new Array[Double](16)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              val lum = (299 * ((rgb >> 16) & 0xFF) + 587 * ((rgb >> 8) & 0xFF) +
-                114 * (rgb & 0xFF)) / 1000
-              hist(lum / 16) += 1.0
-              x += 1
-            }
-            y += 1
-          }
-          val n = w.toLong * h
-          var i = 0
-          while (i < 16) { hist(i) /= n; i += 1 }
-          Decoded(w, h, hist)
-        }
-      } catch { case _: Exception => None }   // corrupt payload ⇒ stub path
-
   /** Perceptual difference hash (dHash, round 7): decode, box-average
     * luminance onto a 9×8 grid, emit bit (y·8+x) = 1 iff cell (x,y) is
     * brighter than its right neighbor (x+1,y) — 64 bits of horizontal
@@ -88,8 +52,7 @@ object ImageCodec {
     * Determinism: box bounds are integer floor(g·dim/grid) picks, the
     * per-cell average is an integer Rec.601 luma sum over an integer
     * pixel count — no float anywhere, so the hash is bit-stable across
-    * JVMs/platforms (same argument as [[resizePng]]'s nearest-neighbor
-    * pick). Box AVERAGING (not point sampling) is what buys JPEG-noise
+    * JVMs/platforms. Box AVERAGING (not point sampling) is what buys JPEG-noise
     * robustness: block artifacts cancel within a cell. None for
     * payloads the JVM can't decode — callers filter those out.
     */
@@ -138,35 +101,6 @@ object ImageCodec {
             by += 1
           }
           bits
-        }
-      } catch { case _: Exception => None }
-
-  /** Real resize: decode → nearest-neighbor rescale → re-encode as PNG.
-    * Nearest-neighbor (not bilinear) keeps the output bit-deterministic
-    * across JVMs — interpolation kernels may differ by platform, integer
-    * pixel picking cannot. None if the payload isn't decodable.
-    */
-  def resizePng(payload: Array[Byte], width: Int, height: Int): Option[Array[Byte]] =
-    if (!looksDecodable(payload)) None
-    else
-      try {
-        Option(ImageIO.read(new ByteArrayInputStream(payload))).map { img =>
-          val out = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < height) {
-            var x = 0
-            while (x < width) {
-              // integer source-pixel pick: floor(x * srcW / dstW)
-              out.setRGB(x, y, img.getRGB(
-                (x.toLong * img.getWidth / width).toInt,
-                (y.toLong * img.getHeight / height).toInt))
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new ByteArrayOutputStream()
-          ImageIO.write(out, "png", baos)
-          baos.toByteArray
         }
       } catch { case _: Exception => None }
 

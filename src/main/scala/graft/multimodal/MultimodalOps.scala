@@ -1,18 +1,15 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column handling (SURVEY.md §2 K L5): image/audio/video
   * payloads ride as opaque `BinaryType` columns with a typed metadata
-  * struct; decode / feature-extraction runs per-partition so one task
-  * amortizes codec init across its whole batch — the same shape a real
-  * decoder (via JNI/FFI or `mapInPandas` on the Python side) would use.
-  *
-  * The actual codecs are NOT in this environment, so [[decodeStub]] is a
-  * clearly-marked deterministic fake; everything around it — schema,
-  * partitioning, batch iteration, null passthrough — is real and tested.
+  * struct; decoding ([[ImageCodec.dHash]], [[AudioCodec.fingerprint]])
+  * runs per-partition so one task amortizes codec init across its whole
+  * batch — the same shape a real decoder (via JNI/FFI or `mapInPandas`
+  * on the Python side) would use.
   */
 object MultimodalOps {
 
@@ -30,125 +27,9 @@ object MultimodalOps {
     StructField("payload", BinaryType),
     StructField("meta", MetadataSchema)))
 
-  /** Feature schema produced by [[extractFeatures]]: width/height are the
-    * REAL decoded dimensions for payloads [[ImageCodec]] can decode;
-    * duration_ms is the REAL decoded duration for payloads [[AudioCodec]]
-    * can decode; all null for opaque formats (which fall back to the
-    * byte-histogram stub).
-    */
-  val FeatureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("n_bytes", LongType),
-    StructField("feature", ArrayType(DoubleType)),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-
-  /** STUB decoder — deterministic fake standing in for codecs NOT in this
-    * container (mp4/webp/…). Produces a 16-bin byte histogram
-    * normalized to [0,1] — stable across runs/partitions, so tests can
-    * assert on it. PNG/JPEG/GIF/BMP and WAV do NOT take this path
-    * anymore: [[ImageCodec]] (rounds 5–6) and [[AudioCodec]] really
-    * decode them (the codec boundary is unchanged — a production build
-    * adds real codecs alongside, the Spark plumbing never changes).
-    */
-  def decodeStub(payload: Array[Byte]): Array[Double] = {
-    val hist = new Array[Double](16)
-    if (payload != null && payload.nonEmpty) {
-      payload.foreach(b => hist((b & 0xFF) / 16) += 1.0)
-      var i = 0
-      while (i < 16) { hist(i) /= payload.length; i += 1 }
-    }
-    hist
-  }
-
-  /** Per-partition feature extraction: one iterator pass per task, codec
-    * state initialized once per partition (the `ImageIO.setUseCache`
-    * call in the partition head — a real JNI codec would allocate its
-    * context there the same way). Null payloads yield null features,
-    * mirroring how a decode failure is represented without poisoning the
-    * batch. Decodable images (PNG magic + a successful [[ImageCodec]]
-    * decode) emit their TRUE dimensions and a pixel-luminance histogram;
-    * decodable audio (RIFF/WAVE PCM via [[AudioCodec]]) emits its TRUE
-    * duration and an amplitude histogram; everything else keeps the
-    * byte-histogram stub with null dims/duration.
-    */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      ImageCodec.initPartition()   // once per task, not per row
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        if (payload == null) Row(id, null, null, null, null, null)
-        else ImageCodec.decode(payload) match {
-          case Some(img) =>
-            Row(id, payload.length.toLong, img.lumaHistogram.toSeq,
-              img.width, img.height, null)
-          case None => AudioCodec.decode(payload) match {
-            case Some(a) =>
-              Row(id, payload.length.toLong, a.amplitudeHistogram.toSeq,
-                null, null, a.durationMs)
-            case None =>
-              Row(id, payload.length.toLong, decodeStub(payload).toSeq,
-                null, null, null)
-          }
-        }
-      }
-    }
-    spark.createDataFrame(rdd, FeatureSchema)
-  }
-
-  /** "Resize" stub for OPAQUE formats: records the target dims in
-    * metadata and (deterministically) truncates the payload — the
-    * plumbing for a transcode whose codec isn't in the JVM: payload in,
-    * payload out, metadata updated in lockstep. PNG payloads should use
-    * [[resizeImages]], which really rescales pixels.
-    */
-  def resizeStub(media: DataFrame, width: Int, height: Int): DataFrame =
-    media.select(
-      col("media_id"),
-      // deterministic truncation keeps the bytes→bytes contract testable
-      // for formats with no JVM codec; see resizeImages for the real path
-      expr(s"substring(payload, 1, ${width * height})").as("payload"),
-      struct(
-        col("meta.media_type").as("media_type"),
-        col("meta.format").as("format"),
-        lit(width).as("width"),
-        lit(height).as("height"),
-        col("meta.duration_ms").as("duration_ms")).as("meta"))
-
-  /** REAL image resize (round 5): decode → nearest-neighbor rescale →
-    * re-encode, per partition, via [[ImageCodec.resizePng]]. Payloads the
-    * JVM cannot decode pass through with their ORIGINAL bytes and their
-    * metadata dims left null — a mixed-format corpus keeps flowing, and
-    * the caller can filter on `meta.width IS NULL` to find skips. Same
-    * executor-side batching contract as [[extractFeatures]].
-    */
-  def resizeImages(media: DataFrame, width: Int, height: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload", "meta").rdd.mapPartitions { it =>
-      ImageCodec.initPartition()
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        val meta = if (r.isNullAt(2)) null else r.getStruct(2)
-        def metaRow(w: java.lang.Integer, h: java.lang.Integer): Row =
-          if (meta == null) Row(null, null, w, h, null)
-          else Row(meta.get(0), meta.get(1), w, h, meta.get(4))
-        ImageCodec.resizePng(payload, width, height) match {
-          case Some(resized) => Row(id, resized, metaRow(width, height))
-          case None          => Row(id, payload, metaRow(null, null))
-        }
-      }
-    }
-    spark.createDataFrame(rdd, MediaSchema)
-  }
-
   /** Per-image perceptual hashes (round 7): media_id → 64-bit
     * [[ImageCodec.dHash]], null for payloads the JVM can't decode.
-    * Same codec-boundary contract as [[extractFeatures]] — one
-    * `mapPartitions` pass, codec init amortized per task, decode cost
+    * One `mapPartitions` pass, codec init amortized per task, decode cost
     * linear in pixels, output 16 bytes/row regardless of image size.
     */
   def imageDHashes(media: DataFrame): DataFrame = {
@@ -225,19 +106,6 @@ object MultimodalOps {
         .select(col("media_id").as("doc_id"), col("afp").as("simhash")),
       maxHamming, 64)
 
-  /** Frame-sampling stub for video: emit one row per sampled frame index
-    * (`explode` over a bounded sequence — the real pattern for
-    * frame-level fan-out, where each output row would carry the decoded
-    * frame bytes).
-    */
-  def sampleFrames(media: DataFrame, everyMs: Long): DataFrame =
-    media
-      .filter(col("meta.media_type") === "video" && col("meta.duration_ms").isNotNull)
-      .select(
-        col("media_id"),
-        explode(sequence(lit(0L), col("meta.duration_ms"), lit(everyMs)))
-          .as("frame_ts_ms"))
-
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -313,18 +181,6 @@ object MultimodalOps {
       }
     }
     spark.createDataFrame(rdd, MediaSchema)
-  }
-
-  /** Build a media frame from raw (id, bytes, type, format) tuples — the
-    * ingest path a binary-file datasource (`spark.read.format
-    * ("binaryFile")`) would feed.
-    */
-  def fromBytes(spark: SparkSession, rows: Seq[(Long, Array[Byte], String, String)]): DataFrame = {
-    val data = rows.map { case (id, bytes, mt, fmt) =>
-      Row(id, bytes, Row(mt, fmt, null, null, if (mt == "video") 10000L else null))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(data), MediaSchema)
   }
 
   /** Materialize a media frame as one REAL file per row under `dir` —

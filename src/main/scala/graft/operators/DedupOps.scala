@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * is O(n²) in the corpus except the *verified candidate set*.
   *
   * Shared builders (word overlap, exact Jaccard gate, MinHash banding)
-  * sit after [[docWords]]; StreamingOps verifies through them too.
+  * sit after [[docWords]].
   */
 object DedupOps {
 
@@ -386,10 +386,10 @@ object DedupOps {
     * relation of a corpus's MinHash banding — numBands longs per doc
     * before dedup, independent of document length. This is the artifact
     * a continuous-ingest pipeline persists (and refreshes on corpus
-    * growth) so that batch [[dedupAgainstCorpus]] and streaming
-    * [[graft.streaming.StreamingOps.flagNearDupsStream]] probe the SAME
-    * band arithmetic the batch clustering pipelines use — one hash
-    * family, no drift between the index builder and either prober.
+    * growth) so that [[dedupAgainstCorpus]] and [[dedupAgainstIndex]]
+    * probe the SAME band arithmetic the batch clustering pipelines use —
+    * one hash family, no drift between the index builder and either
+    * prober.
     */
   def corpusBandIndex(corpus: DataFrame, numHashes: Int, rowsPerBand: Int,
                       seedHash: (Int, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
@@ -461,10 +461,8 @@ object DedupOps {
   }
 
   /** [[dedupAgainstCorpus]]'s flag decision computed from a PERSISTED
-    * index relation instead of the raw corpus — the batch prober of the
-    * `flag → accept → upsert` loop (its streaming twin probes the same
-    * relation in [[graft.streaming.StreamingOps
-    * .flagNearDupsStreamVerifiedIndexed]]). Accepts either
+    * index relation instead of the raw corpus — the prober of the
+    * `flag → accept → upsert` loop. Accepts either
     * [[corpusBandDocs]] (ids projected away) or [[corpusBandIndex]].
     * Same left-semi shape and scale stance as [[dedupAgainstCorpus]];
     * the index must have been built with the SAME (numHashes,
@@ -487,31 +485,9 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  /** The VERIFIED batch prober against PERSISTED index relations — the
-    * exact batch twin of [[graft.streaming.StreamingOps
-    * .flagNearDupsStreamVerifiedIndexed]]: band collisions against
-    * `corpusBandDocs` nominate candidates, candidate pairs dedup
-    * BEFORE the verify join (a true duplicate collides in most bands;
-    * verifying once per (doc, partner) pair, not per band), and only
-    * pairs passing the exact integer `jaccard ≥ minJaccardPct`
-    * merge-walk survive. Returns the flagged doc_ids — precision is
-    * exact, recall is the LSH candidate recall, identical to every
-    * batch verify pipeline. Same one-hash-family contract as
-    * [[dedupAgainstIndex]].
-    */
-  def flagAgainstIndexVerified(batch: DataFrame, corpusBandDocs: DataFrame,
-                               corpusSets: DataFrame,
-                               numHashes: Int, rowsPerBand: Int,
-                               minJaccardPct: Int,
-                               seedHash: (Int, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
-                                 XxSeedHash): DataFrame =
-    pairsAgainstIndexVerified(batch, corpusBandDocs, corpusSets, numHashes,
-      rowsPerBand, minJaccardPct, seedHash)
-      .select("doc_id").distinct()
-
-  /** The PAIR-valued form of [[flagAgainstIndexVerified]]: each
-    * verified (batch doc, corpus partner) pair as (doc_id, corpus_id),
-    * not just the flagged batch ids — the edges an incremental
+  /** The VERIFIED pair prober against PERSISTED index relations: each
+    * verified (batch doc, corpus partner) pair as (doc_id, corpus_id) —
+    * the edges an incremental
     * clustering step ([[incrementalComponents]]) folds into stored
     * cluster labels. Identical candidate nomination (band equi-join
     * against the persisted index), identical once-per-pair dedup and

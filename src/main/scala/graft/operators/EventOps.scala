@@ -14,10 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object EventOps {
 
-  /** Epoch-nanos → `TimestampType` (µs precision) via integer division. */
-  def nanosToTimestamp(tsNanos: Column): Column =
-    timestamp_micros((tsNanos / lit(1000L)).cast("long"))
-
   /** I1 — tumbling-window aggregation: per (hour-bucket, event_type)
     * count + exact decimal sum of `value` (emitted as DOUBLE — the exact
     * decimal casts to the identical nearest double in every engine,
@@ -32,15 +28,6 @@ object EventOps {
       .agg(count(lit(1)).as("cnt"),
         Relational.decSum(col("value")).cast("double").as("sum_value"))
       .orderBy("hour_start", "event_type")
-
-  /** I3 — gap-based sessionization: a new session starts when the gap to
-    * the previous event of the same user exceeds `gapNanos`. Expressed as
-    * lag + running sum over a single per-user window (one shuffle on
-    * user_id; state is O(1) per row — the 100 TB-scale pattern, and the
-    * exact batch semantics of `session_window` with end-exclusive gaps).
-    */
-  def sessionize(events: DataFrame, gapNanos: Long): DataFrame =
-    sessionizeOn(events, col("ts"), gapNanos)
 
   /** Sessionize on an arbitrary integer event-time column (`tsCol`) with
     * the gap in the same unit — lets callers pick µs resolution when an
@@ -189,14 +176,6 @@ object EventOps {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .orderBy("first_day")
   }
-
-  /** I5 / L1 — deterministic keyed dedup: keep the first event per key by
-    * (ts, event_id). Unlike `dropDuplicates` (which keeps an arbitrary
-    * row), row_number with a total order is reproducible across runs and
-    * cluster sizes.
-    */
-  def firstEventPerKey(events: DataFrame, keys: Seq[String]): DataFrame =
-    DedupOps.keepFirstPerKey(events, keys, Seq("ts", "event_id"))
 
   /** Per-group z-score anomaly filter in EXACT integer arithmetic — the
     * data-quality "drop metric outliers" step, made hash-oracle-safe.
@@ -421,30 +400,6 @@ object EventOps {
         expr("touch_ts div 1000").as("touch_ts_us"))
       .orderBy("conversion_id")
   }
-
-  /** POINT-IN-TIME correct join: each fact row picks the dimension
-    * version whose [valid_from, valid_to) interval contains its
-    * timestamp — the versioned-dimension enrichment that as-of joins
-    * approximate and naive joins get WRONG (joining today's attributes
-    * onto last year's facts is the classic training-data leak).
-    * `dim` is an [[scd2Intervals]]-shaped frame — the column contract
-    * is positional-by-name: facts carry `ts_us`, dim carries
-    * `valid_from_us`/`valid_to_us`, all in µs; a NULL `valid_to_us`
-    * means the currently-open version. Facts before the key's first
-    * version survive with null dim columns (left join) — pre-history
-    * is visible, not silently dropped.
-    *
-    * Scale shape: an EQUI hash join on the key with the interval test
-    * as a residual filter — never a non-equi range join across keys;
-    * versions-per-key is the only fan-in, and exactly one version
-    * matches per fact (intervals partition the timeline per key).
-    */
-  def pointInTimeJoin(facts: DataFrame, dim: DataFrame, key: String): DataFrame =
-    facts.join(dim,
-      facts(key) === dim(key) &&
-        facts("ts_us") >= dim("valid_from_us") &&
-        (dim("valid_to_us").isNull || facts("ts_us") < dim("valid_to_us")),
-      "left")
 
   /** Rate-spike detection: per (event_type, hour) counts flagged when
     * the hour's count exceeds `factorPct`% of its trailing-3-hour

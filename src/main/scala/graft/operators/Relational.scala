@@ -245,48 +245,6 @@ object Relational {
       .orderBy("constraint")
   }
 
-  /** [[checkConstraints]] with APPROXIMATE uniqueness — the extreme-
-    * cardinality variant: `approx_count_distinct` (HLL++, bounded
-    * executor state per partition, no exact-distinct shuffle) replaces
-    * `countDistinct`, and each uniqueness row carries the sketch's
-    * relative standard deviation so the consumer knows the audit's
-    * error bar. A uniqueness "pass" here means the ESTIMATED duplicate
-    * count is within the sketch tolerance of zero —
-    * `violations <= tolerance` with tolerance = rsd·rows — because an
-    * HLL estimate of a perfectly-unique key legitimately wobbles both
-    * sides of the true count. Row-level violation constraints remain
-    * exact (they are conditional sums, cardinality-free).
-    */
-  def checkConstraintsApprox(df: DataFrame,
-                             violations: Seq[(String, Column)],
-                             uniqueKeys: Seq[(String, Seq[String])],
-                             rsd: Double = 0.02): DataFrame = {
-    require(uniqueKeys.nonEmpty, "use checkConstraints when no uniqueness checks")
-    requireSafeConstraintNames(violations.map(_._1) ++ uniqueKeys.map(_._1))
-    val vAggs = violations.map { case (n, c) =>
-      coalesce(sum(c.cast(LongType)), lit(0L)).as(n)
-    }
-    val uAggs = uniqueKeys.map { case (n, ks) =>
-      (count(lit(1)) -
-        approx_count_distinct(struct(ks.map(col): _*), rsd)).cast(LongType).as(n)
-    }
-    val nRows = count(lit(1)).as("__n")
-    val aggs = (vAggs ++ uAggs) :+ nRows
-    val names = violations.map(_._1) ++ uniqueKeys.map(_._1)
-    val exactNames = violations.map(_._1).toSet
-    val aggRow = df.agg(aggs.head, aggs.tail: _*)
-    aggRow.select(expr(s"stack(${names.size}, " +
-        names.map(n => s"'$n', `$n`").mkString(", ") +
-        ") as (constraint, violations)"), col("__n"))
-      .withColumn("tolerance",
-        when(lit(exactNames.nonEmpty) &&
-            col("constraint").isin(exactNames.toSeq: _*), lit(0L))
-          .otherwise(ceil(col("__n") * rsd).cast(LongType)))
-      .withColumn("pass", abs(col("violations")) <= col("tolerance"))
-      .select("constraint", "violations", "tolerance", "pass")
-      .orderBy("constraint")
-  }
-
   /** K-ANONYMITY suppression over quasi-identifier columns — the
     * privacy-curation step a training pipeline runs before releasing
     * metadata-bearing corpora: any combination of the quasi columns

@@ -49,16 +49,17 @@ object SimilarityOps {
   /** The `embedding` array on the fixed-point integer grid. */
   private def fixedVec: Column = transform(col("embedding"), v => fixedPoint(v))
 
-  /** Per-query ranked top-k: number each `q_id`'s rows by `score`
+  /** Per-query ranked top-k: number each `key`'s rows by `score`
     * descending, then `tie` ascending, into `rank`; keep ranks ≤ `k`;
     * project `keep` (every column when empty). `longRank` casts the rank
     * to bigint before the cut, the type of the declared search relations.
     */
   private[operators] def topKPerQuery(scored: DataFrame, score: String,
       k: Int, keep: Seq[String] = Nil, tie: String = "n_id",
-      rank: String = "rn", longRank: Boolean = true): DataFrame = {
+      rank: String = "rn", longRank: Boolean = true,
+      key: String = "q_id"): DataFrame = {
     val rn = row_number()
-      .over(Window.partitionBy("q_id").orderBy(desc(score), asc(tie)))
+      .over(Window.partitionBy(key).orderBy(desc(score), asc(tie)))
     val ranked = scored.withColumn(rank, if (longRank) rn.cast(LongType) else rn)
       .filter(col(rank) <= k)
     if (keep.isEmpty) ranked else ranked.select(keep.map(col): _*)
@@ -1870,10 +1871,7 @@ object SimilarityOps {
         col("label").as("n_label")), Seq("n_id"))
       .groupBy(col("q_id"), col("n_label"))
       .agg(count(lit(1)).cast(LongType).as("votes"))
-    val w = Window.partitionBy("q_id").orderBy(desc("votes"), asc("n_label"))
-    votes
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    topKPerQuery(votes, "votes", 1, tie = "n_label", longRank = false)
       .join(labels.select(col("vec_id").as("q_id"),
         col("label").as("true_label")), Seq("q_id"))
       .select(col("q_id").as("vec_id"), col("n_label").as("pred_label"),
@@ -1962,11 +1960,8 @@ object SimilarityOps {
       .lineageTruncate() // 2 consumers: size rollup + majority window
     val sizes = votes.groupBy("cluster_id")
       .agg(sum(col("votes")).cast(LongType).as("n"))
-    val w = Window.partitionBy("cluster_id")
-      .orderBy(desc("votes"), asc("label"))
-    val majority = votes
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val majority = topKPerQuery(votes, "votes", 1, tie = "label",
+        longRank = false, key = "cluster_id")
       .select(col("cluster_id"), col("label").as("maj_label"),
         col("votes").as("maj_votes"))
     sizes.join(majority, Seq("cluster_id"))

@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
 object SketchOps {
 
   /** (depth, slot) cell coordinates for a key column — one struct per
-    * hash row, shared by build, lookup, AND the streaming maintenance
-    * path ([[graft.streaming.StreamingOps.streamingCmsCounts]]) so the
-    * three can never drift onto different hash cells.
+    * hash row, shared by build and lookup so the two can never drift
+    * onto different hash cells.
     */
   private[graft] def cells(keyCol: String, depth: Int, width: Int) =
     array((0 until depth).map { d =>
@@ -65,10 +64,9 @@ object SketchOps {
       .groupBy("register").agg(max(col("rho")).as("max_rho"))
       .orderBy("register")
 
-  /** The (register, rho) projection of one key — shared by
-    * [[hllRegisters]] AND the streaming maintenance path
-    * ([[graft.streaming.StreamingOps.streamingHllRegisters]]), same
-    * can-never-drift contract as [[cells]] for the CMS.
+  /** The (register, rho) projection of one key — shared by every HLL
+    * register build, the same can-never-drift contract as [[cells]] for
+    * the CMS.
     */
   private[graft] def hllRegRho(keyCol: String, m: Int): Seq[org.apache.spark.sql.Column] = {
     require(m >= 2 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
@@ -214,19 +212,8 @@ object SketchOps {
       .agg(max(col("max_rho")).as("max_rho"))
   }
 
-  /** Merge CMS counter tables built with the SAME (depth, width): cell
-    * counters add. This is the property that makes sketching worth it at
-    * 100 TB — per-shard / per-day partial sketches combine into the
-    * corpus sketch without touching the raw data again (tested
-    * merge(A,B) ≡ build(A ∪ B)).
-    */
-  def cmsMerge(sketches: DataFrame*): DataFrame =
-    sketches.reduce(_ unionByName _)
-      .groupBy("d", "slot").agg(sum(col("cnt")).as("cnt"))
-
   /** Merge HLL register tables built with the SAME m: registers take the
-    * max. Same shard-merge contract as [[cmsMerge]] (tested
-    * merge(A,B) ≡ build(A ∪ B)).
+    * max (tested merge(A,B) ≡ build(A ∪ B)).
     */
   def hllMerge(sketches: DataFrame*): DataFrame =
     sketches.reduce(_ unionByName _)

@@ -48,19 +48,6 @@ object TextOps {
       .groupBy(key)
       .agg(count(lit(1)).as("n_words"), sum("bits").as("sum_bits"))
 
-  /** The frozen top-`topWords` unigram bits table of the word stream `w`
-    * and its token total, collected for a streaming scorer.
-    */
-  private def topWordBits(w: DataFrame, topWords: Int)
-      : (Seq[(String, Long)], Long) = {
-    val (wc, total) = wordCountTotal(w)
-    val bitsRows = wc.crossJoin(broadcast(total))
-      .orderBy(desc("cnt"), asc("word")).limit(topWords)
-      .select(col("word"), floorLog2Bits("t", "cnt").as("bits"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    (bitsRows, total.collect()(0).getLong(0))
-  }
-
   /** Adjacent word pairs (prev, word) of the `ws` word arrays, one row
     * per pair, carrying `keep`: zip_with over each document's OWN array
     * (slice vs slice-shifted), no per-doc window, no shuffle.
@@ -1140,11 +1127,8 @@ object TextOps {
     * arriving mass still reports — the new-domain monitor signal.
     *
     * Stateless per document given the domain-bounded (source,
-    * epochs_q8) table — which is exactly what makes the streaming twin
-    * ([[graft.streaming.StreamingOps.priceScheduleStream]]) safe in
-    * append mode with no state store, the scoreTokenizerStream
-    * discipline. This batch side rolls the same per-doc pricing up per
-    * (batch_id, source).
+    * epochs_q8) table, so each arriving batch prices independently.
+    * The per-doc pricing rolls up per (batch_id, source).
     *
     * Scale shape: [[mixtureSchedule]]'s cost once per freeze (domain-
     * bounded collect), then ONE map pass over the arriving stream (the
@@ -1202,13 +1186,9 @@ object TextOps {
     packDocsAgainstSchedule(arriving, sched, binTokens)
   }
 
-  /** The per-batch packing tail shared by [[packScheduledBins]] and the
-    * streaming twin ([[graft.streaming.StreamingOps
-    * .packScheduledStream]]) — stream/batch parity BY CONSTRUCTION,
-    * the curateIngest discipline. `arriving` must carry (batch_id,
-    * doc_id, source, text); the window partitions per (batch_id,
-    * source), so in the stream twin the frame is exactly one
-    * micro-batch and the prefix sum never crosses batches.
+  /** The per-batch packing tail of [[packScheduledBins]]. `arriving`
+    * must carry (batch_id, doc_id, source, text); the window partitions
+    * per (batch_id, source), so the prefix sum never crosses batches.
     */
   def packDocsAgainstSchedule(arriving: DataFrame,
                               domainEpochs: Seq[(String, Long)],
@@ -1272,8 +1252,8 @@ object TextOps {
       .orderBy("source")
   }
 
-  /** The per-document stateless pricing projection shared by
-    * [[schedulePriceBatches]] and the streaming twin: n_tokens,
+  /** The per-document stateless pricing projection of
+    * [[schedulePriceBatches]]: n_tokens,
     * epochs_q8 (0 for unseen domains), the md5-drawn repeat count, and
     * the repeated token mass. `domainEpochs` is the frozen schedule's
     * domain-bounded (source, epochs_q8) table as literals.
@@ -1364,7 +1344,7 @@ object TextOps {
     * array (slice vs slice-shifted) — no per-doc window, no extra
     * shuffle to order words. The bigram table is corpus-derived and
     * joins back by (prev, word) — at 100 TB you'd cap it top-B with a
-    * backoff penalty (the [[surprisalFitTop]] discipline); here it is
+    * backoff penalty; here it is
     * exact because the oracle replays it exactly.
     */
   def surprisalBigramBits(documents: DataFrame,
@@ -1394,50 +1374,6 @@ object TextOps {
       .withColumn("keep",
         when(col("bi_q8") <= lit(keepBitsQ8), 1L).otherwise(0L))
       .orderBy("doc_id")
-  }
-
-  /** Frozen-fit exporter for the streaming BIGRAM scorer — the
-    * [[surprisalFitTop]] discipline one order up: the top-`topWords`
-    * unigram bits table, the top-`topPairs` bigram conditional-bits
-    * table (keyed "prev word" — words are space-split so the composite
-    * key is unambiguous), and the count-1-smoothed unseen-word bits.
-    * Driver state is bounded by the two caps; a streaming scorer
-    * prices seen pairs at their conditional bits and backs off to the
-    * word's unigram bits (unseen word → unseenBits) — with caps
-    * covering the full tables the stream equals [[surprisalBigramBits]]
-    * doc-for-doc (Round15bOpsSpec pins it).
-    */
-  def surprisalBigramFitTop(documents: DataFrame, topWords: Int,
-                            topPairs: Int)
-      : (Seq[(String, Long)], Seq[(String, Long)], Long) = {
-    val docsW = documents.select(words(col("text")).as("ws"))
-    val (wordBits, totalTokens) =
-      topWordBits(docsW.select(explode(col("ws")).as("word")), topWords)
-    val pairs = bigrams(docsW)
-    val bc = pairs.groupBy("prev", "word").agg(count(lit(1)).as("cnt2"))
-    val cx = bc.groupBy("prev").agg(sum(col("cnt2")).as("ctx"))
-    val pairBits = bc.join(cx, Seq("prev"))
-      .orderBy(desc("cnt2"), asc("prev"), asc("word")).limit(topPairs)
-      .select(concat(col("prev"), lit(" "), col("word")).as("pair"),
-        floorLog2Bits("ctx", "cnt2").as("bits"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    (wordBits, pairBits,
-      java.lang.Long.toBinaryString(math.max(totalTokens, 1L)).length - 1L)
-  }
-
-  /** The frozen-fit exporter for the streaming surprisal scorer: the
-    * top-`topWords` unigram bits table (the [[surprisalBits]]
-    * arithmetic, capped so driver state is bounded — the DSIR
-    * posterior-table convention) plus the unseen-word bits under
-    * count-1 smoothing, floor(log₂(total)) — the score a word outside
-    * the capped vocabulary receives. Returns (wordBits, unseenBits).
-    */
-  def surprisalFitTop(documents: DataFrame, topWords: Int)
-      : (Seq[(String, Long)], Long) = {
-    val (bitsRows, totalTokens) = topWordBits(documents
-      .select(explode(words(col("text"))).as("word"))
-      .filter(length(col("word")) > 0), topWords)
-    (bitsRows, java.lang.Long.toBinaryString(totalTokens).length - 1L)
   }
 
   /** [[packSequences]] in TOKENIZER units (round 14): identical
@@ -1951,30 +1887,6 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"),
         expr("post_sum div n_tokens").as("dsir_ppm"))
       .orderBy("doc_id")
-  }
-
-  /** The FIT phase of [[importanceWeights]], exposed on its own: the
-    * `numBuckets`-row posterior table (b, post_ppm) estimated from the
-    * raw and target corpora — one bucket aggregate over each, totals
-    * folded from the (lineage-truncated) bucket frames. Consumed by
-    * the batch scorer above (broadcast join) and collectible for the
-    * streaming scorer ([[graft.streaming.StreamingOps.scoreDsirStream]]
-    * compiles it into a literal map — legitimate driver state because
-    * the table is FIXED 2^k rows at any corpus size). Buckets absent
-    * from the RAW corpus are absent here; a scorer meeting one (a
-    * token the fit never saw) uses [[importanceUnseenPpm]].
-    */
-  def importancePosteriors(documents: DataFrame, target: DataFrame,
-                           numBuckets: Int = 1024,
-                           checkpointDir: Option[String] = None): DataFrame = {
-    require(numBuckets >= 2, s"numBuckets must be >= 2, got $numBuckets")
-    val raw = Lineage.truncate(
-      documents
-        .select(explode(words(col("text"))).as("word"))
-        .select(hashBucket(col("word"), numBuckets).as("b"))
-        .groupBy("b").agg(count(lit(1)).as("r_c")), checkpointDir)
-    posteriorsFromCounts(raw,
-      targetBucketCounts(target, numBuckets, checkpointDir), numBuckets)
   }
 
   /** The target corpus's bucket counts (b, t_c), lineage-truncated —

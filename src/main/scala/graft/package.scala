@@ -28,11 +28,9 @@
   *    TextOps (wordcount/tf-idf/quality/lang-id), DedupOps (exact,
   *    MinHash+LSH, SimHash, Jaccard sparse+dense, n-gram), SimilarityOps
   *    (brute/fixed-point-exact/sign-LSH/IVF top-k).
-  *  - `graft.etl.MoviesEtl` — the reference pipeline end-to-end;
-  *    `graft.etl.TypedMovies` — the typed façade over the curated schema.
-  *  - `graft.streaming.StreamingOps` — watermarked windows, stateful
-  *    dedup, mapGroupsWithState, foreachBatch chunked load.
+  *  - `graft.etl.MoviesEtl` — the reference pipeline end-to-end.
   *  - `graft.multimodal.MultimodalOps` — binary payload columns with
-  *    typed metadata and per-partition (stub) decode.
+  *    typed metadata, per-partition perceptual hashes and near-dup
+  *    pairs.
   */
 package object graft

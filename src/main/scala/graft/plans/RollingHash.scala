@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -89,11 +89,5 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     val (id, info, builder) = rollingHashDescriptor
     spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-  }
-
-  /** Column-API entry: `rollingHash(col("text"))`. */
-  def rollingHash(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("rolling_hash", c)
   }
 }

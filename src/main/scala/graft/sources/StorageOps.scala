@@ -1,60 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Storage-layout management (SURVEY.md §2 A extensions) — the table
-  * maintenance a 100 TB lakehouse runs continuously: small-file
-  * compaction, schema-evolution reads, and observed row-accounting.
+  * maintenance a 100 TB lakehouse runs continuously: z-order
+  * compaction and bucketed tables, each memoized on the source
+  * fingerprint.
   * All pure Spark (parquet + the DataFrame writer); no table-format
   * dependency, so the same shapes apply under any catalog.
   */
 object StorageOps {
-
-  /** Compact a parquet directory toward `targetBytes` output files:
-    * the small-files problem is the silent scan killer at scale — a
-    * 100 TB table written by 10⁵ streaming micro-batches becomes 10⁸
-    * kilobyte files whose open/footer overhead dwarfs the read. File
-    * count is sized from the ACTUAL input bytes (not a guessed
-    * constant), and `maxRecordsPerFile` is deliberately NOT used —
-    * the explicit repartition gives size-balanced splits.
-    *
-    * Two layout modes (ADVICE r7): with `sortCols` empty the rewrite
-    * is a round-robin `repartition(n)` — size balance only; being
-    * round-robin it DESTROYS any pre-existing clustering, so min/max
-    * column stats get wider, not tighter. When the table has a hot
-    * filter column, pass it in `sortCols`: `repartitionByRange` then
-    * range-clusters rows across files so each file covers a narrow
-    * key interval and future readers prune whole files on the
-    * parquet min/max stats.
-    *
-    * This is the storage-side twin of `spark.sql.files
-    * .maxPartitionBytes` (read-side coalescing): reads can merge small
-    * files per task, but only a rewrite fixes footer bloat — and only
-    * a SORTED rewrite fixes min/max-stat fragmentation — for every
-    * FUTURE reader.
-    *
-    * Returns the compacted frame's file count (post-write, counted
-    * from the filesystem — the contract, not the intent).
-    */
-  def compactParquet(spark: SparkSession, inDir: String, outDir: String,
-                     targetBytes: Long, sortCols: Seq[String] = Nil): Int = {
-    require(targetBytes > 0)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(inDir), spark.sparkContext.hadoopConfiguration)
-    val inputBytes = fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(inDir)).getLength
-    val nFiles = math.max(1, math.ceil(inputBytes.toDouble / targetBytes).toInt)
-    withNanosShim(spark) {
-      val src = spark.read.parquet(inDir)
-      val laidOut =
-        if (sortCols.isEmpty) src.repartition(nFiles)
-        else src.repartitionByRange(nFiles, sortCols.map(col): _*)
-      laidOut.write.mode("overwrite").parquet(outDir)
-    }
-    fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-      .count(_.getPath.getName.endsWith(".parquet"))
-  }
 
   /** Scoped TIMESTAMP(NANOS) read tolerance for the compaction ops:
     * inside `body` the legacy nanosAsLong shim is on, so a ns-encoded
@@ -88,8 +44,8 @@ object StorageOps {
     * parquet row-group min/max stats (≡ file-level at one row group per
     * file) prune the scan for predicates on ANY of them — ZOrderSpec
     * measures the decoded-row reduction directly.
-    * This is the multi-dimensional upgrade of
-    * [[compactParquet]]`(sortCols=…)`: 1-D range clustering makes files
+    * This is the multi-dimensional upgrade of a 1-D range-clustered
+    * rewrite (`repartitionByRange` on one column), which makes files
     * tight on the leading column and leaves every other column's span
     * at ~full range (a filter on the second column prunes nothing);
     * interleaving bits trades a little per-dimension tightness for
@@ -162,65 +118,6 @@ object StorageOps {
     fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
       .count(_.getPath.getName.endsWith(".parquet"))
   }
-
-  /** Write `df` as a Hive-style PARTITIONED parquet layout
-    * (`outDir/col=value/…`) — the single largest scan-reduction lever
-    * at 100 TB (VERDICT r7 missing #1): a predicate on a partition
-    * column prunes whole directories at PLANNING time (the scan's
-    * `PartitionFilters`, zero data read for excluded partitions), and
-    * a fact⋈dim join whose dim side is filtered gets the same pruning
-    * at RUNTIME via dynamic partition pruning (the
-    * `DynamicPruningExpression` subquery duplicates the dim filter
-    * onto the fact's partition column, reusing the join's broadcast).
-    * PartitionPruningSpec plan-asserts both paths on a
-    * date-partitioned copy of the test tables.
-    *
-    * Layout discipline the caller owns: partition columns must be
-    * LOW-cardinality (date/month/region — 10²-10⁴ directories; a
-    * high-cardinality key creates the small-files problem
-    * [[compactParquet]] exists to fix), and rows-per-partition should
-    * land near the file-size sweet spot — pass `filesPerPartition`
-    * > 1 only when single partition dirs would exceed a few GB.
-    *
-    * Returns the number of partition directories written.
-    */
-  def writePartitioned(df: DataFrame, partitionCols: Seq[String],
-                       outDir: String, filesPerPartition: Int = 1): Int = {
-    require(partitionCols.nonEmpty, "need at least one partition column")
-    require(filesPerPartition > 0)
-    // repartition by the partition columns so each output dir is
-    // written by `filesPerPartition` tasks, not by every task that
-    // happens to hold a row of it (the accidental small-files layout)
-    val keys = partitionCols.map(col)
-    val spread =
-      if (filesPerPartition == 1) df.repartition(keys: _*)
-      else {
-        // explicit partition count: AQE is free to coalesce a
-        // no-count repartition, which would merge the spread buckets
-        // back into one writer task and silently defeat the split
-        val n = df.sparkSession.sessionState.conf.numShufflePartitions
-        df.repartition(n, (keys :+ (abs(xxhash64(df.columns.map(col): _*))
-          % filesPerPartition)): _*)
-      }
-    spread.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(outDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-      .count(s => s.isDirectory &&
-        s.getPath.getName.startsWith(partitionCols.head + "="))
-  }
-
-  /** Schema-evolution read: union the schemas of every parquet footer
-    * under `dir` (`mergeSchema`) so batches written before a column
-    * existed read back with nulls there — the append-only ingest
-    * contract (new fields arrive, old data stays immutable).
-    * mergeSchema is off by default because footer-merging costs one
-    * footer read PER FILE at planning time; at 10⁸ files that is the
-    * planning bottleneck, so production tables pin the merged schema
-    * in a catalog and this call is the BACKFILL/inspection path.
-    */
-  def readEvolved(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(dir)
 
   /** Write `df` as a BUCKETED parquet table: rows are hash-distributed
     * into `nBuckets` files per partition by `bucketCol`, and the bucket
@@ -302,22 +199,4 @@ object StorageOps {
       inDir, outDir) {
       compactZOrder(spark, inDir, outDir, targetBytes, zCols, bits)
     }
-
-  /** Run `df` to a parquet sink while OBSERVING row counts and a null
-    * tally on `keyCol` — `Observation` rides the existing job (metrics
-    * accumulate on the executors during the write itself), so the
-    * accounting costs ZERO extra passes. The always-on audit numbers
-    * every production load wants (rows written, keys lost) without the
-    * second count() scan that doubles the job.
-    */
-  def writeCounted(df: DataFrame, keyCol: String, outDir: String): (Long, Long) = {
-    val obs = Observation("write_audit")
-    df.observe(obs,
-        count(lit(1)).as("rows"),
-        sum(col(keyCol).isNull.cast("long")).as("null_keys"))
-      .write.mode("overwrite").parquet(outDir)
-    val m = obs.get
-    (m("rows").asInstanceOf[Long],
-      Option(m("null_keys")).map(_.asInstanceOf[Long]).getOrElse(0L))
-  }
 }

@@ -120,13 +120,6 @@ class CleaningSpec extends SparkSpec {
     assert(m == Map("French" -> "LeFilm"))
   }
 
-  test("pruneMostlyNullColumns drops >=90% null columns") {
-    val rows = (1 to 20).map(i => (i, if (i <= 1) Some("rare") else None, s"v$i"))
-    val df = rows.toDF("id", "mostly_null", "kept")
-    val out = Cleaning.pruneMostlyNullColumns(df, 0.9)
-    assert(out.columns.toSet == Set("id", "kept"))
-  }
-
   test("normalizeListColumns joins array cells with spaces") {
     val df = Seq((1, Seq("a", "b"), "x")).toDF("id", "arr", "s")
     val out = Cleaning.normalizeListColumns(df)

@@ -136,18 +136,6 @@ class EventsEncodingSpec extends SparkSpec {
     assert(readTs(dir) === NanoTs.map(ns => ns / 1000L * 1000L).sorted)
   }
 
-  test("eventsLake unions mixed-generation directories onto one nanos contract") {
-    val nsDir = writeFixture(TimeUnit.NANOS, NanoTs)
-    val usDir = writeFixture(TimeUnit.MICROS, NanoTs.map(_ / 1000L))
-    val lake  = Tables.eventsLake(spark, Seq(nsDir, usDir))
-    assert(lake.schema("ts").dataType === LongType)
-    val got = lake.select("ts").collect().map(_.getLong(0)).sorted.toSeq
-    assert(got === (NanoTs ++ NanoTs.map(ns => ns / 1000L * 1000L)).sorted)
-    // the union is plan-level: a ts predicate still reaches both scans
-    // (threshold at the µs floor so the flooring branch isn't excluded)
-    assert(lake.filter(s"ts >= ${NanoTs.min / 1000L * 1000L}").count() === 6)
-  }
-
   test("an unsupported ts physical type fails loudly at the reader boundary") {
     // a silent pass-through here would surface as 22 downstream
     // DATATYPE_MISMATCH failures (round 8's failure mode) — the reader

@@ -81,7 +81,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, 1L, 0L), (1L, 2L, 10L), (1L, 3L, 100L), (1L, 4L, 1000L),
       (2L, 5L, 7L))
       .toDF("user_id", "event_id", "ts")
-    val out = EventOps.sessionize(df, 50L).collect()
+    val out = EventOps.sessionizeOn(df, col("ts"), 50L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
     assert(out == Seq(
       (1L, 1L, 2L, 0L, 10L),
@@ -121,7 +121,8 @@ class OperatorsSpec extends SparkSpec {
   test("firstEventPerKey keeps earliest (ts, event_id) row") {
     val df = Seq((1L, "c", 30L, 9L), (1L, "c", 10L, 5L), (1L, "c", 10L, 3L))
       .toDF("user_id", "event_type", "ts", "event_id")
-    val out = EventOps.firstEventPerKey(df, Seq("user_id", "event_type"))
+    val out = DedupOps.keepFirstPerKey(df, Seq("user_id", "event_type"),
+      Seq("ts", "event_id"))
     assert(out.select("event_id").collect().map(_.getLong(0)).toSeq == Seq(3L))
   }
 

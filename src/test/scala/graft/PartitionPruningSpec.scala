@@ -1,11 +1,10 @@
 package graft
 
-import graft.sources.StorageOps
 import org.apache.spark.sql.functions._
 
 /** Executable plan evidence for the partitioned-layout story (VERDICT r7
-  * missing #1): a date-partitioned copy of the test tables, written by
-  * [[StorageOps.writePartitioned]], must prune at PLANNING time on a
+  * missing #1): a date-partitioned copy of the test tables, written as
+  * a Hive-style `partitionBy` layout, must prune at PLANNING time on a
   * literal partition predicate (`PartitionFilters`, static) and at
   * RUNTIME on a dim-side filter riding a fact⋈dim join
   * (`DynamicPruningExpression`, DPP) — the two mechanisms that turn a
@@ -22,48 +21,8 @@ class PartitionPruningSpec extends SparkSpec {
     val out = s"$d/lineitem_by_month"
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .withColumn("l_month", date_format(col("l_shipdate"), "yyyy-MM"))
-    StorageOps.writePartitioned(li, Seq("l_month"), out)
+    li.repartition(col("l_month")).write.partitionBy("l_month").parquet(out)
     out
-  }
-
-  test("writePartitioned lays out one Hive-style dir per month, one file each") {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(factDir), spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(factDir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("l_month="))
-    assert(dirs.length > 12, s"expected a multi-year month layout, got ${dirs.length}")
-    // one writer task per partition value → no small-files explosion
-    dirs.foreach { pd =>
-      val files = fs.listStatus(pd.getPath)
-        .count(_.getPath.getName.endsWith(".parquet"))
-      assert(files == 1, s"${pd.getPath.getName}: $files files, want 1")
-    }
-    // round trip: nothing lost in the rewrite
-    assert(spark.read.parquet(factDir).count() ==
-      spark.read.parquet(s"$dir/lineitem.parquet").count())
-  }
-
-  test("writePartitioned(filesPerPartition=3) spreads a partition over " +
-    "several writer tasks without changing the data") {
-    val d = java.nio.file.Files.createTempDirectory("graft_fpp")
-    d.toFile.deleteOnExit()
-    val out = s"$d/orders_by_status"
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
-    val nDirs = StorageOps.writePartitioned(
-      orders.withColumn("status", col("o_orderstatus")),
-      Seq("status"), out, filesPerPartition = 3)
-    assert(nDirs >= 2, s"expected one dir per status, got $nDirs")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(out), spark.sparkContext.hadoopConfiguration)
-    val perDir = fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("status="))
-      .map(pd => fs.listStatus(pd.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")))
-    // the hash spread caps each dir at filesPerPartition and, for the
-    // big O/F partitions, actually uses more than one writer
-    assert(perDir.forall(n => n >= 1 && n <= 3), perDir.mkString(","))
-    assert(perDir.max > 1, "hash spread never split a partition's write")
-    assert(spark.read.parquet(out).count() == orders.count())
   }
 
   test("static partition pruning: a literal month predicate reaches " +

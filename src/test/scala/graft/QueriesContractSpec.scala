@@ -29,17 +29,14 @@ class QueriesContractSpec extends SparkSpec {
 
   test("each shared oracle building block is written once in Queries.scala") {
     // one distinctive line per builder (or shared oracle) with the file
-    // that holds it: a second occurrence anywhere in Queries.scala, the
-    // operators or the streaming operators means a caller pasted the
-    // block instead of composing it
+    // that holds it: a second occurrence anywhere in Queries.scala or
+    // the operators means a caller pasted the block instead of
+    // composing it
     val q = "src/main/scala/graft/Queries.scala"
     def op(name: String) = s"src/main/scala/graft/operators/$name.scala"
     val (sim, dedup, text) = (op("SimilarityOps"), op("DedupOps"), op("TextOps"))
-    val dirs = Seq("src/main/scala/graft/operators",
-      "src/main/scala/graft/streaming")
-    val files = q +: dirs.flatMap(d =>
-      new java.io.File(d).listFiles().map(_.getPath)
-        .filter(_.endsWith(".scala")).sorted.toSeq)
+    val files = q +: new java.io.File("src/main/scala/graft/operators")
+      .listFiles().map(_.getPath).filter(_.endsWith(".scala")).sorted.toSeq
     val srcs = files.map(f =>
       f -> java.nio.file.Files.readString(java.nio.file.Paths.get(f)))
     val blocks = Seq(
@@ -68,7 +65,7 @@ class QueriesContractSpec extends SparkSpec {
       q -> "common * 1000000 // n_src AS cont_ppm",
       q -> "SELECT q_id, n_id, CAST(score_s14 AS BIGINT) AS score_s14,",
       q -> "CAST(na.norm_s AS DOUBLE) * CAST(nb.norm_s AS DOUBLE) * 6400.0",
-      sim -> ".over(Window.partitionBy(\"q_id\").orderBy(desc(score), asc(tie)))",
+      sim -> ".over(Window.partitionBy(key).orderBy(desc(score), asc(tie)))",
       sim -> "isin(queryIds.map(_.asInstanceOf[Any]): _*)",
       sim -> "transform(col(\"embedding\"), v => fixedPoint(v))",
       sim -> "col(\"bucket\").bitwiseXOR(lit(1L << p)))): _*)",

@@ -8,8 +8,9 @@ class RollingHashSpec extends SparkSpec {
 
   test("rolling_hash matches the reference implementation (codegen path)") {
     val inputs = Seq("", "a", "abc", "the quick brown fox", "κλμ unicode ✓")
+    GraftFunctions.register(spark)
     val df = inputs.toDF("s")
-      .select(col("s"), GraftFunctions.rollingHash(spark, col("s")).as("h"))
+      .select(col("s"), call_function("rolling_hash", col("s")).as("h"))
     val got = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     inputs.foreach { s =>
       assert(got(s) == RollingHash.hash(s.getBytes("UTF-8")), s"mismatch for '$s'")

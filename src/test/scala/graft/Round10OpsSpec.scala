@@ -114,12 +114,6 @@ class Round10OpsSpec extends SparkSpec {
         violations = Seq("c1" -> (col("qty") < 0), "c1" -> (col("qty") > 9)))
     }
     assert(dup.getMessage.contains("duplicate"))
-    // approx variant shares the validation
-    val e2 = intercept[IllegalArgumentException] {
-      Relational.checkConstraintsApprox(rows,
-        violations = Nil, uniqueKeys = Seq("bad'name" -> Seq("id")))
-    }
-    assert(e2.getMessage.contains("constraint name"))
   }
 
   // ---- kAnonymize null-safe join (ADVICE r9) ----
@@ -236,29 +230,11 @@ class Round10OpsSpec extends SparkSpec {
   // ---- interpolated-string guards (the constraint-name class) ----
 
   test("interpolated-string inputs are validated, not spliced (injection class)") {
-    val e1 = intercept[IllegalArgumentException] {
-      graft.streaming.StreamingOps.intervalJoin(
-        spark.range(1).toDF(), spark.range(1).toDF(), "id",
-        before = "1 hour' OR true --")
-    }
-    assert(e1.getMessage.contains("before must be"))
-    val e2 = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       graft.sources.StorageOps.writeBucketedTable(
         spark.range(1).toDF(), "t`b", "id", 2)
     }
-    assert(e2.getMessage.contains("unsafe table name"))
-    // the guard must narrow the CHARACTER set, not the duration
-    // surface: compound/abbreviated Spark INTERVAL forms still pass
-    // validation (the later failure here is the missing ts_ts column,
-    // not the guard)
-    for (ok <- Seq("2 hours 30 minutes", "90 min", "1 month")) {
-      val e = intercept[Exception] {
-        graft.streaming.StreamingOps.intervalJoin(
-          spark.range(1).toDF(), spark.range(1).toDF(), "id", before = ok)
-      }
-      assert(!e.getMessage.contains("before must be"),
-        s"valid duration '$ok' rejected: ${e.getMessage}")
-    }
+    assert(e.getMessage.contains("unsafe table name"))
   }
 
   // ---- conf-governed reliable lineage checkpoints (r10) ----

@@ -128,63 +128,6 @@ class Round10bOpsSpec extends SparkSpec {
       s"fixture should keep a strict subset, kept ${out.size}/4")
   }
 
-  test("scoreDsirStream matches the batch scorer doc-for-doc (fit offline, score online)") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Seq(
-      (6L, "x x y", "en"), (8L, "y z", "de"), (13L, "x q q q", "en"),
-      (4L, "z z w", "de"))
-      .toDF("doc_id", "text", "lang")
-    val tgt = docs.filter(col("lang") === "en")
-    val posts = TextOps.importancePosteriors(docs, tgt, 1024)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val unseen = TextOps.importanceUnseenPpm(
-      rawTokens = 12L, targetTokens = 7L, numBuckets = 1024)
-    val batch = TextOps.importanceWeights(docs, tgt, 1024)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.toMemorySink(
-      graft.streaming.StreamingOps.scoreDsirStream(
-        input.toDF().toDF("doc_id", "text"), posts, 1024, unseen),
-      "dsir_stream_test", "append")
-    try {
-      input.addData((6L, "x x y"), (8L, "y z"))
-      input.addData((13L, "x q q q"), (4L, "z z w"))
-      // plus a doc with a token the fit never saw → unseen posterior,
-      // and a NULL-text doc → dropped (the batch scorer's stance)
-      input.addData((99L, "zzqq zzqq"), (100L, null.asInstanceOf[String]))
-      q.processAllAvailable()
-      val out = spark.table("dsir_stream_test")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1).toSeq
-      assert(out.filter(_._1 != 99L) === batch,
-        "streaming scores must equal the batch scorer's")
-      assert(out.find(_._1 == 99L).get._3 === unseen,
-        "unseen-vocabulary doc must score the smoothed empty-bucket posterior")
-      assert(!out.exists(_._1 == 100L),
-        "NULL-text doc must drop, matching the batch scorer (no NULL row)")
-    } finally q.stop()
-  }
-
-  test("importancePosteriors covers target-only buckets (external-target fit)") {
-    // DSIR's canonical use: the target corpus is EXTERNAL, so some of
-    // its tokens never appear in the raw corpus. Those buckets are the
-    // STRONGEST target signal and must carry their smoothed posterior
-    // (full-outer fit) — a left-join fit would silently drop them and
-    // a streaming scorer would mis-score them as never-seen.
-    val raw = Seq((1L, "aa bb")).toDF("doc_id", "text")
-    val ext = Seq((90L, "aa tgtonly")).toDF("doc_id", "text")
-    val posts = TextOps.importancePosteriors(raw, ext, 1024)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val bTgtOnly = bucketOf("tgtonly", 1024)
-    // R=2, T=2, B=1024: t_c=1, r_c=0 → num=2·(2+1024), den=1·(2+1024)
-    val expected = (BigInt(2) * 1026 * 1000000 / (BigInt(2) * 1026 + 1026)).toLong
-    assert(posts.get(bTgtOnly) === Some(expected),
-      s"target-only bucket missing or mis-scored: ${posts.get(bTgtOnly)}")
-    // and it outranks the genuinely-unseen posterior
-    assert(expected > TextOps.importanceUnseenPpm(2L, 2L, 1024))
-  }
-
   test("importanceWeights fails loudly on an empty target corpus") {
     val docs = Seq((1L, "x y")).toDF("doc_id", "text")
     val e = intercept[Exception] {

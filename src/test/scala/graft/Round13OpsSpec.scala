@@ -218,10 +218,10 @@ class Round13OpsSpec extends SparkSpec {
     // the FAISS add() shape: frozen books, per-batch pure expressions
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamingOps.toMemorySink(
-      SimilarityOps.codeIvfPq(
-        input.toDF().toDF("vec_id", "embedding"), coarse, books),
-      "ivfpq_add_test", "append")
+    val q = SimilarityOps.codeIvfPq(
+        input.toDF().toDF("vec_id", "embedding"), coarse, books)
+      .writeStream.format("memory").queryName("ivfpq_add_test")
+      .outputMode("append").start()
     try {
       val rows = emb.select(col("vec_id"),
         col("embedding").cast("array<float>"))
@@ -252,39 +252,6 @@ class Round13OpsSpec extends SparkSpec {
       topWords = 31).as[(String, Long, Long)].collect().toSeq
     assert(viaArtifact == direct,
       "encoding with the shipped merge table must equal the direct encode")
-  }
-
-  test("scoreSurprisalStream matches the batch scorer (fit offline, score online)") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    // full-vocabulary cap ⇒ the frozen fit covers every corpus word,
-    // so streaming scores must equal surprisalBits doc-for-doc
-    val (wordBits, unseenBits) =
-      graft.operators.TextOps.surprisalFitTop(docs, topWords = 1000)
-    val batch = graft.operators.TextOps.surprisalBits(docs)
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.toMemorySink(
-      graft.streaming.StreamingOps.scoreSurprisalStream(
-        input.toDF().toDF("doc_id", "text"), wordBits, unseenBits),
-      "surprisal_stream_test", "append")
-    try {
-      val rows = docs.select("doc_id", "text").as[(Long, String)].collect()
-      input.addData(rows.take(rows.length / 2).toSeq)
-      input.addData(rows.drop(rows.length / 2).toSeq)
-      // a doc whose words the fit never saw scores unseenBits per word
-      input.addData((999999L, "neverseenword neverseenword"))
-      q.processAllAvailable()
-      val out = spark.table("surprisal_stream_test")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
-      assert(out.filter(_._1 != 999999L) == batch,
-        "streaming surprisal must equal the batch scorer doc-for-doc")
-      val ovv = out.find(_._1 == 999999L).get
-      assert(ovv._3 == 2 * unseenBits && ovv._4 == unseenBits * 256L,
-        "out-of-vocabulary words must score the smoothed unseen bits")
-    } finally q.stop()
   }
 
   test("packUtilization reconciles with packSequences; curve is monotone") {

@@ -226,55 +226,6 @@ class Round15bOpsSpec extends SparkSpec {
       .collect().map(_.toString).toSeq)
   }
 
-  test("streaming tokenizer pricing matches the batch audit and flags " +
-    "the drifted micro-batch online") {
-    import spark.implicits._
-    import graft.operators.TextOps
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf)
-    val fit = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-    val merges = TextOps.bpeMerges(fit, rounds = 6, topWords = 31)
-    val wt = TextOps.bpeWordTokens(fit, merges, topWords = 31)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, String)]
-    val q = graft.streaming.StreamingOps.toMemorySink(
-      graft.streaming.StreamingOps.scoreTokenizerStream(
-        input.toDF().toDF("doc_id", "source", "text"), wt),
-      "tok_stream_test", "append")
-    try {
-      // micro-batch 1: in-distribution docs; 2: the word-reversed drift
-      val base = fit.select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)].collect().toSeq
-      input.addData(base)
-      input.addData((900001L, "s0",
-        base.head._3.split(" ").map(_.reverse).mkString(" ")))
-      q.processAllAvailable()
-      val out = spark.table("tok_stream_test").collect()
-        .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
-        .toMap
-      // batch parity: the stream prices the fit slice exactly as the
-      // batch audit's base phase (zero OOV, same bpe totals per doc)
-      val batchSide = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(col("doc_id"),
-          explode(TextOps.words(col("text"))).as("word"))
-        .join(broadcast(TextOps.bpeWordTokens(fit, merges, 31)),
-          Seq("word"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("nw"),
-          sum(coalesce(col("n_bpe"), length(col("word")).cast("long")))
-            .as("nb"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-      batchSide.foreach { case (id, (nw, nb)) =>
-        assert(out(id) == ((nw, nb, 0L)), s"doc $id stream/batch parity")
-      }
-      // the drifted doc carries OOV mass — the online retrain signal
-      assert(out(900001L)._3 > 0L,
-        "reversed-word micro-batch must price OOV online")
-    } finally q.stop()
-  }
-
   test("filtered IVF search honors the predicate and degenerates to " +
     "the filtered brute force at full probe") {
     import org.apache.spark.sql.expressions.Window
@@ -377,45 +328,6 @@ class Round15bOpsSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(rec.nonEmpty && rec == win,
       "recursion and window sessionization must partition identically")
-  }
-
-  test("streaming bigram scorer matches the batch scorer under a " +
-    "full-coverage frozen fit and backs off on unseen pairs") {
-    import spark.implicits._
-    import graft.operators.TextOps
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf)
-    // caps past the 31-word vocab and its ≤961 pairs: the frozen fit
-    // covers everything, so streaming must equal surprisalBigramBits
-    val (wb, pb, unseen) =
-      TextOps.surprisalBigramFitTop(docs, topWords = 2000, topPairs = 5000)
-    val batch = TextOps.surprisalBigramBits(docs, 1104L)
-      .select("doc_id", "n_words", "sum_bi_bits", "bi_q8")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).sortBy(_._1).toSeq
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.toMemorySink(
-      graft.streaming.StreamingOps.scoreBigramStream(
-        input.toDF().toDF("doc_id", "text"), wb, pb, unseen),
-      "bigram_stream_test", "append")
-    try {
-      val rows = docs.select("doc_id", "text").as[(Long, String)].collect()
-      input.addData(rows.take(rows.length / 2).toSeq)
-      input.addData(rows.drop(rows.length / 2).toSeq)
-      // a doc of unseen words: every word prices at unseenBits (the
-      // pair lookup misses, the unigram backoff misses too)
-      input.addData((888888L, "zzq zzr zzs"))
-      q.processAllAvailable()
-      val out = spark.table("bigram_stream_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
-      assert(out.filter(_._1 != 888888L) == batch,
-        "streaming bigram bits must equal the batch scorer doc-for-doc")
-      val ovv = out.find(_._1 == 888888L).get
-      assert(ovv._3 == 3 * unseen && ovv._4 == unseen * 256L,
-        "fully unseen text must price at the smoothed unseen bits")
-    } finally q.stop()
   }
 
   test("compaction memo keys on the batch identity and is idempotent") {

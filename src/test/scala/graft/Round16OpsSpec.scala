@@ -195,52 +195,31 @@ class Round16OpsSpec extends SparkSpec {
     assert(packed.nonEmpty)
   }
 
-  test("schedule pricing: streaming twin matches the batch projection " +
-    "doc-for-doc; repeats realize the epochs_q8 stochastic rounding; " +
-    "unknown domains price to zero") {
+  test("schedule pricing: repeats realize the epochs_q8 stochastic " +
+    "rounding; unknown domains price to zero") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val docs = Tables.documents(spark, sf)
     val sched = TextOps.mixtureSchedule(docs, budgetTokens = 100000L,
       iters = 5)
       .select("source", "epochs_q8")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(sched.nonEmpty)
+    // a doc from a domain the frozen schedule never saw: zero repeats
     val arriving = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
       .select("doc_id", "source", "text")
-    val batchSide = TextOps.priceDocsAgainstSchedule(arriving, sched)
+      .unionByName(Seq((990001L, "unseen_source", "a b c"))
+        .toDF("doc_id", "source", "text"))
+    val priced = TextOps.priceDocsAgainstSchedule(arriving, sched)
       .select("doc_id", "n_tokens", "epochs_q8", "repeats")
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     // repeats ∈ {floor(e/256), floor(e/256)+1} — stochastic rounding
-    batchSide.values.foreach { case (_, e, rep) =>
+    priced.values.foreach { case (_, e, rep) =>
       assert(rep == e / 256 || rep == e / 256 + 1,
         s"repeats $rep outside the rounding pair for epochs_q8=$e")
     }
-    // streaming twin, two micro-batches
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, String)]
-    val q = graft.streaming.StreamingOps.toMemorySink(
-      graft.streaming.StreamingOps.priceScheduleStream(
-        input.toDF().toDF("doc_id", "source", "text"), sched),
-      "sched_price_test", "append")
-    try {
-      val rows = arriving.as[(Long, String, String)].collect().toSeq
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      input.addData(b1)
-      input.addData(b2)
-      // a doc from a domain the frozen schedule never saw: zero repeats
-      input.addData((990001L, "unseen_source", "a b c"))
-      q.processAllAvailable()
-      val out = spark.table("sched_price_test").collect()
-        .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
-        .toMap
-      batchSide.foreach { case (id, v) =>
-        assert(out(id) == v, s"doc $id stream/batch parity")
-      }
-      assert(out(990001L) == ((3L, 0L, 0L)),
-        "unknown domain must price to zero repeats")
-    } finally q.stop()
+    assert(priced(990001L) == ((3L, 0L, 0L)),
+      "unknown domain must price to zero repeats")
   }
 }

@@ -204,48 +204,6 @@ class Round17OpsSpec extends SparkSpec {
 
   // ---- streaming schedule-executed packing (VERDICT r16 #4) ----
 
-  test("packScheduledStream packs each micro-batch EXACTLY as the " +
-    "batch operator (shared-code parity, per micro-batch id)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf)
-    val sched = TextOps.mixtureSchedule(docs, budgetTokens = 25000L,
-      iters = 5)
-      .select("source", "epochs_q8")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val arriving = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
-      .select("doc_id", "source", "text")
-    val rows = arriving.as[(Long, String, String)].collect().toSeq
-    val (b0, b1) = rows.partition(_._1 % 2 == 0)
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, String)]
-    val got = scala.collection.mutable.Map.empty[Long, Seq[String]]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("pack_stream_ckpt").toString
-    val q = graft.streaming.StreamingOps.packScheduledStream(
-      input.toDF().toDF("doc_id", "source", "text"), sched,
-      binTokens = 300L, checkpoint = ckpt,
-      writeBins = (bins, id) =>
-        got(id) = bins.collect().map(_.toString).toSeq)
-      .start()
-    try {
-      input.addData(b0)
-      q.processAllAvailable()
-      input.addData(b1)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(got.keySet == Set(0L, 1L))
-    Seq(0L -> b0, 1L -> b1).foreach { case (id, slice) =>
-      val want = TextOps.packDocsAgainstSchedule(
-        slice.toDF("doc_id", "source", "text")
-          .withColumn("batch_id", lit(id)),
-        sched, binTokens = 300L)
-        .collect().map(_.toString).toSeq
-      assert(want.nonEmpty, s"batch $id fixture must produce bins")
-      assert(got(id) == want, s"micro-batch $id stream/batch parity")
-    }
-  }
-
   test("ccnetBuckets: terciles PARTITION each domain's docs (sizes " +
     "within 1), and the bits bands are non-overlapping and ordered") {
     val docs = Tables.documents(spark, sf)

@@ -222,14 +222,6 @@ class Round6OpsSpec extends SparkSpec {
     val shardB = Seq("b", "c", "c", "d").map(Tuple1(_)).toDF("word")
     val union = shardA.unionByName(shardB)
 
-    val cmsMerged = SketchOps.cmsMerge(
-        SketchOps.cmsBuild(shardA, "word", 2, 16),
-        SketchOps.cmsBuild(shardB, "word", 2, 16))
-      .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    val cmsWhole = SketchOps.cmsBuild(union, "word", 2, 16)
-      .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    assert(cmsMerged == cmsWhole)
-
     val hllMerged = SketchOps.hllMerge(
         SketchOps.hllRegisters(shardA, "word", 64),
         SketchOps.hllRegisters(shardB, "word", 64))
@@ -361,29 +353,14 @@ class Round6OpsSpec extends SparkSpec {
   test("multimodal: a REAL JPEG decodes to true dimensions; corrupt JPEG falls back") {
     import graft.multimodal.{ImageCodec, MultimodalOps}
     val jpeg = ImageCodec.encodeJpeg(12, 10, (x, _) => if (x < 6) 0x000000 else 0xFFFFFF)
-    // a JPEG signature on garbage bytes must fall back to the stub path
+    // a JPEG signature on garbage bytes must fall back to a null hash
     val corrupt = Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte, 1, 2, 3)
-    val media = MultimodalOps.fromBytes(spark, Seq(
-      (1L, jpeg, "image", "jpg"), (2L, corrupt, "image", "jpg")))
-    val feats = MultimodalOps.extractFeatures(media).orderBy("media_id").collect()
-    // true decoded dimensions from the real javax.imageio JPEG reader
-    assert(feats(0).getInt(3) == 12 && feats(0).getInt(4) == 10)
-    val hist = feats(0).getSeq[Double](2)
-    assert(math.abs(hist.sum - 1.0) < 1e-9)
-    // JPEG is lossy: assert histogram MASS at the extremes, not exact bins
-    assert(hist.head + hist(1) > 0.35 && hist(15) + hist(14) > 0.35)
-    // corrupt payload: stub features, null dims — batch not poisoned
-    assert(feats(1).isNullAt(3) && feats(1).isNullAt(4))
-    assert(math.abs(feats(1).getSeq[Double](2).sum - 1.0) < 1e-9)
-  }
-
-  test("multimodal: resizeImages rescales a JPEG and re-encodes losslessly") {
-    import graft.multimodal.{ImageCodec, MultimodalOps}
-    val jpeg = ImageCodec.encodeJpeg(8, 6, (x, _) => if (x < 4) 0x000000 else 0xFFFFFF)
-    val media = MultimodalOps.fromBytes(spark, Seq((1L, jpeg, "image", "jpg")))
-    val out = MultimodalOps.resizeImages(media, 4, 3).collect()(0)
-    val back = ImageCodec.decode(out.getAs[Array[Byte]]("payload")).get
-    assert(back.width == 4 && back.height == 3)
-    assert(out.getStruct(2).getInt(2) == 4 && out.getStruct(2).getInt(3) == 3)
+    val media = Seq((1L, jpeg), (2L, corrupt)).toDF("media_id", "payload")
+    val hashes = MultimodalOps.imageDHashes(media).orderBy("media_id").collect()
+    // the real javax.imageio JPEG reader decodes the image
+    assert(!hashes(0).isNullAt(1))
+    assert(ImageCodec.dHash(jpeg).contains(hashes(0).getLong(1)))
+    // corrupt payload: null hash — batch not poisoned
+    assert(hashes(1).isNullAt(1) && ImageCodec.dHash(corrupt).isEmpty)
   }
 }

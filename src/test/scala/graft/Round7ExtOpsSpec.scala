@@ -459,27 +459,6 @@ class Round7ExtOpsSpec extends SparkSpec {
 
   // ---------------- PIT join / rolling HLL ----------------
 
-  test("pointInTimeJoin picks the version valid at each fact's timestamp") {
-    import graft.operators.EventOps
-    val dim = Seq(
-      (1L, 10L, 100L, Some(200L)),  // user 1: v10 [100,200)
-      (1L, 20L, 200L, None),        // user 1: v20 [200,∞)
-      (2L, 30L, 150L, None)
-    ).toDF("user_id", "dim_version", "valid_from_us", "valid_to_us")
-      .select(col("user_id"), col("dim_version"), col("valid_from_us"),
-        col("valid_to_us").cast("long"))
-    val facts = Seq((101L, 1L, 150L), (102L, 1L, 200L), (103L, 1L, 50L),
-      (104L, 2L, 9999L)).toDF("event_id", "user_id", "ts_us")
-    val got = EventOps.pointInTimeJoin(facts, dim, "user_id")
-      .select("event_id", "dim_version")
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    assert(got == Map(101L -> 10L,   // inside v10
-      102L -> 20L,                   // boundary: valid_to exclusive
-      103L -> -1L,                   // pre-history → null version
-      104L -> 30L))                  // open interval
-  }
-
   test("rolling HLL registers equal the direct sketch of each window's rows") {
     import graft.operators.SketchOps
     val ev = Seq((0L, "a"), (0L, "b"), (1L, "b"), (1L, "c"), (2L, "d"))
@@ -590,11 +569,11 @@ class Round7ExtOpsSpec extends SparkSpec {
       "noise must not flip the envelope gradients")
     assert(java.lang.Long.bitCount(sigBase ^ sigStranger) > 3,
       "different envelopes must differ beyond the band threshold")
-    val media = MultimodalOps.fromBytes(spark, Seq(
-      (1L, base, "audio", "wav"),
-      (2L, noisy, "audio", "wav"),
-      (3L, stranger, "audio", "wav"),
-      (4L, "not audio at all".getBytes, "audio", "wav")))
+    val media = Seq(
+      (1L, base),
+      (2L, noisy),
+      (3L, stranger),
+      (4L, "not audio at all".getBytes)).toDF("media_id", "payload")
     val pairs = MultimodalOps.audioNearDupPairs(media, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)))

@@ -170,7 +170,10 @@ class Round7OpsSpec extends SparkSpec {
   test("dHash survives a real rescale (scale invariance of the gradient grid)") {
     import graft.multimodal.ImageCodec
     val png = ImageCodec.encodePng(64, 64, blockImage(37, 11))
-    val resized = ImageCodec.resizePng(png, 48, 48).get
+    // the 48×48 nearest-neighbor rescale: pixel (x, y) is source pixel
+    // (floor(x·64/48), floor(y·64/48)), encoded losslessly
+    val resized = ImageCodec.encodePng(48, 48,
+      (x, y) => blockImage(37, 11)(x * 64 / 48, y * 64 / 48))
     val d = java.lang.Long.bitCount(
       ImageCodec.dHash(png).get ^ ImageCodec.dHash(resized).get)
     assert(d <= 7, s"rescaled twin drifted $d bits")
@@ -178,12 +181,13 @@ class Round7OpsSpec extends SparkSpec {
 
   test("imageNearDupPairs finds the planted cross-format twin, rejects the stranger") {
     import graft.multimodal.{ImageCodec, MultimodalOps}
-    val media = MultimodalOps.fromBytes(spark, Seq(
-      (1L, ImageCodec.encodePng(64, 64, blockImage(37, 11)), "image", "png"),
-      (2L, ImageCodec.encodeJpeg(64, 64, blockImage(37, 11)), "image", "jpg"),
-      (3L, ImageCodec.encodePng(64, 64, blockImage(113, 71)), "image", "png"),
-      (4L, Array[Byte](9, 9, 9), "image", "bin"),          // undecodable
-      (5L, null, "image", "png")))                         // null payload
+    val media = Seq(
+      (1L, ImageCodec.encodePng(64, 64, blockImage(37, 11))),
+      (2L, ImageCodec.encodeJpeg(64, 64, blockImage(37, 11))),
+      (3L, ImageCodec.encodePng(64, 64, blockImage(113, 71))),
+      (4L, Array[Byte](9, 9, 9)),                          // undecodable
+      (5L, null: Array[Byte]))                             // null payload
+      .toDF("media_id", "payload")
     val pairs = MultimodalOps.imageNearDupPairs(media, maxHamming = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)), s"got $pairs")

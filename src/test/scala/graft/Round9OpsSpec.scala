@@ -82,29 +82,6 @@ class Round9OpsSpec extends SparkSpec {
     assert(clean.filter(!col("pass")).count() === 0)
   }
 
-  test("checkConstraintsApprox tracks the exact audit within sketch tolerance") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val exact = Relational.checkConstraints(docs,
-        violations = Seq("chars_positive" -> (col("n_chars") <= 0)),
-        uniqueKeys = Seq("docid_unique" -> Seq("doc_id"),
-          "text_unique" -> Seq("text")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val approx = Relational.checkConstraintsApprox(docs,
-        violations = Seq("chars_positive" -> (col("n_chars") <= 0)),
-        uniqueKeys = Seq("docid_unique" -> Seq("doc_id"),
-          "text_unique" -> Seq("text")))
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
-    // exact row-level constraint is byte-identical (still a plain sum)
-    assert(approx("chars_positive")._1 === exact("chars_positive"))
-    assert(approx("chars_positive")._2 === 0L) // exact rows get zero tolerance
-    // unique doc_id passes within tolerance; estimate near the truth
-    assert(approx("docid_unique")._3, s"unique key failed approx audit: $approx")
-    val n = docs.count()
-    assert(math.abs(approx("docid_unique")._1) <= math.ceil(n * 0.02).toLong * 3,
-      s"estimate drifted far beyond rsd: $approx")
-  }
-
   test("quantized top-k agrees with exact top-k above the recall floor") {
     // int8 on 64-dim keeps most of the ranking: measured 30/40 (75%)
     // pair overlap at sf0.001 — floor at 60% so grid-sensitivity noise

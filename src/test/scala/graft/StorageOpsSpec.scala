@@ -3,8 +3,8 @@ package graft
 import graft.sources.StorageOps
 import org.apache.spark.sql.functions._
 
-/** Storage-layout management: compaction sized from real input bytes,
-  * schema-evolution reads, and zero-extra-pass observed write audits.
+/** Storage-layout management: memoized layout rewrites keyed on the
+  * source fingerprint.
   */
 class StorageOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -13,86 +13,6 @@ class StorageOpsSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
     d.toFile.deleteOnExit()
     d.toString
-  }
-
-  test("compactParquet collapses a many-small-files table, preserving the data") {
-    val base = tmp("compact")
-    val in = s"$base/in"
-    val out = s"$base/out"
-    // 32 shuffle partitions → 32 tiny files
-    val df = (1 to 10000).map(i => (i.toLong, s"row_$i")).toDF("id", "payload")
-    df.repartition(32).write.parquet(in)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(in), spark.sparkContext.hadoopConfiguration)
-    val inFiles = fs.listStatus(new org.apache.hadoop.fs.Path(in))
-      .count(_.getPath.getName.endsWith(".parquet"))
-    assert(inFiles == 32)
-    val outFiles = StorageOps.compactParquet(spark, in, out,
-      targetBytes = 256 * 1024)
-    assert(outFiles < inFiles, s"no compaction: $inFiles -> $outFiles")
-    // data identical
-    val a = spark.read.parquet(in).orderBy("id").collect().toSeq
-    val b = spark.read.parquet(out).orderBy("id").collect().toSeq
-    assert(a == b)
-  }
-
-  test("compactParquet sortCols mode range-clusters files for min/max pruning") {
-    val base = tmp("compact_sorted")
-    val in = s"$base/in"
-    val out = s"$base/out"
-    // round-robin input: every file spans nearly the full id range, so
-    // min/max stats prune nothing
-    (1 to 10000).map(i => (i.toLong, s"row_$i")).toDF("id", "payload")
-      .repartition(16).write.parquet(in)
-    val outFiles = StorageOps.compactParquet(spark, in, out,
-      targetBytes = 64 * 1024, sortCols = Seq("id"))
-    assert(outFiles > 1, s"need >1 file to demonstrate clustering, got $outFiles")
-    // repartitionByRange assigns disjoint key intervals per partition:
-    // per-file [min,max] spans must not overlap — THE property parquet
-    // min/max pruning needs
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(out), spark.sparkContext.hadoopConfiguration)
-    val spans = fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val r = spark.read.parquet(f.getPath.toString)
-          .agg(min("id"), max("id")).head()
-        (r.getLong(0), r.getLong(1))
-      }.sortBy(_._1)
-    spans.sliding(2).foreach {
-      case Array((_, aMax), (bMin, _)) =>
-        assert(aMax < bMin, s"file spans overlap: $aMax >= $bMin")
-      case _ =>
-    }
-    // data identical
-    assert(spark.read.parquet(out).orderBy("id").collect().toSeq ==
-      spark.read.parquet(in).orderBy("id").collect().toSeq)
-  }
-
-  test("readEvolved unions schemas across batches; pre-evolution rows read null") {
-    val dir = tmp("evolve")
-    Seq((1L, "a")).toDF("id", "old_col").write.mode("append").parquet(dir)
-    Seq((2L, 9.5)).toDF("id", "new_col").write.mode("append").parquet(dir)
-    val df = StorageOps.readEvolved(spark, dir)
-    assert(df.columns.sorted.toSeq == Seq("id", "new_col", "old_col"))
-    val rows = df.orderBy("id").collect()
-    assert(rows(0).getLong(0) == 1L && rows(0).getString(
-      df.columns.indexOf("old_col")) == "a")
-    assert(rows(0).isNullAt(df.columns.indexOf("new_col")))
-    assert(rows(1).isNullAt(df.columns.indexOf("old_col")))
-    // a plain read (no mergeSchema) picks ONE footer and silently
-    // drops the other batch's column — the trap readEvolved closes
-    val plain = spark.read.parquet(dir)
-    assert(plain.columns.length < df.columns.length)
-  }
-
-  test("writeCounted audits rows and null keys in the write job itself") {
-    val out = tmp("audit")
-    val df = Seq((Some(1L), "x"), (None, "y"), (Some(3L), "z"))
-      .toDF("k", "v")
-    val (rows, nullKeys) = StorageOps.writeCounted(df, "k", s"$out/t")
-    assert(rows == 3L && nullKeys == 1L)
-    assert(spark.read.parquet(s"$out/t").count() == 3)
   }
 
   /** Snapshot of (name → mtime) for every data file under a location —

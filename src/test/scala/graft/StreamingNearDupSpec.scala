@@ -1,22 +1,15 @@
 package graft
 
-import java.sql.Timestamp
-
 import graft.operators.DedupOps
-import graft.streaming.StreamingOps
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Pins [[StreamingOps.flagNearDupsStream]] against its batch twin
-  * [[DedupOps.dedupAgainstCorpus]]: the same documents probed against
-  * the same corpus index must flag the SAME doc ids in both engines —
-  * the one-hash-family no-drift contract — and the numBands collision
-  * rows must collapse to one flag row per doc.
+/** Pins the incremental near-dup loop: per arriving batch, verified
+  * edges against the persisted band/set index fold into the stored
+  * cluster labels, and the maintained labels equal the from-scratch
+  * clustering of the merged corpus.
   */
 class StreamingNearDupSpec extends SparkSpec {
   import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
 
   private val corpus = Seq(
     (100L, "alpha beta gamma delta epsilon"),
@@ -24,175 +17,9 @@ class StreamingNearDupSpec extends SparkSpec {
     (102L, "red green blue yellow purple"))
     .toDF("doc_id", "text")
 
-  // 1/3 near-dup the corpus (share most words), 2/4 are disjoint
-  private val incoming = Seq(
-    (1L, "alpha beta gamma delta zeta", "2024-01-01 10:00:00"),
-    (2L, "totally unrelated fresh words here", "2024-01-01 10:01:00"),
-    (3L, "one two three four six", "2024-01-01 10:02:00"),
-    (4L, "another novel document entirely new", "2024-01-01 10:03:00"))
-
-  test("stream flags exactly the docs the batch prober flags, once each") {
-    implicit val sqlCtx = spark.sqlContext
-    val index = DedupOps.corpusBandIndex(corpus, numHashes = 16, rowsPerBand = 2)
-
-    val batchDocs = incoming.map { case (id, text, _) => (id, text) }
-      .toDF("doc_id", "text")
-    val wantFlagged = DedupOps.dedupAgainstCorpus(batchDocs, corpus, 16, 2)
-      .filter(col("matched_corpus") === 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(wantFlagged.nonEmpty && wantFlagged != incoming.map(_._1).toSet,
-      s"fixture must separate flagged from unflagged, got $wantFlagged")
-
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val stream = input.toDF().toDF("doc_id", "text", "ts_ts")
-    val q = StreamingOps.toMemorySink(
-      StreamingOps.flagNearDupsStream(stream, index, 16, 2),
-      "neardup_flags", "append")
-    try {
-      input.addData(incoming.map { case (id, text, t) => (id, text, ts(t)) }: _*)
-      q.processAllAvailable()
-      val rows = spark.table("neardup_flags").collect()
-      val got = rows.map(_.getLong(0)).toSet
-      assert(got == wantFlagged,
-        s"stream flags $got diverged from batch flags $wantFlagged")
-      assert(rows.length == got.size,
-        s"band collisions must collapse to one flag row per doc: $rows")
-    } finally q.stop()
-  }
-
-  test("verified tier rejects band-colliding candidates below the Jaccard threshold") {
-    implicit val sqlCtx = spark.sqlContext
-    // doc 1: true near-dup of corpus 100 (4/6 shared words = 66% —
-    // passes τ=60). doc 5: SUPERSET of corpus 100's words plus four
-    // extras (Jaccard 5/9 = 55% < τ) — supersets share each seed's
-    // minimum whenever a corpus word wins (P ≈ (5/9)² per 2-row band,
-    // ~99.7% over 16 bands, deterministic under the fixed seeds and
-    // asserted below), so it band-collides while failing the verify —
-    // ONLY the verify tier separates the two outcomes.
-    val stream5 = Seq(
-      (1L, "alpha beta gamma delta zeta", "2024-01-01 10:00:00"),
-      (5L, "alpha beta gamma delta epsilon wholly fresh extra words", "2024-01-01 10:01:00"))
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val df = input.toDF().toDF("doc_id", "text", "ts_ts")
-    val q = StreamingOps.toMemorySink(
-      StreamingOps.flagNearDupsStreamVerified(df, corpus, 16, 2,
-        minJaccardPct = 60),
-      "neardup_verified", "append")
-    try {
-      input.addData(stream5.map { case (id, text, t) => (id, text, ts(t)) }: _*)
-      q.processAllAvailable()
-      val got = spark.table("neardup_verified").collect().map(_.getLong(0)).toSet
-      assert(got == Set(1L),
-        s"verified flags must be exactly the >=60% Jaccard arrivals, got $got")
-      // cross-check the expectation against the exact batch prober
-      val exact = DedupOps.jaccardAgainstCorpus(corpus,
-        stream5.map { case (id, text, _) => (id, text) }.toDF("doc_id", "text"),
-        minJaccardPct = 60)
-        .collect().map(_.getLong(1)).toSet
-      assert(exact == Set(1L), s"fixture drifted: exact prober says $exact")
-      // and the candidate tier DOES flag doc 5 (band collision without
-      // verification) — the separation this operator exists for
-      val candTier = DedupOps.dedupAgainstCorpus(
-        stream5.map { case (id, text, _) => (id, text) }.toDF("doc_id", "text"),
-        corpus, 16, 2)
-        .filter(col("matched_corpus") === 1L)
-        .collect().map(_.getLong(0)).toSet
-      assert(candTier.contains(5L),
-        s"fixture must band-collide doc 5 for the test to bite, got $candTier")
-    } finally q.stop()
-  }
-
-  test("a duplicate arrival within the watermark horizon flags only once") {
-    implicit val sqlCtx = spark.sqlContext
-    val index = DedupOps.corpusBandIndex(corpus, numHashes = 16, rowsPerBand = 2)
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val stream = input.toDF().toDF("doc_id", "text", "ts_ts")
-    val q = StreamingOps.toMemorySink(
-      StreamingOps.flagNearDupsStream(stream, index, 16, 2),
-      "neardup_flags_dup", "append")
-    try {
-      input.addData((1L, "alpha beta gamma delta zeta", ts("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      // same doc id again, still inside the horizon
-      input.addData((1L, "alpha beta gamma delta zeta", ts("2024-01-01 10:01:00")))
-      q.processAllAvailable()
-      assert(spark.table("neardup_flags_dup").count() == 1L,
-        "re-arrival within the watermark must not re-flag")
-      // the state-boundedness contract: dedup state tracks FLAGGED docs
-      // within the horizon (1 here), never the corpus or the band rows
-      val audit = StreamingOps.progressAudit(q)
-      assert(audit("state_rows_latest") <= 2L,
-        s"dedup state must stay O(flagged docs per horizon): $audit")
-    } finally q.stop()
-  }
-
-  test("ingest -> flag -> accept -> upsert loop across 3 micro-batches (VERDICT r11 #3)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Lineage.LineageOps
-    // Each batch carries one near-dup of a doc ACCEPTED in the PREVIOUS
-    // batch (9/10 shared words — J = 9/11 ≈ 82% ≥ τ=60, band collision
-    // deterministic under the fixed seeds) and one fresh doc. Only a
-    // working upsert can flag batch k's near-dup: its partner entered
-    // the corpus after the initial index was built.
-    val freshDoc = Map(
-      1 -> "curated pipelines deduplicate training corpora across many shards cleanly",
-      2 -> "vector search ranks candidate neighbours using quantized integer arithmetic",
-      3 -> "streaming watermarks bound state for unbounded ingestion workloads safely")
-    def nearDupOf(text: String): String = {
-      val ws = text.split(" "); (ws.dropRight(1) :+ "altered").mkString(" ")
-    }
-    var bands = DedupOps.corpusBandDocs(corpus, 16, 2).lineageTruncate()
-    var sets = DedupOps.corpusHashedSets(corpus).lineageTruncate()
-    var acceptedAll = Seq.empty[(Long, String)]
-    var prevFresh = ""
-    for (k <- 1 to 3) {
-      val batch = Seq(
-        (k * 10L, freshDoc(k), ts(s"2024-01-01 1$k:00:00"))) ++
-        (if (k > 1) Seq((k * 10L + 1L, nearDupOf(prevFresh),
-          ts(s"2024-01-01 1$k:01:00"))) else Nil)
-      val input = MemoryStream[(Long, String, Timestamp)]
-      val df = input.toDF().toDF("doc_id", "text", "ts_ts")
-      val q = StreamingOps.toMemorySink(
-        StreamingOps.flagNearDupsStreamVerifiedIndexed(df, bands, sets,
-          16, 2, minJaccardPct = 60),
-        s"neardup_loop_$k", "append")
-      val flagged = try {
-        input.addData(batch: _*)
-        q.processAllAvailable()
-        spark.table(s"neardup_loop_$k").collect().map(_.getLong(0)).toSet
-      } finally q.stop()
-      // batch 1: nothing collides with the seed corpus; batch k>1: the
-      // near-dup of batch k-1's ACCEPTED doc is flagged — proof the
-      // upsert feeds later decisions
-      val wantFlagged = if (k == 1) Set.empty[Long] else Set(k * 10L + 1L)
-      assert(flagged === wantFlagged,
-        s"batch $k flags $flagged, want $wantFlagged")
-      val accepted = batch.collect {
-        case (id, text, _) if !flagged(id) => (id, text)
-      }
-      assert(accepted.map(_._1) === Seq(k * 10L),
-        s"batch $k must accept exactly the fresh doc")
-      acceptedAll ++= accepted
-      val up = DedupOps.indexUpsert(bands, sets,
-        accepted.toDF("doc_id", "text"), 16, 2)
-      // truncate per round — the loop's plan-depth discipline (a real
-      // deployment persists the relations to storage here instead)
-      bands = up._1.lineageTruncate()
-      sets = up._2.lineageTruncate()
-      prevFresh = freshDoc(k)
-    }
-    // loop invariant: after 3 rounds the maintained index IS the
-    // from-scratch rebuild on corpus + all accepted docs
-    val rebuilt = corpus.unionByName(acceptedAll.toDF("doc_id", "text"))
-    assert(bands.exceptAll(DedupOps.corpusBandDocs(rebuilt, 16, 2)).count() === 0L)
-    assert(DedupOps.corpusBandDocs(rebuilt, 16, 2).exceptAll(bands).count() === 0L)
-    assert(sets.exceptAll(DedupOps.corpusHashedSets(rebuilt)).count() === 0L)
-    assert(DedupOps.corpusHashedSets(rebuilt).exceptAll(sets).count() === 0L)
-  }
-
   test("ingest loop maintains CLUSTER LABELS incrementally (round 14)") {
     import graft.operators.Lineage.LineageOps
-    // The full streaming-dedup state machine: per micro-batch, verified
+    // The full incremental-dedup state machine: per batch, verified
     // edges (batch↔index AND batch-internal) fold into the stored
     // cluster labels via incrementalComponents, then the batch upserts
     // into the band/set index for the NEXT batch's probes. Batch 1
